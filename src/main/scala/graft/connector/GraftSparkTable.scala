@@ -44,8 +44,7 @@ final class GraftSparkTable(spark: SparkSession, val table: GraftTable,
     * position and raise). */
   override def metadataColumns()
       : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
-    Array(GraftSparkTable.FileMetadataColumn, GraftSparkTable.PosMetadataColumn,
-      GraftSparkTable.RowIdMetadataColumn, GraftSparkTable.LastUpdatedMetadataColumn)
+    GraftSparkTable.metadataColumns
 
   /** SQL `DELETE FROM t WHERE p` (reference spark3 SparkTable implements
     * SupportsDelete with metadata-only deletes). Ours goes further:
@@ -231,6 +230,12 @@ final class GraftSparkTable(spark: SparkSession, val table: GraftTable,
 }
 
 object GraftSparkTable {
+  /** Every graft relation's metadata columns, in declaration order. */
+  private[connector] def metadataColumns
+      : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
+    Array(FileMetadataColumn, PosMetadataColumn, RowIdMetadataColumn,
+      LastUpdatedMetadataColumn)
+
   /** Name of the file-path metadata column. */
   val FileColumn = "_file"
 
@@ -302,15 +307,27 @@ object GraftSparkTable {
   * surviving file is produced, because ReplaceData rewrites whole groups
   * and a row-filtered read would drop the unmatched rows it must carry
   * over. `onPlan` hands the planned file set to the operation so its
-  * commit can replace exactly what was read. */
-final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
-    base: TableScan, options: CaseInsensitiveStringMap,
-    groupGranular: Boolean = false,
-    onPlan: ScanPlan => Unit = _ => (),
-    onRuntimeFilter: Set[String] => Unit = _ => ())
+  * commit can replace exactly what was read.
+  *
+  * `pinnedPlan` is the plan a library read (TableScan.toDF) already made:
+  * the builder reads exactly its files and never re-plans, so one library
+  * read is one planFiles. Pushed filters still reach the file readers and
+  * are still re-applied as residuals. */
+final class GraftScanBuilder private[connector] (spark: SparkSession,
+    table: GraftTable, base: TableScan, options: CaseInsensitiveStringMap,
+    groupGranular: Boolean,
+    onPlan: ScanPlan => Unit,
+    onRuntimeFilter: Set[String] => Unit,
+    pinnedPlan: Option[ScanPlan])
   extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
   with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
   with org.apache.spark.sql.connector.read.SupportsPushDownLimit {
+
+  def this(spark: SparkSession, table: GraftTable, base: TableScan,
+      options: CaseInsensitiveStringMap, groupGranular: Boolean = false,
+      onPlan: ScanPlan => Unit = _ => (),
+      onRuntimeFilter: Set[String] => Unit = _ => ()) =
+    this(spark, table, base, options, groupGranular, onPlan, onRuntimeFilter, None)
 
   private var pushed: Array[Filter] = Array.empty
   private var requiredSchema: Option[StructType] = None
@@ -343,7 +360,7 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
   // one manifest walk per builder for the UNFILTERED plan: a refused agg
   // pushdown (tryAgg) and the fallback buildFileScan would otherwise each
   // pay a full planFiles() on the same scan
-  private var basePlan: Option[graft.format.ScanPlan] = None
+  private var basePlan: Option[graft.format.ScanPlan] = pinnedPlan
   private def planBase(): graft.format.ScanPlan = basePlan match {
     case Some(p) => p
     case None =>
@@ -412,15 +429,19 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
     val expr = FilterBridge.convertAll(pushed)
     val scan = if (expr == AlwaysTrue) base else base.filter(expr)
     val schema = scan.scanSchema
-    val planned0 = if (expr == AlwaysTrue) planBase() else scan.planFiles()
+    val planned0 =
+      if (expr == AlwaysTrue || pinnedPlan.isDefined) planBase()
+      else scan.planFiles()
     // equality-delete entries prune through the SAME metrics evaluator as
     // data files, over their KEY-column stats (recorded at stage time): a
     // key matching a row that survives the filter agrees with it on every
     // key column, so a filter no key can satisfy proves the delete set
     // irrelevant to the RESULT. Sound ONLY here: this scan re-applies the
     // whole filter as a residual (a resurrected row failing it is
-    // discarded above); group-granular row-level ops and the library's
-    // whole-file readers (deleteWhere CoW) must keep every entry.
+    // discarded above); group-granular row-level ops must keep every
+    // entry. Pinned library plans keep every entry too, so a filter
+    // applied over them (deleteWhere's copy-on-write `NOT cond`) is the
+    // only thing that prunes here, and it stays a residual.
     val planned =
       if (expr == AlwaysTrue || groupGranular ||
           planned0.deleteFiles.isEmpty) planned0
@@ -561,38 +582,33 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
 
     // identity-partition source columns physically absent from at least one
     // file generation (imported hive layouts store them only in directory
-    // names): served as Spark PARTITION values for EVERY group — constant
-    // column vectors appended by Spark's own readers, the reference's
-    // PartitionUtil.constantsMap — so all generations share one layout.
+    // names): they sit in the declared output's constants tail. Each group
+    // decides from its OWN file schema: a generation without the column
+    // takes it as a Spark PARTITION value — constant column vectors
+    // appended by Spark's own readers, the reference's
+    // PartitionUtil.constantsMap — while a generation that stores it (files
+    // written after a spec change dropped the identity field, or compacted
+    // files) reads it as data and projects it into the constants slot.
     val identPartName: Map[String, String] = // target col name → tuple key
       m.specs.values.flatMap(_.fields.filter(_.transform == Transforms.IdentityT))
         .flatMap(pf => FieldIds.findById(schema, pf.sourceId).map(_.name -> pf.name))
         .toMap
-    val partServe: Seq[StructField] = read.fields.toSeq.filter { f =>
-      identPartName.contains(f.name) && {
-        val id = FieldIds.nameToId(schema).get(f.name)
-        id.exists(i => usedSchemas.exists(
+    val servedFromMetadata: Set[String] = clean.fieldNames.filter { n =>
+      identPartName.contains(n) &&
+        FieldIds.nameToId(schema).get(n).exists(i => usedSchemas.exists(
           fs => !fs.fields.exists(ff => FieldIds.idOf(ff) == i)))
-      }
-    }
-    // initial defaults present on any requested column, top-level OR
-    // struct-nested? (fills are per-group below; this only gates the rare
-    // partition-served combo, where fill ordinals over wideTarget would
-    // misalign with the physical row that excludes partServe columns)
-    val anyDefaults = read.fields.exists(f =>
-      FieldIds.findById(schema, FieldIds.nameToId(schema).getOrElse(f.name, -1))
-        .exists(tf => Defaults.of(tf).isDefined || hasNestedDefault(tf.dataType)))
-    if (partServe.nonEmpty && (eqDeletes.nonEmpty || posActive || anyDefaults))
-      throw new UnsupportedOperationException(
-        "row-level deletes and initial defaults are not supported on tables " +
-        "whose identity-partition columns are metadata-only (imported hive " +
-        "layouts); rewrite the files first")
+    }.toSet
+    val partServe: Seq[StructField] =
+      read.fields.toSeq.filter(f => servedFromMetadata.contains(f.name))
     val partServeNames = partServe.map(_.name).toSet
-    val partSchema = StructType(partServe.map(f =>
-      StructField(f.name, Types.cleanType(f.dataType), nullable = true)) ++
-      (if (metaFile)
-        Seq(StructField(GraftSparkTable.FileColumn, StringType, nullable = false))
-      else Nil))
+    def constantsSchema(served: Seq[StructField]): StructType =
+      StructType(served.map(f =>
+        StructField(f.name, Types.cleanType(f.dataType), nullable = true)) ++
+        (if (metaFile)
+          Seq(StructField(GraftSparkTable.FileColumn, StringType, nullable = false))
+        else Nil))
+    // the declared tail of every group's output (after any delete projection)
+    val partSchema = constantsSchema(partServe)
 
     // position deletes ride the parquet readers' synthetic row-index column;
     // ORC and Avro groups that a position delete actually TARGETS fall back
@@ -675,6 +691,22 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
               .filterNot(read.fieldNames.contains)
             StructType(read.fields ++ missing.map(n => clean.fields.find(_.name == n).get))
           }
+        // physical row layout of every reader in this group: [data...,
+        // rowIdx?, stored lineage?, partition constants..., _file?]. The
+        // constants are the columns THIS generation's files lack —
+        // requested ones first, then delete keys served from metadata only —
+        // so delete-key, projection and fill ordinals all index this layout.
+        val fileIdSet = fileSchema.fields.map(FieldIds.idOf).toSet
+        val groupServed: Set[String] = servedFromMetadata.filterNot(n =>
+          FieldIds.nameToId(schema).get(n).exists(fileIdSet.contains))
+        val groupPartServe =
+          wideTarget.fields.toSeq.filter(f => groupServed.contains(f.name))
+        val groupPartSchema = constantsSchema(groupPartServe)
+        val dataCols =
+          wideTarget.fields.toSeq.filterNot(f => groupServed.contains(f.name))
+        // a declared constant this generation stores as data must be moved
+        // into the constants slot by the projection below
+        val reordered = partServe.exists(f => !groupServed.contains(f.name))
         // double/float reads leave the vectorized OrcScan: orc-core's
         // batch repetition detection compares with Java `==`, so a batch
         // holding only mixed-sign zeros collapses to the first zero's sign
@@ -684,42 +716,46 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
         // Scans that project no floating-point leaf (the flag only
         // misfires on ±0.0) keep the vectorized reader.
         val orcRow = orcRowBase || (fmt == FileFormats.Orc &&
-          wideTarget.fields.exists(f =>
-            !partServeNames.contains(f.name) &&
-              graft.format.Types.hasFloatLeaf(f.dataType)))
-        // physical row layout under deletes: [wideTarget..., rowIdx?,
-        // partition constants (only _file possible — identity partServe +
-        // deletes throws above)]; _file rides through the projection at
-        // the END, matching the declared output
+          dataCols.exists(f => graft.format.Types.hasFloatLeaf(f.dataType)))
         val posExtra = if (needRowIdx) 1 else 0
         val storedExtra = if (lineageStored) 2 else 0
+        val constAt = dataCols.length + posExtra + storedExtra
+        def physIndex(name: String): Int = dataCols.indexWhere(_.name == name) match {
+          case -1 => constAt + groupPartServe.indexWhere(_.name == name)
+          case i => i
+        }
+        val physTypes: Seq[DataType] = dataCols.map(_.dataType) ++
+          (if (needRowIdx) Seq(LongType) else Nil) ++
+          (if (lineageStored) Seq(LongType, LongType) else Nil) ++
+          groupPartSchema.fields.map(_.dataType)
         // the delete filter's projection emits the INTERMEDIATE layout the
         // lineage wrapper consumes: read columns, then rowIdx when a final
         // column needs it (_pos or computed lineage), then stored lineage
-        // columns, then _file
+        // columns, then the declared constants (_file last)
         val keepRowIdx = metaPos || lineageComputed
         val deletes: Option[GroupDeletes] =
-          if (applicable.isEmpty && !groupPos) None
+          if (applicable.isEmpty && !groupPos && !reordered) None
           else Some(GroupDeletes(
             applicable.map(ds => DeleteKeySource(
-              ds.names.map(wideTarget.fieldIndex).toArray, ds.names,
+              ds.names.map(physIndex).toArray, ds.names,
               ds.fileNames,
               ds.names.map(n => clean.fields.find(_.name == n).get.dataType),
               ds.paths)),
-            wideTarget.fields.map(_.dataType) ++
-              (if (needRowIdx) Seq(LongType) else Nil) ++
-              (if (lineageStored) Seq(LongType, LongType) else Nil) ++
-              (if (metaFile) Seq(StringType) else Nil),
-            if (wideTarget.length == read.length && !groupPos && !metaLineage) None
-            else Some(read.fields.map(f => wideTarget.fieldIndex(f.name)).toSeq ++
-              (if (keepRowIdx) Seq(wideTarget.length) else Nil) ++
-              (if (lineageStored) Seq(wideTarget.length + posExtra,
-                wideTarget.length + posExtra + 1) else Nil) ++
-              (if (metaFile)
-                Seq(wideTarget.length + posExtra + storedExtra) else Nil)),
+            physTypes,
+            // projected to the declared layout: [requested data..., rowIdx?,
+            // stored?, requested partition constants..., _file?]
+            if (wideTarget.length == read.length && !groupPos && !metaLineage &&
+                !reordered) None
+            else Some(read.fields.toSeq.filterNot(f => partServeNames.contains(f.name))
+                .map(f => physIndex(f.name)) ++
+              (if (keepRowIdx) Seq(dataCols.length) else Nil) ++
+              (if (lineageStored) Seq(dataCols.length + posExtra,
+                dataCols.length + posExtra + 1) else Nil) ++
+              partServe.map(f => physIndex(f.name)) ++
+              (if (metaFile) Seq(constAt + groupPartServe.size) else Nil)),
             new org.apache.spark.util.SerializableConfiguration(
               spark.sessionState.newHadoopConf()),
-            if (groupPos) Some(PosDeleteSource(posPaths, posDvs, wideTarget.length))
+            if (groupPos) Some(PosDeleteSource(posPaths, posDvs, dataCols.length))
             else None))
         val renames: Map[String, String] =
           wideTarget.fields.map(f => f.name -> fileName(f)).toMap
@@ -739,8 +775,7 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
         // read from the file), so it joins the read schema un-renamed, last;
         // partition-served columns leave the DATA schema entirely (they are
         // appended by Spark as partition constants, after the data columns)
-        val groupRead = StructType(wideTarget.fields
-          .filterNot(f => partServeNames.contains(f.name)).map(f =>
+        val groupRead = StructType(dataCols.map(f =>
             StructField(renames(f.name), fileSide(f), f.nullable)) ++
           (if (needRowIdx && !orcRow && !avroIdx) Seq(StructField(
             // nullable: the column is absent from the FILE (the reader treats
@@ -777,7 +812,7 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
         val groupFilters =
           if (groupGranular) Array.empty[Filter] // whole groups, no row filter
           else pushed
-            .filter(_.references.forall(r => !partServeNames.contains(r)))
+            .filter(_.references.forall(r => !groupServed.contains(r)))
             .flatMap(f => renameFilter(f, renames))
         // manifest-fed index: no listing/stat calls at plan time. `_file`
         // is a per-file constant, so the index degrades to one partition
@@ -785,21 +820,21 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
         // provenance — only on queries that ask)
         val partValsOf: DataFile => Seq[Any] = df => {
           val sp = m.specs(df.specId)
-          partServe.map(f => sp.fields.find(pf =>
+          groupPartServe.map(f => sp.fields.find(pf =>
               pf.transform == Transforms.IdentityT &&
               FieldIds.findById(schema, pf.sourceId).exists(_.name == f.name))
             .map(pf => df.partition.getOrElse(pf.name, null)).getOrElse(null)) ++
             (if (metaFile) Seq(df.path) else Nil)
         }
-        val index = new GraftFileIndex(spark, tasks.map(_.file), partSchema,
-          partValsOf)
+        val index = new GraftFileIndex(spark, tasks.map(_.file),
+          groupPartSchema, partValsOf)
         val scan: Scan = fmt match {
           case FileFormats.Orc if orcRow =>
             // partition-served identity columns ride as per-file constants
             // (the vectorized branch gets them from GraftFileIndex): raw
             // tuple values convert to Catalyst once per file here
             val orcConsts: DataFile => Seq[Any] = df =>
-              partValsOf(df).take(partServe.size).zip(partServe).map {
+              partValsOf(df).take(groupPartServe.size).zip(groupPartServe).map {
                 case (v, f) => graft.format.Values.toCatalyst(v,
                   Types.cleanType(f.dataType))
               }
@@ -808,8 +843,7 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
                 (t.file.path, t.file.fileSizeInBytes, orcConsts(t.file))),
               new org.apache.spark.util.SerializableConfiguration(
                 spark.sessionState.newHadoopConf()),
-              partConsts = StructType(partServe.map(f => StructField(f.name,
-                Types.cleanType(f.dataType), nullable = true))),
+              partConsts = StructType(groupPartSchema.fields.take(groupPartServe.size)),
               appendFilePath = metaFile,
               // stored-lineage columns sit at groupRead's tail; the scan's
               // position counter must land BEFORE them to match the group
@@ -833,13 +867,13 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
             org.apache.spark.sql.execution.datasources.v2.orc.OrcScan(
               spark, spark.sessionState.newHadoopConf(), index,
               dataSchema = groupData, readDataSchema = groupRead,
-              readPartitionSchema = partSchema, options = options,
+              readPartitionSchema = groupPartSchema, options = options,
               pushedAggregate = None,
               pushedFilters = groupFilters.filter(orcSargSafe))
           case FileFormats.Avro =>
-            new GraftAvroScan(groupRead, partSchema,
+            new GraftAvroScan(groupRead, groupPartSchema,
               tasks.map(t => (t.file.path, t.file.fileSizeInBytes,
-                partValsOf(t.file).zip(partSchema.fields)
+                partValsOf(t.file).zip(groupPartSchema.fields)
                   .map { case (v, f) => graft.format.Values.toCatalyst(v, f.dataType) })),
               new org.apache.spark.util.SerializableConfiguration(
                 spark.sessionState.newHadoopConf()),
@@ -849,16 +883,16 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
           case _ =>
             ParquetScan(spark, spark.sessionState.newHadoopConf(), index,
               dataSchema = groupData, readDataSchema = groupRead,
-              readPartitionSchema = partSchema,
+              readPartitionSchema = groupPartSchema,
               pushedFilters = groupFilters, options = options)
         }
         // initial-default backfill for columns this generation predates:
         // (ordinal in the physical read row, clean type, catalyst value) —
-        // applied by a reader wrapper UNDER the delete filters
-        val fileIdSet = fileSchema.fields.map(FieldIds.idOf).toSet
+        // applied by a reader wrapper UNDER the delete filters. Partition-
+        // served columns are never filled: their constants are the value.
         val allFileIds = FieldIds.allIds(fileSchema)
         val fills: Option[FillConfig] = {
-          val fs = wideTarget.fields.toSeq.zipWithIndex.flatMap { case (f, ord) =>
+          val fs = dataCols.zipWithIndex.flatMap { case (f, ord) =>
             FieldIds.nameToId(schema).get(f.name)
               .flatMap(FieldIds.findById(schema, _))
               .filter(tf => !fileIdSet.contains(FieldIds.idOf(tf)))
@@ -872,7 +906,7 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
           // indices are computed over the pruned-with-ids target type —
           // the same field order the physical struct carries (fileSideType
           // keeps target order)
-          val nested = wideTarget.fields.toSeq.zipWithIndex.flatMap {
+          val nested = dataCols.zipWithIndex.flatMap {
             case (f, ord) if f.dataType.isInstanceOf[StructType] =>
               FieldIds.nameToId(schema).get(f.name)
                 .flatMap(FieldIds.findById(schema, _))
@@ -884,12 +918,7 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
             case _ => Nil
           }
           if (fs.isEmpty && nested.isEmpty) None
-          else Some(FillConfig(
-            wideTarget.fields.map(_.dataType).toSeq ++
-              (if (needRowIdx) Seq(LongType) else Nil) ++
-              (if (lineageStored) Seq(LongType, LongType) else Nil) ++
-              (if (metaFile) Seq(StringType) else Nil),
-            fs, nested))
+          else Some(FillConfig(physTypes, fs, nested))
         }
         // lineage projection config: the wrapper reader turns the group's
         // INTERMEDIATE layout [data..., rowIdx?, stored?, constants...]
@@ -901,11 +930,9 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
             val dataTypes =
               read.fields.filterNot(f => partServeNames.contains(f.name))
                 .map(f => Types.cleanType(f.dataType)).toSeq
-            val withDeletes = deletes.isDefined
-            // under deletes partServe is empty, so dataCount agrees either way
-            val tailTypes: Seq[DataType] =
-              if (withDeletes) (if (metaFile) Seq(StringType) else Nil)
-              else partSchema.fields.map(f => f.dataType).toSeq
+            // with or without a delete projection the tail is the declared
+            // constants (without one, the group serves exactly those)
+            val tailTypes: Seq[DataType] = partSchema.fields.map(_.dataType).toSeq
             Some(LineageConfig(
               types = dataTypes ++
                 (if (keepRowIdx) Seq(LongType) else Nil) ++
@@ -920,8 +947,9 @@ final class GraftScanBuilder(spark: SparkSession, table: GraftTable,
           }
         (scan, deletes, fills, lineageCfg)
     }
-    // declared output = physical layout: data columns (minus partition-
-    // served) then partition-served columns (incl. `_file`) — Spark
+    // declared output = every group's layout after its projection: data
+    // columns (minus partition-served) then partition-served columns
+    // (incl. `_file`) — Spark
     // re-projects above by attribute, so order differences from the pruned
     // request are fine
     val output =
@@ -1100,6 +1128,8 @@ final class GraftScan(output: StructType, groupScans: Seq[Scan],
 
   /** Test visibility: the (possibly eq-delete-pruned) plan this scan runs. */
   private[connector] def scanPlan: ScanPlan = plan
+  /** Test visibility: one reader scan per (generation, format) group. */
+  private[graft] def groups: Seq[Scan] = groupScans
 
   /** Runtime group filtering (reference SparkCopyOnWriteScan): row-level
     * operation scans advertise `_file`, so Spark's

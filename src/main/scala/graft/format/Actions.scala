@@ -454,8 +454,8 @@ final class Actions(t: GraftTable) {
     * difference between "every file might match" and "one file per key
     * range matches".
     *
-    * Reuses the library read path end-to-end (live deletes applied, old
-    * schema generations mapped by field id, imported identity-partition
+    * Reads the planned files through the DSv2 scan (live deletes applied,
+    * old schema generations mapped by field id, imported identity-partition
     * columns materialized), then ONE range shuffle sized to
     * `targetSizeBytes` outputs and the same fanout write + atomic-swap
     * commit as bin-pack compaction (including dangling-delete hygiene and
@@ -485,7 +485,7 @@ final class Actions(t: GraftTable) {
     rewriteClustered(df => Seq(ZOrder.zValue(df, cols).asc), targetSizeBytes,
       filter)
 
-  /** Shared clustered-rewrite pipeline: library scan (live deletes applied,
+  /** Shared clustered-rewrite pipeline: DSv2 scan (live deletes applied,
     * old schema generations mapped by field id, imported identity-partition
     * columns materialized) → ONE range shuffle sized to `targetSizeBytes`
     * outputs → in-partition sort → the same fanout write + atomic-swap
@@ -501,10 +501,10 @@ final class Actions(t: GraftTable) {
     val plan = t.newScan().filter(filter).planFiles()
     if (plan.tasks.isEmpty) return RewriteResult(0, 0)
     // v3 row lineage: clustered rewrites preserve row identity the same
-    // way bin-pack compaction does — read the lineage columns through the
-    // library scan and MATERIALIZE them into the sorted outputs
+    // way bin-pack compaction does — select the lineage metadata columns
+    // of the scan and MATERIALIZE them into the sorted outputs
     val lineageOn = Lineage.enabled(m)
-    val df = t.newScan().dfFor(plan, withLineage = lineageOn)
+    val df = t.newScan().read(plan, withLineage = lineageOn)
     // cluster by partition first so fanout writers see contiguous runs
     val rangeCols =
       if (m.spec.isPartitioned)
@@ -623,11 +623,11 @@ final class Actions(t: GraftTable) {
   /** Convert live equality-delete files into position deletes — the
     * standard maintenance for long-lived streaming-upsert tables
     * (reference convert-equality-deletes rewrite): every scan pays an
-    * anti-join per live eq-delete group forever, while a position delete
+    * key-set probe per live eq-delete group forever, while a position delete
     * is a cheap per-file mask and compacts further via
     * [[rewritePositionDeletes]]. One distributed job per equality-id
     * group: data rows that an eq file suppresses (same keys, data
-    * sequence < delete sequence, null-safe like the scan's own anti-join)
+    * sequence < delete sequence, null-safe like the scan's own key probe)
     * are located by (file, row-position) and written as sorted position
     * deletes; the commit swaps delete files only, data untouched.
     *

@@ -84,11 +84,12 @@ object Changes {
       case None => chain0
     }
 
-    // one scan with NO pinned snapshot: every dfFor() read aligns to the
-    // current schema, giving the changelog a single uniform row type
+    // one scan with NO pinned snapshot: every read() of a pinned file/delete
+    // subset aligns to the current schema, giving the changelog a single
+    // uniform row type
     val scan = table.newScan()
     def read(tasks: Seq[FileScanTask], dels: Seq[(DataFile, Long)]): DataFrame =
-      scan.dfFor(ScanPlan(tasks, dels, 0, 0, 0, tasks.size))
+      scan.read(ScanPlan(tasks, dels, 0, 0, 0, tasks.size))
     def tag(df: DataFrame, tpe: String, ordinal: Int, snapId: Long): DataFrame =
       df.withColumn(ChangeType, lit(tpe))
         .withColumn(ChangeOrdinal, lit(ordinal))
@@ -117,8 +118,9 @@ object Changes {
 
         if (addedTasks.nonEmpty)
           // same-commit equality deletes share the data files' sequence
-          // number, so dfFor's strict seq gate correctly skips them here;
-          // same-commit position deletes match by path and do apply
+          // number, so the scan's strict `seq > group seq` gate correctly
+          // skips them here; same-commit position deletes match by path
+          // and do apply
           parts += tag(read(addedTasks, newDeletes), Insert, ordinal, s.snapshotId)
         if (removedTasks.nonEmpty)
           parts += tag(read(removedTasks, existingDeletes), Delete, ordinal, s.snapshotId)

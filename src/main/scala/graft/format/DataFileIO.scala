@@ -17,7 +17,7 @@ object DataFileIO {
     * thousands of live files mean thousands of stat calls (HEADs, on an
     * object store) before the first byte of data. Sizes are already
     * committed in the manifests, so read through the descriptor-backed
-    * FileIndex instead — the same index the DSv2 and dfFor paths use.
+    * FileIndex instead — the same index the DSv2 scan uses.
     * `schema` is the file-side (id-stripped) read schema; Spark's
     * `_metadata` columns stay available. Descriptor sizes are TRUSTED for
     * split planning (a row group past the recorded length is skipped) —
@@ -84,9 +84,9 @@ object DataFileIO {
   def compressionKey(format: String): String = s"write.$format.compression-codec"
 
   /** Resolve AND canonicalize the codec choice — one validation point for
-    * every write path, so a property value accepted by the DSv2 writers is
-    * never rejected (or mapped differently) by Spark's own writer on the
-    * library path. Canonical names are what BOTH paths understand. */
+    * every writer this object opens, so a property value is accepted (and
+    * mapped) the same way for parquet, ORC and Avro data and delete files.
+    * Canonical names are what each format's writer understands. */
   def compressionOf(format: String, props: Map[String, String]): String = {
     val raw = props.getOrElse(compressionKey(format), "snappy").toLowerCase
     val canonical = (format, raw) match {

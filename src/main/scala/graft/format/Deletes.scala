@@ -13,7 +13,8 @@ import scala.jdk.CollectionConverters._
   * the reference enforces (PositionDeleteWriter requires sorted input;
   * SURVEY §2.6) — we get it with sortWithinPartitions.
   * Equality deletes: a file of key tuples; rows in OLDER data files whose
-  * keys match are invisible (applied in TableScan.applyDeletes).
+  * keys match are invisible (applied executor-side by the DSv2 scan's
+  * delete filter readers, graft.connector.DeleteFilterReader).
   */
 object Deletes {
 
@@ -254,8 +255,8 @@ object Deletes {
   }
 
   /** Delete specific row positions. `positions`: (file_path, pos) — use the
-    * values surfaced by `_metadata.file_path` / `_metadata.row_index` of a
-    * table scan. Commits a RowDelta; on format-version 3 tables the
+    * values of the `_file` / `_pos` metadata columns of a table scan
+    * (`table.toDF().select("_file", "_pos")`). Commits a RowDelta; on format-version 3 tables the
     * positions land as puffin deletion vectors instead of parquet files. */
   def deletePositions(table: GraftTable, positions: DataFrame): TableMetadata = {
     if (Dvs.enabled(table.metadata))
@@ -523,7 +524,7 @@ object Deletes {
         // would resurrect rows hidden by live equality/position deletes,
         // since the rewritten files carry a NEWER sequence number
         val remaining = scan0
-          .dfFor(ScanPlan(plan.tasks, plan.deleteFiles, 0, 0, 0L, plan.tasks.size))
+          .read(ScanPlan(plan.tasks, plan.deleteFiles, 0, 0, 0L, plan.tasks.size))
           .filter(!Exprs.toColumn(bound))
         val staged = GraftWrite.writeFiles(table, remaining)
         // a copy-on-write DELETE changes the logical row set — commit as

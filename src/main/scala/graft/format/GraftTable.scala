@@ -1,7 +1,7 @@
 package graft.format
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 /** A planned unit of scan work (reference api/.../FileScanTask.java): the
@@ -27,8 +27,9 @@ final case class ScanPlan(
   *  manifest-list partition summaries (ManifestEvaluator)
   *  → per-entry partition-tuple filter (inclusive projection + Evaluator)
   *  → per-file column stats (InclusiveMetricsEvaluator)
-  * then file groups become one DataFrame via Spark's parquet reader —
-  * Catalyst/Tungsten own everything relational above the scan (SURVEY §7.0).
+  * then the planned files are read through the same DSv2 scan SQL uses
+  * (GraftScan) — Catalyst/Tungsten own everything relational above the
+  * scan (SURVEY §7.0).
   */
 final class TableScan private[format] (
     table: GraftTable,
@@ -223,11 +224,11 @@ final class TableScan private[format] (
             } else if (keepByAdded && e.file.content != FileContent.Data) {
               tuplePruned += ((e.file, e.sequenceNumber, mf.specId))
               // NOTE: delete entries are NEVER pruned by the row filter
-              // here — library consumers (deleteWhere's copy-on-write
+              // here — whole-file consumers (deleteWhere's copy-on-write
               // rewrite, group-granular row-level ops) plan with a filter
               // but then read WHOLE files, where a filter-pruned equality
               // delete would resurrect masked rows. The DSv2 scan, which
-              // re-applies the full filter as a residual, prunes its own
+              // re-applies its pushed filter as a residual, prunes its own
               // eq-delete entries (GraftScanBuilder.buildFileScan).
             }
           }
@@ -253,435 +254,41 @@ final class TableScan private[format] (
     plan
   }
 
-  /** Materialize as a DataFrame: pruned file list → Spark parquet scan
-    * (vectorized, codegen'd — SURVEY §7.0's "Catalyst owns the physical
-    * plan"), schema-aligned by field id across schema versions, row-level
-    * deletes applied, residual re-applied (reference residual-safety:
-    * SparkScanBuilder.java:121-123). */
-  def toDF(): DataFrame = dfFor(planFiles())
+  /** Materialize as a DataFrame: the planned files read through the DSv2
+    * [[graft.connector.GraftScan]] — the same scan SQL reads plan to
+    * (vectorized readers, field-id alignment across schema versions,
+    * executor-side row-level deletes) — with the row filter re-applied as
+    * a residual (reference SparkScanBuilder.java:121-123). */
+  def toDF(): DataFrame = read(planFiles())
 
   /** Table rows plus the v3 row-lineage columns `_row_id` /
-    * `_last_updated_sequence_number` ([[Lineage]]) — the library twin of
-    * the DSv2 metadata columns. Computed files derive base + position
-    * (parquet via `_metadata.row_index`, ORC/Avro via the row-path
-    * counter readers), compacted files read their stored columns, pre-v3
-    * files read NULL. Also the input for lineage-preserving clustered
-    * rewrites (Actions.rewriteSorted / rewriteZOrdered). */
-  def lineageDF(): DataFrame = dfFor(planFiles(), withLineage = true)
+    * `_last_updated_sequence_number` ([[Lineage]]), selected as the DSv2
+    * metadata columns: computed files derive base + position, compacted
+    * files read their stored columns, pre-v3 files read NULL. Also the
+    * input for lineage-preserving clustered rewrites
+    * (Actions.rewriteSorted / rewriteZOrdered). */
+  def lineageDF(): DataFrame = read(planFiles(), withLineage = true)
 
-  /** Materialize an EXPLICIT plan (used by toDF and by the streaming
-    * source's file-sliced micro-batches, which select a file subset of an
-    * append range). */
-  private[format] def dfFor(plan: ScanPlan,
+  /** Materialize an EXPLICIT plan in this scan's schema: a relation whose
+    * scan builder reads exactly `plan`'s files and deletes, never
+    * re-planning. Catalyst pushes the row filter and projection applied
+    * here into that builder. Used by toDF and by callers that select their
+    * own file and delete subsets (streaming slices, CDC, rewrites). */
+  private[format] def read(plan: ScanPlan,
       withLineage: Boolean = false): DataFrame = {
-    val spark = table.spark
-    val m = meta
-    val schema = scanSchema
-    val linCols = Seq(
-      StructField(Lineage.RowIdColumn, LongType, nullable = true),
-      StructField(Lineage.LastUpdatedColumn, LongType, nullable = true))
-    if (plan.tasks.isEmpty) {
-      val base = projectedSchema(schema)
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        if (withLineage) StructType(base.fields ++ linCols) else base)
-    }
-    // per-file lineage constants (metadata-only): canonical path →
-    // (first_row_id base, data sequence number); absent for stored/pre-v3
-    lazy val linInfo: Map[String, (Long, Long)] =
-      plan.tasks.flatMap(ts => ts.file.firstRowId match {
-        case Some(b) if b >= 0 =>
-          Some(ParquetIO.canonPath(ts.file.path) -> (b, ts.sequenceNumber))
-        case _ => None
-      }).toMap
-    lazy val rowIdOf = udf((f: String, p: Long) => linInfo.get(f).map(i => i._1 + p))
-    lazy val seqOf = udf((f: String) => linInfo.get(f).map(_._2))
-    lazy val canonOf = udf((s: String) => ParquetIO.canonPath(s))
-
-    val eqDeletes = plan.deleteFiles.filter(_._1.content == FileContent.EqualityDeletes)
-    val posDeletes = plan.deleteFiles.filter(_._1.content == FileContent.PositionDeletes)
-
-    // position deletes ride parquet's `_metadata.row_index`; ORC and Avro
-    // groups a position delete actually TARGETS read through their planted
-    // scans with a per-file position counter (scrubbedOrc / scanAvro —
-    // position deletes are format-agnostic in the reference,
-    // Deletes.java:70-123).
-    // Target detection is one small driver read of the delete files' path
-    // column, only on tables that mix formats under live position deletes.
-    lazy val posTargets: Set[String] = Deletes.posDeleteTargetFiles(
-      posDeletes.map(_._1), spark.sessionState.newHadoopConf())
-
-    // group files by (writer schema, sequence number, file format) — the
-    // seq key exists only when equality deletes are live, exactly like the
-    // DSv2 path, so delete recency resolves per GROUP and no per-file
-    // path→seq map ever enters the plan (a 100k-file scan previously
-    // embedded a 100k-entry literal map in every equality-delete read)
-    val grouped = plan.tasks.groupBy(t =>
-      (t.file.schemaId, if (eqDeletes.isEmpty) 0L else t.sequenceNumber,
-        t.file.fileFormat,
-        // lineage splits groups by read strategy, like the DSv2 path:
-        // 1 = computed (base + position), 2 = stored columns, 0 = null
-        if (!withLineage) 0
-        else Lineage.modeOf(t.file, t.sequenceNumber) match {
-          case _: Lineage.Computed => 1
-          case Lineage.Stored => 2
-          case Lineage.Absent => 0
-        }))
-    val parts = grouped.toSeq.sortBy(_._1).flatMap {
-      case ((schemaId, seq, fmt, linKind), tasks) =>
-      val fileSchema = m.schemas.getOrElse(schemaId, schema)
-      val groupPos = posDeletes.nonEmpty && (fmt match {
-        case FileFormats.Parquet => true // row-index column is free
-        case _ => tasks.exists(t => // orc/avro: only targeted groups pay
-          posTargets.contains(ParquetIO.canonPath(t.file.path)))
-      })
-      // computed-lineage ORC/Avro groups need row positions even without
-      // live position deletes
-      val posRead = groupPos ||
-        (withLineage && linKind == 1 && fmt != FileFormats.Parquet)
-      // parquet/orc read through a metadata-fed FileIndex (HadoopFsRelation
-      // over GraftFileIndex, the same index the DSv2 and streaming paths
-      // use): spark.read.parquet(paths) existence-checks every root path on
-      // the driver at analysis time — 100k files means 100k stat calls
-      // (HEADs, on an object store) before the first byte of data. Sizes
-      // are already committed in the manifests; planning must not re-derive
-      // them from the filesystem.
-      def readIndexed(files: Seq[DataFile], clean: StructType): DataFrame = {
-        val fileFormat = fmt match {
-          case FileFormats.Orc =>
-            new org.apache.spark.sql.execution.datasources.orc.OrcFileFormat()
-          case _ =>
-            new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
-        }
-        spark.baseRelationToDataFrame(
-          org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-            new graft.connector.GraftFileIndex(spark, files),
-            StructType(Nil), clean, None, fileFormat, Map.empty)(spark))
-      }
-      def readTasks(ts: Seq[FileScanTask]): DataFrame = {
-        // stored-lineage files (compaction outputs) physically carry the
-        // two lineage columns — read them like data columns, kept through
-        // the alignment projection
-        val linRead = withLineage && linKind == 2
-        val clean = StructType(stripIds(fileSchema).fields ++
-          (if (linRead) linCols else Nil))
-        val linKeep =
-          if (linRead) Seq(Lineage.RowIdColumn, Lineage.LastUpdatedColumn)
-          else Nil
-        // scrub-routed ORC scans get no optimizer column pruning (the scan
-        // is planted post-pushdown), so prune here: only file columns whose
-        // field id survives into the target schema AND is actually consumed
-        // downstream — the scan projection, the row filter's references,
-        // and this group's applicable equality-delete keys. Unconsumed
-        // target columns read as typed nulls (alignToSchema's absent-id
-        // branch) and are dropped by the final projection. The ROUTING
-        // check runs on the pruned set too — a scan projecting no float
-        // leaf keeps the vectorized OrcScan even if the table has one.
-        lazy val neededIds: Option[Set[Int]] = projection.map { cols =>
-          val byName = schema.fields.map(f => f.name -> FieldIds.idOf(f)).toMap
-          (cols ++ Exprs.references(rowFilter)).flatMap(byName.get).toSet ++
-            eqDeletes.filter(_._2 > seq).flatMap(_._1.equalityIds)
-        }
-        lazy val readFileSchema: StructType = {
-          val targetIds = schema.fields.map(FieldIds.idOf).toSet
-          val pruned = fileSchema.fields.filter { f =>
-            val id = FieldIds.idOf(f)
-            targetIds.contains(id) && neededIds.forall(_.contains(id))
-          }
-          // empty projections (pure row counting) still need one stream
-          if (pruned.isEmpty && fileSchema.fields.nonEmpty)
-            StructType(fileSchema.fields.take(1))
-          else StructType(pruned)
-        }
-        lazy val cleanScan: StructType =
-          StructType(stripIds(readFileSchema).fields ++
-            (if (linRead) linCols else Nil))
-        // columnar ORC read through the mixed-sign-zero scrub: OrcIO's
-        // batch iterator + Spark's own OrcColumnVector wrappers, planted
-        // as a DSv2 scan relation — full vectorization, no OrcStruct /
-        // per-row conversion (the pre-r21 shape converted every row four
-        // times: batch → OrcStruct → InternalRow → Row → re-encode)
-        def scrubbedOrc(withPos: Boolean): DataFrame = {
-          val sconf = new org.apache.spark.util.SerializableConfiguration(
-            spark.sessionState.newHadoopConf())
-          val scan = new graft.connector.GraftOrcRowScan(cleanScan,
-            ts.map(t => (t.file.path, t.file.fileSizeInBytes,
-              if (withPos) Seq(org.apache.spark.unsafe.types.UTF8String
-                .fromString(ParquetIO.canonPath(t.file.path)))
-              else Nil)),
-            sconf,
-            partConsts = if (withPos) StructType(Seq(
-              StructField("_g_file", StringType, nullable = false)))
-            else new StructType(),
-            withRowIndex = withPos,
-            maxPartitionBytes = spark.sessionState.conf.filesMaxPartitionBytes,
-            minPartitions = spark.sparkContext.defaultParallelism)
-          val df = org.apache.spark.sql.execution.datasources.v2.GraftV2Shims
-            .scanToDF(spark, scan, s"graft-orc-scrub(${ts.size} files)")
-          if (withPos) df.withColumnRenamed("_graft_row_index", "_g_pos")
-          else df
-        }
-        // avro twin: the DSv2 GraftAvroScan planted the same way — its
-        // readers produce InternalRow directly, replacing the prior
-        // RDD-of-external-Rows shape (Catalyst-to-Scala converter + Row
-        // re-encode per row, and NO column pruning since an RDD-backed
-        // DataFrame materializes every column before Catalyst sees it).
-        // With positions the canonical file path rides as a per-file
-        // partition constant and files stay unsplit (absolute positions);
-        // without, large container files split into sync-bounded ranges.
-        def scanAvro(withPos: Boolean): DataFrame = {
-          val sconf = new org.apache.spark.util.SerializableConfiguration(
-            spark.sessionState.newHadoopConf())
-          val scan = new graft.connector.GraftAvroScan(cleanScan,
-            if (withPos) StructType(Seq(
-              StructField("_g_file", StringType, nullable = false)))
-            else new StructType(),
-            ts.map(t => (t.file.path, t.file.fileSizeInBytes,
-              if (withPos) Seq(org.apache.spark.unsafe.types.UTF8String
-                .fromString(ParquetIO.canonPath(t.file.path)))
-              else Nil)),
-            sconf,
-            spark.sessionState.conf.filesMaxPartitionBytes,
-            withRowIndex = withPos)
-          val df = org.apache.spark.sql.execution.datasources.v2.GraftV2Shims
-            .scanToDF(spark, scan, s"graft-avro(${ts.size} files)")
-          if (withPos) df.withColumnRenamed("_graft_row_index", "_g_pos")
-          else df
-        }
-        fmt match {
-          case FileFormats.Orc if posRead =>
-            // scrubbed columnar read carrying (_g_file, _g_pos) — kept
-            // through the alignment projection for the position anti-join
-            // below (one partition per file keeps positions absolute).
-            // fileSchema is MASKED to the read columns so pruned-away
-            // target columns take the null branch instead of resolving
-            // against a column the scan never produced.
-            alignToSchema(scrubbedOrc(withPos = true),
-              readFileSchema, schema, keep = Seq("_g_file", "_g_pos") ++ linKeep)
-          case FileFormats.Orc if Types.hasFloatLeaf(cleanScan) =>
-            // double/float reads leave Spark's OrcScan even without live
-            // position deletes: orc-core's collapsed mixed-sign-zero
-            // batches (OrcIO.ZeroSignScrubReader) have no interception
-            // seam there, and compaction's rewrite reader MATERIALIZES
-            // what it reads. Scans projecting no floating-point leaf (the
-            // flag only misfires on ±0.0) keep the vectorized reader below.
-            alignToSchema(scrubbedOrc(withPos = false),
-              readFileSchema, schema, keep = linKeep)
-          case FileFormats.Avro if posRead =>
-            alignToSchema(scanAvro(withPos = true),
-              readFileSchema, schema, keep = Seq("_g_file", "_g_pos") ++ linKeep)
-          case FileFormats.Avro =>
-            alignToSchema(scanAvro(withPos = false),
-              readFileSchema, schema, keep = linKeep)
-          case _ =>
-            alignToSchema(readIndexed(ts.map(_.file), clean), fileSchema,
-              schema, keep = linKeep)
-        }
-      }
-      // identity-partition source columns absent from the FILES (imported
-      // hive layouts — the column lives only in directory names / partition
-      // tuples): sub-group by tuple value and fill as typed literals, the
-      // library-path analog of the reference's PartitionUtil.constantsMap
-      val fileIds = fileSchema.fields.map(FieldIds.idOf).toSet
-      val fills = schema.fields.toSeq
-        .filter(tf => !fileIds.contains(FieldIds.idOf(tf)))
-        .filter(tf => m.specs.values.exists(_.fields.exists(pf =>
-          pf.sourceId == FieldIds.idOf(tf) && pf.transform == Transforms.IdentityT)))
-      val subs: Seq[DataFrame] =
-        if (fills.isEmpty) Seq(readTasks(tasks))
-        else tasks.groupBy { ts =>
-          val sp = m.specs(ts.file.specId)
-          fills.map(tf => sp.fields.find(pf =>
-              pf.sourceId == FieldIds.idOf(tf) && pf.transform == Transforms.IdentityT)
-            .map(pf => ts.file.partition.getOrElse(pf.name, null)).getOrElse(null))
-        }.toSeq.sortBy(_._1.mkString("/")).map { case (vals, sub) =>
-          fills.zip(vals).foldLeft(readTasks(sub)) { case (d, (tf, v)) =>
-            // alignToSchema emitted a null column in target position;
-            // withColumn replaces it in place, preserving column order
-            d.withColumn(tf.name,
-              Values.toLiteral(v, Types.cleanType(tf.dataType)))
-          }
-        }
-      // deletes apply per sub-read, while the plan is still a pure
-      // projection over the file relation (`_metadata` columns do not
-      // resolve above joins/unions): positions first, then only the
-      // equality sets NEWER than this group's files
-      subs.map { df0 =>
-        // lineage attaches BEFORE the delete anti-joins (`_metadata` does
-        // not resolve above a join); values are per-row facts, so dead
-        // rows simply drop afterwards and survivors keep their identity
-        val withLin =
-          if (!withLineage) df0
-          else linKind match {
-            case 1 if fmt == FileFormats.Parquet =>
-              val cf = canonOf(col("_metadata.file_path"))
-              df0.withColumn(Lineage.RowIdColumn,
-                  rowIdOf(cf, col("_metadata.row_index")))
-                .withColumn(Lineage.LastUpdatedColumn, seqOf(cf))
-            case 1 =>
-              // _g_file is already canonical in the row-path readers
-              val base = df0.withColumn(Lineage.RowIdColumn,
-                  rowIdOf(col("_g_file"), col("_g_pos")))
-                .withColumn(Lineage.LastUpdatedColumn, seqOf(col("_g_file")))
-              if (groupPos) base else base.drop("_g_file", "_g_pos")
-            case 2 => df0 // stored columns already read
-            case _ => df0
-              .withColumn(Lineage.RowIdColumn, lit(null).cast(LongType))
-              .withColumn(Lineage.LastUpdatedColumn, lit(null).cast(LongType))
-          }
-        val posApplied =
-          if (!groupPos) withLin
-          else if (fmt == FileFormats.Parquet) applyPosDeletes(withLin, posDeletes)
-          else antiJoinPositions(withLin, posDeletes) // orc/avro row-path reads
-        applyEqDeletes(posApplied, eqDeletes.filter(_._2 > seq), schema)
-      }
-    }
-    var df = parts.reduce(_ unionByName _)
-
-    val bound =
-      if (rowFilter == AlwaysTrue) AlwaysTrue else Exprs.bind(rowFilter, schema)
-    if (bound != AlwaysTrue) df = df.filter(Exprs.toColumn(bound))
-    projection match {
-      case Some(cols) => df.select(cols.map(col): _*)
-      case None => df
-    }
+    val df = org.apache.spark.sql.execution.datasources.v2.GraftV2Shims
+      .relationDF(table.spark,
+        new graft.connector.LibraryReadTable(table.spark, table, this, plan))
+    val filtered =
+      if (rowFilter == AlwaysTrue) df
+      else df.filter(Exprs.toColumn(Exprs.bind(rowFilter, scanSchema)))
+    // an unprojected read keeps the relation's `_file` / `_pos` metadata
+    // columns selectable
+    if (projection.isEmpty && !withLineage) filtered
+    else filtered.select((projection.getOrElse(scanSchema.fieldNames.toSeq) ++
+      (if (withLineage) Seq(Lineage.RowIdColumn, Lineage.LastUpdatedColumn)
+      else Nil)).map(col): _*)
   }
-
-  private def projectedSchema(schema: StructType): StructType =
-    projection match {
-      case Some(cols) =>
-        StructType(cols.map(c => schema.fields.find(_.name == c).get))
-      case None => stripIds(schema)
-    }
-
-  private def stripIds(st: StructType): StructType =
-    Types.cleanType(st).asInstanceOf[StructType]
-
-  /** Rename/add columns so an old-schema read matches the scan schema —
-    * id-based resolution at EVERY struct level (reference
-    * SparkSchemaUtil.prune / NameMapping; nested per UpdateSchema.java's
-    * nested evolution). */
-  private def alignToSchema(df: DataFrame, fileSchema: StructType,
-      target: StructType, keep: Seq[String] = Nil): DataFrame = {
-    val fileById = fileSchema.fields.map(f => FieldIds.idOf(f) -> f).toMap
-    val cols = target.fields.map { tf =>
-      fileById.get(FieldIds.idOf(tf)) match {
-        case Some(ff) => alignCol(col(ff.name), ff.dataType, tf.dataType).as(tf.name)
-        case None =>
-          // column added after this file was written: its initial default
-          // backfills every row (iceberg v3); absent default reads null
-          Defaults.of(tf) match {
-            case Some(v) => Values.toLiteral(v, Types.cleanType(tf.dataType)).as(tf.name)
-            case None => lit(null).cast(Types.cleanType(tf.dataType)).as(tf.name)
-          }
-      }
-    }
-    df.select((cols.toSeq ++ keep.map(col)): _*)
-  }
-
-  /** Align one file-side column to its target type: struct levels with ids
-    * on both sides rebuild field-by-field by id (nested rename = pick by
-    * id, nested add = null, nested promote = cast); anything else is a
-    * plain cast (also the legacy fallback for id-less nested fields). */
-  private def alignCol(src: Column, fileDt: DataType, targetDt: DataType): Column =
-    (fileDt, targetDt) match {
-      case (fs: StructType, ts: StructType)
-          if FieldIds.structHasIds(fs) && FieldIds.structHasIds(ts) =>
-        val byId = fs.fields.map(f => FieldIds.idOf(f) -> f).toMap
-        val parts = ts.fields.map { tf =>
-          byId.get(FieldIds.idOf(tf)) match {
-            case Some(ff) =>
-              alignCol(src.getField(ff.name), ff.dataType, tf.dataType).as(tf.name)
-            case None =>
-              // nested add: its initial default backfills (iceberg v3);
-              // absent default reads null
-              Defaults.of(tf) match {
-                case Some(v) =>
-                  Values.toLiteral(v, Types.cleanType(tf.dataType)).as(tf.name)
-                case None =>
-                  lit(null).cast(Types.cleanType(tf.dataType)).as(tf.name)
-              }
-          }
-        }
-        // struct() of nulls is a non-null struct — preserve struct-level nulls
-        when(src.isNotNull, struct(parts.toSeq: _*))
-          .otherwise(lit(null))
-          .cast(Types.cleanType(ts))
-      case _ => src.cast(Types.cleanType(targetDt))
-    }
-
-  /** Equality deletes for ONE (schema, seq) group (reference
-    * EqualitySetDeleteFilter, core/.../deletes/Deletes.java:128): anti-join
-    * on the equality columns against every delete set newer than the group.
-    * Seq-gating already happened at the caller (group seq vs delete seq), so
-    * the join needs no per-row sequence column. */
-  private def applyEqDeletes(df0: DataFrame, dels: Seq[(DataFile, Long)],
-      schema: StructType): DataFrame = {
-    if (dels.isEmpty) return df0
-    val spark = table.spark
-    var cur = df0
-    // sub-group by file-side key names: delete files staged under an older
-    // schema may carry the key columns under pre-rename names — reading by
-    // CURRENT name would null-fill and resurrect their deletes
-    val groups = dels.groupBy(d => (d._1.equalityIds,
-        Deletes.eqKeyFileNames(table.metadata.schemas, schema, d._1)))
-    // loud-fail parity with the DSv2 path (DeleteKeyCache requireAll):
-    // indexedDF rides Spark's ParquetFileFormat, which name-matches and
-    // silently NULL-FILLS an absent key column — an all-null key set
-    // anti-join-deletes the null-keyed data rows and drops every intended
-    // delete. Validate each delete file's footer EXECUTOR-side (one tiny
-    // job per scan, no driver stats — GDPR-scale sets stay distributed).
-    locally {
-      val checks = groups.toSeq.flatMap { case ((_, fileNames), group) =>
-        group.map(_._1.path).distinct.map(p => (p, fileNames)) }
-      val sconf = HadoopFileIO.sessionConf()
-      spark.sparkContext
-        .parallelize(checks, math.max(1, math.min(checks.size, 32)))
-        .foreach { case (p, names) =>
-          ParquetIO.requireColumns(p, names, sconf.value, "equality-delete") }
-    }
-    groups.foreach { case ((ids, fileNames), group) =>
-      val fields = ids.map(id => FieldIds.findById(schema, id).get)
-      val names = fields.map(_.name)
-      // descriptor-backed read: a GDPR-scale delete set (thousands of
-      // files) must not stat every path on the driver at analysis time
-      val keySchema = StructType(fileNames.zip(fields).map { case (fn, f) =>
-        StructField(fn, Types.cleanType(f.dataType), nullable = true) })
-      val del = DataFileIO.indexedDF(spark,
-        group.map(_._1).distinctBy(_.path), FileFormats.Parquet, keySchema)
-        .toDF(names: _*) // positional rename back to scan-schema names
-        .dropDuplicates(names)
-      val cond = names.map(n => cur(n) <=> del(n)).reduce(_ && _)
-      cur = cur.join(broadcast(del), cond, "left_anti")
-    }
-    cur
-  }
-
-  /** Position deletes (reference PositionStreamDeleteFilter, Deletes.java:
-    * 60-123): anti-join on (_file, _pos) row metadata; broadcast-able —
-    * delete files are per-commit churn, small relative to data at 100 TB.
-    * No sequence gating: a position delete names its data file by path, and
-    * paths are never reused. */
-  private def applyPosDeletes(df0: DataFrame,
-      posDeletes: Seq[(DataFile, Long)]): DataFrame = {
-    // both sides canonicalize through the SAME helper, so any URI spelling
-    // of the same file matches (file:/p vs /p vs file:///p; hdfs kept apart)
-    val canon = udf((s: String) => ParquetIO.canonPath(s))
-    antiJoinPositions(df0
-      .withColumn("_g_file", canon(col("_metadata.file_path")))
-      .withColumn("_g_pos", col("_metadata.row_index")), posDeletes)
-  }
-
-  /** The anti-join half: `df0` already carries canonical (_g_file, _g_pos)
-    * columns (parquet: from row metadata; ORC: from the row-path counter). */
-  private def antiJoinPositions(df0: DataFrame,
-      posDeletes: Seq[(DataFile, Long)]): DataFrame = {
-    val dels = Deletes.positionsDF(table.spark, posDeletes.map(_._1))
-      .toDF("_g_file", "_g_pos")
-    df0.join(broadcast(dels), Seq("_g_file", "_g_pos"), "left_anti")
-      .drop("_g_file", "_g_pos")
-  }
-
 }
 
 object TableScan {

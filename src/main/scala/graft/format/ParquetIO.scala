@@ -77,30 +77,6 @@ object ParquetIO {
     } finally reader.close()
   }
 
-  /** Fail LOUDLY when `path`'s footer lacks any of `names` (top-level,
-    * case-insensitive like the readers above). [[open]]'s ReadSupport
-    * name-matches and silently null-fills absent requested columns — for
-    * delete-file key loads that silence would RESURRECT deleted rows, so
-    * the callers that feed anti-join/filter sets validate the footer
-    * first. One extra footer read per file, on the executor, behind the
-    * per-executor delete caches — never per task. */
-  def requireColumns(path: String, names: Seq[String], conf: Configuration,
-      what: String): Unit = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(new HPath(path), conf)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    val present =
-      try reader.getFileMetaData.getSchema.getFields.asScala
-        .map(_.getName.toLowerCase(java.util.Locale.ROOT)).toSet
-      finally reader.close()
-    val missing = names.filterNot(n =>
-      present.contains(n.toLowerCase(java.util.Locale.ROOT)))
-    if (missing.nonEmpty) throw new IllegalStateException(
-      s"$what file $path does not contain required column(s) " +
-      s"${missing.mkString(", ")} (has: ${present.mkString(", ")}) — " +
-      "refusing to null-fill, which would silently drop its deletes")
-  }
-
   /** Hadoop conf for executor-side parquet WRITES: the session conf plus the
     * keys ParquetWriteSupport asserts are present (normally FileFormatWriter
     * sets them per job). Shared by the DSv2 batch writer and compaction. */
@@ -181,13 +157,18 @@ object ParquetIO {
       // -0.0 normalizes to +0.0: the delete-key probe compares BOXED
       // values (java.lang.Double.equals says -0.0 != 0.0) while Spark's
       // =/<=> say they are equal — both the key-set loader and the row
-      // probe route through here, so normalizing once keeps the DSv2
-      // paths agreeing with the library anti-join for the same key file.
+      // probe route through here, so normalizing once keeps the row-
+      // and batch-path filters agreeing with Spark's `=` on the same key.
       // (NaN is already safe: boxed equals canonicalizes via
       // doubleToLongBits, matching Spark's NaN == NaN semantics.)
       case DoubleType => val d = row.getDouble(i); if (d == 0.0d) 0.0d else d
       case FloatType => val f = row.getFloat(i); if (f == 0.0f) 0.0f else f
       case BooleanType => row.getBoolean(i)
+      case ByteType => row.getByte(i)
+      case ShortType => row.getShort(i)
+      // a ByteBuffer compares and hashes by content, so binary keys match
+      // across the key-set loader and the row probe
+      case BinaryType => java.nio.ByteBuffer.wrap(row.getBinary(i))
       case d: DecimalType => row.getDecimal(i, d.precision, d.scale).toJavaBigDecimal
       case t => throw new IllegalArgumentException(s"unsupported key type $t")
     }

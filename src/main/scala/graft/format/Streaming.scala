@@ -154,7 +154,7 @@ object Streaming {
         takeBudget(pendingFiles(table, offset), offset, maxBytesPerBatch)
       if (tasks.isEmpty) return None
       offset = next
-      Some(table.newScan().dfFor(ScanPlan(tasks, Nil, 0, 0, 0L, tasks.size)))
+      Some(table.newScan().read(ScanPlan(tasks, Nil, 0, 0, 0L, tasks.size)))
     }
   }
 

@@ -158,25 +158,4 @@ object Values {
         Decimal(v.asInstanceOf[java.math.BigDecimal])
       case _ => v // Int/Long/Double/Float/Boolean; date days; ts micros
     }
-
-  /** Canonical value → typed Column literal (library-path partition fill). */
-  def toLiteral(v: Any, dt: DataType): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.lit
-    if (v == null) return lit(null).cast(dt)
-    dt match {
-      case DateType =>
-        lit(java.time.LocalDate.ofEpochDay(v.asInstanceOf[Int].toLong))
-      case TimestampType =>
-        val us = v.asInstanceOf[Long]
-        lit(java.time.Instant.ofEpochSecond(Math.floorDiv(us, 1000000L),
-          Math.floorMod(us, 1000000L) * 1000L))
-      case TimestampNTZType =>
-        val us = v.asInstanceOf[Long]
-        lit(java.time.LocalDateTime.ofEpochSecond(Math.floorDiv(us, 1000000L),
-          (Math.floorMod(us, 1000000L) * 1000L).toInt, java.time.ZoneOffset.UTC))
-      case _: TimeType =>
-        lit(java.time.LocalTime.ofNanoOfDay(v.asInstanceOf[Long]))
-      case other => lit(v).cast(other)
-    }
-  }
 }

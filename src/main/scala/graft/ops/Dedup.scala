@@ -683,6 +683,21 @@ object Dedup {
       .select(col("doc_id"), col("p._1").as("gh"), col("p._2").as("sig"))
   }
 
+  /** A `freshPrepped` frame must be [[minhashPrep]]'s output. Older prep
+    * frames carried `(doc_id, grams, sig)`; reading one by name would fail
+    * deep in analysis, or match the wrong column silently. */
+  private def requirePrepShape(df: DataFrame): Unit = {
+    def elem(name: String) = df.schema.find(_.name == name).map(_.dataType)
+      .collect { case org.apache.spark.sql.types.ArrayType(e, _) => e }
+    if (!df.columns.contains("doc_id") ||
+        !elem("gh").contains(org.apache.spark.sql.types.LongType) ||
+        !elem("sig").contains(org.apache.spark.sql.types.IntegerType))
+      throw new IllegalArgumentException(
+        "freshPrepped must have the minhashPrep(fresh, n, bands, rows) shape " +
+        "(doc_id, gh: array<bigint>, sig: array<int>); got " +
+        df.schema.simpleString)
+  }
+
   /** Shared exact-verify tail of the MinHash-LSH family over PRE-HASHED gram sets `(doc_id, gh:
     * array<long>)`. Callers that still hold raw text build `gh` with
     * [[TextOps.gramHashes]] (one tight UDF pass) instead of the
@@ -780,6 +795,7 @@ object Dedup {
     def banded(w: DataFrame) =
       w.select(col("doc_id"), explode(bandUdf(col("sig"))).as("band"))
     val cw = minhashPrep(corpus, n, bands, rows)
+    freshPrepped.foreach(requirePrepShape)
     val fw = freshPrepped.getOrElse(minhashPrep(fresh, n, bands, rows))
     val fb = banded(fw)
     val all = banded(cw).unionByName(fb)

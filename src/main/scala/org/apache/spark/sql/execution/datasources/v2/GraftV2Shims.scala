@@ -1,40 +1,18 @@
 package org.apache.spark.sql.execution.datasources.v2
 
-import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.connector.catalog.Table
 
-/** Build a DataFrame directly over an already-constructed DSv2 [[Scan]].
+/** Build a DataFrame over a DSv2 [[Table]] that no catalog names.
   *
-  * The library read path (GraftTable.newScan().toDF()) plans its own file
-  * groups and hands Spark fully-formed scans; for scans Spark has no public
-  * entry point for (e.g. graft's scrubbed columnar ORC scan), this shim
-  * plants a DataSourceV2ScanRelation leaf — the same logical node the
-  * catalog path produces after pushdown — so execution gets BatchScanExec
-  * with full columnar + whole-stage-codegen support, instead of an RDD of
-  * externally-converted rows. */
+  * Library reads (GraftTable.newScan().toDF()) materialize through a
+  * catalog-less graft relation; `Dataset.ofRows` is the entry point Spark
+  * keeps package-private. The plan is an ordinary [[DataSourceV2Relation]],
+  * so filter, column and limit pushdown into the table's scan builder run
+  * exactly as they do for SQL over the catalog. */
 object GraftV2Shims {
 
-  private final class ScanOnlyTable(scan: Scan, tableName: String)
-    extends Table with SupportsRead {
-    override def name(): String = tableName
-    override def schema(): org.apache.spark.sql.types.StructType =
-      scan.readSchema()
-    override def capabilities(): java.util.Set[TableCapability] =
-      java.util.EnumSet.of(TableCapability.BATCH_READ)
-    override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-      () => scan
-  }
-
-  def scanToDF(spark: org.apache.spark.sql.SparkSession, scan: Scan,
-      name: String): DataFrame = {
-    val output = DataTypeUtils.toAttributes(scan.readSchema())
-    val relation = DataSourceV2Relation(
-      new ScanOnlyTable(scan, name), output, None, None,
-      CaseInsensitiveStringMap.empty())
+  def relationDF(spark: org.apache.spark.sql.SparkSession, table: Table): DataFrame =
     Dataset.ofRows(spark.asInstanceOf[SparkSession],
-      DataSourceV2ScanRelation(relation, scan, output))
-  }
+      DataSourceV2Relation.create(table, None, None))
 }

@@ -109,6 +109,19 @@ class OpsSpec extends SparkSpec {
     assert(out.isEmpty, "old×old pair leaked into the incremental output")
   }
 
+  test("freshPrepped of the old (doc_id, grams, sig) shape fails loudly, naming the shape") {
+    val corpus = docs.filter(col("doc_id") % 10 =!= 0)
+    val fresh = docs.filter(col("doc_id") % 10 === 0)
+    val old = Dedup.minhashPrep(fresh).select(col("doc_id"),
+      transform(col("gh"), h => h.cast("string")).as("grams"), col("sig"))
+    val e = intercept[IllegalArgumentException] {
+      Dedup.minhashLshPairsIncremental(corpus, fresh, freshPrepped = Some(old))
+    }
+    assert(e.getMessage.contains("(doc_id, gh: array<bigint>, sig: array<int>)"),
+      e.getMessage)
+    assert(e.getMessage.contains("grams"), e.getMessage)
+  }
+
   test("freshPrepped / freshFps hooks: fresh evaluated exactly once") {
     // same contract (and same accumulator-counted proof) as the
     // embeddings freshBanded hook: the incremental minhash and simhash

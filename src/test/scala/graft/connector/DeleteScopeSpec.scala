@@ -590,4 +590,56 @@ class DeleteScopeSpec extends SparkSpec {
       assert(!posKeys.exists(k => k.contains(p0) && k.contains(p1)),
         "a bin task loaded BOTH partitions' position deletes — unscoped plan")
   }
+
+  test("library toDF over live eq + position deletes is one GraftScan: no anti-join, no job, one plan") {
+    val df0 = (0L until 10L).map(i => (i, s"v$i")).toDF("id", "v")
+    val t = GraftTable.create(spark, freshLoc("libread-shape"), df0.schema,
+      properties = Map("write.delete.mode" -> "merge-on-read"))
+    GraftWrite.append(t, df0.coalesce(1))
+    Deletes.deleteByEquality(t, Seq(3L).toDF("id"))
+    deletePerFile(t, col("id") === 5L)
+    val plan0 = t.newScan().planFiles()
+    assert(plan0.deleteFiles.map(_._1.content).toSet ===
+      Set(FileContent.EqualityDeletes, FileContent.PositionDeletes))
+
+    // listener-bus events arrive in order: once a marker job's start is
+    // seen, every job started before it has been seen too
+    val jobGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sparkListener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobGroups.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[ScanEvent]()
+    val scanListener = Listeners.register(e => { events.add(e); () })
+    spark.sparkContext.addSparkListener(sparkListener)
+    val (df, sparkPlan) =
+      try {
+        val d = t.newScan().toDF()
+        (d, d.queryExecution.sparkPlan)
+      } finally Listeners.unregister(scanListener)
+    spark.sparkContext.setJobGroup("libread-marker", "marker")
+    try spark.sparkContext.parallelize(Seq(1), 1).count()
+    finally spark.sparkContext.clearJobGroup()
+    val deadline = System.currentTimeMillis() + 30000
+    while (!jobGroups.contains("libread-marker") &&
+        System.currentTimeMillis() < deadline) Thread.sleep(20)
+    spark.sparkContext.removeSparkListener(sparkListener)
+    assert(jobGroups.toArray.toSeq === Seq("libread-marker"),
+      "building and planning a library read must run no Spark job")
+    assert(events.size === 1, s"one library read plans once: $events")
+
+    val scans = sparkPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }
+    assert(scans.size === 1 && scans.head.scan.isInstanceOf[GraftScan],
+      s"expected one BatchScanExec over GraftScan:\n$sparkPlan")
+    val antiJoins = sparkPlan.collect {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec
+          if j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti => j
+    }
+    assert(antiJoins.isEmpty, s"deletes must apply inside the scan:\n$sparkPlan")
+    assert(df.select("id").as[Long].collect().sorted.toSeq ===
+      ((0L until 10L).filterNot(Set(3L, 5L))))
+  }
 }

@@ -497,8 +497,8 @@ class MaintenanceSpec extends SparkSpec {
     val t = GraftTable.create(spark, loc, rows(5).schema)
     GraftWrite.append(t, rows(5, 0).coalesce(1))
     val targets = t.newScan().toDF()
-      .select(col("_metadata.file_path"), col("_metadata.row_index"))
-      .where(col("_metadata.row_index").isin(1, 3))
+      .select(col("_file"), col("_pos"))
+      .where(col("_pos").isin(1, 3))
     Deletes.deletePositions(t, targets)
     assert(t.toDF().count() == 3)
   }

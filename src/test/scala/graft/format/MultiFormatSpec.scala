@@ -243,9 +243,10 @@ class MultiFormatSpec extends SparkSpec {
   }
 
   test("avro library scan plants a pruned DSv2 batch scan") {
-    // the r21 read path: InternalRow direct through GraftAvroScan (no
-    // external-Row RDD), with the scan schema pruned to consumed columns
-    // so Avro's resolving decoder skips the rest without decoding
+    // library reads plan through the DSv2 GraftScan: its one group is an
+    // InternalRow-direct GraftAvroScan (no external-Row RDD), with the read
+    // schema pruned to consumed columns so Avro's resolving decoder skips
+    // the rest without decoding
     val loc = freshLoc("avroplan")
     val t = GraftTable.create(spark, loc, sample(3).schema,
       properties = Map("write.format.default" -> "avro"))
@@ -254,10 +255,17 @@ class MultiFormatSpec extends SparkSpec {
     val scans = df.queryExecution.sparkPlan.collect {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
     }
-    assert(scans.size === 1, s"expected one planted scan:\n${df.queryExecution.sparkPlan}")
-    assert(scans.head.scan.isInstanceOf[graft.connector.GraftAvroScan])
-    assert(scans.head.scan.readSchema().fieldNames.toSeq === Seq("data"),
-      "projection must prune the avro decode to the consumed column")
+    assert(scans.size === 1, s"expected one batch scan:\n${df.queryExecution.sparkPlan}")
+    val groups = scans.head.scan match {
+      case g: graft.connector.GraftScan => g.groups
+      case other => fail(s"expected a GraftScan, got $other")
+    }
+    groups match {
+      case Seq(avro: graft.connector.GraftAvroScan) =>
+        assert(avro.readSchema().fieldNames.toSeq === Seq("data"),
+          "projection must prune the avro decode to the consumed column")
+      case other => fail(s"expected one GraftAvroScan group, got $other")
+    }
     assert(df.as[String].collect().sorted.toSeq === Seq("data-0", "data-1", "data-2"))
   }
 

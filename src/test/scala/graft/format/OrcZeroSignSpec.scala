@@ -20,9 +20,9 @@ import org.apache.spark.sql.types._
   * Graft's mitigation: OrcIO wraps the orc-core RecordReader with
   * ZeroSignScrubReader (clears the misfired flag — the true values are
   * still in the vector), and every graft read of an ORC double/float
-  * column routes through that row path (library dfFor, DSv2 batch scan,
-  * streaming source). Scans projecting no floating-point leaf keep
-  * Spark's vectorized OrcScan. */
+  * column routes through that row path (the DSv2 batch scan — library
+  * reads included — and the streaming source). Scans projecting no
+  * floating-point leaf keep Spark's vectorized OrcScan. */
 class OrcZeroSignSpec extends SparkSpec {
 
   private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)

@@ -324,11 +324,11 @@ class RenameDeleteSpec extends SparkSpec {
   }
 
   test("library scan fails loudly when an eq-delete file lacks its key column") {
-    // twin of the DSv2 test above: the library path reads delete keys
-    // through DataFileIO.indexedDF (Spark's ParquetFileFormat), which
-    // null-fills absent columns — an all-null key set would anti-join-
-    // delete the null-keyed rows and drop every intended delete, so the
-    // scan validates each delete file's footer executor-side first
+    // twin of the DSv2 test above through a library read: toDF() plans
+    // the same DSv2 scan, whose DeleteKeyCache loads each delete file with
+    // ParquetIO.readAll(requireAll) — a reader that null-filled the absent
+    // key column would build an all-null key set, delete the null-keyed
+    // rows and drop every intended delete, so the load must fail loudly
     val loc = freshLoc("lib-strict")
     val df = (0L until 20L).map(i => (i, s"v$i")).toDF("id", "v")
     val t0 = GraftTable.create(spark, loc, df.schema)
@@ -431,19 +431,22 @@ class RenameDeleteSpec extends SparkSpec {
       s"DSv2 path must agree with the library path, kept: ${dsv2.toSeq}")
   }
 
-  test("requireColumns fails loudly on a delete file missing its columns") {
+  test("readAll(requireAll) fails loudly on a delete file missing its columns") {
     val dir = Files.createTempDirectory("graft-reqcols")
     val p = s"$dir/other.parquet"
     Seq((1L, "x")).toDF("a", "b").coalesce(1).write.mode("overwrite").parquet(p)
     val part = new java.io.File(p).listFiles()
       .find(_.getName.endsWith(".parquet")).get.getAbsolutePath
     val conf = spark.sessionState.newHadoopConf()
-    val e = intercept[IllegalStateException] {
-      ParquetIO.requireColumns(part, Seq("file_path", "pos"), conf,
-        "position-delete")
+    def load(cols: Seq[String]): Int = {
+      var n = 0
+      ParquetIO.readAll(part, StructType(cols.map(StructField(_, StringType))),
+        conf, requireAll = true, what = "position-delete file")(_ => n += 1)
+      n
     }
+    val e = intercept[IllegalStateException](load(Seq("file_path", "pos")))
     assert(e.getMessage.contains("file_path"))
     // present columns pass, case-insensitively
-    ParquetIO.requireColumns(part, Seq("A", "b"), conf, "test")
+    assert(load(Seq("B")) === 1)
   }
 }
