@@ -77,10 +77,6 @@ object Dedup {
     * it fires, the round-robin shuffle moves the narrow projected input
     * once, and every consumer below is partitioning-invariant. */
   private def spreadNarrowInput(df: DataFrame): DataFrame = {
-    // session-scoped kill switch (default on) so deployments whose inputs
-    // are already well-split can skip the partition-count planning probe
-    if (df.sparkSession.conf
-        .get("spark.graft.dedup.spreadNarrowInput", "true") != "true") return df
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
@@ -500,37 +496,55 @@ object Dedup {
    * component's MIN doc id as `cluster`, so "keep one per cluster" is a
    * trivial filter afterwards.
    *
-   * Distributed min-label propagation: each round every node takes the min
-   * of its own label and its neighbors' labels (two shuffles per round:
-   * join + groupBy). Rounds needed = graph diameter — near-dup components
-   * are tiny, star-shaped clumps in practice, so convergence is a handful
-   * of rounds even at corpus scale (the same reasoning as GraphX's CC).
-   * Lineage is truncated per round (localCheckpoint) so plans stay flat.
+   * Distributed min-label propagation over a pair RDD of `(Long, Long)`,
+   * the shape of GraphX's connected components. The adjacency is built
+   * once (one shuffle, duplicate and reversed pairs collapsed map-side)
+   * and keyed by node with a `HashPartitioner(defaultParallelism)` — not
+   * `spark.sql.shuffle.partitions`: AQE does not coalesce RDD shuffles,
+   * so a 20-pair graph would otherwise run 200 tasks per round. Each node
+   * starts labelled with the min of its closed neighbourhood. A round is
+   * ONE shuffle (nodes whose label changed last round send it to their
+   * neighbours, `reduceByKey(min)` per receiver) joined narrowly to the
+   * co-partitioned labels, and ONE action that both materializes the
+   * round's `localCheckpoint` (lineage stays flat; blocks are
+   * context-cleaned on GC) and counts the changed labels. Why RDDs: a
+   * DataFrame loop pays a Catalyst planning pass per step and an AQE job
+   * per shuffle — 18 Spark jobs to collect the clusters of 20 disjoint
+   * pairs, against 2 here (one round, then the collect).
+   *
+   * Termination needs no round cap: labels only decrease and each is
+   * bounded below by its component's min, so some round changes nothing.
+   * Rounds = the eccentricity of the component's min node (the last round
+   * changes nothing). Near-dup components are tiny, star-shaped clumps, so
+   * this is a handful even at corpus scale; disjoint pairs take one round.
+   * Pairs with a null endpoint are not edges and are ignored.
    */
-  def duplicateClusters(pairs: DataFrame, maxRounds: Int = 50): DataFrame = {
-    val edges = pairs.select(col("a").cast("long").as("x"), col("b").cast("long").as("y"))
-      .union(pairs.select(col("b").cast("long").as("x"), col("a").cast("long").as("y")))
-      .distinct()
-      .localCheckpoint()
-    var labels = edges.select(col("x")).distinct()
-      .withColumn("label", col("x"))
-      .localCheckpoint()
+  def duplicateClusters(pairs: DataFrame): DataFrame = {
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    val part = new org.apache.spark.HashPartitioner(spark.sparkContext.defaultParallelism)
+    val adjacency = pairs.select(col("a").cast("long"), col("b").cast("long"))
+      .na.drop().rdd
+      .flatMap { r => val a = r.getLong(0); val b = r.getLong(1); Iterator(a -> b, b -> a) }
+      .aggregateByKey(Set.empty[Long], part)(_ + _, _ ++ _)
+    // node -> (neighbours, label, label changed in the last round)
+    var state = adjacency.mapPartitions(_.map { case (x, nbrs) =>
+      val ns = nbrs.toArray
+      (x, (ns, math.min(x, ns.min), true))
+    }, preservesPartitioning = true)
     var changed = 1L
-    var round = 0
-    while (changed > 0 && round < maxRounds) {
-      val neighborMin = edges
-        .join(labels.select(col("x").as("y"), col("label")), "y")
-        .groupBy(col("x")).agg(min(col("label")).as("nlabel"))
-      val updated = labels.join(neighborMin, Seq("x"), "left")
-        .select(col("x"),
-          least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"),
-          (coalesce(col("nlabel"), col("label")) < col("label")).as("chg"))
-        .localCheckpoint()
-      changed = updated.filter(col("chg")).count()
-      labels = updated.select(col("x"), col("label"))
-      round += 1
+    while (changed > 0) {
+      val nbrMin = state
+        .flatMap { case (_, (ns, label, chg)) =>
+          if (chg) ns.iterator.map(_ -> label) else Iterator.empty }
+        .reduceByKey(part, math.min(_, _))
+      state = state.leftOuterJoin(nbrMin, part).mapValues {
+        case ((ns, label, _), Some(m)) if m < label => (ns, m, true)
+        case ((ns, label, _), _) => (ns, label, false)
+      }.localCheckpoint()
+      changed = state.filter(_._2._3).count()
     }
-    labels.select(col("x").as("doc_id"), col("label").as("cluster"))
+    state.map { case (x, (_, label, _)) => (x, label) }.toDF("doc_id", "cluster")
   }
 
   /** Quality-aware dedup survivor selection — the step that turns a pair
@@ -540,11 +554,14 @@ object Dedup {
     * `(cluster, keep)` so callers can either filter `keep` for the
     * surviving corpus or audit what a drop would remove.
     *
-    * Scale shape: clustering is [[duplicateClusters]] (min-label
-    * propagation, rounds = component diameter); the keeper choice is one
-    * window pass partitioned by cluster — near-dup clusters are small
-    * clumps, so no partition skews, and the docs→clusters join broadcasts
-    * at steady state (clustered docs ≪ corpus). */
+    * Scale shape: clustering is [[duplicateClusters]] (RDD min-label
+    * propagation, one job per round, one round for disjoint pairs); the
+    * keeper choice is one window pass partitioned by cluster — near-dup
+    * clusters are small clumps, so no partition skews. The clusters come
+    * back as an RDD-backed frame with no size estimate, so the
+    * docs→clusters join plans as a shuffle join that AQE turns into a
+    * broadcast once the cluster side's measured size fits (clustered docs
+    * ≪ corpus at steady state). */
   def keepBest(docs: DataFrame, pairs: DataFrame,
       score: Column): DataFrame = {
     val clusters = duplicateClusters(pairs)
@@ -898,8 +915,8 @@ object Dedup {
     val fb = banded(freshSigs.getOrElse(minhashSignatures(fresh, n, bands, rows)))
     val all = banded(storeSigs.select(col("doc_id"), col("sig"))).unionByName(fb)
     val lt = col("x.doc_id") < col("y.doc_id")
-    // the candidate set is MATERIALIZED once (localCheckpoint — the
-    // duplicateClusters precedent; blocks are context-cleaned on GC): it
+    // the candidate set is MATERIALIZED once (an eager localCheckpoint:
+    // one job, and the blocks are context-cleaned on GC): it
     // feeds three consumers (the verify join plus each side's
     // candidate-touched semi-join), and Spark evaluates each copy of the
     // subtree independently (no exchange reuse fires — checked on the

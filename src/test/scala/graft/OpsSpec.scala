@@ -585,6 +585,54 @@ class OpsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))
+    // the same graph with reversed and repeated pairs and int endpoints:
+    // both orientations are one undirected edge, ids widen to long
+    val messy = Seq((2, 1), (1, 2), (1, 2), (3, 2), (4, 3), (3, 4),
+      (11, 10), (10, 11), (20, 21), (22, 21), (21, 22)).toDF("a", "b")
+    assert(graft.ops.Dedup.duplicateClusters(messy)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == out)
+  }
+
+  test("duplicateClusters converges on a 60-node chain: no round cap") {
+    import spark.implicits._
+    // the min label needs 59 hops to reach doc 60; a capped loop leaves
+    // the chain's tail with stale, non-minimal labels
+    val chain = (1L until 60L).map(i => (i, i + 1)).toDF("a", "b")
+    val out = graft.ops.Dedup.duplicateClusters(chain)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(out == (1L to 60L).map(_ -> 1L).toMap)
+  }
+
+  test("duplicateClusters on disjoint pairs runs at most 3 Spark jobs") {
+    import spark.implicits._
+    // the dedup steady state: every cluster is one pair
+    val pairs = (1L to 20L).map(i => (i * 100, i * 100 + 7)).toDF("a", "b")
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    val out =
+      try {
+        sc.setJobGroup("dup-clusters", "counted")
+        val rows = try graft.ops.Dedup.duplicateClusters(pairs).collect()
+        finally sc.clearJobGroup()
+        // listener-bus events arrive in order: once the marker job's start
+        // is seen, every counted job has been seen too
+        sc.setJobGroup("dup-clusters-marker", "marker")
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        val deadline = System.currentTimeMillis() + 30000
+        while (!groups.contains("dup-clusters-marker") &&
+            System.currentTimeMillis() < deadline) Thread.sleep(20)
+        rows
+      } finally sc.removeSparkListener(listener)
+    assert(out.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      (1L to 20L).flatMap(i => Seq(i * 100 -> i * 100, (i * 100 + 7) -> i * 100)).toMap)
+    val jobs = groups.toArray.count(_ == "dup-clusters")
+    assert(jobs <= 3, s"clustering 20 disjoint pairs ran $jobs Spark jobs")
   }
 
   test("stratified sampling: exact per-group quota, WindowGroupLimit plan") {
