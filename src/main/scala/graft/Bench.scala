@@ -5,6 +5,21 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main: runs the headline queries at SPARK_GRAFT_SF_DIR and
   * prints one JSON line for the driver (BENCH_r{N}.json). */
 object Bench {
+  /** The session every graft main runs in (`Bench`, `Verify`, the
+    * `graft.tools` runners), so a tool's timings and plans are those of
+    * the session `Bench` measures: graft's SQL extensions, AQE, UTC
+    * rendering, and event timestamps read as nanos, on `cpus` local
+    * cores with as many shuffle partitions. */
+  def session(cpus: String): SparkSession = SparkSession.builder()
+    .master(s"local[$cpus]")
+    .config("spark.sql.shuffle.partitions", cpus)
+    .config("spark.sql.extensions", "graft.connector.GraftSparkExtensions")
+    .config("spark.sql.adaptive.enabled", "true")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
   def main(args: Array[String]): Unit = {
     // The driver machine-parses stdout as a single JSON line; anything the
     // JVM or Spark prints to System.out during startup would break that.
@@ -14,15 +29,7 @@ object Bench {
     System.setOut(new java.io.PrintStream(new java.io.FileOutputStream(java.io.FileDescriptor.err), true))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.connector.GraftSparkExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val names = Queries.headline.filter(SparkEntry.queries.contains)
     // full warmup pass (JVM/codegen/file-footer caches AND one-time graft

@@ -1407,16 +1407,7 @@ final class GraftScan(output: StructType, groupScans: Seq[Scan],
   // PER-CANDIDATE key-range checks are linear sweeps — bounded so a
   // pathological many-live-deletes scan can't regress planning to
   // O(files×deletes); sets above the cap switch to [[EqRangeIndex]]
-  private lazy val EqBoundsCap: Int =
-    if (spark == null) 1024
-    else {
-      val raw = spark.conf.get("spark.graft.eq-bounds-linear-cap", "1024")
-      scala.util.Try(raw.trim.toInt).toOption.filter(_ > 0).getOrElse {
-        scanLog.warn(s"ignoring invalid spark.graft.eq-bounds-linear-cap" +
-          s"='$raw' (want a positive int); using 1024")
-        1024
-      }
-    }
+  private val EqBoundsCap = 1024
   // aggregated narrowing observability: tasks scoped, candidate delete
   // files before/after narrowing — logged once per planning pass so a
   // scale operator can see whether narrowing is effective without a

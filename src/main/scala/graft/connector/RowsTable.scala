@@ -10,11 +10,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import java.util.{Set => JSet}
 import scala.jdk.CollectionConverters._
 
-/** Read-only DSv2 table over driver-side rows — how metadata tables surface
-  * in SQL (`graft.db.\`t$snapshots\``). The reference serves these from
+/** Read-only DSv2 table over driver-side rows — how the metadata tables
+  * that are not read by a distributed scan surface in SQL
+  * (`graft.db.\`t$snapshots\``). The reference serves these from
   * StaticDataTask rows (core/.../StaticDataTask.java); Spark's `LocalScan`
-  * turns ours into a LocalRelation, so metadata queries never launch a
-  * distributed job at all. */
+  * turns ours into a LocalRelation. The snapshot-log-scale tables are
+  * built on the driver and launch no job; `$partitions` is a distributed
+  * aggregate over the files relation, so `rows()` runs that job and
+  * collects its result to the driver. */
 final case class RowsTable(ident: String, df: DataFrame) extends Table with SupportsRead {
 
   override def name(): String = ident

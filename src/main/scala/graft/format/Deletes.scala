@@ -214,7 +214,7 @@ object Deletes {
         // null rows are dropped on the RAW columns BEFORE the canon UDF:
         // filtering the projected alias instead pushes down as
         // isnotnull(UDF(file_path)) and evaluates the UDF twice per row
-        // (filter + project — the r21 PrepEvalProbe class); canon is null
+        // (filter + project — the class QueriesSpec's plan lint catches); canon is null
         // exactly when its input is, so the row sets are identical
         .filter(col("file_path").isNotNull && col("pos").isNotNull)
         .select(Seq(canon(col("file_path")).as("file_path"), col("pos")) ++

@@ -192,7 +192,7 @@ object Dedup {
     // NOT adopted: grouping the pair-count shuffle by (a, b, szsum) instead
     // of (a, b, sza, szb) — one fewer UnsafeRow word and grouping column,
     // identical groups since (a, b) determines both sizes. The r21
-    // interleaved A/B (Q33Probe, sf0.1) measured it a consistent ~10% LOSS
+    // interleaved A/B (sf0.1) measured it a consistent ~10% LOSS
     // on the tail (old ~1.08 s vs new ~1.20 s median, identical outputs):
     // the pair shuffle is the SMALLER of the family's two shuffles and the
     // saved word doesn't pay for the extra pre-exchange projection at this
@@ -691,8 +691,9 @@ object Dedup {
     // `p.isNotNull`: Catalyst pushes that below the collapsed projects as
     // isnotnull(UDF(text)), and FilterExec + ProjectExec each evaluate the
     // UDF (codegen subexpression elimination does not span operators), so
-    // the expensive prep ran 2x per row (r21 PrepEvalProbe: 10000
-    // invocations for 5000 rows, map stage 0.58 -> 0.38 s pre-filtered)
+    // the expensive prep ran 2x per row (measured in r21: 10000
+    // invocations for 5000 rows, map stage 0.58 -> 0.38 s pre-filtered;
+    // QueriesSpec's plan lint fails on the pushed-down form)
     docs
       .filter(col("text").isNotNull &&
         size(split(col("text"), " ", -1)) >= n)
@@ -858,7 +859,7 @@ object Dedup {
     })
     // same cheap pre-filter as minhashPrep instead of isNotNull on the
     // UDF output — the pushed-down isnotnull(UDF(text)) evaluated the
-    // signature UDF twice per row (PrepEvalProbe)
+    // signature UDF twice per row (QueriesSpec's plan lint fails on it)
     docs
       .filter(col("text").isNotNull &&
         size(split(col("text"), " ", -1)) >= n)

@@ -1,13 +1,12 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dump `.explain("formatted")` for headline queries to files:
   * `runMain graft.tools.PlanDump <outDir> <suffix> [query...]`
   * (defaults to every Queries.headline entry; suffix is e.g. "before").
-  * Mirrors the Bench session confs so the dumped plan is the planned
-  * shape the bench actually runs (shuffle partitions aside — plan shape,
-  * join strategy, PushedFilters do not depend on the partition count). */
+  * Runs in `Bench`'s session, so the dumped plan is the planned shape the
+  * bench actually runs (shuffle partitions aside — plan shape, join
+  * strategy, PushedFilters do not depend on the partition count). */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
@@ -16,15 +15,7 @@ object PlanDump {
       else graft.Queries.headline.filter(graft.SparkEntry.queries.contains)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.connector.GraftSparkExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     for (q <- names) {
