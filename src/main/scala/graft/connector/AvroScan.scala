@@ -1,146 +1,51 @@
 package graft.connector
 
 import graft.format.AvroIO
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.{FileSourceOptions, InternalRow}
+import org.apache.spark.sql.connector.read.{PartitionReader, PartitionReaderFactory}
+import org.apache.spark.sql.execution.datasources.{PartitionedFile, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.v2.FilePartitionReaderFactory
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** DSv2 scan over a group of Avro data files (reference
+/** Scan over a group of Avro data files (reference
   * core/.../avro/Avro.java read path + ProjectionDatumReader): Spark ships
-  * no Avro datasource in this build, so the group scan is a thin custom
-  * Batch; readers stream GenericRecords through AvroIO's resolving
-  * projection into InternalRows.
+  * no Avro datasource in this build, so graft reads the files itself;
+  * readers stream GenericRecords through AvroIO's resolving projection
+  * into InternalRows.
   *
-  * Scale shape: container files are sequences of sync-delimited blocks, so
-  * large files SPLIT into byte ranges at `maxSplitBytes` (the session's
-  * files.maxPartitionBytes) — each reader syncs to the first block after
-  * its range start and stops past its range end, exactly Avro's own
-  * MapReduce split contract. No column stats exist, so there is no
-  * row-group pushdown to lose — file-level pruning already happened in
-  * planFiles, and Spark re-applies every filter above this scan (residual
-  * safety). `partValues` appends identity-partition constants for columns
-  * served from partition tuples (imported-layout tables whose current
-  * format is Avro), mirroring Spark's own FileScan readPartitionSchema.
-  */
-final case class AvroFilePartition(path: String, start: Long, end: Long,
-    partValues: Seq[Any])
-  extends InputPartition
-
-final class GraftAvroScan(
-    readSchema: StructType, // file-side names, target types (data columns)
-    partSchema: StructType, // partition-served columns, appended after data
-    files: Seq[(String, Long, Seq[Any])], // (path, size, partition values)
-    conf: org.apache.spark.util.SerializableConfiguration,
-    maxSplitBytes: Long = 128L * 1024 * 1024,
-    // position deletes / `_pos` on avro groups: files stay UNSPLIT (a
-    // byte-range split cannot know how many rows precede it) and each
-    // reader appends an absolute file-position counter after the data
-    // columns — the same shape as GraftOrcRowScan. Transitional by design:
-    // compaction materializes the deletes away.
-    withRowIndex: Boolean = false,
-    // trailing STORED-lineage columns in readSchema (compacted v3 files):
-    // the counter sits BETWEEN the data columns and these, matching the
-    // downstream group layout [data..., rowIdx, stored..., constants...]
-    trailingStored: Int = 0)
-  extends Scan with Batch with Serializable {
-
-  private def dataLen = readSchema.length -
-    (if (withRowIndex) trailingStored else 0)
-
-  override def readSchema(): StructType = StructType(
-    readSchema.fields.take(dataLen).toSeq ++
-    (if (withRowIndex)
-      Seq(org.apache.spark.sql.types.StructField("_graft_row_index",
-        org.apache.spark.sql.types.LongType))
-    else Nil) ++ readSchema.fields.drop(dataLen) ++ partSchema)
-  override def toBatch: Batch = this
-  override def description(): String = s"graft-avro(${files.size} files)"
-
-  override def planInputPartitions(): Array[InputPartition] =
-    files.flatMap { case (p, size, vals) =>
-      (if (withRowIndex) Seq((0L, Long.MaxValue))
-       else GraftAvroScan.ranges(size, maxSplitBytes))
-        .map { case (s, e) => AvroFilePartition(p, s, e, vals): InputPartition }
-    }.toArray
+  * A Spark FileScan: container files are sequences of sync-delimited
+  * blocks, so Spark's split planner may cut large files into byte ranges
+  * (each reader syncs to the first block after its range start and stops
+  * past its range end, exactly Avro's own MapReduce split contract) and
+  * bin-packs small ones. No column stats exist, so there is no row-group
+  * pushdown to lose — file-level pruning already happened in planFiles,
+  * and Spark re-applies every filter above this scan. */
+final case class GraftAvroScan(
+    sparkSession: SparkSession,
+    fileIndex: PartitioningAwareFileIndex,
+    dataSchema: StructType,
+    readDataSchema: StructType,
+    readPartitionSchema: StructType,
+    options: CaseInsensitiveStringMap)
+  extends GraftFileScan {
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new AvroReaderFactory(readSchema, partSchema.length, conf, withRowIndex,
-      trailingStored)
+    AvroReaderFactory(hadoopConf, layout, fileSourceOptions)
 }
 
-object GraftAvroScan {
-  /** Byte ranges of ~maxSplit covering [0, size); avoids a runt tail split
-    * (< 10% of maxSplit merges into its predecessor, like Spark's own
-    * openCostInBytes heuristic). */
-  def ranges(size: Long, maxSplit: Long): Seq[(Long, Long)] = {
-    if (size <= 0 || maxSplit <= 0 || size <= maxSplit) return Seq((0L, Long.MaxValue))
-    val n = math.max(1, (size / maxSplit).toInt +
-      (if (size % maxSplit > maxSplit / 10) 1 else 0))
-    val step = size / n + (if (size % n == 0) 0 else 1)
-    (0 until n).map { i =>
-      val s = i.toLong * step
-      val e = if (i == n - 1) Long.MaxValue else s + step
-      (s, e)
-    }
-  }
-}
-
-final class AvroReaderFactory(readSchema: StructType, partCols: Int,
+final case class AvroReaderFactory(
     conf: org.apache.spark.util.SerializableConfiguration,
-    withRowIndex: Boolean = false,
-    trailingStored: Int = 0)
-  extends PartitionReaderFactory {
+    layout: GroupLayout,
+    options: FileSourceOptions)
+  extends FilePartitionReaderFactory {
 
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val ap = p.asInstanceOf[AvroFilePartition]
-    new PartitionReader[InternalRow] {
-      private val it = AvroIO.open(ap.path, readSchema, conf.value, ap.start, ap.end)
-      private var current: InternalRow = _
-      private var rowIndex = -1L
-      private val idxCols = if (withRowIndex) 1 else 0
-      // the counter sits before any stored-lineage tail; without a counter
-      // the file layout already matches the group layout
-      private val dataLen = readSchema.length -
-        (if (withRowIndex) trailingStored else 0)
-      private val width = readSchema.length + idxCols + partCols
-
-      override def next(): Boolean = {
-        val row = it.read()
-        if (row == null) false
-        else {
-          rowIndex += 1
-          current =
-            if (partCols == 0 && !withRowIndex) row
-            else {
-              // layout: [data..., row index?, stored lineage?, partition
-              // constants...] — the same output shape Spark's FileScan
-              // produces, with the synthetic counter between data and any
-              // stored-lineage tail
-              val out = new GenericInternalRow(width)
-              var i = 0
-              while (i < dataLen) {
-                out.update(i, if (row.isNullAt(i)) null
-                  else row.get(i, readSchema(i).dataType))
-                i += 1
-              }
-              if (withRowIndex) out.update(dataLen, rowIndex)
-              var j = dataLen
-              while (j < readSchema.length) {
-                out.update(j + idxCols, if (row.isNullAt(j)) null
-                  else row.get(j, readSchema(j).dataType))
-                j += 1
-              }
-              ap.partValues.zipWithIndex.foreach { case (v, k) =>
-                out.update(readSchema.length + idxCols + k, v)
-              }
-              out
-            }
-          true
-        }
-      }
-      override def get(): InternalRow = current
-      override def close(): Unit = it.close()
-    }
+  override def buildReader(file: PartitionedFile): PartitionReader[InternalRow] = {
+    val end =
+      if (GroupLayout.reachesEnd(file)) Long.MaxValue else file.start + file.length
+    val it = AvroIO.open(file.toPath.toString, layout.fileSchema, conf.value,
+      file.start, end)
+    new LayoutRowReader(layout, file, it, () => it.read(), fresh = true)
   }
 }

@@ -7,7 +7,6 @@ import org.apache.spark.sql.connector.expressions.{Expressions => XE, Transform 
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{BatchWrite, LogicalWriteInfo, SupportsDynamicOverwrite, SupportsOverwrite, SupportsTruncate, Write, WriteBuilder}
 import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.sources.{Filter, InsertableRelation}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -39,9 +38,8 @@ final class GraftSparkTable(spark: SparkSession, val table: GraftTable,
     * source data-file path, served as a per-file partition constant —
     * powers provenance queries and MERGE's runtime group filtering; `_pos`
     * — the row's position in its file — pairs with `_file` to target
-    * position deletes from SQL (parquet rides the reader's row-index
-    * column, ORC the row-path counter; Avro rows aren't addressable by
-    * position and raise). */
+    * position deletes from SQL (the synthetic row-index column: parquet's
+    * readers fill it, graft's ORC scrub and Avro readers count rows). */
   override def metadataColumns()
       : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
     GraftSparkTable.metadataColumns
@@ -471,8 +469,8 @@ final class GraftScanBuilder private[connector] (spark: SparkSession,
     // when absent and no data-file I/O when present
     val metaFile = requested.fieldNames.contains(GraftSparkTable.FileColumn) &&
       !clean.fieldNames.contains(GraftSparkTable.FileColumn)
-    // `_pos`: the row's position in its file — parquet rides the readers'
-    // row-index column, ORC groups take the row-path counter scan
+    // `_pos`: the row's position in its file — the synthetic row-index
+    // column every format's reader fills
     val metaPos = requested.fieldNames.contains(GraftSparkTable.PosColumn) &&
       !clean.fieldNames.contains(GraftSparkTable.PosColumn)
     // `_row_id` / `_last_updated_sequence_number`: v3 row lineage — served
@@ -610,14 +608,14 @@ final class GraftScanBuilder private[connector] (spark: SparkSession,
     // the declared tail of every group's output (after any delete projection)
     val partSchema = constantsSchema(partServe)
 
-    // position deletes ride the parquet readers' synthetic row-index column;
-    // ORC and Avro groups that a position delete actually TARGETS fall back
-    // to a row-path scan with a file-position counter (GraftOrcRowScan /
-    // GraftAvroScan withRowIndex — position deletes are format-agnostic in
-    // the reference, core/.../deletes/Deletes.java:70-123). Target
-    // detection costs one driver read of the (small, per-commit) delete
-    // files' path column — and only on tables that contain non-parquet
-    // files while position deletes are live.
+    // position deletes ride the synthetic row-index column: parquet's
+    // readers fill it themselves, and ORC and Avro groups that a position
+    // delete actually TARGETS read it through graft's own counting readers
+    // (GraftOrcRowScan / GraftAvroScan — position deletes are
+    // format-agnostic in the reference, core/.../deletes/Deletes.java:70-123),
+    // whose files then stay unsplit. Target detection costs one driver read
+    // of the (small, per-commit) delete files' path column — and only on
+    // tables that contain non-parquet files while position deletes are live.
     lazy val posTargetPaths: Set[String] =
       Deletes.posDeleteTargetFiles(posFiles, spark.sessionState.newHadoopConf())
 
@@ -626,10 +624,10 @@ final class GraftScanBuilder private[connector] (spark: SparkSession,
     // (id-based resolution, the heart of metadata-only rename — SURVEY
     // §1.2), and the readDataSchema keeps the TARGET column order so every
     // generation produces identical InternalRow/ColumnarBatch layouts.
-    // Parquet and ORC groups are Spark's own vectorized FileScans; Avro
-    // groups are the custom GraftAvroScan. With live equality deletes,
-    // tasks also split by sequence number (seqKey) so delete recency is
-    // resolvable.
+    // Every group is a Spark FileScan built by GroupScan (parquet, ORC
+    // vectorized or scrub, Avro), so Spark's split planner serves every
+    // format. With live equality deletes, tasks also split by sequence
+    // number (seqKey) so delete recency is resolvable.
     val groups = plan.tasks
       .groupBy(t => (t.file.schemaId,
         if (eqDeletes.isEmpty) 0L else t.sequenceNumber, t.file.fileFormat,
@@ -647,19 +645,14 @@ final class GraftScanBuilder private[connector] (spark: SparkSession,
         val lineageStored = metaLineage && lineageKind == 2
         // parquet: every group rides the (cheap, vectorized) row-index
         // column while deletes are live; ORC and Avro: only TARGETED
-        // groups pay the unsplit row-path counter fallback
+        // groups read positions, which keeps their files unsplit
         val groupPos = posActive && (fmt match {
           case FileFormats.Parquet => true
           case _ => tasks.exists(t =>
             posTargetPaths.contains(ParquetIO.canonPath(t.file.path)))
         })
-        val orcPos = groupPos && fmt == FileFormats.Orc
-        // `_pos` rides the same row-index machinery position deletes use:
-        // parquet appends the synthetic reader column; ORC groups take the
-        // row-path counter scan; Avro groups go unsplit with a counter
+        // `_pos` and computed lineage ride the same row-index column
         val needRowIdx = groupPos || metaPos || lineageComputed
-        val orcRowBase = fmt == FileFormats.Orc && (orcPos || metaPos || lineageComputed)
-        val avroIdx = fmt == FileFormats.Avro && needRowIdx
         val fileSchema = m.schemas.getOrElse(schemaId, schema)
         val fileById = FieldIds.idToName(fileSchema)
         def fileName(target: StructField): String =
@@ -707,16 +700,6 @@ final class GraftScanBuilder private[connector] (spark: SparkSession,
         // a declared constant this generation stores as data must be moved
         // into the constants slot by the projection below
         val reordered = partServe.exists(f => !groupServed.contains(f.name))
-        // double/float reads leave the vectorized OrcScan: orc-core's
-        // batch repetition detection compares with Java `==`, so a batch
-        // holding only mixed-sign zeros collapses to the first zero's sign
-        // for every consumer of the flag — Spark's OrcColumnVector
-        // included, with no interception seam. The row path reads through
-        // OrcIO's ZeroSignScrubReader, which restores the stored values.
-        // Scans that project no floating-point leaf (the flag only
-        // misfires on ±0.0) keep the vectorized reader.
-        val orcRow = orcRowBase || (fmt == FileFormats.Orc &&
-          dataCols.exists(f => graft.format.Types.hasFloatLeaf(f.dataType)))
         val posExtra = if (needRowIdx) 1 else 0
         val storedExtra = if (lineageStored) 2 else 0
         val constAt = dataCols.length + posExtra + storedExtra
@@ -772,18 +755,18 @@ final class GraftScanBuilder private[connector] (spark: SparkSession,
           }
         }
         // the row-index column is synthetic (populated by the reader, never
-        // read from the file), so it joins the read schema un-renamed, last;
-        // partition-served columns leave the DATA schema entirely (they are
-        // appended by Spark as partition constants, after the data columns)
+        // read from the file), so it joins the read schema un-renamed, after
+        // the data columns; partition-served columns leave the DATA schema
+        // entirely (they arrive as the files' partition values, after the
+        // data columns)
         val groupRead = StructType(dataCols.map(f =>
             StructField(renames(f.name), fileSide(f), f.nullable)) ++
-          (if (needRowIdx && !orcRow && !avroIdx) Seq(StructField(
-            // nullable: the column is absent from the FILE (the reader treats
-            // it as a missing optional column, then its RowIndexGenerator
-            // overwrites the null vector with real row indexes). ORC pos
-            // groups append their counter inside GraftOrcRowScan instead.
-            org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-              .ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType, nullable = true))
+          (if (needRowIdx) Seq(StructField(
+            // nullable: the column is absent from the FILE (parquet's reader
+            // treats it as a missing optional column, then its
+            // RowIndexGenerator overwrites the null vector with real row
+            // indexes; graft's ORC and Avro readers count rows)
+            GroupScan.RowIndexColumn, LongType, nullable = true))
           else Nil) ++
           // compacted (materialized-lineage) files store the lineage
           // columns physically — read them like ordinary data columns
@@ -815,9 +798,8 @@ final class GraftScanBuilder private[connector] (spark: SparkSession,
             .filter(_.references.forall(r => !groupServed.contains(r)))
             .flatMap(f => renameFilter(f, renames))
         // manifest-fed index: no listing/stat calls at plan time. `_file`
-        // is a per-file constant, so the index degrades to one partition
-        // dir per file when it's requested (bin-packing trades for
-        // provenance — only on queries that ask)
+        // is a per-file constant, so the index serves one partition dir per
+        // file when it's requested (Spark still packs across dirs)
         val partValsOf: DataFile => Seq[Any] = df => {
           val sp = m.specs(df.specId)
           groupPartServe.map(f => sp.fields.find(pf =>
@@ -828,64 +810,8 @@ final class GraftScanBuilder private[connector] (spark: SparkSession,
         }
         val index = new GraftFileIndex(spark, tasks.map(_.file),
           groupPartSchema, partValsOf)
-        val scan: Scan = fmt match {
-          case FileFormats.Orc if orcRow =>
-            // partition-served identity columns ride as per-file constants
-            // (the vectorized branch gets them from GraftFileIndex): raw
-            // tuple values convert to Catalyst once per file here
-            val orcConsts: DataFile => Seq[Any] = df =>
-              partValsOf(df).take(groupPartServe.size).zip(groupPartServe).map {
-                case (v, f) => graft.format.Values.toCatalyst(v,
-                  Types.cleanType(f.dataType))
-              }
-            new GraftOrcRowScan(groupRead,
-              tasks.map(t =>
-                (t.file.path, t.file.fileSizeInBytes, orcConsts(t.file))),
-              new org.apache.spark.util.SerializableConfiguration(
-                spark.sessionState.newHadoopConf()),
-              partConsts = StructType(groupPartSchema.fields.take(groupPartServe.size)),
-              appendFilePath = metaFile,
-              // stored-lineage columns sit at groupRead's tail; the scan's
-              // position counter must land BEFORE them to match the group
-              // layout [data..., rowIdx, stored...]
-              trailingStored = if (lineageStored) 2 else 0,
-              // hazard-only routing (mixed-sign-zero scrub) has no rowIdx
-              // slot in its declared layout
-              withRowIndex = needRowIdx,
-              maxPartitionBytes = spark.sessionState.conf.filesMaxPartitionBytes,
-              minPartitions = spark.sparkContext.defaultParallelism)
-          case FileFormats.Orc =>
-            // ORC search-argument pruning compares strings in Java/UTF-16
-            // order while Spark (and this library) compare in UTF-8 /
-            // codepoint order; the orders disagree on astral-vs-
-            // [U+E000,U+FFFF] pairs, so an ORDER predicate pushed into the
-            // ORC reader can skip row groups that contain matching rows —
-            // row loss the post-scan residual cannot undo (caught by the
-            // round-20 workload fuzzer). Equality/IN/null tests are exact
-            // under any total order the stats themselves use and stay
-            // pushed; string order comparisons stay Spark-side residuals.
-            org.apache.spark.sql.execution.datasources.v2.orc.OrcScan(
-              spark, spark.sessionState.newHadoopConf(), index,
-              dataSchema = groupData, readDataSchema = groupRead,
-              readPartitionSchema = groupPartSchema, options = options,
-              pushedAggregate = None,
-              pushedFilters = groupFilters.filter(orcSargSafe))
-          case FileFormats.Avro =>
-            new GraftAvroScan(groupRead, groupPartSchema,
-              tasks.map(t => (t.file.path, t.file.fileSizeInBytes,
-                partValsOf(t.file).zip(groupPartSchema.fields)
-                  .map { case (v, f) => graft.format.Values.toCatalyst(v, f.dataType) })),
-              new org.apache.spark.util.SerializableConfiguration(
-                spark.sessionState.newHadoopConf()),
-              spark.sessionState.conf.filesMaxPartitionBytes,
-              withRowIndex = avroIdx,
-              trailingStored = if (lineageStored) 2 else 0)
-          case _ =>
-            ParquetScan(spark, spark.sessionState.newHadoopConf(), index,
-              dataSchema = groupData, readDataSchema = groupRead,
-              readPartitionSchema = groupPartSchema,
-              pushedFilters = groupFilters, options = options)
-        }
+        val scan = GroupScan(spark, fmt, index, groupData, groupRead,
+          groupPartSchema, groupFilters, options)
         // initial-default backfill for columns this generation predates:
         // (ordinal in the physical read row, clean type, catalyst value) —
         // applied by a reader wrapper UNDER the delete filters. Partition-
@@ -963,8 +889,9 @@ final class GraftScanBuilder private[connector] (spark: SparkSession,
           nullable = true)) else Nil) ++
         partSchema.fields)
     // storage-partitioned-join eligibility: opt-in via Spark's v2 bucketing
-    // conf, one scan group over one live spec whose fields are all identity
-    // or bucket[N], no row-level-op or metadata columns in play. Bucket
+    // conf, every planned file under one live spec whose fields are all
+    // identity, bucket[N], truncate[W] or a time transform, no row-level-op
+    // or metadata columns in play. Bucket
     // fields report as connector bucket(N, col) transforms — Spark resolves
     // them against this catalog's FunctionCatalog (GraftFunctions.bucket,
     // the same murmur3 kernel the write path placed files with), so two
@@ -976,9 +903,9 @@ final class GraftScanBuilder private[connector] (spark: SparkSession,
     // co-partitioned join over a MoR table still skips the shuffle. Each
     // file's partition key converts to Catalyst values once, spec-field
     // order (a bucket field's key is the stored bucket ordinal).
-    // multi-group scans (one reader group per format × schema generation)
-    // stay eligible: keyedParts tags each file with its group and the
-    // per-key task concatenates per-group subs
+    // Multi-group scans (one reader group per format × schema generation,
+    // every format included) stay eligible: keyedParts tags each file with
+    // its group and the per-key task concatenates per-group subs
     val spjInfo: Option[SpjInfo] =
       if (groupGranular || metaFile || metaPos || metaLineage ||
           plan.tasks.isEmpty) None
@@ -1036,46 +963,6 @@ final class GraftScanBuilder private[connector] (spark: SparkSession,
       lineages = groups.map(_._4))
   }
 
-  /** Safe to hand to ORC's search-argument builder: no ORDER comparison on
-    * a string or timestamp value.
-    *  - Strings: ORC stats order by UTF-16 unit, Spark by UTF-8/codepoint —
-    *    a disagreement on astral codepoints makes ORC's "row group cannot
-    *    match" conclusion wrong, losing rows.
-    *  - Timestamps: ORC's sarg works at MILLISECOND granularity, so
-    *    sub-millisecond literals tie with same-millisecond data and both
-    *    ORDER and EQUALITY comparisons wrongly prove "cannot match"
-    *    (`ts < timestamp_micros(1)` pruned a ts=0 row, and
-    *    `ts = timestamp_micros(5)` pruned the matching row — round-20
-    *    fuzz findings). EVERY timestamp comparison stays Spark-side.
-    * String equality/membership is exact under either order: a value
-    * present in the file lies within the stats range computed the same
-    * way. Null tests ride exact null counts and always stay pushed. */
-  private def orcSargSafe(f: Filter): Boolean = {
-    import org.apache.spark.sql.sources
-    def orderUnsafe(v: Any): Boolean = v match {
-      case _: String => true
-      case _ => tsUnsafe(v)
-    }
-    def tsUnsafe(v: Any): Boolean = v match {
-      case _: java.sql.Timestamp | _: java.time.Instant |
-           _: java.time.LocalDateTime => true
-      case _ => false
-    }
-    f match {
-      case sources.GreaterThan(_, v) if orderUnsafe(v) => false
-      case sources.GreaterThanOrEqual(_, v) if orderUnsafe(v) => false
-      case sources.LessThan(_, v) if orderUnsafe(v) => false
-      case sources.LessThanOrEqual(_, v) if orderUnsafe(v) => false
-      case sources.EqualTo(_, v) if tsUnsafe(v) => false
-      case sources.EqualNullSafe(_, v) if tsUnsafe(v) => false
-      case sources.In(_, vs) if vs.exists(tsUnsafe) => false
-      case sources.And(l, r) => orcSargSafe(l) && orcSargSafe(r)
-      case sources.Or(l, r) => orcSargSafe(l) && orcSargSafe(r)
-      case sources.Not(c) => orcSargSafe(c)
-      case _ => true
-    }
-  }
-
   /** Rename filter references current→file names; drop if any referenced
     * column is absent from the mapping (it stays a Spark-side residual). */
   private def renameFilter(f: Filter, renames: Map[String, String]): Option[Filter] =
@@ -1099,13 +986,15 @@ final class GraftScanBuilder private[connector] (spark: SparkSession,
 }
 
 /** Union-of-generations scan: concatenates each (generation, format)
-  * group's scan partitions — Spark's vectorized ParquetScan/OrcScan or the
-  * custom Avro batch; readers dispatch to the owning group's factory. All
-  * groups share one output layout, so Spark sees a single homogeneous
-  * batch source (columnar included). Reports manifest-derived statistics to
+  * group's scan partitions. Every group is a Spark FileScan (ParquetScan,
+  * OrcScan, or graft's GraftOrcRowScan / GraftAvroScan; see [[GroupScan]]),
+  * so every partition is a FilePartition; readers dispatch to the owning
+  * group's factory. All groups share one output layout, so Spark sees a
+  * single homogeneous batch source (columnar included). Reports manifest-derived statistics to
   * the CBO (reference SparkBatchScan.estimateStatistics :186-209) so join
   * sides behind graft tables broadcast correctly. */
-final class GraftScan(output: StructType, groupScans: Seq[Scan],
+final class GraftScan(output: StructType,
+    groupScans: Seq[org.apache.spark.sql.execution.datasources.v2.FileScan],
     plan: ScanPlan, spark: SparkSession = null, table: GraftTable = null,
     options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty(),
     deletes: Seq[Option[GroupDeletes]] = Nil,
@@ -1120,6 +1009,7 @@ final class GraftScan(output: StructType, groupScans: Seq[Scan],
   with org.apache.spark.sql.connector.read.SupportsReportPartitioning
   with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
   import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Statistics}
+  import org.apache.spark.sql.execution.datasources.FilePartition
   import java.util.OptionalLong
 
   override def readSchema(): StructType = output
@@ -1129,7 +1019,8 @@ final class GraftScan(output: StructType, groupScans: Seq[Scan],
   /** Test visibility: the (possibly eq-delete-pruned) plan this scan runs. */
   private[connector] def scanPlan: ScanPlan = plan
   /** Test visibility: one reader scan per (generation, format) group. */
-  private[graft] def groups: Seq[Scan] = groupScans
+  private[graft] def groups: Seq[org.apache.spark.sql.execution.datasources.v2.FileScan] =
+    groupScans
 
   /** Runtime group filtering (reference SparkCopyOnWriteScan): row-level
     * operation scans advertise `_file`, so Spark's
@@ -1308,8 +1199,9 @@ final class GraftScan(output: StructType, groupScans: Seq[Scan],
           LineageScope(base, t.sequenceNumber))
       case _ => None
     }).toMap
-  private lazy val partsByGroup: Seq[Array[InputPartition]] =
-    inner.map(_.planInputPartitions())
+  // a FileScan's input partitions are its FilePartitions
+  private lazy val partsByGroup: Seq[Array[FilePartition]] =
+    inner.map(_.planInputPartitions().map(_.asInstanceOf[FilePartition]))
 
   /** Driver-side per-task delete matcher: canonical data-file path → the
     * position-delete files / DV slices that can reference it. Built from
@@ -1516,34 +1408,25 @@ final class GraftScan(output: StructType, groupScans: Seq[Scan],
       }
     }
 
-  /** Storage-partitioned-join planning: when the builder proved the scan is
-    * one group over one all-identity spec (spjInfo), regroup the planned
-    * files into ONE InputPartition PER PARTITION KEY, each carrying its key
-    * row — Spark's KeyGroupedPartitioning contract, which lets two
+  /** Storage-partitioned-join planning: when the builder proved the scan's
+    * files share one supported spec (spjInfo), regroup the planned files of
+    * EVERY group into ONE InputPartition PER PARTITION KEY, each carrying
+    * its key row — Spark's KeyGroupedPartitioning contract, which lets two
     * co-partitioned graft tables join with NO shuffle on either side
     * (reference-beyond: the fork predates SPJ; Apache Iceberg's
-    * SparkPartitioningAwareScan is the public analogue). Any partition
-    * shape we can't regroup falls back to None = unknown partitioning. */
+    * SparkPartitioningAwareScan is the public analogue). A file whose key
+    * is unknown falls back to None = unknown partitioning. */
   private lazy val keyedParts: Option[Array[InputPartition]] = spjInfo.flatMap { info =>
-    import org.apache.spark.sql.execution.datasources.FilePartition
-    // every group's partitions must be plain FilePartitions; each file is
-    // tagged with its reader group, so a scan split across schema
-    // generations (rename/promotion creates one reader group per
-    // generation) STILL key-groups — evolving a table's schema must not
-    // cost its joins the shuffle-free plan forever. The per-key task
-    // concatenates per-group subs; ConcatReader dispatches each sub to
-    // its own group's reader.
-    val tagged: Option[Seq[(Int,
-        org.apache.spark.sql.execution.datasources.PartitionedFile)]] = {
-      val perGroup = partsByGroup.zipWithIndex.map { case (parts, g) =>
-        val fps = parts.collect { case fp: FilePartition => fp }
-        if (fps.length != parts.length) None
-        else Some(fps.flatMap(_.files).toSeq.map(f => g -> f))
-      }
-      if (perGroup.exists(_.isEmpty)) None
-      else Some(perGroup.flatMap(_.get))
+    // each file is tagged with its reader group, so a scan split across
+    // formats or schema generations (rename/promotion creates one reader
+    // group per generation) STILL key-groups — evolving a table's schema
+    // or format must not cost its joins the shuffle-free plan forever.
+    // The per-key task concatenates per-group subs; ConcatReader
+    // dispatches each sub to its own group's reader.
+    val files = partsByGroup.zipWithIndex.flatMap { case (parts, g) =>
+      parts.toSeq.flatMap(_.files).map(f => g -> f)
     }
-    tagged.flatMap { files =>
+    locally {
       val keyed = files.map { case (g, f) =>
         info.keyOf.get(ParquetIO.canonPath(f.filePath.toPath.toString)) -> ((g, f))
       }
@@ -1612,8 +1495,8 @@ final class GraftScan(output: StructType, groupScans: Seq[Scan],
         // lineage stays columnar (LineageColumnarReader): computed ids are
         // one vectorized base+rowIdx add per batch, stored/absent lineage
         // are pass-through/constant vectors — CDC consumers scanning
-        // _row_id over parquet tables never pay the row-path tax. ORC/Avro
-        // lineage groups drop to rows via their factories' own answer.
+        // _row_id over parquet tables never pay the row-path tax. Avro
+        // groups drop to rows via their factory's own answer.
         // Nested default fills rewrite struct values per row — no columnar
         // constant-vector shortcut exists inside a non-constant struct
         groupFills(i).forall(_.nested.isEmpty)
@@ -1626,7 +1509,6 @@ final class GraftScan(output: StructType, groupScans: Seq[Scan],
     }
 
     private def planPartitionsImpl(): Array[InputPartition] = keyedParts.getOrElse {
-      import org.apache.spark.sql.execution.datasources.FilePartition
       val keep = runtimeKeep
       def kept(path: String): Boolean =
         keep.forall(_.contains(ParquetIO.canonPath(path)))
@@ -1638,80 +1520,41 @@ final class GraftScan(output: StructType, groupScans: Seq[Scan],
         // partition-scoped equality deletes narrow each task's key-set
         // sources to its own partition's delete files
         val eqActive = eqScopable && groupDeletes(i).exists(_.sets.nonEmpty)
-        def scopes(canon: String): (Option[PosScope], Option[LineageScope]) =
-          (if (posGroup) Some(posScopeOf(canon)) else None,
-            if (lineageGroup) lineageScopeOf.get(canon) else None)
         def eqScope(canons: Seq[String]): Option[Seq[Seq[String]]] =
           if (eqActive) eqScopeFor(i, canons) else None
         if (!posGroup && !lineageGroup && keep.isEmpty && !eqActive)
           parts.toSeq.map(p => GroupedPartition(i, p): InputPartition)
-        else parts.toSeq.flatMap {
-          case fp: FilePartition =>
-            // runtime filtering drops files the dynamic subquery proved
-            // matchless; position deletes additionally need one task per
-            // file (the position set is keyed by data-file path — the SAME
-            // canonicalization the delete rows' file_path goes through, so
-            // the lookup agrees on every filesystem scheme)
-            val files = fp.files.filter(f => kept(f.filePath.toPath.toString))
-            if (files.isEmpty) Nil
-            else if (posGroup || lineageGroup) {
-              // file-granular scoping WITHOUT losing Spark's bin-packing:
-              // keep the original FilePartition boundary (Spark already
-              // sized it to maxSplitBytes/bytesPerCore) and emit ONE task
-              // whose reader concatenates the per-file delete-scoped subs
-              // — small MoR files don't degrade to one task each
-              val subs = files.toSeq.map { f =>
-                val canon = ParquetIO.canonPath(f.filePath.toPath.toString)
-                val (ps, ls) = scopes(canon)
-                GroupedPartition(i, FilePartition(fp.index, Array(f)),
-                  Some(canon), ps, ls, eqScope(Seq(canon)))
-              }
-              Seq(if (subs.size == 1) subs.head: InputPartition
-                  else MultiFilePartition(subs): InputPartition)
+        else parts.toSeq.flatMap { fp =>
+          // runtime filtering drops files the dynamic subquery proved
+          // matchless; position deletes additionally need one task per
+          // file (the position set is keyed by data-file path — the SAME
+          // canonicalization the delete rows' file_path goes through, so
+          // the lookup agrees on every filesystem scheme)
+          val files = fp.files.filter(f => kept(f.filePath.toPath.toString))
+          if (files.isEmpty) Nil
+          else if (posGroup || lineageGroup) {
+            // file-granular scoping WITHOUT losing Spark's bin-packing:
+            // keep the original FilePartition boundary (Spark already
+            // sized it to maxSplitBytes/bytesPerCore) and emit ONE task
+            // whose reader concatenates the per-file delete-scoped subs
+            // — small MoR files don't degrade to one task each
+            val subs = files.toSeq.map { f =>
+              val canon = ParquetIO.canonPath(f.filePath.toPath.toString)
+              GroupedPartition(i, FilePartition(fp.index, Array(f)),
+                Some(canon),
+                if (posGroup) Some(posScopeOf(canon)) else None,
+                if (lineageGroup) lineageScopeOf.get(canon) else None,
+                eqScope(Seq(canon)))
             }
-            else {
-              val canons = files.toSeq.map(f =>
-                ParquetIO.canonPath(f.filePath.toPath.toString))
-              Seq(GroupedPartition(i, FilePartition(fp.index, files),
-                eqScope = eqScope(canons)): InputPartition)
-            }
-          // ORC row-path and Avro partitions are file-granular by construction
-          case op: OrcRowFilePartition =>
-            if (!kept(op.path)) Nil
-            else {
-              val canon = ParquetIO.canonPath(op.path)
-              val (ps, ls) = scopes(canon)
-              Seq(GroupedPartition(i, op, Some(canon), ps, ls,
-                eqScope(Seq(canon))): InputPartition)
-            }
-          // packed hazard-routed ORC partitions (withRowIndex=false — never
-          // position-delete or computed-lineage groups, so no per-file
-          // scoping): runtime filtering drops pruned chunks, equality-delete
-          // narrowing covers the partition's whole file set
-          case omp: OrcRowMultiPartition =>
-            val keptChunks = omp.chunks.filter(c => kept(c.path))
-            if (keptChunks.isEmpty) Nil
-            else {
-              val canons = keptChunks.map(c => ParquetIO.canonPath(c.path))
-                .distinct
-              Seq(GroupedPartition(i, OrcRowMultiPartition(keptChunks),
-                None, None, None, eqScope(canons)): InputPartition)
-            }
-          case ap: AvroFilePartition =>
-            if (!kept(ap.path)) Nil
-            else {
-              val canon = ParquetIO.canonPath(ap.path)
-              val (ps, ls) = scopes(canon)
-              Seq(GroupedPartition(i, ap, Some(canon), ps, ls,
-                eqScope(Seq(canon))): InputPartition)
-            }
-          case other =>
-            if (posGroup || lineageGroup) throw new IllegalStateException(
-              "position deletes and computed lineage need file-granular " +
-                s"partitions, got ${other.getClass}")
-            // unknown partition shape: keep it — runtime filtering and eq
-            // scoping are optimizations, never required for correctness
-            else Seq(GroupedPartition(i, other): InputPartition)
+            Seq(if (subs.size == 1) subs.head: InputPartition
+                else MultiFilePartition(subs): InputPartition)
+          }
+          else {
+            val canons = files.toSeq.map(f =>
+              ParquetIO.canonPath(f.filePath.toPath.toString))
+            Seq(GroupedPartition(i, FilePartition(fp.index, files),
+              eqScope = eqScope(canons)): InputPartition)
+          }
         }
       }.toArray
     }
@@ -1941,10 +1784,11 @@ final class ConcatReader[T](makers: Seq[() => org.apache.spark.sql.connector.rea
   override def close(): Unit = if (cur != null) { cur.close(); cur = null }
 }
 
-/** Builder-side proof that a scan is storage-partitioned-join-able: one
-  * scan group over one spec whose fields are identity / bucket[N] /
-  * truncate[W] / year|month|day|hour, with every planned file's partition
-  * key (Catalyst values, spec-field order) resolvable by path. Non-identity
+/** Builder-side proof that a scan is storage-partitioned-join-able: its
+  * files, in any number of scan groups, share one spec whose fields are
+  * identity / bucket[N] / truncate[W] / year|month|day|hour, with every
+  * planned file's partition key (Catalyst values, spec-field order)
+  * resolvable by path. Non-identity
   * fields carry their transform so the reported partitioning spells the
   * matching connector transform — Spark resolves it against GraftFunctions
   * (same kernels as write placement), so the probe side of a one-sided SPJ

@@ -7,7 +7,6 @@ import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, Par
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -25,7 +24,8 @@ final case class FileSliceOffset(snapshotId: Long, fileIdx: Int) extends Offset 
   * (start, end] at FILE granularity — `spark.readStream.table("g.db.t")`.
   * With `max-bytes-per-trigger` set, admission control slices oversized
   * backlogs (including WITHIN one snapshot) into size-budgeted batches.
-  * The physical read is Spark's ParquetScan partitions, same as batch.
+  * Each (format, generation) group is the same FileScan batch reads
+  * build ([[GroupScan]]), so splits and packing are Spark's own.
   * With `branch` set the stream follows the BRANCH ref's commit line
   * (appends to the branch surface as batches; main commits never do) —
   * the `t.branch_x` identifier spelling routes here too. */
@@ -212,36 +212,9 @@ final class GraftMicroBatchStream(spark: SparkSession, table: GraftTable,
   // without a file list, so the partition group index must be derivable
   // from (generation, format) alone and stable as the registry grows
   private def scanFor(fmt: String, read: StructType, files: Seq[DataFile])
-      : org.apache.spark.sql.connector.read.Scan = fmt match {
-    case FileFormats.Orc =>
-      // double/float reads take the row path: orc-core's `==`-based batch
-      // repetition detection collapses mixed-sign-zero batches for every
-      // consumer of the flag (Spark's vectorized reader included); OrcIO's
-      // ZeroSignScrubReader restores the stored values (GraftSparkTable
-      // routes its batch scans the same way)
-      if (read.fields.exists(f => Types.hasFloatLeaf(f.dataType)))
-        new GraftOrcRowScan(read,
-          files.map(f => (f.path, f.fileSizeInBytes, Nil)),
-          new org.apache.spark.util.SerializableConfiguration(
-            spark.sessionState.newHadoopConf()),
-          withRowIndex = false,
-          maxPartitionBytes = spark.sessionState.conf.filesMaxPartitionBytes,
-          minPartitions = spark.sparkContext.defaultParallelism)
-      else org.apache.spark.sql.execution.datasources.v2.orc.OrcScan(
-        spark, spark.sessionState.newHadoopConf(),
-        new GraftFileIndex(spark, files), read, read,
-        StructType(Nil), options, None, Array.empty)
-    case FileFormats.Avro =>
-      new GraftAvroScan(read, StructType(Nil),
-        files.map(f => (f.path, f.fileSizeInBytes, Nil)),
-        new org.apache.spark.util.SerializableConfiguration(
-          spark.sessionState.newHadoopConf()),
-        spark.sessionState.conf.filesMaxPartitionBytes)
-    case _ =>
-      ParquetScan(spark, spark.sessionState.newHadoopConf(),
-        new GraftFileIndex(spark, files), read, read,
-        StructType(Nil), Array.empty, options)
-  }
+      : org.apache.spark.sql.execution.datasources.v2.FileScan =
+    GroupScan(spark, fmt, new GraftFileIndex(spark, files), read, read,
+      StructType(Nil), Array.empty, options)
 
   private def groupedPartitions(files: Seq[DataFile]): Array[InputPartition] = {
     // adopt generations created mid-stream BEFORE indexing the batch

@@ -1,183 +1,86 @@
 package graft.connector
 
 import graft.format.OrcIO
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.{FileSourceOptions, InternalRow}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
+import org.apache.spark.sql.execution.datasources.{PartitionedFile, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.v2.FilePartitionReaderFactory
+import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
-/** Scrub-routed ORC scan: groups TARGETED by position deletes / computed
-  * lineage (Spark's vectorized ORC reader does not populate the synthetic
-  * row-index column the parquet path rides — position deletes are
-  * format-agnostic in the reference: PositionStreamDeleteFilter,
-  * core/.../deletes/Deletes.java:70-123), and groups projecting a
+/** Scrub-routed ORC scan: ORC groups that read file positions (position
+  * deletes, `_pos`, computed lineage — Spark's vectorized ORC reader fills
+  * no row-index column, while position deletes are format-agnostic in the
+  * reference: PositionStreamDeleteFilter,
+  * core/.../deletes/Deletes.java:70-123) and groups projecting a
   * float/double leaf (orc-core's mixed-sign-zero batch collapse — see
   * OrcIO.ZeroSignScrubReader). Readers serve COLUMNAR batches: the
   * scrubbed orc-core batch wraps zero-copy into Spark's own
   * OrcColumnVector, so routed groups read at vectorized speed.
   *
-  * Partitioning: groups that carry the position counter stay ONE partition
-  * per FILE, unsplit (a split would need stripe-level row offsets to keep
-  * positions absolute; transitional by design — compaction clears the
-  * state). Hazard-only groups (withRowIndex=false) need no positions, so
-  * they plan like Spark's own FileScan: large files split into stripe
-  * byte-ranges, small files bin-pack into shared partitions — without
-  * this, a 100k-small-file scan pays 100k tasks. */
-final case class OrcRowFilePartition(path: String,
-    consts: Seq[Any]) extends InputPartition
-
-/** One byte-range of one file inside a packed partition; `length < 0`
-  * reads the whole file. */
-final case class OrcChunk(path: String, start: Long, length: Long,
-    consts: Seq[Any])
-
-final case class OrcRowMultiPartition(chunks: Seq[OrcChunk])
-  extends InputPartition
-
-final class GraftOrcRowScan(
-    dataSchema: StructType, // file-side names, target types (data columns)
-    files: Seq[(String, Long, Seq[Any])], // (path, size, partition consts)
-    conf: org.apache.spark.util.SerializableConfiguration,
-    // partition-served identity columns (imported hive layouts): the
-    // column exists only in the partition tuple, so the reader serves it
-    // as a per-file CONSTANT — in the same slot Spark's own readers give
-    // it via the file index, between any stored-lineage tail and `_file`.
-    // Omitting them (the pre-fix shape) left the physical row NARROWER
-    // than the declared output whenever `_pos`/lineage forced this scan
-    // on a table with metadata-only partition columns.
-    partConsts: StructType = new StructType(),
-    appendFilePath: Boolean = false, // serve `_file` after the constants
-    // trailing STORED-lineage columns in dataSchema (compacted v3 files):
-    // the counter must sit BETWEEN the data columns and these, because the
-    // group layout downstream is [data..., rowIdx, stored..., consts...,
-    // _file?] — the same slot the parquet path's synthetic row-index
-    // column occupies
-    trailingStored: Int = 0,
-    // groups routed here only for the mixed-sign-zero hazard (no live
-    // position deletes, no computed lineage) need no position counter —
-    // their declared layout has no rowIdx slot, and their files may split
-    // and pack freely
-    withRowIndex: Boolean = true,
-    // split/pack targets (session conf at the call site; defaults match
-    // Spark's): files.maxPartitionBytes and the scan-parallelism floor
-    maxPartitionBytes: Long = 128L * 1024 * 1024,
-    minPartitions: Int = 1)
-  extends Scan with Batch with Serializable {
-
-  private def dataLen = dataSchema.length - trailingStored
-
-  override def readSchema(): StructType =
-    StructType(dataSchema.fields.take(dataLen).toSeq ++
-      (if (withRowIndex) Seq(StructField("_graft_row_index", LongType))
-       else Nil) ++
-      dataSchema.fields.drop(dataLen) ++
-      partConsts.fields ++
-      (if (appendFilePath)
-        Seq(StructField(GraftSparkTable.FileColumn, StringType, nullable = false))
-      else Nil))
-  override def toBatch: Batch = this
-  override def description(): String = s"graft-orc-rows(${files.size} files)"
-
-  override def planInputPartitions(): Array[InputPartition] =
-    if (withRowIndex)
-      files.map { case (p, _, cs) => OrcRowFilePartition(p, cs): InputPartition }
-        .toArray
-    else {
-      // Spark's FilePartition sizing: maxSplit = min(maxPartitionBytes,
-      // max(openCost, totalWork / parallelism)); big files cut into
-      // ranges, then chunks pack size-desc next-fit into partitions
-      val openCost = 4L * 1024 * 1024
-      val totalWork = files.map { case (_, sz, _) =>
-        math.max(0L, sz) + openCost }.sum
-      val maxSplit = math.min(maxPartitionBytes,
-        math.max(openCost, totalWork / math.max(1, minPartitions)))
-      val chunks: Seq[(OrcChunk, Long)] = files.flatMap { case (p, size, cs) =>
-        if (size <= maxSplit)
-          Seq((OrcChunk(p, 0L, -1L, cs), math.max(0L, size) + openCost))
-        else
-          GraftAvroScan.ranges(size, maxSplit).map { case (s, e) =>
-            val len = (if (e == Long.MaxValue) size else e) - s
-            (OrcChunk(p, s, len, cs), len + openCost)
-          }
-      }
-      val bins = Seq.newBuilder[OrcRowMultiPartition]
-      val cur = Seq.newBuilder[OrcChunk]
-      var curSize = 0L
-      var curN = 0
-      chunks.sortBy(-_._2).foreach { case (c, cost) =>
-        if (curN > 0 && curSize + cost > maxSplit) {
-          bins += OrcRowMultiPartition(cur.result()); cur.clear()
-          curSize = 0L; curN = 0
-        }
-        cur += c; curSize += cost; curN += 1
-      }
-      if (curN > 0) bins += OrcRowMultiPartition(cur.result())
-      bins.result().map(b => b: InputPartition).toArray
-    }
+  * A Spark FileScan: Spark's split planner cuts large files into byte
+  * ranges (a range reads the stripes that start inside it) and bin-packs
+  * small ones. */
+final case class GraftOrcRowScan(
+    sparkSession: SparkSession,
+    fileIndex: PartitioningAwareFileIndex,
+    dataSchema: StructType,
+    readDataSchema: StructType,
+    readPartitionSchema: StructType,
+    options: CaseInsensitiveStringMap)
+  extends GraftFileScan {
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new OrcRowReaderFactory(dataSchema, conf, partConsts,
-      appendFilePath, trailingStored, withRowIndex)
+    OrcRowReaderFactory(hadoopConf, layout, fileSourceOptions)
 }
 
-final class OrcRowReaderFactory(dataSchema: StructType,
+final case class OrcRowReaderFactory(
     conf: org.apache.spark.util.SerializableConfiguration,
-    partConsts: StructType = new StructType(),
-    appendFilePath: Boolean = false,
-    trailingStored: Int = 0,
-    withRowIndex: Boolean = true)
-  extends PartitionReaderFactory {
+    layout: GroupLayout,
+    options: FileSourceOptions)
+  extends FilePartitionReaderFactory {
 
-  private def numConsts = partConsts.length
-
-  private def chunksOf(p: InputPartition): Seq[OrcChunk] = p match {
-    case mp: OrcRowMultiPartition => mp.chunks
-    case op: OrcRowFilePartition => Seq(OrcChunk(op.path, 0L, -1L, op.consts))
-  }
+  /** orc-core range: the stripes whose START offset falls inside it. A
+    * split that reaches the file's recorded end reads every later stripe
+    * too. */
+  private def rangeOf(file: PartitionedFile): Long =
+    if (GroupLayout.reachesEnd(file)) Long.MaxValue - file.start else file.length
 
   /** The scrubbed batch wraps into Spark's own OrcColumnVector (zero copy),
-    * so every configuration of this scan serves columnar batches; synthetic
-    * columns (row index, partition constants, `_file`) ride as generated /
+    * so every configuration of this scan serves columnar batches; the row
+    * index is a generated vector, partition constants and `_file` are
     * constant vectors. Spark requires all partitions of a scan to agree —
     * this is a constant, and the GroupedReaderFactory's scan-wide decision
     * (delete repackability, nested fills) still gates the final answer. */
   override def supportColumnarReads(p: InputPartition): Boolean = true
 
-  override def createColumnarReader(p: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    chunksOf(p) match {
-      case Seq(one) => columnarChunkReader(one)
-      case many => new ConcatReader(many.map(c => () => columnarChunkReader(c)))
-    }
-
-  private def columnarChunkReader(chunk: OrcChunk)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
+  override def buildColumnarReader(file: PartitionedFile)
+      : PartitionReader[ColumnarBatch] = {
     import org.apache.spark.sql.execution.datasources.orc.GraftOrcShims
     import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-    import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+    import org.apache.spark.sql.vectorized.ColumnVector
+    layout.checkWhole(file)
     new PartitionReader[ColumnarBatch] {
       private val capacity = 4096
-      private val it = OrcIO.openBatched(chunk.path, dataSchema, conf.value,
-        capacity, chunk.start, chunk.length)
-      private val dataLen = dataSchema.length - trailingStored
-      private val wrapped = dataSchema.fields.zipWithIndex.map {
-        case (f, i) => GraftOrcShims.wrap(f.dataType, it.batch.cols(i))
-      }
+      private val it = OrcIO.openBatched(file.toPath.toString,
+        layout.fileSchema, conf.value, capacity, file.start, rangeOf(file))
+      private val wrapped =
+        layout.fileSchema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+          GraftOrcShims.wrap(f.dataType, it.batch.cols(i))
+        }
       private val idxVec: OnHeapColumnVector =
-        if (withRowIndex) new OnHeapColumnVector(capacity, LongType) else null
-      private val constVecs = partConsts.fields.zipWithIndex.map {
-        case (f, k) => ConstantFill.vector(capacity, f.dataType, chunk.consts(k))
-      }
-      private val fileVec =
-        if (appendFilePath) ConstantFill.vector(capacity, StringType,
-          org.apache.spark.unsafe.types.UTF8String.fromString(chunk.path))
+        if (layout.rowIdxAt >= 0) new OnHeapColumnVector(capacity, LongType)
         else null
-      // group layout: [data..., rowIdx?, stored..., consts..., _file?]
+      private val constVecs = layout.partSchema.fields.toSeq
+        .zip(layout.partValues(file)).map { case (f, v) =>
+          ConstantFill.vector(capacity, f.dataType, v)
+        }
       private val cols: Array[ColumnVector] =
-        (wrapped.take(dataLen) ++
-          (if (withRowIndex) Seq(idxVec) else Nil) ++
-          wrapped.drop(dataLen) ++ constVecs ++
-          (if (appendFilePath) Seq(fileVec) else Nil)).toArray
+        ((if (idxVec == null) wrapped
+          else (wrapped: Seq[ColumnVector]).patch(layout.rowIdxAt, Seq(idxVec), 0)) ++
+          constVecs).toArray
       private val out = new ColumnarBatch(cols, 0)
       private var rowBase = 0L
 
@@ -185,7 +88,7 @@ final class OrcRowReaderFactory(dataSchema: StructType,
         if (!it.nextBatch()) return false
         val n = it.batch.size
         wrapped.foreach(_.setBatchSize(n))
-        if (withRowIndex) {
+        if (idxVec != null) {
           idxVec.reset()
           var i = 0
           while (i < n) { idxVec.putLong(i, rowBase + i); i += 1 }
@@ -199,62 +102,9 @@ final class OrcRowReaderFactory(dataSchema: StructType,
     }
   }
 
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    chunksOf(p) match {
-      case Seq(one) => rowChunkReader(one)
-      case many => new ConcatReader(many.map(c => () => rowChunkReader(c)))
-    }
-
-  private def rowChunkReader(chunk: OrcChunk): PartitionReader[InternalRow] =
-    new PartitionReader[InternalRow] {
-      private val it = OrcIO.open(chunk.path, dataSchema, conf.value,
-        chunk.start, chunk.length)
-      private var current: InternalRow = _
-      private var rowIndex = -1L
-      private val dataLen = dataSchema.length - trailingStored
-      private val idxSlot = if (withRowIndex) 1 else 0
-      private val width =
-        dataSchema.length + idxSlot + numConsts +
-          (if (appendFilePath) 1 else 0)
-      private val pathUtf8 =
-        org.apache.spark.unsafe.types.UTF8String.fromString(chunk.path)
-
-      override def next(): Boolean = {
-        val row = it.read()
-        if (row == null) false
-        else {
-          rowIndex += 1
-          // the deserializer reuses its row — copy values out, inserting
-          // the absolute file position between the data columns and any
-          // stored-lineage tail, then the partition-served constants,
-          // then `_file` when requested, last
-          val out = new GenericInternalRow(width)
-          var i = 0
-          while (i < dataLen) {
-            out.update(i, if (row.isNullAt(i)) null
-              else row.get(i, dataSchema(i).dataType))
-            i += 1
-          }
-          if (withRowIndex) out.update(dataLen, rowIndex)
-          var j = 0
-          while (j < trailingStored) {
-            val src = dataLen + j
-            out.update(src + idxSlot, if (row.isNullAt(src)) null
-              else row.get(src, dataSchema(src).dataType))
-            j += 1
-          }
-          var k = 0
-          while (k < numConsts) {
-            out.update(dataSchema.length + idxSlot + k, chunk.consts(k))
-            k += 1
-          }
-          if (appendFilePath)
-            out.update(dataSchema.length + idxSlot + numConsts, pathUtf8)
-          current = out
-          true
-        }
-      }
-      override def get(): InternalRow = current
-      override def close(): Unit = it.close()
-    }
+  override def buildReader(file: PartitionedFile): PartitionReader[InternalRow] = {
+    val it = OrcIO.open(file.toPath.toString, layout.fileSchema, conf.value,
+      file.start, rangeOf(file))
+    new LayoutRowReader(layout, file, it, () => it.read())
+  }
 }

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.connector.read.Scan
 import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, FileScan}
 import org.apache.spark.sql.execution.window.WindowExec
 
 class QueriesSpec extends SparkSpec {
@@ -18,7 +20,9 @@ class QueriesSpec extends SparkSpec {
     * without a partitionSpec moves every row to one partition. A ScalaUDF
     * in a FilterExec condition is evaluated again by the project above that
     * keeps its value (codegen subexpression elimination does not span
-    * operators), so the UDF runs twice per row. */
+    * operators), so the UDF runs twice per row. Every scan group of a
+    * GraftScan must be a Spark FileScan, so every format's reads are split
+    * and packed by Spark's own planner. */
   private def planLint(name: String, plan: SparkPlan): Seq[String] = {
     val windows = plan.collect {
       case w: WindowExec if w.partitionSpec.isEmpty =>
@@ -28,7 +32,16 @@ class QueriesSpec extends SparkSpec {
       case f: FilterExec if f.condition.exists(_.isInstanceOf[ScalaUDF]) =>
         s"$name: ScalaUDF in filter ${f.condition.sql.take(160)}"
     }
-    windows ++ (
+    val customGroups = plan.collect {
+      case b: BatchScanExec => b.scan match {
+        case g: graft.connector.GraftScan => g.groups.collect {
+          case s: Scan if !s.isInstanceOf[FileScan] =>
+            s"$name: scan group ${s.getClass.getName} is not a FileScan"
+        }
+        case _ => Nil
+      }
+    }.flatten
+    windows ++ customGroups ++ (
       if (!udfFilterAllowed.contains(name)) udfFilters
       else if (udfFilters.isEmpty) Seq(s"$name: allow-listed, but no ScalaUDF in a filter")
       else Nil)

@@ -498,6 +498,36 @@ class DeleteScopeSpec extends SparkSpec {
       (0L until 200L).filterNot(_ % 4 == 0))
   }
 
+  for (fmt <- Seq(FileFormats.Orc, FileFormats.Avro))
+  test(s"small position-deleted $fmt files bin-pack into few tasks") {
+    // position reads keep each file whole, but Spark still packs whole
+    // small files: one task concatenates per-file delete-scoped subs
+    val df = (0L until 200L).map(i => (i, i * 0.5)).toDF("id", "v")
+    val t = GraftTable.create(spark, freshLoc(s"scope-pack-$fmt"), df.schema,
+      properties = Map("write.format.default" -> fmt))
+    GraftWrite.append(t, df.repartition(10))
+    val files = t.newScan().planFiles().tasks.map(_.file)
+    assert(files.size >= 8 && files.forall(_.fileFormat == fmt))
+    Deletes.deletePositions(t, t.toDF().filter(col("id") % 4 === 0)
+      .select(col("_file").as("file_path"), col("_pos").as("pos")))
+    val reloaded = GraftTable.load(spark, t.location)
+    val b = new GraftScanBuilder(spark, reloaded, reloaded.newScan(),
+      CaseInsensitiveStringMap.empty())
+    val parts = b.build().toBatch.planInputPartitions().toSeq
+    assert(parts.size < files.size,
+      s"per-file delete scoping must not undo bin-packing: ${parts.size} tasks")
+    val subs = parts.flatMap {
+      case mp: MultiFilePartition => mp.subs
+      case gp: GroupedPartition => Seq(gp)
+      case other => fail(s"unexpected partition ${other.getClass}")
+    }
+    assert(subs.size === files.size, "every file keeps its own scoped sub")
+    assert(subs.forall(_.posScope.isDefined))
+    val want = (0L until 200L).filterNot(_ % 4 == 0).map(i => (i, i * 0.5))
+    assert(reloaded.toDF().select("id", "v").as[(Long, Double)].collect()
+      .sortBy(_._1).toSeq === want)
+  }
+
   test("legacy delete file without target metadata resolves exactly via one read") {
     val df = (0L until 40L).map(i => (i, s"v$i")).toDF("id", "v")
     val t = GraftTable.create(spark, freshLoc("scope-legacy"), df.schema)

@@ -408,34 +408,62 @@ class RuntimePruningSpec extends SparkSpec {
       s"compaction + expiry must not cost the store SPJ its shuffle-free plan:\n$plan")
   }
 
-  test("bucket SPJ spans mixed file formats (parquet + ORC reader groups)") {
+  /** A bucketed table whose first 60 rows are parquet and whose next 60
+    * are `fmt`, joined on the bucket key with an all-parquet twin: the key
+    * grouping must span both reader groups whatever route `fmt` reads by. */
+  private def spjAcrossFormats(name: String, fmt: String, query: String)
+      : org.apache.spark.sql.DataFrame = {
     wh
     val iso = isoSession()
-    // format change mid-life: parquet files + ORC files in one table means
-    // one reader group per format — the key grouping must span them
-    iso.sql("""CREATE TABLE dpp.db.spjfm_a (id BIGINT, v DOUBLE)
+    iso.sql(s"""CREATE TABLE dpp.db.${name}_a (id BIGINT, v DOUBLE)
                PARTITIONED BY (bucket(4, id))""")
     iso.range(60).selectExpr("id", "CAST(id AS DOUBLE) AS v")
-      .createOrReplaceTempView("spjfm1")
-    iso.sql("INSERT INTO dpp.db.spjfm_a SELECT * FROM spjfm1")
-    iso.sql("ALTER TABLE dpp.db.spjfm_a SET TBLPROPERTIES ('write.format.default'='orc')")
+      .createOrReplaceTempView(s"${name}1")
+    iso.sql(s"INSERT INTO dpp.db.${name}_a SELECT * FROM ${name}1")
+    iso.sql(s"ALTER TABLE dpp.db.${name}_a SET TBLPROPERTIES ('write.format.default'='$fmt')")
     iso.range(60, 120).selectExpr("id", "CAST(id AS DOUBLE) AS v")
-      .createOrReplaceTempView("spjfm2")
-    iso.sql("INSERT INTO dpp.db.spjfm_a SELECT * FROM spjfm2")
-    iso.sql("""CREATE TABLE dpp.db.spjfm_b (id BIGINT, v DOUBLE)
+      .createOrReplaceTempView(s"${name}2")
+    iso.sql(s"INSERT INTO dpp.db.${name}_a SELECT * FROM ${name}2")
+    iso.sql(s"""CREATE TABLE dpp.db.${name}_b (id BIGINT, v DOUBLE)
                PARTITIONED BY (bucket(4, id))""")
     iso.range(120).selectExpr("id", "CAST(id AS DOUBLE) AS v")
-      .createOrReplaceTempView("spjfm3")
-    iso.sql("INSERT INTO dpp.db.spjfm_b SELECT * FROM spjfm3")
+      .createOrReplaceTempView(s"${name}3")
+    iso.sql(s"INSERT INTO dpp.db.${name}_b SELECT * FROM ${name}3")
     iso.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     iso.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    val df = iso.sql(
-      """SELECT COUNT(*) AS n FROM dpp.db.spjfm_a a
-         JOIN dpp.db.spjfm_b b ON a.id = b.id""")
+    iso.sql(query.replace("$a", s"dpp.db.${name}_a").replace("$b", s"dpp.db.${name}_b"))
+  }
+
+  test("bucket SPJ spans mixed file formats (parquet + ORC reader groups)") {
+    // format change mid-life: parquet files + ORC files in one table means
+    // one reader group per format — the key grouping must span them
+    val df = spjAcrossFormats("spjfm", "orc",
+      "SELECT COUNT(*) AS n FROM $a a JOIN $b b ON a.id = b.id")
     assert(df.collect().head.getLong(0) === 120L)
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange hashpartitioning"),
       s"mixed-format groups must not cost SPJ its shuffle-free plan:\n$plan")
+  }
+
+  test("bucket SPJ spans a scrub-routed ORC group (DOUBLE projected)") {
+    // projecting `v` routes the ORC generation to the scrub reader
+    val df = spjAcrossFormats("spjscrub", "orc",
+      "SELECT SUM(a.v + b.v) AS s FROM $a a JOIN $b b ON a.id = b.id")
+    assert(df.collect().head.getDouble(0) === 2.0 * (0 until 120).sum)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange hashpartitioning"),
+      s"a scrub-routed ORC group must not cost SPJ its shuffle-free plan:\n$plan")
+  }
+
+  test("bucket SPJ spans an Avro generation") {
+    val df = spjAcrossFormats("spjavro", "avro",
+      "SELECT COUNT(*) AS n, SUM(a.v + b.v) AS s FROM $a a JOIN $b b ON a.id = b.id")
+    val row = df.collect().head
+    assert(row.getLong(0) === 120L)
+    assert(row.getDouble(1) === 2.0 * (0 until 120).sum)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange hashpartitioning"),
+      s"an Avro generation must not cost SPJ its shuffle-free plan:\n$plan")
   }
 
   test("compound identity+bucket specs storage-partition-join on both keys") {

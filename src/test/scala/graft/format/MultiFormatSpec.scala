@@ -171,29 +171,6 @@ class MultiFormatSpec extends SparkSpec {
     assert(e.getMessage.contains("a%") && e.getMessage.contains("a_x25"))
   }
 
-  test("avro byte-range splits cover every row exactly once") {
-    val path = tmp("avro")
-    val idSchema = StructType(Seq(StructField("id", LongType, nullable = false)))
-    // small sync interval → many blocks, so ranges land mid-file
-    val w = AvroIO.openWriter(path, idSchema, conf, syncInterval = 256)
-    try (0 until 5000).foreach { i =>
-      val r = new GenericInternalRow(1); r.update(0, i.toLong); w.write(r)
-    } finally w.close()
-    val size = java.nio.file.Files.size(java.nio.file.Paths.get(path))
-    val ranges = graft.connector.GraftAvroScan.ranges(size, size / 7)
-    assert(ranges.size > 1, s"expected multiple splits for $size bytes")
-    val ids = collection.mutable.ArrayBuffer[Long]()
-    ranges.foreach { case (s, e) =>
-      val it = AvroIO.open(path, idSchema, conf, s, e)
-      try {
-        var r = it.read()
-        while (r != null) { ids += r.getLong(0); r = it.read() }
-      } finally it.close()
-    }
-    assert(ids.size === 5000, s"rows lost or duplicated across splits: ${ids.size}")
-    assert(ids.sorted.toSeq === (0L until 5000L))
-  }
-
   // ---- table-level coverage ----
   import spark.implicits._
 
@@ -240,6 +217,65 @@ class MultiFormatSpec extends SparkSpec {
     // residual filtering still correct without stats
     assert(t.newScan().filter(Exprs.gt("id", 900L)).toDF().count() === 4)
     assert(t.toDF().select("data").as[String].collect().sorted.head === "data-0")
+  }
+
+  test("avro byte-range splits cover every row exactly once") {
+    // the Avro group's splits are Spark's own: a small maxPartitionBytes
+    // cuts one multi-block container file into byte ranges, each reader
+    // syncs to the first block after its range start, and the final split
+    // reads to end of file
+    val loc = freshLoc("avrosplit")
+    val df = (0 until 5000).map(i => (i.toLong, s"row-$i-" + (i * 7919L).toString * 8))
+      .toDF("id", "pad")
+    val t = GraftTable.create(spark, loc, df.schema,
+      properties = Map("write.format.default" -> "avro"))
+    GraftWrite.append(t, df.coalesce(1))
+    val file = t.newScan().planFiles().files match {
+      case Seq(f) => f
+      case other => fail(s"expected one avro file, got ${other.size}")
+    }
+    val size = file.fileSizeInBytes
+    // a private session: the split size must not leak into other suites
+    val iso = spark.newSession()
+    iso.conf.set("spark.sql.files.maxPartitionBytes", (size / 7).toString)
+    val scan = new graft.connector.GraftScanBuilder(iso, t, t.newScan(),
+      org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()).build()
+    val avro = scan match {
+      case g: graft.connector.GraftScan => g.groups match {
+        case Seq(a: graft.connector.GraftAvroScan) => a
+        case other => fail(s"expected one GraftAvroScan group, got $other")
+      }
+      case other => fail(s"expected a GraftScan, got $other")
+    }
+    val splits = avro.planInputPartitions().toSeq.flatMap {
+      case fp: org.apache.spark.sql.execution.datasources.FilePartition => fp.files.toSeq
+      case other => fail(s"expected FilePartitions, got ${other.getClass}")
+    }.sortBy(_.start)
+    assert(splits.size > 1, s"expected multiple splits for $size bytes")
+    assert(splits.head.start === 0L)
+    splits.sliding(2).foreach { case Seq(a, b) =>
+      assert(a.start + a.length === b.start, s"splits must tile the file: $a, $b")
+    }
+    assert(splits.last.start > 0L && splits.last.start + splits.last.length === size,
+      s"the final split must end at the end of the file: ${splits.last}")
+    val factory = avro.createReaderFactory()
+    def read(pf: org.apache.spark.sql.execution.datasources.PartitionedFile): Seq[Long] = {
+      val r = factory.createReader(
+        org.apache.spark.sql.execution.datasources.FilePartition(0, Array(pf)))
+      val ids = collection.mutable.ArrayBuffer[Long]()
+      try while (r.next()) ids += r.get().getLong(0)
+      finally r.close()
+      ids.toSeq
+    }
+    val ids = splits.flatMap(read)
+    assert(ids.size === 5000, s"rows lost or duplicated across splits: ${ids.size}")
+    assert(ids.sorted === (0L until 5000L))
+    // a split that reaches the recorded file size reads to end of file,
+    // even when the recorded size falls short of the bytes on disk
+    val last = splits.last
+    val short = last.copy(length = last.length / 2,
+      fileSize = last.start + last.length / 2)
+    assert(read(short) === read(last))
   }
 
   test("avro library scan plants a pruned DSv2 batch scan") {
