@@ -1072,13 +1072,12 @@ object FormatQueries {
         val paths = tt.newScan().planFiles().tasks.map(_.file.path)
         val kf = c.schema("c_custkey")
         val keySchema = StructType(Seq(kf))
-        val sconf = new org.apache.spark.util.SerializableConfiguration(
-          s.sessionState.newHadoopConf())
+        val sconf = HadoopFileIO.broadcastConf(s, s.sessionState.newHadoopConf())
         val posRows = s.sparkContext.parallelize(paths, math.max(1, paths.size))
           .flatMap { p =>
             val out = Seq.newBuilder[(String, Long, Long)]
             var i = -1L
-            OrcIO.readAll(p, keySchema, sconf.value) { r =>
+            OrcIO.readAll(p, keySchema, sconf.value.value) { r =>
               i += 1
               out += ((p, i, r.get(0, kf.dataType).asInstanceOf[Number].longValue))
             }

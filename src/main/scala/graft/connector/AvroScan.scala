@@ -1,6 +1,7 @@
 package graft.connector
 
 import graft.format.AvroIO
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{FileSourceOptions, InternalRow}
 import org.apache.spark.sql.connector.read.{PartitionReader, PartitionReaderFactory}
@@ -8,6 +9,7 @@ import org.apache.spark.sql.execution.datasources.{PartitionedFile, Partitioning
 import org.apache.spark.sql.execution.datasources.v2.FilePartitionReaderFactory
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 /** Scan over a group of Avro data files (reference
   * core/.../avro/Avro.java read path + ProjectionDatumReader): Spark ships
@@ -36,7 +38,7 @@ final case class GraftAvroScan(
 }
 
 final case class AvroReaderFactory(
-    conf: org.apache.spark.util.SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     layout: GroupLayout,
     options: FileSourceOptions)
   extends FilePartitionReaderFactory {
@@ -44,7 +46,7 @@ final case class AvroReaderFactory(
   override def buildReader(file: PartitionedFile): PartitionReader[InternalRow] = {
     val end =
       if (GroupLayout.reachesEnd(file)) Long.MaxValue else file.start + file.length
-    val it = AvroIO.open(file.toPath.toString, layout.fileSchema, conf.value,
+    val it = AvroIO.open(file.toPath.toString, layout.fileSchema, conf.value.value,
       file.start, end)
     new LayoutRowReader(layout, file, it, () => it.read(), fresh = true)
   }

@@ -42,24 +42,25 @@ object ColumnarDeletes {
   * rows whose key tuple appears in any newer equality-delete set or whose
   * row index appears in this file's position-delete set, then project away
   * widened key / synthetic row-index columns. Delete sets load lazily on
-  * first use, in the executor running this reader. */
+  * first use, in the executor running this reader, through `conf` (the
+  * scan's broadcast Hadoop conf). */
 final class ColumnarDeleteFilterReader(
     inner: PartitionReader[ColumnarBatch], cfg: GroupDeletes,
-    dataFile: Option[String])
+    dataFile: Option[String], conf: => org.apache.hadoop.conf.Configuration)
   extends PartitionReader[ColumnarBatch] {
 
   private var current: ColumnarBatch = _
   private var owned: ColumnarBatch = _ // repacked batch whose vectors we allocated
 
   private lazy val resolved: Seq[(Array[Int], Set[Vector[Any]])] =
-    cfg.sets.map(s => (s.ordinals, s.keySet(cfg.conf.value)))
+    cfg.sets.map(s => (s.ordinals, s.keySet(conf)))
 
   private lazy val positions: org.roaringbitmap.longlong.Roaring64NavigableMap =
     cfg.pos match {
       case Some(p) =>
         val file = dataFile.getOrElse(throw new IllegalStateException(
           "position deletes require file-granular partitions"))
-        PosDeleteCache.get(p.paths, p.dvs, cfg.conf.value)
+        PosDeleteCache.get(p.paths, p.dvs, conf)
           .getOrElse(graft.format.ParquetIO.canonPath(file), PosDeleteCache.Empty)
       case None => PosDeleteCache.Empty
     }

@@ -114,22 +114,12 @@ final class GraftDeltaBatchWrite(table: GraftTable,
   private val stagingDir =
     table.locations.newDataLocation(java.util.UUID.randomUUID().toString)
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
-    val schema = m.schema
-    val nameToIdx = schema.fieldNames.zipWithIndex.toMap
-    val fields = m.spec.fields.map { pf =>
-      val src = FieldIds.findById(schema, pf.sourceId).get
-      SpecField(pf.name, nameToIdx(src.name), pf.transform, src.dataType)
-    }
-    val conf = ParquetIO.writeConf(table.spark)
-    new GraftDeltaWriterFactory(
-      StructType(schema.fields.map(f => f.copy(metadata = Metadata.empty))),
-      schema, fields, stagingDir,
-      new org.apache.spark.util.SerializableConfiguration(conf),
-      Metrics.modesFor(schema, m.properties),
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
+    new GraftDeltaWriterFactory(writeSchema(m), m.schema, specFields(m), stagingDir,
+      HadoopFileIO.broadcastConf(table.spark, ParquetIO.writeConf(table.spark)),
+      Metrics.modesFor(m.schema, m.properties),
       writeFormat(m.properties), m.properties,
       dvMode = Dvs.enabled(m), m.currentSchemaId, m.defaultSpecId)
-  }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val fmt = writeFormat(m.properties)
@@ -179,9 +169,14 @@ object GraftDeltaWriterFactory {
       dvs: Seq[DataFile] = Nil) extends WriterCommitMessage
 }
 
+/** Writer factory of merge-on-read row-level DML: inserts through the
+  * fanout writers, deletes as position-delete files or deletion vectors.
+  * Executors get the Hadoop conf through the write's one broadcast
+  * `conf`. */
 final class GraftDeltaWriterFactory(schema: StructType, idSchema: StructType,
     fields: Seq[GraftBatchWrite.SpecField], stagingDir: String,
-    conf: org.apache.spark.util.SerializableConfiguration,
+    conf: org.apache.spark.broadcast.Broadcast[
+      org.apache.spark.util.SerializableConfiguration],
     statModes: Map[Int, Metrics.Mode],
     format: String,
     props: Map[String, String],
@@ -191,9 +186,10 @@ final class GraftDeltaWriterFactory(schema: StructType, idSchema: StructType,
 
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
     new DeltaWriter[InternalRow] {
+      private val hconf = conf.value.value
       // inserts ride the SAME fanout writers batch INSERT uses
       private val inserts = new GraftFanoutWriter(schema, idSchema, fields,
-        stagingDir, partitionId, taskId, conf, statModes, format, props)
+        stagingDir, partitionId, taskId, hconf, statModes, format, props)
       // every file this task stages besides the insert outputs — abort()
       // must clean them too, or a failure after the delete/DV write leaks
       // the staged file until an orphan sweep (and each retry leaks one)
@@ -234,11 +230,11 @@ final class GraftDeltaWriterFactory(schema: StructType, idSchema: StructType,
         } else {
           if (delWriter == null) {
             val hp = new org.apache.hadoop.fs.Path(stagingDir)
-            hp.getFileSystem(conf.value).mkdirs(hp)
+            hp.getFileSystem(hconf).mkdirs(hp)
             delPath = s"$stagingDir/delete-$partitionId-$taskId-" +
               s"${java.util.UUID.randomUUID()}.parquet"
             stagedPaths += delPath
-            delWriter = ParquetIO.openWriter(delPath, deleteSchema, conf.value)
+            delWriter = ParquetIO.openWriter(delPath, deleteSchema, hconf)
           }
           if (lastFile != null &&
               (f < lastFile || (f == lastFile && p < lastPos)))
@@ -275,12 +271,12 @@ final class GraftDeltaWriterFactory(schema: StructType, idSchema: StructType,
         if (dvMode && byFile.nonEmpty) {
           // v3: one puffin file per task, one bitmap blob per data file
           val hp = new org.apache.hadoop.fs.Path(stagingDir)
-          hp.getFileSystem(conf.value).mkdirs(hp)
+          hp.getFileSystem(hconf).mkdirs(hp)
           val path = s"$stagingDir/dv-$partitionId-$taskId-" +
             s"${java.util.UUID.randomUUID()}.puffin"
           stagedPaths += path
           val dvFiles = Dvs.writePuffin(path, byFile.toSeq, schemaId, specId,
-            conf.value)
+            hconf)
           return GraftDeltaWriterFactory.DeltaTaskFiles(dataFiles, Nil, dvFiles)
         }
         val deleteFiles =
@@ -291,7 +287,7 @@ final class GraftDeltaWriterFactory(schema: StructType, idSchema: StructType,
             // target metadata for per-task attachment at scan time
             // (Deletes.posIndex): canonical min/max of the paths this file
             // masks, carried to the manifest via the reserved path-bound id
-            val fm = Metrics.fromParquetFooter(delPath, idSchema, conf.value)
+            val fm = Metrics.fromParquetFooter(delPath, idSchema, hconf)
               .copy(valueCounts = Map.empty, nullValueCounts = Map.empty,
                 lowerBounds = Map(graft.format.Deletes.PathFieldId -> delCanonMin),
                 upperBounds = Map(graft.format.Deletes.PathFieldId -> delCanonMax),
@@ -308,7 +304,7 @@ final class GraftDeltaWriterFactory(schema: StructType, idSchema: StructType,
           delWriter = null
         }
         val fs = new org.apache.hadoop.fs.Path(stagingDir)
-          .getFileSystem(conf.value)
+          .getFileSystem(hconf)
         stagedPaths.foreach { p =>
           try fs.delete(new org.apache.hadoop.fs.Path(p), false)
           catch { case _: java.io.IOException => () }

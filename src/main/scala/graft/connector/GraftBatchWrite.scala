@@ -37,6 +37,21 @@ object GraftBatchWrite {
   final case class SpecField(name: String, ordinal: Int, transform: Transform,
       srcType: DataType)
 
+  /** The default spec's fields, routed by the ordinals of the table's
+    * current schema columns. */
+  def specFields(m: TableMetadata): Seq[SpecField] = {
+    val nameToIdx = m.schema.fieldNames.zipWithIndex.toMap
+    m.spec.fields.map { pf =>
+      val src = FieldIds.findById(m.schema, pf.sourceId).get
+      SpecField(pf.name, nameToIdx(src.name), pf.transform, src.dataType)
+    }
+  }
+
+  /** The table schema as the writers take it: field-id metadata stripped
+    * (footer metrics key by id through the separate `idSchema`). */
+  def writeSchema(m: TableMetadata): StructType =
+    StructType(m.schema.fields.map(_.copy(metadata = Metadata.empty)))
+
   /** One staged file with its footer metrics, computed in the EXECUTOR task
     * (reference spark3/.../SparkBatchWrite.java:244-330: DataFile metrics
     * ride the commit message; the driver never re-opens data files). */
@@ -94,33 +109,8 @@ final class GraftBatchWrite(table: GraftTable, mode: GraftBatchWrite.Mode,
   private val m = table.metadata
   private val stagingDir = table.locations.newDataLocation(UUID.randomUUID().toString)
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val schema = m.schema
-    val nameToIdx = schema.fieldNames.zipWithIndex.toMap
-    val fields = m.spec.fields.map { pf =>
-      val src = FieldIds.findById(schema, pf.sourceId).get
-      SpecField(pf.name, nameToIdx(src.name), pf.transform, src.dataType)
-    }
-    // session hadoop conf carries the SQL confs ParquetWriteSupport reads;
-    // a few must be EXPLICITLY present (the writer asserts on them instead
-    // of defaulting — normally FileFormatWriter sets them per job)
-    val conf = table.spark.sessionState.newHadoopConf()
-    conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    conf.set("spark.sql.parquet.writeLegacyFormat", "false")
-    conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    conf.set("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
-    conf.set("spark.sql.parquet.int96RebaseModeInWrite", "CORRECTED")
-    conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-    conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
-    conf.set("spark.sql.parquet.variant.annotateLogicalType.enabled", "false")
-    new GraftWriterFactory(
-      StructType(schema.fields.map(f =>
-        f.copy(metadata = org.apache.spark.sql.types.Metadata.empty))),
-      schema, fields, stagingDir,
-      new org.apache.spark.util.SerializableConfiguration(conf),
-      Metrics.modesFor(schema, m.properties),
-      writeFormat(m.properties), m.properties)
-  }
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
+    GraftWriterFactory.forTable(table.spark, m, stagingDir, writeFormat(m.properties))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     // metrics arrived in the commit messages: the driver commit is pure
@@ -164,9 +154,15 @@ final class GraftBatchWrite(table: GraftTable, mode: GraftBatchWrite.Mode,
     }
 }
 
+/** Writer factory of every graft data-file write: DSv2 batch and
+  * streaming writes, the library append path and the equality-delete
+  * stager. Executors get the Hadoop conf (session conf plus
+  * [[ParquetIO.writeConf]]'s keys) through the write's one broadcast
+  * `conf`, never a copy per factory or task. */
 final class GraftWriterFactory(schema: StructType, idSchema: StructType,
     fields: Seq[GraftBatchWrite.SpecField], stagingDir: String,
-    conf: org.apache.spark.util.SerializableConfiguration,
+    conf: org.apache.spark.broadcast.Broadcast[
+      org.apache.spark.util.SerializableConfiguration],
     statModes: Map[Int, Metrics.Mode] = Map.empty,
     format: String = graft.format.FileFormats.Parquet,
     props: Map[String, String] = Map.empty)
@@ -174,7 +170,22 @@ final class GraftWriterFactory(schema: StructType, idSchema: StructType,
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new GraftFanoutWriter(schema, idSchema, fields, stagingDir, partitionId, taskId,
-      conf, statModes, format, props)
+      conf.value.value, statModes, format, props)
+}
+
+object GraftWriterFactory {
+  /** The factory writing rows of `m`'s current schema (plus `extra`
+    * trailing columns) as `format` files under `stagingDir`, partitioned by
+    * the default spec, with the session conf plus [[ParquetIO.writeConf]]'s
+    * keys broadcast once for the whole write. */
+  def forTable(spark: org.apache.spark.sql.SparkSession, m: TableMetadata,
+      stagingDir: String, format: String,
+      extra: Seq[StructField] = Nil): GraftWriterFactory =
+    new GraftWriterFactory(
+      StructType(GraftBatchWrite.writeSchema(m).fields ++ extra), m.schema,
+      GraftBatchWrite.specFields(m), stagingDir,
+      HadoopFileIO.broadcastConf(spark, ParquetIO.writeConf(spark)),
+      Metrics.modesFor(m.schema, m.properties), format, m.properties)
 }
 
 /** Fanout data-file writer: routes each row to its partition tuple's open
@@ -184,7 +195,7 @@ final class GraftWriterFactory(schema: StructType, idSchema: StructType,
 final class GraftFanoutWriter(schema: StructType, idSchema: StructType,
     fields: Seq[GraftBatchWrite.SpecField], stagingDir: String,
     partitionId: Int, taskId: Long,
-    sconf: org.apache.spark.util.SerializableConfiguration,
+    conf: org.apache.hadoop.conf.Configuration,
     statModes: Map[Int, Metrics.Mode] = Map.empty,
     format: String = graft.format.FileFormats.Parquet,
     props: Map[String, String] = Map.empty)
@@ -271,10 +282,10 @@ final class GraftFanoutWriter(schema: StructType, idSchema: StructType,
     // Hadoop FS, not java.nio: staging may live on an object store; the
     // call is a no-op where directories don't exist as objects
     val sp = new org.apache.hadoop.fs.Path(stagingDir)
-    sp.getFileSystem(sconf.value).mkdirs(sp)
+    sp.getFileSystem(conf).mkdirs(sp)
     // footer stats are read in the task that just wrote the file (it is
     // still in page cache), shipped to the driver in the commit message
-    (path, DataFileIO.openWriter(path, format, schema, idSchema, sconf.value,
+    (path, DataFileIO.openWriter(path, format, schema, idSchema, conf,
       statModes, props))
   }
 
@@ -343,7 +354,7 @@ final class GraftFanoutWriter(schema: StructType, idSchema: StructType,
     finished.foreach { sf =>
       try {
         val hp = new org.apache.hadoop.fs.Path(sf.path)
-        hp.getFileSystem(sconf.value).delete(hp, false)
+        hp.getFileSystem(conf).delete(hp, false)
       } catch { case scala.util.control.NonFatal(_) => }
     }
   }

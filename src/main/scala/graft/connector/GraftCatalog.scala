@@ -63,7 +63,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
             files.partition(_.fileFormat == graft.format.FileFormats.Puffin)
           PosDeleteScanTable(ident.toString,
             pq.map(_.path).distinct.sorted, graft.format.Dvs.slicesOf(dvFiles),
-            new org.apache.spark.util.SerializableConfiguration(
+            graft.format.HadoopFileIO.broadcastConf(spark,
               spark.sessionState.newHadoopConf()))
         case None => RowsTable(ident.toString, MetaTables(t, metaName))
       }

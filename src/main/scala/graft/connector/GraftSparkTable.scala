@@ -736,8 +736,6 @@ final class GraftScanBuilder private[connector] (spark: SparkSession,
                 dataCols.length + posExtra + 1) else Nil) ++
               partServe.map(f => physIndex(f.name)) ++
               (if (metaFile) Seq(constAt + groupPartServe.size) else Nil)),
-            new org.apache.spark.util.SerializableConfiguration(
-              spark.sessionState.newHadoopConf()),
             if (groupPos) Some(PosDeleteSource(posPaths, posDvs, dataCols.length))
             else None))
         val renames: Map[String, String] =
@@ -1185,6 +1183,11 @@ final class GraftScan(output: StructType,
   private lazy val innerFactories = inner.map(_.createReaderFactory())
   private lazy val groupDeletes: Seq[Option[GroupDeletes]] =
     if (deletes.isEmpty) groupScans.map(_ => None) else deletes
+  /** The one Hadoop conf the scan's delete loaders share, broadcast only
+    * when some group loads delete files (clean scans ship none). */
+  private lazy val deleteConf =
+    Option.when(groupDeletes.exists(_.exists(_.loadsFiles)))(
+      HadoopFileIO.broadcastConf(spark, spark.sessionState.newHadoopConf()))
   private lazy val groupFills: Seq[Option[FillConfig]] =
     if (fills.isEmpty) groupScans.map(_ => None) else fills
   private lazy val groupLineages: Seq[Option[LineageConfig]] =
@@ -1560,7 +1563,7 @@ final class GraftScan(output: StructType,
     }
     override def createReaderFactory(): PartitionReaderFactory =
       GroupedReaderFactory(innerFactories, groupDeletes, columnar, groupFills,
-        groupLineages)
+        groupLineages, deleteConf)
   }
 }
 
@@ -1801,15 +1804,29 @@ final case class SpjField(col: String,
 final case class SpjInfo(fields: Seq[SpjField],
     keyOf: Map[String, Seq[Any]])
 
+/** Reader factory of a [[GraftScan]]: dispatches each partition to its
+  * group's inner factory and wraps the reader in the group's default
+  * fill, delete filter and lineage projection. Executors get the Hadoop
+  * conf through broadcasts only: `conf` is the scan's one broadcast for
+  * loading delete files (present when some group loads them), and each
+  * inner FileScan factory carries its own scan's broadcast. */
 final case class GroupedReaderFactory(
     inner: Seq[org.apache.spark.sql.connector.read.PartitionReaderFactory],
     deletes: Seq[Option[GroupDeletes]],
     columnar: Boolean = false,
     fills: Seq[Option[FillConfig]] = Nil,
-    lineages: Seq[Option[LineageConfig]] = Nil)
+    lineages: Seq[Option[LineageConfig]] = Nil,
+    conf: Option[org.apache.spark.broadcast.Broadcast[
+      org.apache.spark.util.SerializableConfiguration]] = None)
   extends org.apache.spark.sql.connector.read.PartitionReaderFactory {
   import org.apache.spark.sql.catalyst.InternalRow
   import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
+
+  private def hadoopConf: org.apache.hadoop.conf.Configuration = conf match {
+    case Some(b) => b.value.value
+    case None => throw new IllegalStateException(
+      "a delete group loads files but the scan broadcast no Hadoop conf")
+  }
 
   private def unwrap(p: InputPartition)
       : (Int, InputPartition, Option[String], Option[PosScope],
@@ -1857,7 +1874,8 @@ final case class GroupedReaderFactory(
       case None => base
     }
     val afterDeletes = deletes.lift(g).flatten match {
-      case Some(cfg) => new DeleteFilterReader(reader, scoped(cfg, sc, eq), dataFile)
+      case Some(cfg) =>
+        new DeleteFilterReader(reader, scoped(cfg, sc, eq), dataFile, hadoopConf)
       case None => reader
     }
     // lineage projection is the OUTERMOST wrapper: only live rows get ids
@@ -1884,7 +1902,8 @@ final case class GroupedReaderFactory(
     }
     val afterDeletes = deletes.lift(g).flatten match {
       case Some(cfg) =>
-        new ColumnarDeleteFilterReader(reader, scoped(cfg, sc, eq), dataFile)
+        new ColumnarDeleteFilterReader(reader, scoped(cfg, sc, eq), dataFile,
+          hadoopConf)
       case None => reader
     }
     // lineage projection is the OUTERMOST wrapper: only live rows get ids
@@ -2057,21 +2076,31 @@ object PosDeleteCache {
   }
 }
 
+/** One scan group's delete config: the equality key sets and position
+  * deletes its readers apply, the group's physical row types, and the
+  * projection to the scan's declared layout. Descriptors only — it carries
+  * no Hadoop conf: executors load the delete files with the conf the
+  * scan's [[GroupedReaderFactory]] broadcasts once for all its groups. */
 final case class GroupDeletes(sets: Seq[DeleteKeySource],
     types: Seq[org.apache.spark.sql.types.DataType],
     project: Option[Seq[Int]],
-    conf: org.apache.spark.util.SerializableConfiguration,
-    pos: Option[PosDeleteSource] = None) extends Serializable
+    pos: Option[PosDeleteSource] = None) extends Serializable {
+  /** Whether readers of this group load delete files (and so read the
+    * scan's broadcast conf). */
+  def loadsFiles: Boolean = sets.nonEmpty || pos.isDefined
+}
 
 /** Row-path delete filter (reference EqualitySetDeleteFilter +
   * PositionStreamDeleteFilter, core/.../deletes/Deletes.java:60-159): drop
   * rows whose key tuple appears in any newer equality-delete set or whose
   * row index appears in this file's position-delete set, then project away
   * widened key / synthetic row-index columns. Delete sets load lazily on
-  * first use, in the executor running this reader. */
+  * first use, in the executor running this reader, through `conf` (the
+  * scan's broadcast Hadoop conf, read only when a set loads). */
 final class DeleteFilterReader(
     inner: org.apache.spark.sql.connector.read.PartitionReader[org.apache.spark.sql.catalyst.InternalRow],
-    cfg: GroupDeletes, dataFile: Option[String])
+    cfg: GroupDeletes, dataFile: Option[String],
+    conf: => org.apache.hadoop.conf.Configuration)
   extends org.apache.spark.sql.connector.read.PartitionReader[org.apache.spark.sql.catalyst.InternalRow] {
   import org.apache.spark.sql.catalyst.InternalRow
   import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -2079,14 +2108,14 @@ final class DeleteFilterReader(
   private var current: InternalRow = _
 
   private lazy val resolved: Seq[(Array[Int], Set[Vector[Any]])] =
-    cfg.sets.map(s => (s.ordinals, s.keySet(cfg.conf.value)))
+    cfg.sets.map(s => (s.ordinals, s.keySet(conf)))
 
   private lazy val positions: org.roaringbitmap.longlong.Roaring64NavigableMap =
     cfg.pos match {
       case Some(p) =>
         val file = dataFile.getOrElse(throw new IllegalStateException(
           "position deletes require file-granular partitions"))
-        PosDeleteCache.get(p.paths, p.dvs, cfg.conf.value)
+        PosDeleteCache.get(p.paths, p.dvs, conf)
           .getOrElse(graft.format.ParquetIO.canonPath(file), PosDeleteCache.Empty)
       case None => PosDeleteCache.Empty
     }

@@ -343,9 +343,9 @@ final class GraftMicroBatchStream(spark: SparkSession, table: GraftTable,
       // batch's factory is created, so the memo is set whenever an
       // initial-load partition can reach this factory
       case (_, gs) => gs.toBatch.createReaderFactory() match {
-        case GroupedReaderFactory(inner, dels, _, fills, lineages) =>
+        case GroupedReaderFactory(inner, dels, _, fills, lineages, conf) =>
           GroupedReaderFactory(incr ++ inner, nones ++ dels,
-            columnar = false, nones ++ fills, nones ++ lineages)
+            columnar = false, nones ++ fills, nones ++ lineages, conf)
         case other => throw new IllegalStateException(
           s"unexpected batch reader factory ${other.getClass.getName}")
       }
@@ -376,26 +376,9 @@ final class GraftStreamingWrite(table: GraftTable, truncateFirst: Boolean,
   private val fileFormat = GraftBatchWrite.writeFormat(table.metadata.properties)
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    val m = table.metadata
-    val schema = m.schema
-    val nameToIdx = schema.fieldNames.zipWithIndex.toMap
-    val fields = m.spec.fields.map { pf =>
-      val src = FieldIds.findById(schema, pf.sourceId).get
-      GraftBatchWrite.SpecField(pf.name, nameToIdx(src.name), pf.transform, src.dataType)
-    }
-    val conf = table.spark.sessionState.newHadoopConf()
-    conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    conf.set("spark.sql.parquet.writeLegacyFormat", "false")
-    conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-    conf.set("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
-    conf.set("spark.sql.parquet.int96RebaseModeInWrite", "CORRECTED")
-    conf.set("spark.sql.parquet.variant.annotateLogicalType.enabled", "false")
     val staging = table.locations.newDataLocation(java.util.UUID.randomUUID().toString)
-    val cleanSchema = StructType(schema.fields.map(f =>
-      f.copy(metadata = org.apache.spark.sql.types.Metadata.empty)))
-    val batchFactory = new GraftWriterFactory(cleanSchema, schema, fields, staging,
-      new org.apache.spark.util.SerializableConfiguration(conf),
-      Metrics.modesFor(schema, m.properties), fileFormat, m.properties)
+    val batchFactory = GraftWriterFactory.forTable(table.spark, table.metadata,
+      staging, fileFormat)
     new StreamingDataWriterFactory {
       override def createWriter(partitionId: Int, taskId: Long,
           epochId: Long): DataWriter[InternalRow] =

@@ -1,7 +1,8 @@
 package graft.connector
 
-import graft.format.{FileFormats, Types}
+import graft.format.{FileFormats, HadoopFileIO, Types}
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{FileSourceOptions, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
@@ -14,6 +15,7 @@ import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 import scala.jdk.CollectionConverters._
 
 /** The reader scan of one scan group (one file format × writer-schema
@@ -104,7 +106,9 @@ object GroupScan {
 
 /** A FileScan whose files graft's own readers read (ORC scrub, Avro):
   * no pushed filters, and files split freely unless the read carries the
-  * row index, because a byte range cannot know how many rows precede it. */
+  * row index, because a byte range cannot know how many rows precede it.
+  * Executors get the Hadoop conf through the one broadcast each reader
+  * factory is built with ([[hadoopConf]]), as Spark's ParquetScan does. */
 trait GraftFileScan extends FileScan {
   def options: CaseInsensitiveStringMap
 
@@ -116,9 +120,8 @@ trait GraftFileScan extends FileScan {
   override def getFileUnSplittableReason(path: Path): String =
     "the read carries row positions"
 
-  protected def hadoopConf: org.apache.spark.util.SerializableConfiguration =
-    new org.apache.spark.util.SerializableConfiguration(
-      sparkSession.sessionState.newHadoopConf())
+  protected def hadoopConf: Broadcast[SerializableConfiguration] =
+    HadoopFileIO.broadcastConf(sparkSession, sparkSession.sessionState.newHadoopConf())
   protected def fileSourceOptions: FileSourceOptions =
     new FileSourceOptions(options.asCaseSensitiveMap.asScala.toMap)
 }

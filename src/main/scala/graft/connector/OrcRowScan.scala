@@ -1,6 +1,7 @@
 package graft.connector
 
 import graft.format.OrcIO
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{FileSourceOptions, InternalRow}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
@@ -8,6 +9,7 @@ import org.apache.spark.sql.execution.datasources.{PartitionedFile, Partitioning
 import org.apache.spark.sql.execution.datasources.v2.FilePartitionReaderFactory
 import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
 /** Scrub-routed ORC scan: ORC groups that read file positions (position
@@ -37,7 +39,7 @@ final case class GraftOrcRowScan(
 }
 
 final case class OrcRowReaderFactory(
-    conf: org.apache.spark.util.SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     layout: GroupLayout,
     options: FileSourceOptions)
   extends FilePartitionReaderFactory {
@@ -65,7 +67,7 @@ final case class OrcRowReaderFactory(
     new PartitionReader[ColumnarBatch] {
       private val capacity = 4096
       private val it = OrcIO.openBatched(file.toPath.toString,
-        layout.fileSchema, conf.value, capacity, file.start, rangeOf(file))
+        layout.fileSchema, conf.value.value, capacity, file.start, rangeOf(file))
       private val wrapped =
         layout.fileSchema.fields.toSeq.zipWithIndex.map { case (f, i) =>
           GraftOrcShims.wrap(f.dataType, it.batch.cols(i))
@@ -103,7 +105,7 @@ final case class OrcRowReaderFactory(
   }
 
   override def buildReader(file: PartitionedFile): PartitionReader[InternalRow] = {
-    val it = OrcIO.open(file.toPath.toString, layout.fileSchema, conf.value,
+    val it = OrcIO.open(file.toPath.toString, layout.fileSchema, conf.value.value,
       file.start, rangeOf(file))
     new LayoutRowReader(layout, file, it, () => it.read())
   }

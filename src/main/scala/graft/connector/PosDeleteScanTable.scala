@@ -1,6 +1,7 @@
 package graft.connector
 
 import graft.format.{Dvs, DvSlice, ParquetIO}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
@@ -22,10 +23,11 @@ final case class PosDeletePartition(parquet: Option[String], dv: Option[DvSlice]
   * (data file_path, pos, delete_file_path). Row count scales with the
   * table's DELETE state (arbitrarily large on a heavy merge-on-read
   * table), so rows never touch the driver: one InputPartition per delete
-  * file / DV blob, decoded where the task runs. */
+  * file / DV blob, decoded where the task runs, with the Hadoop conf the
+  * table was loaded with, broadcast once. */
 final case class PosDeleteScanTable(ident: String,
     parquetPaths: Seq[String], dvs: Seq[DvSlice],
-    conf: SerializableConfiguration) extends Table with SupportsRead {
+    conf: Broadcast[SerializableConfiguration]) extends Table with SupportsRead {
 
   override def name(): String = ident
   override def schema(): StructType = PosDeleteScanTable.Schema
@@ -56,7 +58,7 @@ object PosDeleteScanTable {
     StructField("delete_file_path", StringType)))
 }
 
-final case class PosDeleteReaderFactory(conf: SerializableConfiguration)
+final case class PosDeleteReaderFactory(conf: Broadcast[SerializableConfiguration])
   extends PartitionReaderFactory {
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
@@ -73,7 +75,7 @@ final case class PosDeleteReaderFactory(conf: SerializableConfiguration)
           val schema = StructType(Seq(StructField("file_path", StringType),
             StructField("pos", LongType)))
           val src = ParquetIO.canonPath(path)
-          openReader = ParquetIO.open(path, schema, conf.value)
+          openReader = ParquetIO.open(path, schema, conf.value.value)
           new Iterator[Row] {
             private var row = advance()
             private def advance(): org.apache.spark.sql.catalyst.InternalRow = {
@@ -92,7 +94,7 @@ final case class PosDeleteReaderFactory(conf: SerializableConfiguration)
           }
         case PosDeletePartition(_, Some(s)) =>
           val src = ParquetIO.canonPath(s.path)
-          val longs = Dvs.read(s.path, s.offset, s.length, conf.value)
+          val longs = Dvs.read(s.path, s.offset, s.length, conf.value.value)
             .getLongIterator
           new Iterator[Row] {
             override def hasNext: Boolean = longs.hasNext

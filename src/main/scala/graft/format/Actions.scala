@@ -289,8 +289,7 @@ final class Actions(t: GraftTable) {
     val planned = binTasks.result()
     if (planned.isEmpty) return RewriteResult(0, 0)
 
-    val sconf = new org.apache.spark.util.SerializableConfiguration(
-      ParquetIO.writeConf(t.spark))
+    val sconf = HadoopFileIO.broadcastConf(t.spark, ParquetIO.writeConf(t.spark))
     val tableProps = m.properties
     val idSchema = schema // current schema WITH field-id metadata, for stats
     val statModes = Metrics.modesFor(schema, m.properties)
@@ -300,7 +299,7 @@ final class Actions(t: GraftTable) {
     val results: Array[(Int, Metrics.FileMetrics)] = t.spark.sparkContext
       .parallelize(planned, planned.size)
       .map { bt =>
-        val conf = sconf.value
+        val conf = sconf.value.value
         // delete sets load once per executor (shared caches); positions key
         // by canonical path, equality sets gate on each file's sequence
         val pos: Map[String, org.roaringbitmap.longlong.Roaring64NavigableMap] =
@@ -571,8 +570,7 @@ final class Actions(t: GraftTable) {
     import org.apache.spark.sql.functions.col
     val m = t.metadata
     val staging = t.locations.newDataLocation(java.util.UUID.randomUUID().toString)
-    val sconf = new org.apache.spark.util.SerializableConfiguration(
-      ParquetIO.writeConf(t.spark))
+    val sconf = HadoopFileIO.broadcastConf(t.spark, ParquetIO.writeConf(t.spark))
     val deleteSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("file_path",
         org.apache.spark.sql.types.StringType, nullable = false),
@@ -590,7 +588,7 @@ final class Actions(t: GraftTable) {
         if (it.isEmpty) Iterator.empty
         else {
           val path = s"$staging/$prefix-$pid-${java.util.UUID.randomUUID()}.parquet"
-          val w = ParquetIO.openWriter(path, deleteSchema, sconf.value)
+          val w = ParquetIO.openWriter(path, deleteSchema, sconf.value.value)
           var n = 0L
           var lastRaw: String = null
           var minCanon: String = null
@@ -613,7 +611,7 @@ final class Actions(t: GraftTable) {
       val hp = new org.apache.hadoop.fs.Path(path)
       val base = DataFile(path = path, content = FileContent.PositionDeletes,
         recordCount = n,
-        fileSizeInBytes = hp.getFileSystem(sconf.value).getFileStatus(hp).getLen,
+        fileSizeInBytes = hp.getFileSystem(sconf.value.value).getFileStatus(hp).getLen,
         schemaId = m.currentSchemaId, specId = m.defaultSpecId)
       if (minCanon == null) base
       else Deletes.withPosTargets(base, minCanon, maxCanon)
@@ -910,14 +908,13 @@ final class Actions(t: GraftTable) {
             (p, ss.map(_._2).max, true) }.toSeq ++ plain
       }
     if (recorded.isEmpty) return Nil
-    val sconf = new org.apache.spark.util.SerializableConfiguration(
-      t.spark.sessionState.newHadoopConf())
+    val sconf = HadoopFileIO.broadcastConf(t.spark, t.spark.sessionState.newHadoopConf())
     t.spark.sparkContext
       .parallelize(recorded, math.min(recorded.size, 64).max(1))
       .flatMap { case (p, rec, dv) =>
         val hp = new org.apache.hadoop.fs.Path(p)
         val actual =
-          try hp.getFileSystem(sconf.value).getFileStatus(hp).getLen
+          try hp.getFileSystem(sconf.value.value).getFileStatus(hp).getLen
           catch { case _: java.io.FileNotFoundException => -1L }
         // a DV slice may end before the blob file does; parquet/orc/avro
         // sizes must match exactly (overstatement is as suspect as

@@ -225,13 +225,12 @@ object Deletes {
     }
     val slices = Dvs.slicesOf(dvs)
     if (slices.nonEmpty) {
-      val sconf = new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf())
+      val sconf = HadoopFileIO.broadcastConf(spark, spark.sessionState.newHadoopConf())
       val rdd = spark.sparkContext
         .parallelize(slices, math.max(1, slices.size))
         .flatMap { s =>
           val src = ParquetIO.canonPath(s.path)
-          val it = Dvs.read(s.path, s.offset, s.length, sconf.value).getLongIterator
+          val it = Dvs.read(s.path, s.offset, s.length, sconf.value.value).getLongIterator
           new Iterator[Row] {
             override def hasNext: Boolean = it.hasNext
             override def next(): Row =
@@ -288,7 +287,8 @@ object Deletes {
         // min/max target pass (what annotatePosTargets reads per file)
         // runs in EXECUTORS, one task per staged file — no sequential
         // driver reads undoing the parallel staging
-        val sconf = HadoopFileIO.sessionConf()
+        val sconf = HadoopFileIO.broadcastConf(table.spark,
+          table.spark.sessionState.newHadoopConf())
         val pathOnly = org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("file_path",
             org.apache.spark.sql.types.StringType)))
@@ -296,7 +296,7 @@ object Deletes {
           .parallelize(paths, math.min(paths.size, 64))
           .map { p =>
             var n = 0L; var lo: String = null; var hi: String = null
-            ParquetIO.readAll(p, pathOnly, sconf.value) { r =>
+            ParquetIO.readAll(p, pathOnly, sconf.value.value) { r =>
               n += 1
               if (!r.isNullAt(0)) {
                 val c = ParquetIO.canonPath(r.getUTF8String(0).toString)
@@ -305,7 +305,7 @@ object Deletes {
               }
             }
             val hp = new org.apache.hadoop.fs.Path(p)
-            val size = hp.getFileSystem(sconf.value).getFileStatus(hp).getLen
+            val size = hp.getFileSystem(sconf.value.value).getFileStatus(hp).getLen
             (p, n, size, Option(lo), Option(hi))
           }.collect().toSeq.map { case (p, n, size, lo, hi) =>
             val f = desc(p, n, size)
@@ -434,8 +434,7 @@ object Deletes {
       _.copy(metadata = org.apache.spark.sql.types.Metadata.empty)))
     val factory = new graft.connector.GraftWriterFactory(cleanSchema,
       idSchema, specFields, dir,
-      new org.apache.spark.util.SerializableConfiguration(
-        ParquetIO.writeConf(table.spark)),
+      HadoopFileIO.broadcastConf(table.spark, ParquetIO.writeConf(table.spark)),
       statModes = Map.empty, // default modes, as Metrics.forFiles used
       FileFormats.Parquet, m.properties)
     val routed = keys.dropDuplicates()

@@ -131,8 +131,7 @@ object Dvs {
       partitions: Int = 0): Seq[DataFile] = {
     val m = table.metadata
     val staging = table.locations.newDataLocation(java.util.UUID.randomUUID().toString)
-    val sconf = new org.apache.spark.util.SerializableConfiguration(
-      ParquetIO.writeConf(table.spark))
+    val sconf = HadoopFileIO.broadcastConf(table.spark, ParquetIO.writeConf(table.spark))
     val canon = udf((s: String) => if (s == null) null else ParquetIO.canonPath(s))
     val named = positions.toDF("file_path", "pos")
       .select(canon(col("file_path")).as("file_path"), col("pos").cast("long").as("pos"))
@@ -152,7 +151,7 @@ object Dvs {
         else {
           val path = s"$staging/dv-$pid-${java.util.UUID.randomUUID()}.puffin"
           Iterator.single(writePuffin(path, byFile.toSeq, schemaId, specId,
-            sconf.value))
+            sconf.value.value))
         }
       }.collect().toSeq.flatten.sortBy(f => (f.path, f.referencedDataFile))
   }

@@ -43,6 +43,16 @@ object HadoopFileIO {
       org.apache.spark.sql.SparkSession.getActiveSession
         .map(_.sessionState.newHadoopConf())
         .getOrElse(new org.apache.hadoop.conf.Configuration()))
+
+  /** Ship `conf` to executors once: the one broadcast a scan, write or job
+    * hands its factories and closures (tasks read `.value.value`), as
+    * Spark's own ParquetScan does with `broadcastedConf`. A session Hadoop
+    * conf serializes to ~110 KB, so carrying it by value would re-ship and
+    * re-parse it in every task of every group or writer. */
+  def broadcastConf(spark: org.apache.spark.sql.SparkSession,
+      conf: org.apache.hadoop.conf.Configuration)
+      : org.apache.spark.broadcast.Broadcast[org.apache.spark.util.SerializableConfiguration] =
+    spark.sparkContext.broadcast(new org.apache.spark.util.SerializableConfiguration(conf))
 }
 
 trait FileIO extends Serializable {

@@ -167,12 +167,6 @@ object GraftWrite {
       fmt: String = FileFormats.Avro): Seq[DataFile] = {
     import graft.connector.GraftBatchWrite
     val m = table.metadata
-    val schema = m.schema
-    val nameToIdx = schema.fieldNames.zipWithIndex.toMap
-    val specFields = m.spec.fields.map { pf =>
-      val src = FieldIds.findById(schema, pf.sourceId).get
-      GraftBatchWrite.SpecField(pf.name, nameToIdx(src.name), pf.transform, src.dataType)
-    }
     // lineage rewrites carry two trailing long columns; spec-field
     // ordinals reference the leading table columns, so routing is unchanged
     val linTail =
@@ -182,15 +176,8 @@ object GraftWrite {
         org.apache.spark.sql.types.StructField(Lineage.LastUpdatedColumn,
           org.apache.spark.sql.types.LongType, nullable = true))
       else Nil
-    val factory = new graft.connector.GraftWriterFactory(
-      org.apache.spark.sql.types.StructType(schema.fields.map(f =>
-        f.copy(metadata = org.apache.spark.sql.types.Metadata.empty)) ++ linTail),
-      schema, specFields, staging,
-      // writeConf carries the keys ParquetWriteSupport asserts are present
-      // (normally set per job by FileFormatWriter); harmless for ORC/Avro
-      new org.apache.spark.util.SerializableConfiguration(
-        ParquetIO.writeConf(table.spark)),
-      Metrics.modesFor(schema, m.properties), fmt, m.properties)
+    val factory =
+      graft.connector.GraftWriterFactory.forTable(table.spark, m, staging, fmt, linTail)
     val staged: Seq[GraftBatchWrite.StagedFile] =
       sorted.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
         val w = factory.createWriter(pid, pid.toLong)

@@ -164,14 +164,13 @@ object Metrics {
       val conf = spark.sessionState.newHadoopConf()
       paths.map(p => p -> Metrics.forFile(p, format, schema, conf, modes)).toMap
     } else {
-      val sconf = new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf())
+      val sconf = HadoopFileIO.broadcastConf(spark, spark.sessionState.newHadoopConf())
       val n = math.min(paths.size, spark.sparkContext.defaultParallelism)
       // `Metrics.forFile` through the companion-static forwarder: a LOCAL
       // def here would lift to an instance method of this (non-serializable)
       // object and poison the closure
       spark.sparkContext.parallelize(paths, n)
-        .map(p => p -> Metrics.forFile(p, format, schema, sconf.value, modes))
+        .map(p => p -> Metrics.forFile(p, format, schema, sconf.value.value, modes))
         .collect().toMap
     }
   }

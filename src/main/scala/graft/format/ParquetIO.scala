@@ -79,7 +79,8 @@ object ParquetIO {
 
   /** Hadoop conf for executor-side parquet WRITES: the session conf plus the
     * keys ParquetWriteSupport asserts are present (normally FileFormatWriter
-    * sets them per job). Shared by the DSv2 batch writer and compaction. */
+    * sets them per job). Every graft writer starts from it: the writer
+    * factories, the delete stagers and compaction. */
   def writeConf(spark: org.apache.spark.sql.SparkSession): Configuration = {
     val conf = spark.sessionState.newHadoopConf()
     conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")

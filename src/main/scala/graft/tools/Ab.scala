@@ -6,7 +6,8 @@ import java.nio.file.{Files, Paths}
   * `runMain graft.tools.Ab <passes> <q>[,<q>...] [<confKey> <valueA> <valueB>]`
   * with SPARK_GRAFT_SF_DIR and SPARK_GRAFT_CPUS.
   *
-  * Per query, each arm gets one warm pass, then `passes` timed `count()`s.
+  * Per query, each arm gets one warm pass, then `passes` timed runs of the
+  * query's own physical plan, counting the rows it returns.
   * Without a conf there is one arm, A. With a conf, arm A sets `confKey` to
   * `valueA` and arm B to `valueB`; the arms alternate pass by pass and the
   * arm that goes first swaps on every pass, so host drift between passes
@@ -36,24 +37,26 @@ object Ab {
     spark.sparkContext.setLogLevel("ERROR")
     val outDir = Paths.get("target/ab")
     Files.createDirectories(outDir)
-    // `df.count()` plans a new aggregate over df, so df's own plan never
-    // runs; counting through the aggregate frame keeps the plan that ran
+    // `df.count()` (or a count over df) plans a new aggregate, and column
+    // pruning then drops every column the query reads only to return: a
+    // format query would time a different read. Executing df's own plan
+    // and counting its rows times the read the query does.
     def run(q: String, arm: Arm) = {
       arm.conf.foreach { case (k, v) => spark.conf.set(k, v) }
       val t0 = System.nanoTime()
-      val counted = graft.SparkEntry.queries(q)(spark, sfDir).groupBy().count()
-      val n = counted.collect().head.getLong(0)
-      ((System.nanoTime() - t0) / 1e9, n, counted)
+      val df = graft.SparkEntry.queries(q)(spark, sfDir)
+      val n = df.queryExecution.toRdd.count()
+      ((System.nanoTime() - t0) / 1e9, n, df)
     }
     for (q <- queries) {
       arms.foreach(run(q, _)) // warm
       val secs = arms.map(_ -> Seq.newBuilder[Double]).toMap
       val last = scala.collection.mutable.Map.empty[Arm, org.apache.spark.sql.DataFrame]
       for (i <- 1 to passes; arm <- if (i % 2 == 1) arms else arms.reverse) {
-        val (sec, n, counted) = run(q, arm)
+        val (sec, n, df) = run(q, arm)
         println(f"$q ${arm.label} pass$i $sec%8.2f s rows=$n")
         secs(arm) += sec
-        last(arm) = counted
+        last(arm) = df
       }
       for (arm <- arms) {
         val xs = secs(arm).result().sorted

@@ -22,7 +22,9 @@ class QueriesSpec extends SparkSpec {
     * keeps its value (codegen subexpression elimination does not span
     * operators), so the UDF runs twice per row. Every scan group of a
     * GraftScan must be a Spark FileScan, so every format's reads are split
-    * and packed by Spark's own planner. */
+    * and packed by Spark's own planner. Every scan's reader factory must
+    * ship its Hadoop conf as a broadcast and stay small, because Spark
+    * sends the factory with every task. */
   private def planLint(name: String, plan: SparkPlan): Seq[String] = {
     val windows = plan.collect {
       case w: WindowExec if w.partitionSpec.isEmpty =>
@@ -41,7 +43,12 @@ class QueriesSpec extends SparkSpec {
         case _ => Nil
       }
     }.flatten
-    windows ++ customGroups ++ (
+    val heavyFactories = plan.collect {
+      case b: BatchScanExec =>
+        graft.connector.ConfShippingSpec.shippingProblem(s"$name: reader factory",
+          b.readerFactory)
+    }.flatten
+    windows ++ customGroups ++ heavyFactories ++ (
       if (!udfFilterAllowed.contains(name)) udfFilters
       else if (udfFilters.isEmpty) Seq(s"$name: allow-listed, but no ScalaUDF in a filter")
       else Nil)

@@ -33,8 +33,7 @@ class WriteOrderSpec extends SparkSpec {
     val fields = Seq(GraftBatchWrite.SpecField("p", 1, Transforms.IdentityT,
       LongType))
     val factory = new GraftWriterFactory(schema, idSchema, fields, dir,
-      new org.apache.spark.util.SerializableConfiguration(
-        ParquetIO.writeConf(spark)),
+      graft.format.HadoopFileIO.broadcastConf(spark, ParquetIO.writeConf(spark)),
       Map.empty, FileFormats.Parquet, Map("write.max-open-writers" -> "2"))
     val w = factory.createWriter(0, 0L)
     (0 until 40).foreach { i =>
@@ -65,8 +64,7 @@ class WriteOrderSpec extends SparkSpec {
     val fields = Seq(GraftBatchWrite.SpecField("p", 1, Transforms.IdentityT,
       LongType))
     val factory = new GraftWriterFactory(schema, idSchema, fields, dir,
-      new org.apache.spark.util.SerializableConfiguration(
-        ParquetIO.writeConf(spark)),
+      graft.format.HadoopFileIO.broadcastConf(spark, ParquetIO.writeConf(spark)),
       Map.empty, FileFormats.Parquet, Map("write.max-open-writers" -> "2"))
     val w = factory.createWriter(0, 0L)
     (0 until 40).foreach { i => // clustered: 10-row runs of p = 0,1,2,3
@@ -92,8 +90,7 @@ class WriteOrderSpec extends SparkSpec {
     val fields = Seq(GraftBatchWrite.SpecField("b_trunc", 1,
       Transforms.TruncateT(2), BinaryType))
     val factory = new GraftWriterFactory(schema, idSchema, fields, dir,
-      new org.apache.spark.util.SerializableConfiguration(
-        ParquetIO.writeConf(spark)),
+      graft.format.HadoopFileIO.broadcastConf(spark, ParquetIO.writeConf(spark)),
       Map.empty, FileFormats.Parquet, Map.empty)
     val w = factory.createWriter(0, 0L)
     (0 until 20).foreach { i => // alternating tuples: each row's array is a
@@ -161,8 +158,7 @@ class WriteOrderSpec extends SparkSpec {
     }.view.mapValues(_.size.toLong).toMap
     val dir = Files.createTempDirectory("graft-fanoutprop").toString
     val factory = new GraftWriterFactory(schema, idSchema, fields, dir,
-      new org.apache.spark.util.SerializableConfiguration(
-        ParquetIO.writeConf(spark)),
+      graft.format.HadoopFileIO.broadcastConf(spark, ParquetIO.writeConf(spark)),
       Map.empty, FileFormats.Parquet, Map("write.max-open-writers" -> "3"))
     val w = factory.createWriter(0, 0L)
     rows.foreach { case (l, s, ds, b, i) =>
@@ -201,8 +197,7 @@ class WriteOrderSpec extends SparkSpec {
       GraftBatchWrite.SpecField("dead", 0, Transforms.VoidT, StringType),
       GraftBatchWrite.SpecField("p", 0, Transforms.BucketT(2), LongType))
     val factory = new GraftWriterFactory(schema, idSchema, fields, dir,
-      new org.apache.spark.util.SerializableConfiguration(
-        ParquetIO.writeConf(spark)),
+      graft.format.HadoopFileIO.broadcastConf(spark, ParquetIO.writeConf(spark)),
       Map.empty, FileFormats.Parquet, Map.empty)
     val w = factory.createWriter(0, 0L)
     (0 until 10).foreach { i =>
