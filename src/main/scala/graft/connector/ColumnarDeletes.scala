@@ -39,11 +39,8 @@ object ColumnarDeletes {
 }
 
 /** Batch-path delete filter (the columnar dual of DeleteFilterReader): drop
-  * rows whose key tuple appears in any newer equality-delete set or whose
-  * row index appears in this file's position-delete set, then project away
-  * widened key / synthetic row-index columns. Delete sets load lazily on
-  * first use, in the executor running this reader, through `conf` (the
-  * scan's broadcast Hadoop conf). */
+  * rows the [[DeleteProbe]] finds dead, then project away widened key /
+  * synthetic row-index columns. */
 final class ColumnarDeleteFilterReader(
     inner: PartitionReader[ColumnarBatch], cfg: GroupDeletes,
     dataFile: Option[String], conf: => org.apache.hadoop.conf.Configuration)
@@ -52,18 +49,7 @@ final class ColumnarDeleteFilterReader(
   private var current: ColumnarBatch = _
   private var owned: ColumnarBatch = _ // repacked batch whose vectors we allocated
 
-  private lazy val resolved: Seq[(Array[Int], Set[Vector[Any]])] =
-    cfg.sets.map(s => (s.ordinals, s.keySet(conf)))
-
-  private lazy val positions: org.roaringbitmap.longlong.Roaring64NavigableMap =
-    cfg.pos match {
-      case Some(p) =>
-        val file = dataFile.getOrElse(throw new IllegalStateException(
-          "position deletes require file-granular partitions"))
-        PosDeleteCache.get(p.paths, p.dvs, conf)
-          .getOrElse(graft.format.ParquetIO.canonPath(file), PosDeleteCache.Empty)
-      case None => PosDeleteCache.Empty
-    }
+  private val probe = new DeleteProbe(cfg, dataFile, conf)
 
   private val outOrdinals: Array[Int] =
     cfg.project.map(_.toArray).getOrElse(Array.tabulate(cfg.types.length)(identity))
@@ -73,17 +59,6 @@ final class ColumnarDeleteFilterReader(
   })
   private val identityProjection = cfg.project.isEmpty
 
-  private def deleted(batch: ColumnarBatch, i: Int): Boolean =
-    cfg.pos.exists(p => !positions.isEmpty &&
-      positions.contains(batch.column(p.rowIdxOrdinal).getLong(i))) ||
-    (resolved.nonEmpty && {
-      val row = batch.getRow(i) // shared cursor row, no allocation
-      resolved.exists { case (ordinals, keys) =>
-        keys.contains(ordinals.map(o =>
-          graft.format.ParquetIO.canonicalValue(row, o, cfg.types(o))).toVector)
-      }
-    })
-
   override def next(): Boolean = {
     while (inner.next()) {
       val batch = inner.get()
@@ -92,7 +67,8 @@ final class ColumnarDeleteFilterReader(
       var k = 0
       var i = 0
       while (i < n) {
-        if (!deleted(batch, i)) { survivors(k) = i; k += 1 }
+        // getRow: the batch's shared cursor row, no allocation
+        if (!probe.deleted(batch.getRow(i))) { survivors(k) = i; k += 1 }
         i += 1
       }
       if (k > 0) {

@@ -310,13 +310,16 @@ object GraftSparkTable {
   * `pinnedPlan` is the plan a library read (TableScan.toDF) already made:
   * the builder reads exactly its files and never re-plans, so one library
   * read is one planFiles. Pushed filters still reach the file readers and
-  * are still re-applied as residuals. */
+  * are still re-applied as residuals. `bins` (with a pinned plan only)
+  * groups its data files into the scan's input partitions, one per bin:
+  * how bin-pack compaction reads (Actions.binJob). */
 final class GraftScanBuilder private[connector] (spark: SparkSession,
     table: GraftTable, base: TableScan, options: CaseInsensitiveStringMap,
     groupGranular: Boolean,
     onPlan: ScanPlan => Unit,
     onRuntimeFilter: Set[String] => Unit,
-    pinnedPlan: Option[ScanPlan])
+    pinnedPlan: Option[ScanPlan],
+    bins: Seq[Seq[String]])
   extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
   with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
   with org.apache.spark.sql.connector.read.SupportsPushDownLimit {
@@ -325,7 +328,8 @@ final class GraftScanBuilder private[connector] (spark: SparkSession,
       options: CaseInsensitiveStringMap, groupGranular: Boolean = false,
       onPlan: ScanPlan => Unit = _ => (),
       onRuntimeFilter: Set[String] => Unit = _ => ()) =
-    this(spark, table, base, options, groupGranular, onPlan, onRuntimeFilter, None)
+    this(spark, table, base, options, groupGranular, onPlan, onRuntimeFilter,
+      None, Nil)
 
   private var pushed: Array[Filter] = Array.empty
   private var requiredSchema: Option[StructType] = None
@@ -905,8 +909,8 @@ final class GraftScanBuilder private[connector] (spark: SparkSession,
     // every format included) stay eligible: keyedParts tags each file with
     // its group and the per-key task concatenates per-group subs
     val spjInfo: Option[SpjInfo] =
-      if (groupGranular || metaFile || metaPos || metaLineage ||
-          plan.tasks.isEmpty) None
+      if (groupGranular || bins.nonEmpty || metaFile || metaPos ||
+          metaLineage || plan.tasks.isEmpty) None
       else if (!spark.sessionState.conf
           .getConfString("spark.sql.sources.v2.bucketing.enabled", "false")
           .toBoolean) None
@@ -958,7 +962,7 @@ final class GraftScanBuilder private[connector] (spark: SparkSession,
       ndvStats = scan.snapshot.map(_.snapshotId)
         .flatMap(id => Stats.read(table, id)),
       fills = groups.map(_._3),
-      lineages = groups.map(_._4))
+      lineages = groups.map(_._4), bins = bins)
   }
 
   /** Rename filter references current→file names; drop if any referenced
@@ -990,7 +994,10 @@ final class GraftScanBuilder private[connector] (spark: SparkSession,
   * group's factory. All groups share one output layout, so Spark sees a
   * single homogeneous batch source (columnar included). Reports manifest-derived statistics to
   * the CBO (reference SparkBatchScan.estimateStatistics :186-209) so join
-  * sides behind graft tables broadcast correctly. */
+  * sides behind graft tables broadcast correctly. Non-empty `bins` (data
+  * file paths covering the plan) replace Spark's packing: input partition
+  * k reads exactly bin k, and the scan reports no key grouping and takes
+  * no runtime filter. */
 final class GraftScan(output: StructType,
     groupScans: Seq[org.apache.spark.sql.execution.datasources.v2.FileScan],
     plan: ScanPlan, spark: SparkSession = null, table: GraftTable = null,
@@ -1001,13 +1008,14 @@ final class GraftScan(output: StructType,
     spjInfo: Option[SpjInfo] = None,
     ndvStats: Option[Stats.TableStats] = None,
     fills: Seq[Option[FillConfig]] = Nil,
-    lineages: Seq[Option[LineageConfig]] = Nil)
+    lineages: Seq[Option[LineageConfig]] = Nil,
+    bins: Seq[Seq[String]] = Nil)
   extends Scan
   with org.apache.spark.sql.connector.read.SupportsReportStatistics
   with org.apache.spark.sql.connector.read.SupportsReportPartitioning
   with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
   import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Statistics}
-  import org.apache.spark.sql.execution.datasources.FilePartition
+  import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
   import java.util.OptionalLong
 
   override def readSchema(): StructType = output
@@ -1036,10 +1044,13 @@ final class GraftScan(output: StructType,
     * Spark's dynamic partition pruning injects the dim side's join-key
     * values at runtime and a star-schema fact scan drops whole files before
     * reading — the same manifest pruning planFiles does statically, now fed
-    * by runtime values (reference SparkBatchQueryScan.filterAttributes). */
+    * by runtime values (reference SparkBatchQueryScan.filterAttributes).
+    * Bin reads advertise nothing: a dropped file would drop its rows from
+    * the rewrite. */
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    if (runtimeFileFiltering)
+    if (bins.nonEmpty) Array.empty
+    else if (runtimeFileFiltering)
       Array(org.apache.spark.sql.connector.expressions.Expressions
         .column(GraftSparkTable.FileColumn))
     // key-grouped (storage-partitioned-join) scans skip runtime filtering:
@@ -1205,6 +1216,11 @@ final class GraftScan(output: StructType,
   // a FileScan's input partitions are its FilePartitions
   private lazy val partsByGroup: Seq[Array[FilePartition]] =
     inner.map(_.planInputPartitions().map(_.asInstanceOf[FilePartition]))
+  /** Every planned split, tagged with its reader group. */
+  private lazy val groupSplits: Seq[(Int, PartitionedFile)] =
+    partsByGroup.zipWithIndex.flatMap { case (parts, g) =>
+      parts.toSeq.flatMap(_.files).map(g -> _)
+    }
 
   /** Driver-side per-task delete matcher: canonical data-file path → the
     * position-delete files / DV slices that can reference it. Built from
@@ -1411,6 +1427,53 @@ final class GraftScan(output: StructType,
       }
     }
 
+  /** The subs one scan task reads of group `g`'s planned splits `files`.
+    * Position deletes (keyed by data-file path — the SAME canonicalization
+    * the delete rows' file_path goes through, so the lookup agrees on every
+    * filesystem scheme) and computed lineage (a per-FILE row-id base)
+    * attach per data file, so those groups get one sub per file, each with
+    * its own scopes; other groups read `files` as one sub, carrying the
+    * equality scope of its data files. */
+  private def subsOf(g: Int, index: Int,
+      files: Seq[PartitionedFile]): Seq[GroupedPartition] = {
+    val posGroup = groupDeletes(g).exists(_.pos.isDefined)
+    val lineageGroup = groupLineages(g).exists(_.kind == 1)
+    // partition-scoped equality deletes narrow each task's key-set sources
+    // to its own partition's delete files
+    val eqActive = eqScopable && groupDeletes(g).exists(_.sets.nonEmpty)
+    def canon(f: PartitionedFile) = ParquetIO.canonPath(f.filePath.toPath.toString)
+    if (posGroup || lineageGroup) files.map { f =>
+      val c = canon(f)
+      GroupedPartition(g, FilePartition(index, Array(f)), Some(c),
+        if (posGroup) Some(posScopeOf(c)) else None,
+        if (lineageGroup) lineageScopeOf.get(c) else None,
+        if (eqActive) eqScopeFor(g, Seq(c)) else None)
+    }
+    else Seq(GroupedPartition(g, FilePartition(index, files.toArray),
+      eqScope = if (eqActive) eqScopeFor(g, files.map(canon)) else None))
+  }
+
+  /** [[subsOf]] over (group, split) pairs of several groups, group order. */
+  private def groupedSubs(index: Int,
+      files: Seq[(Int, PartitionedFile)]): Seq[GroupedPartition] =
+    files.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (g, gfs) =>
+      subsOf(g, index, gfs.map(_._2))
+    }
+
+  /** Bin reads: input partition k concatenates the subs of bin k's files
+    * across every group (formats, sequence numbers and lineage kinds of
+    * one bin may fall in different groups). */
+  private lazy val binParts: Array[InputPartition] = {
+    val binOf = bins.zipWithIndex.flatMap { case (b, k) =>
+      b.map(p => ParquetIO.canonPath(p) -> k) }.toMap
+    val byBin = groupSplits.groupBy { case (_, f) =>
+      binOf(ParquetIO.canonPath(f.filePath.toPath.toString)) }
+    bins.indices.map { k =>
+      MultiFilePartition(groupedSubs(k, byBin.getOrElse(k,
+        throw new IllegalStateException(s"bin $k planned no splits")))): InputPartition
+    }.toArray
+  }
+
   /** Storage-partitioned-join planning: when the builder proved the scan's
     * files share one supported spec (spjInfo), regroup the planned files of
     * EVERY group into ONE InputPartition PER PARTITION KEY, each carrying
@@ -1426,42 +1489,18 @@ final class GraftScan(output: StructType,
     // or format must not cost its joins the shuffle-free plan forever.
     // The per-key task concatenates per-group subs; ConcatReader
     // dispatches each sub to its own group's reader.
-    val files = partsByGroup.zipWithIndex.flatMap { case (parts, g) =>
-      parts.toSeq.flatMap(_.files).map(f => g -> f)
+    val keyed = groupSplits.map { case (g, f) =>
+      info.keyOf.get(ParquetIO.canonPath(f.filePath.toPath.toString)) -> ((g, f))
     }
-    locally {
-      val keyed = files.map { case (g, f) =>
-        info.keyOf.get(ParquetIO.canonPath(f.filePath.toPath.toString)) -> ((g, f))
-      }
-      if (keyed.exists(_._1.isEmpty)) None
-      else {
-        val grouped = keyed.map { case (k, gf) => (k.get, gf) }.groupBy(_._1)
-          .toSeq.sortBy(_._1.map(v => String.valueOf(v)).mkString("\u0000"))
-        Some(grouped.zipWithIndex.map { case ((key, gfs), i) =>
-          // MoR: file-granular subs, each with its own delete scope --
-          // the same per-task attachment the non-SPJ path gets
-          val subs = gfs.map(_._2).groupBy(_._1).toSeq.sortBy(_._1).flatMap {
-            case (g, fs) =>
-              val posGroup = groupDeletes(g).exists(_.pos.isDefined)
-              val eqActive = eqScopable && groupDeletes(g).exists(_.sets.nonEmpty)
-              if (posGroup) fs.map(_._2).map { f =>
-                val canon = ParquetIO.canonPath(f.filePath.toPath.toString)
-                GroupedPartition(g, FilePartition(i, Array(f)), Some(canon),
-                  Some(posScopeOf(canon)), None,
-                  if (eqActive) eqScopeFor(g, Seq(canon)) else None)
-              }
-              else {
-                val canons = fs.map(f =>
-                  ParquetIO.canonPath(f._2.filePath.toPath.toString))
-                Seq(GroupedPartition(g, FilePartition(i, fs.map(_._2).toArray),
-                  eqScope = if (eqActive) eqScopeFor(g, canons) else None))
-              }
-          }
-          KeyedPartition(0, subs,
-            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-              key.toArray)): InputPartition
-        }.toArray)
-      }
+    if (keyed.exists(_._1.isEmpty)) None
+    else {
+      val grouped = keyed.map { case (k, gf) => (k.get, gf) }.groupBy(_._1)
+        .toSeq.sortBy(_._1.map(v => String.valueOf(v)).mkString("\u0000"))
+      Some(grouped.zipWithIndex.map { case ((key, gfs), i) =>
+        KeyedPartition(0, groupedSubs(i, gfs.map(_._2)),
+          new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+            key.toArray)): InputPartition
+      }.toArray)
     }
   }
 
@@ -1511,56 +1550,29 @@ final class GraftScan(output: StructType,
       out
     }
 
-    private def planPartitionsImpl(): Array[InputPartition] = keyedParts.getOrElse {
-      val keep = runtimeKeep
-      def kept(path: String): Boolean =
-        keep.forall(_.contains(ParquetIO.canonPath(path)))
-      partsByGroup.zipWithIndex.flatMap { case (parts, i) =>
-        val posGroup = groupDeletes(i).exists(_.pos.isDefined)
-        // computed-lineage groups need one task per file too: the row-id
-        // base is a per-FILE constant carried on the partition
-        val lineageGroup = groupLineages(i).exists(_.kind == 1)
-        // partition-scoped equality deletes narrow each task's key-set
-        // sources to its own partition's delete files
-        val eqActive = eqScopable && groupDeletes(i).exists(_.sets.nonEmpty)
-        def eqScope(canons: Seq[String]): Option[Seq[Seq[String]]] =
-          if (eqActive) eqScopeFor(i, canons) else None
-        if (!posGroup && !lineageGroup && keep.isEmpty && !eqActive)
-          parts.toSeq.map(p => GroupedPartition(i, p): InputPartition)
-        else parts.toSeq.flatMap { fp =>
-          // runtime filtering drops files the dynamic subquery proved
-          // matchless; position deletes additionally need one task per
-          // file (the position set is keyed by data-file path — the SAME
-          // canonicalization the delete rows' file_path goes through, so
-          // the lookup agrees on every filesystem scheme)
-          val files = fp.files.filter(f => kept(f.filePath.toPath.toString))
-          if (files.isEmpty) Nil
-          else if (posGroup || lineageGroup) {
-            // file-granular scoping WITHOUT losing Spark's bin-packing:
-            // keep the original FilePartition boundary (Spark already
-            // sized it to maxSplitBytes/bytesPerCore) and emit ONE task
-            // whose reader concatenates the per-file delete-scoped subs
-            // — small MoR files don't degrade to one task each
-            val subs = files.toSeq.map { f =>
-              val canon = ParquetIO.canonPath(f.filePath.toPath.toString)
-              GroupedPartition(i, FilePartition(fp.index, Array(f)),
-                Some(canon),
-                if (posGroup) Some(posScopeOf(canon)) else None,
-                if (lineageGroup) lineageScopeOf.get(canon) else None,
-                eqScope(Seq(canon)))
+    private def planPartitionsImpl(): Array[InputPartition] =
+      if (bins.nonEmpty) binParts
+      else keyedParts.getOrElse {
+        val keep = runtimeKeep
+        partsByGroup.zipWithIndex.flatMap { case (parts, i) =>
+          parts.toSeq.flatMap { fp =>
+            // runtime filtering drops files the dynamic subquery proved
+            // matchless
+            val files = keep.fold(fp.files.toSeq)(k => fp.files.toSeq.filter(f =>
+              k.contains(ParquetIO.canonPath(f.filePath.toPath.toString))))
+            // file-granular subs keep Spark's bin-packing: the original
+            // FilePartition boundary (already sized to
+            // maxSplitBytes/bytesPerCore) stays ONE task whose reader
+            // concatenates the subs — small MoR files don't degrade to one
+            // task each
+            if (files.isEmpty) Nil
+            else subsOf(i, fp.index, files) match {
+              case Seq(one) => Seq(one: InputPartition)
+              case subs => Seq(MultiFilePartition(subs): InputPartition)
             }
-            Seq(if (subs.size == 1) subs.head: InputPartition
-                else MultiFilePartition(subs): InputPartition)
           }
-          else {
-            val canons = files.toSeq.map(f =>
-              ParquetIO.canonPath(f.filePath.toPath.toString))
-            Seq(GroupedPartition(i, FilePartition(fp.index, files),
-              eqScope = eqScope(canons)): InputPartition)
-          }
-        }
-      }.toArray
-    }
+        }.toArray
+      }
     override def createReaderFactory(): PartitionReaderFactory =
       GroupedReaderFactory(innerFactories, groupDeletes, columnar, groupFills,
         groupLineages, deleteConf)
@@ -2090,25 +2102,21 @@ final case class GroupDeletes(sets: Seq[DeleteKeySource],
   def loadsFiles: Boolean = sets.nonEmpty || pos.isDefined
 }
 
-/** Row-path delete filter (reference EqualitySetDeleteFilter +
-  * PositionStreamDeleteFilter, core/.../deletes/Deletes.java:60-159): drop
-  * rows whose key tuple appears in any newer equality-delete set or whose
-  * row index appears in this file's position-delete set, then project away
-  * widened key / synthetic row-index columns. Delete sets load lazily on
-  * first use, in the executor running this reader, through `conf` (the
-  * scan's broadcast Hadoop conf, read only when a set loads). */
-final class DeleteFilterReader(
-    inner: org.apache.spark.sql.connector.read.PartitionReader[org.apache.spark.sql.catalyst.InternalRow],
-    cfg: GroupDeletes, dataFile: Option[String],
-    conf: => org.apache.hadoop.conf.Configuration)
-  extends org.apache.spark.sql.connector.read.PartitionReader[org.apache.spark.sql.catalyst.InternalRow] {
+/** The delete probe of both delete filters (row and columnar; reference
+  * EqualitySetDeleteFilter + PositionStreamDeleteFilter,
+  * core/.../deletes/Deletes.java:60-159): a physical row of one data file
+  * is dead when its row index is in the file's position-delete set or its
+  * key tuple is in a newer equality-delete set. Delete sets load lazily on
+  * the first probe, in the executor running the reader, through `conf`
+  * (the scan's broadcast Hadoop conf, read only when a set loads). */
+final class DeleteProbe(cfg: GroupDeletes, dataFile: Option[String],
+    conf: => org.apache.hadoop.conf.Configuration) {
   import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 
-  private var current: InternalRow = _
-
-  private lazy val resolved: Seq[(Array[Int], Set[Vector[Any]])] =
-    cfg.sets.map(s => (s.ordinals, s.keySet(conf)))
+  private val rowIdx: Int = cfg.pos.fold(-1)(_.rowIdxOrdinal)
+  private val ordinals: Array[Array[Int]] = cfg.sets.map(_.ordinals).toArray
+  private lazy val keySets: Array[Set[Vector[Any]]] =
+    cfg.sets.map(_.keySet(conf)).toArray
 
   private lazy val positions: org.roaringbitmap.longlong.Roaring64NavigableMap =
     cfg.pos match {
@@ -2120,20 +2128,41 @@ final class DeleteFilterReader(
       case None => PosDeleteCache.Empty
     }
 
-  private def canonical(row: InternalRow, i: Int): Any =
-    graft.format.ParquetIO.canonicalValue(row, i, cfg.types(i))
+  /** `row` is in the group's physical layout ([[GroupDeletes.types]]). */
+  def deleted(row: InternalRow): Boolean =
+    (rowIdx >= 0 && !positions.isEmpty && positions.contains(row.getLong(rowIdx))) ||
+      keyDeleted(row)
 
-  private def deleted(row: InternalRow): Boolean =
-    cfg.pos.exists(p => !positions.isEmpty &&
-      positions.contains(row.getLong(p.rowIdxOrdinal))) ||
-    resolved.exists { case (ordinals, keys) =>
-      keys.contains(ordinals.map(i => canonical(row, i)).toVector)
+  private def keyDeleted(row: InternalRow): Boolean = {
+    var s = 0
+    while (s < ordinals.length) {
+      val ords = ordinals(s)
+      if (keySets(s).contains(ords.map(o =>
+          graft.format.ParquetIO.canonicalValue(row, o, cfg.types(o))).toVector))
+        return true
+      s += 1
     }
+    false
+  }
+}
+
+/** Row-path delete filter: drop rows the [[DeleteProbe]] finds dead, then
+  * project away widened key / synthetic row-index columns. */
+final class DeleteFilterReader(
+    inner: org.apache.spark.sql.connector.read.PartitionReader[org.apache.spark.sql.catalyst.InternalRow],
+    cfg: GroupDeletes, dataFile: Option[String],
+    conf: => org.apache.hadoop.conf.Configuration)
+  extends org.apache.spark.sql.connector.read.PartitionReader[org.apache.spark.sql.catalyst.InternalRow] {
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+
+  private var current: InternalRow = _
+  private val probe = new DeleteProbe(cfg, dataFile, conf)
 
   override def next(): Boolean = {
     while (inner.next()) {
       val row = inner.get()
-      if (!deleted(row)) {
+      if (!probe.deleted(row)) {
         current = cfg.project match {
           case Some(idx) =>
             new GenericInternalRow(idx.map(i => row.get(i, cfg.types(i))).toArray)

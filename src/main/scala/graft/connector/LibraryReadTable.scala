@@ -11,9 +11,12 @@ import scala.jdk.CollectionConverters._
 /** The read-only relation a library scan (TableScan.toDF) materializes
   * through: batch reads of `plan`, already planned by `scan`, in `scan`'s
   * schema. Every scan builder it hands out reads exactly that plan's files
-  * and deletes, so library reads and SQL share one DSv2 read path. */
+  * and deletes, so library reads and SQL share one DSv2 read path.
+  * Non-empty `bins` group the plan's data files into the scan's input
+  * partitions, one per bin (see [[GraftScan]]). */
 private[graft] final class LibraryReadTable(spark: SparkSession,
-    table: GraftTable, scan: TableScan, plan: ScanPlan)
+    table: GraftTable, scan: TableScan, plan: ScanPlan,
+    bins: Seq[Seq[String]] = Nil)
   extends Table with SupportsRead with SupportsMetadataColumns {
 
   override def name(): String = table.location
@@ -29,5 +32,5 @@ private[graft] final class LibraryReadTable(spark: SparkSession,
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftScanBuilder(spark, table, scan, options, groupGranular = false,
-      onPlan = _ => (), onRuntimeFilter = _ => (), pinnedPlan = Some(plan))
+      onPlan = _ => (), onRuntimeFilter = _ => (), pinnedPlan = Some(plan), bins = bins)
 }

@@ -22,38 +22,22 @@ object Actions {
     * missing). Produced by [[Actions.verifyFileSizes]]. */
   final case class SizeMismatch(path: String, recorded: Long, actual: Long)
 
-  /** One compaction bin as shipped to an executor task: input files (with
-    * their sequence numbers, for equality-delete gating), the read schema
-    * (file-side names, current order/types), output path, and the live
-    * delete sets to apply DURING the rewrite — the reference reads through
-    * its delete filter when rewriting (RowDataRewriter), otherwise rows
-    * hidden by deletes would resurface in the rewritten files (new files
-    * carry a NEWER sequence than the equality deletes, and position deletes
-    * die with the old paths). */
-  final case class BinTask(id: Int, paths: Seq[String], seqs: Seq[Long],
-      readSchema: org.apache.spark.sql.types.StructType, out: String,
-      posDeletePaths: Seq[String],
-      posDvs: Seq[DvSlice],
-      eqDeletes: Seq[(Long, graft.connector.DeleteKeySource)],
-      // (ordinal → constant Catalyst value): identity-partition columns that
-      // exist only in the bin's partition tuple, not in the input files
-      // (imported hive layouts) — materialized into the rewritten file so
-      // the output is complete under the current schema
-      fill: Seq[(Int, Any)] = Nil,
-      // struct-nested initial defaults the input generation predates:
-      // (top ordinal, field-index path, value) — materialized on rewrite
-      // because the output claims the current schema (a physically-present
-      // null would otherwise stop the metadata backfill from applying)
-      nestedFill: Seq[(Int, Seq[Int], Any)] = Nil,
-      // per-input-file encodings (aligned with paths) + the output encoding:
-      // compaction reads any format and writes the table's current
-      // write.format.default, so it doubles as a format-migration action
-      formats: Seq[String] = Nil,
-      outFormat: String = FileFormats.Parquet,
-      // per-input-file row-lineage read strategy (aligned with paths), used
-      // only on v3 lineage tables where the output MATERIALIZES lineage:
-      // >= 0 computed base, -1 stored columns, -2 pre-v3 null (see Lineage)
-      lineage: Seq[Long] = Nil)
+  /** One compaction bin: input files of one (partition tuple, schema,
+    * spec) group, rewritten into the one file at `out`. */
+  private[graft] final case class Bin(tasks: Seq[FileScanTask], out: String)
+
+  /** Compaction's one Spark job, built but not run: `read` is the pinned
+    * DSv2 read of the bins' files, whose scan emits one input partition
+    * per bin, and `rdd` writes partition k into `bins(k).out`, encoded as
+    * `outFormat`, storing row lineage when `lineage`. */
+  private[graft] final case class BinJob(bins: Seq[Bin],
+      read: org.apache.spark.sql.DataFrame,
+      rdd: org.apache.spark.rdd.RDD[Metrics.FileMetrics],
+      outFormat: String, lineage: Boolean)
+
+  /** Output file of bin `k`, named alike on the driver and in its task. */
+  private def binOut(staging: String, k: Int, format: String): String =
+    f"$staging/bin-$k%05d.$format"
 }
 
 final class Actions(t: GraftTable) {
@@ -65,15 +49,10 @@ final class Actions(t: GraftTable) {
     * :243, filter groups >1 file :209, RewriteFiles commit :265).
     *
     * ALL bins run as ONE Spark job (the reference distributes all
-    * CombinedScanTasks as one RDD — RewriteDataFilesAction.java:189-281,
-    * RowDataRewriter.java:84-85): `parallelize(bins)` → each executor task
-    * streams its bin's rows through ParquetIO.open → ParquetIO.openWriter
-    * (constant memory, no DataFrame per bin) and reads the output footer
-    * metrics in-task, so a 10k-bin table compacts with one job submission
-    * and zero driver parquet I/O. Old-generation files are read with a
-    * read schema mapped to their FILE column names by field id, in the
-    * CURRENT schema's column order, so output files are always
-    * current-schema. */
+    * CombinedScanTasks as one RDD and reads each through the delete filter
+    * its scans use — RewriteDataFilesAction.java:189-281,
+    * RowDataRewriter.java:84-85): see [[binJob]]. A 10k-bin table compacts
+    * with one job submission and zero driver data I/O. */
   def rewriteDataFiles(targetSizeBytes: Long = 128L * 1024 * 1024,
       minInputFiles: Int = 2, filter: Expr = AlwaysTrue,
       deleteFileThreshold: Int = Int.MaxValue): RewriteResult = {
@@ -86,6 +65,55 @@ final class Actions(t: GraftTable) {
     // at 100 TB compaction runs per-partition, not per-table. Hygiene and
     // conflict validation still run against the FULL live set below.
     val plan = t.newScan().filter(filter).planFiles()
+    val job = binJob(m, plan, targetSizeBytes, minInputFiles, deleteFileThreshold)
+      .getOrElse(return RewriteResult(0, 0))
+    val newFiles = job.rdd.collect().toSeq.zip(job.bins).map { case (fm, bin) =>
+      val group = bin.tasks.head.file
+      DataFile(
+        path = bin.out,
+        content = FileContent.Data,
+        partition = group.partition,
+        recordCount = fm.recordCount,
+        fileSizeInBytes = fm.fileSize,
+        schemaId = m.currentSchemaId,
+        specId = group.specId,
+        valueCounts = fm.valueCounts,
+        nullValueCounts = fm.nullValueCounts,
+        lowerBounds = fm.lowerBounds,
+        upperBounds = fm.upperBounds,
+        splitOffsets = fm.splitOffsets,
+        fullBoundIds = fm.fullBoundIds,
+        fileFormat = job.outFormat,
+        // the output physically carries preserved row ids (see binJob) —
+        // the commit must NOT assign it a fresh base
+        firstRowId = if (job.lineage) Some(Lineage.Materialized) else None)
+    }
+    val del = job.bins.flatMap(_.tasks.map(_.file.path)).toSet
+    // hygiene judges dangling deletes against the FULL live set — a scoped
+    // plan would misread deletes targeting out-of-scope files as dangling
+    val hygienePlan = if (filter == AlwaysTrue) plan else t.newScan().planFiles()
+    commitRewriteWithHygiene(hygienePlan, del, newFiles, baseSnapshot)
+  }
+
+  /** Plan the bins of `plan` and build the job that rewrites them into
+    * files of `m`'s current schema; None when no bin qualifies.
+    *
+    * The job reads the bins' files through the DSv2 scan every graft read
+    * uses, pinned to `plan` and unfiltered: live deletes are applied (new
+    * files get a newer sequence number, so un-applied equality deletes
+    * would stop matching and position deletes would orphan with the old
+    * paths), old schema generations map by field id, and imported
+    * identity-partition columns and initial defaults are served, so every
+    * output file is complete under the current schema. On v3 lineage
+    * tables the read selects `_row_id` / `_last_updated_sequence_number`
+    * and the outputs store them (Lineage.Stored), preserving row identity.
+    * The scan emits one input partition per bin; one
+    * `mapPartitionsWithIndex` streams partition k into bin k's file with
+    * DataFileIO.openWriter and reads its footer metrics in-task. No
+    * shuffle: outputs keep their group's partition tuple and spec. */
+  private[graft] def binJob(m: TableMetadata, plan: ScanPlan,
+      targetSizeBytes: Long, minInputFiles: Int,
+      deleteFileThreshold: Int): Option[BinJob] = {
     // delete pressure per data file (iceberg delete-file-threshold): a
     // file carrying >= threshold live delete files gets compacted even
     // when its partition is already size-compact — long-lived MoR tables
@@ -113,292 +141,61 @@ final class Actions(t: GraftTable) {
             eqSeqs.count(_ > ts.sequenceNumber))
       }.toMap
     }
+    // a group or bin qualifies by merge width, or because it holds a
+    // delete-burdened file (the threshold path compacts singletons too)
+    def qualifies(tasks: Seq[FileScanTask]): Boolean =
+      tasks.size >= minInputFiles ||
+        (deleteFileThreshold != Int.MaxValue && tasks.exists(ts =>
+          deletePressure.getOrElse(ParquetIO.canonPath(ts.file.path), 0) >=
+            deleteFileThreshold))
     // spec id joins the group key: a spec-evolved table compacts each
     // generation under its OWN layout (outputs keep the group's spec).
     // Tuples.key: binary partition values must group by CONTENT or each
     // file becomes its own bin and the partition never compacts
-    val groups = plan.tasks
+    val binned = plan.tasks
       .groupBy(ts => (Tuples.key(ts.file.partition), ts.file.schemaId,
         ts.file.specId))
-      .values.filter(g => g.size >= minInputFiles ||
-        (deleteFileThreshold != Int.MaxValue && g.exists(ts =>
-          deletePressure.getOrElse(ParquetIO.canonPath(ts.file.path), 0) >=
-            deleteFileThreshold)))
-      .toSeq
-    if (groups.isEmpty) return RewriteResult(0, 0)
+      .values.filter(qualifies).toSeq
+      .flatMap(binPack(_, targetSizeBytes).filter(qualifies))
+    if (binned.isEmpty) return None
+
+    val staging = t.locations.newDataLocation(java.util.UUID.randomUUID().toString)
+    t.ops.io.mkdirs(staging)
+    val outFormat = graft.connector.GraftBatchWrite.writeFormat(m.properties)
+    val bins = binned.zipWithIndex.map { case (tasks, k) =>
+      Bin(tasks, binOut(staging, k, outFormat)) }
+    val lineageOn = Lineage.enabled(m)
+    val read = t.newScan().read(plan.copy(tasks = binned.flatten,
+        filesScanned = binned.map(_.size).sum),
+      withLineage = lineageOn, bins = binned.map(_.map(_.file.path)))
 
     val schema = m.schema
-    // v3 row lineage: compaction must PRESERVE row identity, so the output
-    // files materialize `_row_id` / `_last_updated_sequence_number` as
-    // physical columns (Lineage.Stored) — computed from each input file's
-    // base + position, copied through from already-materialized inputs
-    val lineageOn = Lineage.enabled(m)
     val lineageCols =
       if (!lineageOn) Nil
-      else Seq(
-        org.apache.spark.sql.types.StructField(Lineage.RowIdColumn,
-          org.apache.spark.sql.types.LongType, nullable = true),
-        org.apache.spark.sql.types.StructField(Lineage.LastUpdatedColumn,
+      else Seq(Lineage.RowIdColumn, Lineage.LastUpdatedColumn).map(n =>
+        org.apache.spark.sql.types.StructField(n,
           org.apache.spark.sql.types.LongType, nullable = true))
     val writeSchema = org.apache.spark.sql.types.StructType(schema.fields.map(
       _.copy(metadata = org.apache.spark.sql.types.Metadata.empty)) ++ lineageCols)
-    val staging = t.locations.newDataLocation(java.util.UUID.randomUUID().toString)
-    t.ops.io.mkdirs(staging)
-
-    // live row-level deletes must be APPLIED during the rewrite (reference
-    // RowDataRewriter reads through its delete filter): rewritten files get
-    // a newer sequence number, so un-applied equality deletes would stop
-    // matching and position deletes would orphan with the old paths.
-    // Each bin ships only the delete state that can REACH its files — a
-    // per-partition MoR table at 100 TB carries one delete set per
-    // partition, and an unscoped plan loads EVERY partition's sets on every
-    // executor (O(table deletes) per task instead of O(bin deletes)).
-    val posDeleteFiles = plan.deleteFiles
-      .filter(_._1.content == FileContent.PositionDeletes).map(_._1)
-      .distinctBy(f => (f.path, f.referencedDataFile))
-    val hadoopConf = t.spark.sessionState.newHadoopConf()
-    // canonical data path → the parquet pos-delete files that can hold its
-    // positions (manifest metadata; only legacy files pay a cached read)
-    val posIdx = Deletes.posIndex(posDeleteFiles, hadoopConf)
-    val dvByTarget: Map[String, Seq[DvSlice]] =
-      Dvs.slicesOf(posDeleteFiles).groupBy(_.referenced)
-    val eqEntries = plan.deleteFiles
-      .filter(_._1.content == FileContent.EqualityDeletes)
-    // grouped by file-side key names too (Deletes.eqKeyFileNames): delete
-    // files staged before a key rename carry the old column names. Sorted
-    // path lists keep the executor DeleteKeyCache key stable, so groups
-    // scoped to the same entries share one loaded set per executor.
-    def eqSources(entries: Seq[(DataFile, Long)])
-        : Seq[(Long, graft.connector.DeleteKeySource)] = entries
-      .groupBy(d => (d._1.equalityIds, d._2,
-        Deletes.eqKeyFileNames(m.schemas, schema, d._1))).toSeq
-      .map { case ((ids, seq, fileNames), group) =>
-        val names = ids.map(id => FieldIds.findById(schema, id).get.name)
-        seq -> graft.connector.DeleteKeySource(
-          names.map(schema.fieldIndex).toArray, names, fileNames,
-          names.map(n => Types.cleanType(schema(n).dataType)),
-          group.map(_._1.path).distinct.sorted)
-      }.sortBy(_._1)
-    // per-(spec, partition) equality scoping, memoized across groups (the
-    // scan path's Deletes.eqDeleteCanHit semantics); the per-file bounds
-    // refinement below is capped like the scan's linear sweep — above the
-    // cap, partition scoping alone still bounds the shipped sets
-    val EqScopeBoundsCap = 1024
-    val eqScopeCache = scala.collection.mutable.HashMap[
-      (Int, Map[String, Any]), Seq[(DataFile, Long)]]()
-    def eqEntriesFor(specId: Int, partition: Map[String, Any]) =
-      eqScopeCache.getOrElseUpdate((specId, partition), eqEntries.filter(d =>
-        Deletes.eqDeleteCanHit(d._1.specId, d._1.partition, specId, partition)))
-
-    // plan bins driver-side; only BinTasks ship to executors
-    var binId = 0
-    val binTasks = Seq.newBuilder[BinTask]
-    val binMeta = collection.mutable.Map[Int, (Map[String, Any], Int, Int)]()
-    groups.foreach { tasks =>
-      val (partition, schemaId) = (tasks.head.file.partition, tasks.head.file.schemaId)
-      // read schema: file-side names (by field id, at EVERY struct level —
-      // nested renames map too) in current column order, so the task's
-      // InternalRows match writeSchema positionally; columns added since
-      // this generation read as null (missing optional columns)
-      val fileSchema = m.schemas.getOrElse(schemaId, schema)
-      val fileFieldById = fileSchema.fields.map(f => FieldIds.idOf(f) -> f).toMap
-      val readSchema = org.apache.spark.sql.types.StructType(schema.fields.map { f =>
-        fileFieldById.get(FieldIds.idOf(f)) match {
-          case Some(ff) => org.apache.spark.sql.types.StructField(ff.name,
-            Types.fileSideType(f.dataType, ff.dataType), f.nullable)
-          case None => org.apache.spark.sql.types.StructField(
-            // absentReadName, NOT f.name: a same-named column from a
-            // DROPPED predecessor may still exist physically in this
-            // generation — requesting it by name would read (and then
-            // MATERIALIZE into the rewritten file) the dead values
-            // (round-20 fuzz seed 112: drop w, re-add w, roll back to the
-            // old generation, compact → resurrection)
-            Types.absentReadName(f, fileSchema),
-            Types.cleanType(f.dataType), nullable = true)
-        }
-      } ++ lineageCols) // stored-lineage inputs have them; others read null
-      // identity-partition columns missing from this generation's FILES
-      // (imported hive layouts) must be materialized from the bin's
-      // (constant) partition tuple — otherwise the rewritten file, which
-      // claims the current schema, would hold nulls for them
-      val fileIds = fileSchema.fields.map(FieldIds.idOf).toSet
-      val spec = m.specs(tasks.head.file.specId)
-      val fill: Seq[(Int, Any)] = schema.fields.toSeq.zipWithIndex
-        .filter { case (f, _) => !fileIds.contains(FieldIds.idOf(f)) }
-        .flatMap { case (f, ord) =>
-          spec.fields.find(pf => pf.sourceId == FieldIds.idOf(f) &&
-              pf.transform == Transforms.IdentityT)
-            .map(pf => ord -> Values.toCatalyst(
-              partition.getOrElse(pf.name, null), f.dataType))
-            // initial defaults MATERIALIZE on rewrite: the output file
-            // claims the current schema, so the backfill becomes physical
-            .orElse(Defaults.of(f).map(v =>
-              ord -> Values.toCatalyst(v, Types.cleanType(f.dataType))))
-        }
-      val allFileIds = FieldIds.allIds(fileSchema)
-      val nestedFill: Seq[(Int, Seq[Int], Any)] =
-        schema.fields.toSeq.zipWithIndex.flatMap {
-          case (f, ord) if f.dataType.isInstanceOf[
-              org.apache.spark.sql.types.StructType] &&
-              fileIds.contains(FieldIds.idOf(f)) =>
-            Defaults.nestedFills(f.dataType, allFileIds)
-              .map { case (p, _, v) => (ord, p, v) }
-          case _ => Nil
-        }
-      // equality sets this group's partition can see, refined by per-file
-      // key-range overlap when the set count is sweepable
-      val scopedEq0 = eqEntriesFor(tasks.head.file.specId, partition)
-      val scopedEq =
-        if (scopedEq0.size > EqScopeBoundsCap) scopedEq0
-        else scopedEq0.filter { case (d, dseq) =>
-          tasks.exists(ts => dseq > ts.sequenceNumber &&
-            Deletes.eqBoundsCanHit(d, ts.file, schema))
-        }
-      val groupEq = eqSources(scopedEq)
-      val seqByPath = tasks.map(ts => ts.file.path -> ts.sequenceNumber).toMap
-      val fmtByPath = tasks.map(ts => ts.file.path -> ts.file.fileFormat).toMap
-      val linByPath: Map[String, Long] = tasks.map(ts =>
-        ts.file.path -> (ts.file.firstRowId match {
-          case Some(Lineage.Materialized) => -1L // stored: copy through
-          case Some(base) => base                // computed: base + position
-          case None => -2L                       // pre-v3: null lineage
-        })).toMap
-      val outFormat = graft.connector.GraftBatchWrite.writeFormat(m.properties)
-      val bins = binPack(tasks.map(ts => ts.file.path -> ts.file.fileSizeInBytes),
-        targetSizeBytes)
-      // a bin qualifies by merge width, or because it holds a
-      // delete-burdened file (the threshold path compacts singletons too)
-      def pressured(bin: Seq[String]): Boolean =
-        deleteFileThreshold != Int.MaxValue && bin.exists(p =>
-          deletePressure.getOrElse(ParquetIO.canonPath(p), 0) >=
-            deleteFileThreshold)
-      bins.filter(b => b.size >= minInputFiles || pressured(b)).foreach { bin =>
-        // position deletes attach per data file: ship only the bin's
-        val binCanon = bin.map(ParquetIO.canonPath)
-        val binPos = binCanon.flatMap(posIdx).distinct.sorted
-        val binDvs = binCanon.flatMap(c => dvByTarget.getOrElse(c, Nil))
-        binTasks += BinTask(binId, bin, bin.map(seqByPath), readSchema,
-          f"$staging/bin-$binId%05d.$outFormat",
-          binPos, binDvs, groupEq, fill, nestedFill,
-          bin.map(fmtByPath), outFormat,
-          lineage = if (lineageOn) bin.map(linByPath) else Nil)
-        binMeta(binId) = (partition, schemaId, tasks.head.file.specId)
-        binId += 1
-      }
-    }
-    val planned = binTasks.result()
-    if (planned.isEmpty) return RewriteResult(0, 0)
-
     val sconf = HadoopFileIO.broadcastConf(t.spark, ParquetIO.writeConf(t.spark))
     val tableProps = m.properties
-    val idSchema = schema // current schema WITH field-id metadata, for stats
     val statModes = Metrics.modesFor(schema, m.properties)
-    // ONE job: every bin is an executor task (reference RowDataRewriter).
-    // Rows stream read→write positionally, so reading with file-side names
-    // and writing with current names performs the rename in-flight.
-    val results: Array[(Int, Metrics.FileMetrics)] = t.spark.sparkContext
-      .parallelize(planned, planned.size)
-      .map { bt =>
-        val conf = sconf.value.value
-        // delete sets load once per executor (shared caches); positions key
-        // by canonical path, equality sets gate on each file's sequence
-        val pos: Map[String, org.roaringbitmap.longlong.Roaring64NavigableMap] =
-          if (bt.posDeletePaths.isEmpty && bt.posDvs.isEmpty) Map.empty
-          else graft.connector.PosDeleteCache.get(bt.posDeletePaths, bt.posDvs, conf)
-        val eq = bt.eqDeletes.map { case (seq, src) =>
-          (seq, src.ordinals, src.types,
-            graft.connector.DeleteKeyCache.get(src, conf))
-        }
-        val writer = DataFileIO.openWriter(bt.out, bt.outFormat, writeSchema,
-          idSchema, conf, statModes, tableProps)
-        val fmts = if (bt.formats.nonEmpty) bt.formats
-          else bt.paths.map(_ => FileFormats.Parquet)
-        // finish() (close + footer read) sits INSIDE the abort guard: a
-        // failure there must still clean the staged output, or the task
-        // retry hits its own deterministic path with create(overwrite=false)
-        val fm = try {
-          bt.paths.indices.foreach { k =>
-            val (p, fileSeq, fmt) = (bt.paths(k), bt.seqs(k), fmts(k))
-            val deadPos = pos.getOrElse(ParquetIO.canonPath(p),
-              graft.connector.PosDeleteCache.Empty)
-            val applicable = eq.filter(_._1 > fileSeq)
-            // lineage materialization: base >= 0 sets (base+idx, fileSeq)
-            // into the trailing columns; -1 copies the input's stored
-            // columns through; -2 (pre-v3) leaves them null
-            val linBase = if (bt.lineage.isEmpty) -2L else bt.lineage(k)
-            val rewrite =
-              bt.fill.nonEmpty || bt.nestedFill.nonEmpty || linBase >= 0
-            var idx = -1L // sequential full-file read ⇒ counter = row index
-            DataFileIO.readAll(p, fmt, bt.readSchema, conf) { row =>
-              idx += 1
-              val dead = (!deadPos.isEmpty && deadPos.contains(idx)) ||
-                applicable.exists { case (_, ords, types, keys) =>
-                  keys.contains(ords.indices.map(i =>
-                    ParquetIO.canonicalValue(row, ords(i), types(i))).toVector)
-                }
-              if (!dead) {
-                if (!rewrite) writer.write(row)
-                else {
-                  // copy + materialize constant partition / lineage columns
-                  val out = new org.apache.spark.sql.catalyst.expressions
-                    .GenericInternalRow(bt.readSchema.length)
-                  var c = 0
-                  while (c < bt.readSchema.length) {
-                    out.update(c,
-                      if (row.isNullAt(c)) null
-                      else row.get(c, bt.readSchema(c).dataType))
-                    c += 1
-                  }
-                  bt.fill.foreach { case (ord, v) => out.update(ord, v) }
-                  bt.nestedFill.foreach { case (ord, path, v) =>
-                    val st = bt.readSchema(ord).dataType
-                      .asInstanceOf[org.apache.spark.sql.types.StructType]
-                    if (!out.isNullAt(ord)) out.update(ord,
-                      Defaults.fillStruct(out.getStruct(ord, st.length), st, path, v))
-                  }
-                  if (linBase >= 0) {
-                    out.update(bt.readSchema.length - 2, linBase + idx)
-                    out.update(bt.readSchema.length - 1, fileSeq)
-                  }
-                  writer.write(out)
-                }
-              }
-            }
-          }
-          // footer metrics in-task, keyed by field id against the current schema
-          writer.finish()
-        } catch { case e: Throwable => writer.abort(); throw e }
-        (bt.id, fm)
-      }.collect()
-
-    val currentSchemaId = m.currentSchemaId
-    val byId = planned.map(bt => bt.id -> bt).toMap
-    val newFiles = results.toSeq.sortBy(_._1).map { case (id, fm) =>
-      val (partition, _, groupSpecId) = binMeta(id)
-      DataFile(
-        path = byId(id).out,
-        content = FileContent.Data,
-        partition = partition,
-        recordCount = fm.recordCount,
-        fileSizeInBytes = fm.fileSize,
-        schemaId = currentSchemaId,
-        specId = groupSpecId,
-        valueCounts = fm.valueCounts,
-        nullValueCounts = fm.nullValueCounts,
-        lowerBounds = fm.lowerBounds,
-        upperBounds = fm.upperBounds,
-        splitOffsets = fm.splitOffsets,
-        fullBoundIds = fm.fullBoundIds,
-        fileFormat = byId(id).outFormat,
-        // the output physically carries preserved row ids (see above) —
-        // the commit must NOT assign it a fresh base
-        firstRowId = if (lineageOn) Some(Lineage.Materialized) else None)
+    // the closure ships the output DIRECTORY, not the bins' paths: task k
+    // names its own file, so per-task bytes stay flat at 10k bins
+    val rdd = read.queryExecution.toRdd.mapPartitionsWithIndex { (k, rows) =>
+      val writer = DataFileIO.openWriter(binOut(staging, k, outFormat), outFormat,
+        writeSchema, schema, sconf.value.value, statModes, tableProps)
+      // finish() (close + footer read) sits INSIDE the abort guard: a
+      // failure there must still clean the staged output, or the task
+      // retry hits its own deterministic path with create(overwrite=false)
+      val fm =
+        try { rows.foreach(writer.write); writer.finish() }
+        catch { case e: Throwable => writer.abort(); throw e }
+      Iterator.single(fm)
     }
-    val del = planned.flatMap(_.paths).toSet
-    // hygiene judges dangling deletes against the FULL live set — a scoped
-    // plan would misread deletes targeting out-of-scope files as dangling
-    val hygienePlan = if (filter == AlwaysTrue) plan else t.newScan().planFiles()
-    commitRewriteWithHygiene(hygienePlan, del, newFiles, baseSnapshot)
+    require(rdd.getNumPartitions == bins.size,
+      s"compaction read planned ${rdd.getNumPartitions} partitions for ${bins.size} bins")
+    Some(BinJob(bins, read, rdd, outFormat, lineageOn))
   }
 
   /** Shared tail of the data-file rewrites: drop delete files the rewrite
@@ -453,11 +250,12 @@ final class Actions(t: GraftTable) {
     * difference between "every file might match" and "one file per key
     * range matches".
     *
-    * Reads the planned files through the DSv2 scan (live deletes applied,
-    * old schema generations mapped by field id, imported identity-partition
-    * columns materialized), then ONE range shuffle sized to
-    * `targetSizeBytes` outputs and the same fanout write + atomic-swap
-    * commit as bin-pack compaction (including dangling-delete hygiene and
+    * Reads the planned files through the same pinned DSv2 read as bin-pack
+    * compaction (live deletes applied, old schema generations mapped by
+    * field id, imported identity-partition columns materialized), then ONE
+    * range shuffle sized to `targetSizeBytes` outputs, the library fanout
+    * write (GraftWrite.writeFiles) and the same atomic-swap commit as
+    * bin-pack compaction (including dangling-delete hygiene and
     * concurrent-delete validation). Partitioned tables cluster by
     * (partition transforms, then sortBy), so each output task writes to one
     * partition directory run. Goes beyond the reference fork, which has no
@@ -484,12 +282,13 @@ final class Actions(t: GraftTable) {
     rewriteClustered(df => Seq(ZOrder.zValue(df, cols).asc), targetSizeBytes,
       filter)
 
-  /** Shared clustered-rewrite pipeline: DSv2 scan (live deletes applied,
-    * old schema generations mapped by field id, imported identity-partition
-    * columns materialized) → ONE range shuffle sized to `targetSizeBytes`
-    * outputs → in-partition sort → the same fanout write + atomic-swap
-    * commit as bin-pack compaction. `clusterCols` sees the scan DataFrame
-    * (for derived keys like the z-value). */
+  /** Shared clustered-rewrite pipeline: pinned DSv2 read (live deletes
+    * applied, old schema generations mapped by field id, imported
+    * identity-partition columns materialized) → ONE range shuffle sized to
+    * `targetSizeBytes` outputs → in-partition sort → the library fanout
+    * write (GraftWrite.writeFiles) → the same atomic-swap commit as bin-pack
+    * compaction. `clusterCols` sees the scan DataFrame (for derived keys
+    * like the z-value). */
   private def rewriteClustered(
       clusterCols: org.apache.spark.sql.DataFrame => Seq[Column],
       targetSizeBytes: Long, filter: Expr = AlwaysTrue): RewriteResult = {
@@ -754,15 +553,16 @@ final class Actions(t: GraftTable) {
     RewriteResult(eqFiles.size, newDeletes.map(_.path).distinct.size)
   }
 
-  private def binPack(files: Seq[(String, Long)], target: Long): Seq[Seq[String]] = {
-    val bins = collection.mutable.ArrayBuffer[(collection.mutable.ArrayBuffer[String], Long)]()
-    files.sortBy(-_._2).foreach { case (path, size) =>
+  private def binPack(files: Seq[FileScanTask], target: Long): Seq[Seq[FileScanTask]] = {
+    val bins = collection.mutable.ArrayBuffer[(collection.mutable.ArrayBuffer[FileScanTask], Long)]()
+    files.sortBy(-_.file.fileSizeInBytes).foreach { ts =>
+      val size = ts.file.fileSizeInBytes
       bins.zipWithIndex.find(_._1._2 + size <= target) match {
-        case Some(((paths, tot), i)) =>
-          paths += path
-          bins(i) = (paths, tot + size)
+        case Some(((tasks, tot), i)) =>
+          tasks += ts
+          bins(i) = (tasks, tot + size)
         case None =>
-          bins += ((collection.mutable.ArrayBuffer(path), size))
+          bins += ((collection.mutable.ArrayBuffer(ts), size))
       }
     }
     bins.map(_._1.toSeq).toSeq

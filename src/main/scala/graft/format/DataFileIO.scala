@@ -4,11 +4,14 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.StructType
 
-/** Format-dispatching executor-side row I/O over data files — ONE seam for
-  * every code path that streams data files row-wise (compaction rewrite,
-  * delete-key loading stays parquet-only since delete files are always
-  * parquet, the DSv2 fanout writers). Mirrors the reference's FileFormat
-  * dispatch in GenericReader/FileAppenderFactory (api/.../FileFormat.java).
+/** Format-dispatching executor-side row I/O over data files: the one
+  * writer seam (`openWriter`: the DSv2 fanout writers, library writes and
+  * bin-pack compaction's per-bin outputs) and a row-wise reader
+  * (`readAll`, which can decrypt first). Table reads, compaction's
+  * included, go through the DSv2 scan instead; delete-key loading stays
+  * parquet-only since delete files are always parquet. Mirrors the
+  * reference's FileFormat dispatch in GenericReader/FileAppenderFactory
+  * (api/.../FileFormat.java).
   */
 object DataFileIO {
 

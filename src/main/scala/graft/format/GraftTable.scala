@@ -273,12 +273,15 @@ final class TableScan private[format] (
     * scan builder reads exactly `plan`'s files and deletes, never
     * re-planning. Catalyst pushes the row filter and projection applied
     * here into that builder. Used by toDF and by callers that select their
-    * own file and delete subsets (streaming slices, CDC, rewrites). */
-  private[format] def read(plan: ScanPlan,
-      withLineage: Boolean = false): DataFrame = {
+    * own file and delete subsets (streaming slices, CDC, rewrites).
+    * Non-empty `bins` (data-file paths covering every planned file) make
+    * the scan read bin k as its k-th input partition (bin-pack
+    * compaction). */
+  private[format] def read(plan: ScanPlan, withLineage: Boolean = false,
+      bins: Seq[Seq[String]] = Nil): DataFrame = {
     val df = org.apache.spark.sql.execution.datasources.v2.GraftV2Shims
       .relationDF(table.spark,
-        new graft.connector.LibraryReadTable(table.spark, table, this, plan))
+        new graft.connector.LibraryReadTable(table.spark, table, this, plan, bins))
     val filtered =
       if (rowFilter == AlwaysTrue) df
       else df.filter(Exprs.toColumn(Exprs.bind(rowFilter, scanSchema)))

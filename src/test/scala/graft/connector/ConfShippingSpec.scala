@@ -93,6 +93,30 @@ class ConfShippingSpec extends SparkSpec {
     assert(problems.isEmpty, problems.mkString("\n"))
   }
 
+  test("compaction's bin read and write closure ship no Hadoop conf by value") {
+    val wh = Files.createTempDirectory("graft-confcompact").toString
+    val (_, loc, live) = upsertTable(wh, "confcompact")
+    val t = GraftTable.load(spark, loc)
+    val job = Actions.forTable(t).binJob(t.metadata, t.newScan().planFiles(),
+      targetSizeBytes = 128L * 1024 * 1024, minInputFiles = 2,
+      deleteFileThreshold = Int.MaxValue).get
+    val scans = job.read.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
+    assert(scans.size === 1)
+    val graft = scans.head.scan.asInstanceOf[GraftScan]
+    assert(graft.scanPlan.deleteFiles.nonEmpty, "the bins are read through live deletes")
+    assert(job.rdd.getNumPartitions === job.bins.size)
+    val factory = scans.head.readerFactory
+    info(s"compaction reader factory: ${serializedSize(factory)} B")
+    assert(shippingProblem("compaction reader factory", factory).isEmpty,
+      shippingProblem("compaction reader factory", factory).mkString)
+    // the RDD is what each task deserializes with its write function: the
+    // whole narrow lineage, reader factory included
+    info(s"compaction job RDD: ${serializedSize(job.rdd)} B")
+    val confs = confsIn(job.rdd)
+    assert(confs === 0, s"compaction job carries $confs Hadoop conf(s) by value")
+    assert(job.rdd.collect().map(_.recordCount).sum === live.size.toLong)
+  }
+
   test("executor-side delete loading and writes see Hadoop keys set on the session only") {
     // a scheme only the session conf maps to a file system (session SQL
     // confs reach `newHadoopConf()` as they are): a task given the
