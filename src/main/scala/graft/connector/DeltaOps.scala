@@ -3,13 +3,11 @@ package graft.connector
 import graft.format._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Merge-on-read row-level operations (SupportsDelta → WriteDelta):
   * instead of rewriting every file that contains a match (copy-on-write),
@@ -127,28 +125,10 @@ final class GraftDeltaBatchWrite(table: GraftTable,
       case GraftDeltaWriterFactory.DeltaTaskFiles(data, dels, dvs) =>
         (data, dels, dvs)
     }.unzip3
-    val dataFiles = dataMsgs.flatten.map { sf =>
-      val fm = sf.metrics
-      DataFile(path = sf.path, partition = sf.partition,
-        recordCount = fm.recordCount, fileSizeInBytes = fm.fileSize,
-        schemaId = m.currentSchemaId, specId = m.defaultSpecId,
-        valueCounts = fm.valueCounts, nullValueCounts = fm.nullValueCounts,
-        lowerBounds = fm.lowerBounds, upperBounds = fm.upperBounds,
-        splitOffsets = fm.splitOffsets, fullBoundIds = fm.fullBoundIds,
-        fileFormat = fmt)
-    }.toSeq
-    val deleteFiles = deleteMsgs.flatten.map { sf =>
-      val base = DataFile(path = sf.path, content = FileContent.PositionDeletes,
-        recordCount = sf.metrics.recordCount,
-        fileSizeInBytes = sf.metrics.fileSize,
-        schemaId = m.currentSchemaId, specId = m.defaultSpecId)
-      (sf.metrics.lowerBounds.get(graft.format.Deletes.PathFieldId),
-        sf.metrics.upperBounds.get(graft.format.Deletes.PathFieldId)) match {
-        case (Some(lo: String), Some(hi: String)) =>
-          graft.format.Deletes.withPosTargets(base, lo, hi)
-        case _ => base
-      }
-    }.toSeq ++ dvMsgs.flatten.toSeq
+    val dataFiles = dataMsgs.flatten.map(_.toDataFile(m, fmt)).toSeq
+    val deleteFiles = deleteMsgs.flatten
+      .map(_.toDataFile(m, FileFormats.Parquet, FileContent.PositionDeletes))
+      .toSeq ++ dvMsgs.flatten.toSeq
     if (dataFiles.nonEmpty || deleteFiles.nonEmpty)
       Commits.rowDelta(table, dataFiles, deleteFiles, base(), branch = branch)
   }
@@ -190,70 +170,32 @@ final class GraftDeltaWriterFactory(schema: StructType, idSchema: StructType,
       // inserts ride the SAME fanout writers batch INSERT uses
       private val inserts = new GraftFanoutWriter(schema, idSchema, fields,
         stagingDir, partitionId, taskId, hconf, statModes, format, props)
-      // every file this task stages besides the insert outputs — abort()
-      // must clean them too, or a failure after the delete/DV write leaks
-      // the staged file until an orphan sweep (and each retry leaks one)
-      private val stagedPaths = scala.collection.mutable.ArrayBuffer.empty[String]
       // DV mode: per-file roaring bitmaps, built as rows arrive (compact —
       // a 100M-position mask is tens of MB, never a tuple-per-row buffer)
       private val canonOf = scala.collection.mutable.HashMap[String, String]()
       private val byFile = scala.collection.mutable
         .HashMap[String, org.roaringbitmap.longlong.Roaring64NavigableMap]()
+      private var dvPath: String = null
       // parquet mode: deletes STREAM to one sorted file per task — the
       // write declares ordering by (_file, _pos), so rows arrive sorted
       // (reference PositionDeleteWriter requires sorted input) and no
-      // task-level (path, pos) buffer or commit-time sort is needed. An
-      // out-of-order row means the required ordering was not honored —
-      // fail the task loudly rather than write an unsorted delete file.
-      private var delWriter: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = null
-      private var delPath: String = null
-      private var delCanonMin: String = null
-      private var delCanonMax: String = null
-      private var lastFile: String = null
-      private var lastPos: Long = -1L
-      private val deleteSchema = StructType(Seq(
-        StructField("file_path", StringType, nullable = false),
-        StructField("pos", LongType, nullable = false)))
+      // task-level (path, pos) buffer or commit-time sort is needed
+      private val deletes = new PositionDeleteWriter(
+        s"$stagingDir/delete-$partitionId-$taskId-${java.util.UUID.randomUUID()}.parquet",
+        hconf, props)
 
       override def insert(row: InternalRow): Unit = inserts.write(row)
 
       override def reinsert(metadata: InternalRow, row: InternalRow): Unit =
         insert(row)
 
-      override def delete(metadata: InternalRow, id: InternalRow): Unit = {
-        val f = id.getUTF8String(0).toString
-        val p = id.getLong(1)
+      override def delete(metadata: InternalRow, id: InternalRow): Unit =
         if (dvMode) {
+          val f = id.getUTF8String(0).toString
           byFile.getOrElseUpdate(
             canonOf.getOrElseUpdate(f, ParquetIO.canonPath(f)),
-            new org.roaringbitmap.longlong.Roaring64NavigableMap()).addLong(p)
-        } else {
-          if (delWriter == null) {
-            val hp = new org.apache.hadoop.fs.Path(stagingDir)
-            hp.getFileSystem(hconf).mkdirs(hp)
-            delPath = s"$stagingDir/delete-$partitionId-$taskId-" +
-              s"${java.util.UUID.randomUUID()}.parquet"
-            stagedPaths += delPath
-            delWriter = ParquetIO.openWriter(delPath, deleteSchema, hconf)
-          }
-          if (lastFile != null &&
-              (f < lastFile || (f == lastFile && p < lastPos)))
-            throw new IllegalStateException(
-              s"position deletes arrived unsorted (($f, $p) after " +
-              s"($lastFile, $lastPos)) — required ordering not honored")
-          val r = new GenericInternalRow(2)
-          r.update(0, UTF8String.fromString(f))
-          r.update(1, p)
-          delWriter.write(r)
-          if (f != lastFile) {
-            val c = canonOf.getOrElseUpdate(f, ParquetIO.canonPath(f))
-            if (delCanonMin == null || c < delCanonMin) delCanonMin = c
-            if (delCanonMax == null || c > delCanonMax) delCanonMax = c
-          }
-          lastFile = f
-          lastPos = p
-        }
-      }
+            new org.roaringbitmap.longlong.Roaring64NavigableMap()).addLong(id.getLong(1))
+        } else deletes.write(id.getUTF8String(0), id.getLong(1))
 
       override def update(metadata: InternalRow, id: InternalRow,
           row: InternalRow): Unit = {
@@ -272,41 +214,24 @@ final class GraftDeltaWriterFactory(schema: StructType, idSchema: StructType,
           // v3: one puffin file per task, one bitmap blob per data file
           val hp = new org.apache.hadoop.fs.Path(stagingDir)
           hp.getFileSystem(hconf).mkdirs(hp)
-          val path = s"$stagingDir/dv-$partitionId-$taskId-" +
+          dvPath = s"$stagingDir/dv-$partitionId-$taskId-" +
             s"${java.util.UUID.randomUUID()}.puffin"
-          stagedPaths += path
-          val dvFiles = Dvs.writePuffin(path, byFile.toSeq, schemaId, specId,
+          val dvFiles = Dvs.writePuffin(dvPath, byFile.toSeq, schemaId, specId,
             hconf)
           return GraftDeltaWriterFactory.DeltaTaskFiles(dataFiles, Nil, dvFiles)
         }
-        val deleteFiles =
-          if (delWriter == null) Nil
-          else {
-            delWriter.close()
-            delWriter = null
-            // target metadata for per-task attachment at scan time
-            // (Deletes.posIndex): canonical min/max of the paths this file
-            // masks, carried to the manifest via the reserved path-bound id
-            val fm = Metrics.fromParquetFooter(delPath, idSchema, hconf)
-              .copy(valueCounts = Map.empty, nullValueCounts = Map.empty,
-                lowerBounds = Map(graft.format.Deletes.PathFieldId -> delCanonMin),
-                upperBounds = Map(graft.format.Deletes.PathFieldId -> delCanonMax),
-                fullBoundIds = Seq(graft.format.Deletes.PathFieldId))
-            Seq(GraftBatchWrite.StagedFile(delPath, Map.empty, fm))
-          }
-        GraftDeltaWriterFactory.DeltaTaskFiles(dataFiles, deleteFiles)
+        GraftDeltaWriterFactory.DeltaTaskFiles(dataFiles, deletes.finish().toSeq)
       }
 
+      // a failure after the delete or DV write must clean those files too,
+      // or the staged file leaks until an orphan sweep (and each retry
+      // leaks one)
       override def abort(): Unit = {
         inserts.abort()
-        if (delWriter != null) {
-          try delWriter.close() catch { case _: Exception => () }
-          delWriter = null
-        }
-        val fs = new org.apache.hadoop.fs.Path(stagingDir)
-          .getFileSystem(hconf)
-        stagedPaths.foreach { p =>
-          try fs.delete(new org.apache.hadoop.fs.Path(p), false)
+        deletes.abort()
+        if (dvPath != null) {
+          val hp = new org.apache.hadoop.fs.Path(dvPath)
+          try hp.getFileSystem(hconf).delete(hp, false)
           catch { case _: java.io.IOException => () }
         }
       }

@@ -56,7 +56,29 @@ object GraftBatchWrite {
     * (reference spark3/.../SparkBatchWrite.java:244-330: DataFile metrics
     * ride the commit message; the driver never re-opens data files). */
   final case class StagedFile(path: String, partition: Map[String, Any],
-      metrics: Metrics.FileMetrics)
+      metrics: Metrics.FileMetrics) {
+    /** This file's manifest entry, written under `m`'s current schema and
+      * default spec. A position-delete file whose path bounds are equal
+      * names its one target as `referenced_data_file`. */
+    def toDataFile(m: TableMetadata, format: String,
+        content: Int = FileContent.Data, equalityIds: Seq[Int] = Nil): DataFile = {
+      val fm = metrics
+      val target = (fm.lowerBounds.get(Deletes.PathFieldId),
+          fm.upperBounds.get(Deletes.PathFieldId)) match {
+        case (Some(lo: String), Some(hi)) if content == FileContent.PositionDeletes &&
+            lo == hi => Some(lo)
+        case _ => None
+      }
+      DataFile(path = path, content = content, partition = partition,
+        recordCount = fm.recordCount, fileSizeInBytes = fm.fileSize,
+        schemaId = m.currentSchemaId, specId = m.defaultSpecId,
+        valueCounts = fm.valueCounts, nullValueCounts = fm.nullValueCounts,
+        lowerBounds = fm.lowerBounds, upperBounds = fm.upperBounds,
+        equalityIds = equalityIds, splitOffsets = fm.splitOffsets,
+        fullBoundIds = fm.fullBoundIds, fileFormat = format,
+        referencedDataFile = target)
+    }
+  }
 
   final case class TaskFiles(files: Seq[StagedFile])
     extends WriterCommitMessage
@@ -116,16 +138,8 @@ final class GraftBatchWrite(table: GraftTable, mode: GraftBatchWrite.Mode,
     // metrics arrived in the commit messages: the driver commit is pure
     // metadata work — no data-file I/O, no matter how many files were written
     val fmt = writeFormat(m.properties)
-    val files = messages.collect { case TaskFiles(fs) => fs }.flatten.map { sf =>
-      val fm = sf.metrics
-      DataFile(path = sf.path, partition = sf.partition,
-        recordCount = fm.recordCount, fileSizeInBytes = fm.fileSize,
-        schemaId = m.currentSchemaId, specId = m.defaultSpecId,
-        valueCounts = fm.valueCounts, nullValueCounts = fm.nullValueCounts,
-        lowerBounds = fm.lowerBounds, upperBounds = fm.upperBounds,
-        splitOffsets = fm.splitOffsets, fullBoundIds = fm.fullBoundIds,
-        fileFormat = fmt)
-    }.toSeq
+    val files = messages.collect { case TaskFiles(fs) => fs }.flatten
+      .map(_.toDataFile(m, fmt)).toSeq
     mode match {
       // branch identifier (`t.branch_x`): appends advance the BRANCH head;
       // other modes were refused at the write builder
@@ -171,6 +185,16 @@ final class GraftWriterFactory(schema: StructType, idSchema: StructType,
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new GraftFanoutWriter(schema, idSchema, fields, stagingDir, partitionId, taskId,
       conf.value.value, statModes, format, props)
+
+  /** Write `rows`, already arranged, in one Spark job: one fanout writer
+    * per partition, its files' metrics computed in its task. Returns the
+    * staged files sorted by path. */
+  def writeRows(rows: org.apache.spark.sql.DataFrame): Seq[GraftBatchWrite.StagedFile] =
+    rows.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
+      val w = createWriter(pid, pid.toLong)
+      it.foreach(w.write)
+      Iterator.single(w.commit().asInstanceOf[GraftBatchWrite.TaskFiles])
+    }.collect().toSeq.flatMap(_.files).sortBy(_.path)
 }
 
 object GraftWriterFactory {

@@ -393,16 +393,8 @@ final class GraftStreamingWrite(table: GraftTable, truncateFirst: Boolean,
     val m = table.metadata
     // metrics were computed executor-side (GraftFanoutWriter.commit);
     // the epoch commit is metadata-only on the driver
-    val files = messages.collect { case TaskFiles(fs) => fs }.flatten.map { sf =>
-      val fm = sf.metrics
-      DataFile(path = sf.path, partition = sf.partition,
-        recordCount = fm.recordCount, fileSizeInBytes = fm.fileSize,
-        schemaId = m.currentSchemaId, specId = m.defaultSpecId,
-        valueCounts = fm.valueCounts, nullValueCounts = fm.nullValueCounts,
-        lowerBounds = fm.lowerBounds, upperBounds = fm.upperBounds,
-        fullBoundIds = fm.fullBoundIds,
-        fileFormat = fileFormat)
-    }.toSeq
+    val files = messages.collect { case TaskFiles(fs) => fs }.flatten
+      .map(_.toDataFile(m, fileFormat)).toSeq
     val summary = Map(Streaming.EpochKey -> epochId.toString,
       Streaming.QueryKey -> queryId)
     val upsert = m.properties.get("write.upsert.enabled").contains("true")

@@ -356,65 +356,9 @@ final class Actions(t: GraftTable) {
       .filter(live(col("file_path"))) // dangling targets drop here
     val newDeletes =
       if (dvMode) Dvs.stageFromPositions(t, positions, partitions = nOut)
-      else stagePositionsParquet(positions, nOut, "posdel")
+      else PositionDeleteWriter.stage(t, positions, nOut)
     Commits.rewriteFiles(t, distinctPaths.toSet, newDeletes)
     RewriteResult(distinctPaths.size, newDeletes.map(_.path).distinct.size)
-  }
-
-  /** Stage a (file_path, pos) DataFrame as sorted parquet position-delete
-    * files — shared by the v2 position-delete compaction and the
-    * equality→position conversion. */
-  private def stagePositionsParquet(positions: org.apache.spark.sql.DataFrame,
-      nOut: Int, prefix: String): Seq[DataFile] = {
-    import org.apache.spark.sql.functions.col
-    val m = t.metadata
-    val staging = t.locations.newDataLocation(java.util.UUID.randomUUID().toString)
-    val sconf = HadoopFileIO.broadcastConf(t.spark, ParquetIO.writeConf(t.spark))
-    val deleteSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("file_path",
-        org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("pos",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    // each task also tracks the canonical path range it wrote (memoized per
-    // raw path — input is sorted by file_path), so the committed manifest
-    // entries carry target metadata and later scans attach this delete file
-    // per task with zero I/O (Deletes.posIndex)
-    val staged: Seq[(String, Long, String, String)] = positions
-      .select(col("file_path"), col("pos"))
-      .repartitionByRange(nOut, col("file_path"), col("pos"))
-      .sortWithinPartitions(col("file_path"), col("pos"))
-      .queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-        if (it.isEmpty) Iterator.empty
-        else {
-          val path = s"$staging/$prefix-$pid-${java.util.UUID.randomUUID()}.parquet"
-          val w = ParquetIO.openWriter(path, deleteSchema, sconf.value.value)
-          var n = 0L
-          var lastRaw: String = null
-          var minCanon: String = null
-          var maxCanon: String = null
-          try it.foreach { row =>
-            val raw = row.getUTF8String(0).toString
-            if (raw != lastRaw) {
-              lastRaw = raw
-              val canon = ParquetIO.canonPath(raw)
-              if (minCanon == null || canon < minCanon) minCanon = canon
-              if (maxCanon == null || canon > maxCanon) maxCanon = canon
-            }
-            w.write(row); n += 1
-          }
-          finally w.close()
-          Iterator.single((path, n, minCanon, maxCanon))
-        }
-      }.collect().toSeq
-    staged.sortBy(_._1).map { case (path, n, minCanon, maxCanon) =>
-      val hp = new org.apache.hadoop.fs.Path(path)
-      val base = DataFile(path = path, content = FileContent.PositionDeletes,
-        recordCount = n,
-        fileSizeInBytes = hp.getFileSystem(sconf.value.value).getFileStatus(hp).getLen,
-        schemaId = m.currentSchemaId, specId = m.defaultSpecId)
-      if (minCanon == null) base
-      else Deletes.withPosTargets(base, minCanon, maxCanon)
-    }
   }
 
   /** Convert live equality-delete files into position deletes — the
@@ -547,8 +491,8 @@ final class Actions(t: GraftTable) {
     // parquet position-delete files
     val newDeletes =
       if (Dvs.enabled(m)) Dvs.stageFromPositions(t, positions)
-      else stagePositionsParquet(positions,
-        math.max(1, spark.sparkContext.defaultParallelism / 4), "eq2pos")
+      else PositionDeleteWriter.stage(t, positions,
+        math.max(1, spark.sparkContext.defaultParallelism / 4))
     Commits.rewriteFiles(t, eqFiles.map(_._1.path).toSet, newDeletes)
     RewriteResult(eqFiles.size, newDeletes.map(_.path).distinct.size)
   }

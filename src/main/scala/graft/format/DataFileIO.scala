@@ -5,13 +5,15 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.StructType
 
 /** Format-dispatching executor-side row I/O over data files: the one
-  * writer seam (`openWriter`: the DSv2 fanout writers, library writes and
-  * bin-pack compaction's per-bin outputs) and a row-wise reader
-  * (`readAll`, which can decrypt first). Table reads, compaction's
-  * included, go through the DSv2 scan instead; delete-key loading stays
-  * parquet-only since delete files are always parquet. Mirrors the
-  * reference's FileFormat dispatch in GenericReader/FileAppenderFactory
-  * (api/.../FileFormat.java).
+  * writer seam (`openWriter`: the DSv2 fanout writers, which also stage
+  * equality-delete files, library writes and bin-pack compaction's per-bin
+  * outputs) and a row-wise reader (`readAll`, which can decrypt first).
+  * Parquet position-delete files have their own writer,
+  * [[PositionDeleteWriter]], with the same codec choice
+  * ([[compressionOf]]). Table reads, compaction's included, go through
+  * the DSv2 scan instead; delete-key loading stays parquet-only since
+  * delete files are always parquet. Mirrors the reference's FileFormat
+  * dispatch in GenericReader/FileAppenderFactory (api/.../FileFormat.java).
   */
 object DataFileIO {
 
@@ -87,8 +89,9 @@ object DataFileIO {
   def compressionKey(format: String): String = s"write.$format.compression-codec"
 
   /** Resolve AND canonicalize the codec choice — one validation point for
-    * every writer this object opens, so a property value is accepted (and
-    * mapped) the same way for parquet, ORC and Avro data and delete files.
+    * every writer this object opens and for [[PositionDeleteWriter]], so a
+    * property value is accepted (and mapped) the same way for parquet, ORC
+    * and Avro data files and for delete files.
     * Canonical names are what each format's writer understands. */
   def compressionOf(format: String, props: Map[String, String]): String = {
     val raw = props.getOrElse(compressionKey(format), "snappy").toLowerCase

@@ -1,18 +1,25 @@
 package graft.format
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
 import java.util.UUID
-import scala.jdk.CollectionConverters._
 
-/** v2 row-level delete writers (reference core/.../deletes/
+/** v2 row-level deletes: staging, target matching and the library's
+  * delete entry points (reference core/.../deletes/
   * {PositionDeleteWriter,EqualityDeleteWriter}.java + RowDelta commit).
+  * Each delete kind has one writer, run in the task that stages the file,
+  * which also computes the file's manifest metrics there; the driver only
+  * commits.
   *
   * Position deletes: rows sorted by (file_path, pos) — the writer contract
   * the reference enforces (PositionDeleteWriter requires sorted input;
-  * SURVEY §2.6) — we get it with sortWithinPartitions.
-  * Equality deletes: a file of key tuples; rows in OLDER data files whose
+  * SURVEY §2.6) — written by [[PositionDeleteWriter]] for every producer:
+  * [[deletePositions]], merge-on-read DML (graft.connector.DeltaOps) and
+  * position-delete compaction and the equality→position conversion
+  * (Actions). Format-version 3 tables stage deletion vectors instead
+  * ([[Dvs]]).
+  * Equality deletes: a file of key tuples, written by the DSv2 fanout
+  * writer ([[stageEqualityDeletes]]); rows in OLDER data files whose
   * keys match are invisible (applied executor-side by the DSv2 scan's
   * delete filter readers, graft.connector.DeleteFilterReader).
   */
@@ -21,8 +28,8 @@ object Deletes {
   /** Reserved delete-file field ids (iceberg spec, "Position Delete Files":
     * 2147483546 = file_path, 2147483545 = pos; reference
     * core/src/main/java/org/apache/iceberg/MetadataColumns.java
-    * DELETE_FILE_PATH/DELETE_FILE_POS). Our parquet position-delete writers
-    * record the CANONICAL min/max target path under [[PathFieldId]] in the
+    * DELETE_FILE_PATH/DELETE_FILE_POS). The parquet position-delete writer
+    * records the CANONICAL min/max target path under [[PathFieldId]] in the
     * manifest bounds (and `referenced_data_file` when the file targets
     * exactly one data file), so scan planning can attach each delete file
     * to its data files with ZERO delete-file I/O — the analogue of the
@@ -144,37 +151,18 @@ object Deletes {
         case None => cachedTargets(f.path, conf).foreach(addExact(_, f.path))
       }
     }
-    // INVARIANT: this range check and ALL PathFieldId bound producers
-    // (annotatePosTargets, the distributed staging pass, DeltaOps'
-    // delete writer) use the same Java String order. min/max-of-a-set
+    // INVARIANT: this range check and the one PathFieldId bound producer
+    // (PositionDeleteWriter) use the same Java String order. min/max-of-a-set
     // plus a same-order range test is sound under ANY total order, but
-    // only while producers and this consumer agree — do not migrate one
-    // side to compareUtf8 without the others (manifest bounds written by
-    // older builds would then mis-range). User-predicate string pruning
-    // is a different domain and IS codepoint-ordered (Exprs.ordering).
+    // only while producer and consumer agree — do not migrate one side
+    // to compareUtf8 without the other (manifest bounds written by older
+    // builds would then mis-range). The writer's input-order check is a
+    // separate matter: it follows Spark's sort, which is by UTF-8 bytes.
+    // User-predicate string pruning is a different domain and IS
+    // codepoint-ordered (Exprs.ordering).
     p => (exact.getOrElse(p, Nil) ++
       ranged.collect { case (dp, lo, hi) if lo <= p && p <= hi => dp }).sorted
   }
-
-  /** Annotate a freshly-staged parquet position-delete file with its
-    * target metadata (one read of the just-written small file): canonical
-    * path bounds always, `referenced_data_file` when single-target. */
-  def annotatePosTargets(f: DataFile,
-      conf: org.apache.hadoop.conf.Configuration): DataFile = {
-    val targets = cachedTargets(f.path, conf)
-    if (targets.isEmpty) f else withPosTargets(f, targets.min, targets.max)
-  }
-
-  /** Record target metadata computed by the writer itself (no re-read). */
-  def withPosTargets(f: DataFile, minPath: String, maxPath: String): DataFile =
-    f.copy(
-      referencedDataFile =
-        if (minPath == maxPath) Some(minPath) else f.referencedDataFile,
-      lowerBounds = f.lowerBounds + (PathFieldId -> minPath),
-      upperBounds = f.upperBounds + (PathFieldId -> maxPath),
-      fullBoundIds =
-        if (f.fullBoundIds.contains(PathFieldId)) f.fullBoundIds
-        else f.fullBoundIds :+ PathFieldId)
 
   /** The live position-delete FILES of a table, deduplicated at entry
     * granularity (the same delete file — or the same DV blob — can be
@@ -246,77 +234,14 @@ object Deletes {
     else built.reduce(_ unionByName _)
   }
 
-  private def stage(table: GraftTable, df: DataFrame, sorted: Seq[String]): Seq[String] = {
-    val dir = table.locations.newDataLocation(s"deletes-${UUID.randomUUID()}")
-    val out = if (sorted.nonEmpty) df.sortWithinPartitions(sorted.map(col): _*) else df
-    out.write.mode(SaveMode.ErrorIfExists).parquet(dir)
-    table.ops.io.list(dir, ".parquet").map(_.path).sorted
-  }
-
   /** Delete specific row positions. `positions`: (file_path, pos) — use the
     * values of the `_file` / `_pos` metadata columns of a table scan
     * (`table.toDF().select("_file", "_pos")`). Commits a RowDelta; on format-version 3 tables the
     * positions land as puffin deletion vectors instead of parquet files. */
-  def deletePositions(table: GraftTable, positions: DataFrame): TableMetadata = {
-    if (Dvs.enabled(table.metadata))
-      return Commits.rowDelta(table, Nil, Dvs.stageFromPositions(table, positions))
-    val named = positions.toDF("file_path", "pos")
-      .withColumn("pos", col("pos").cast("long"))
-    // range-partitioned on (file_path, pos): staged files cover DISJOINT
-    // path ranges, so posIndex's bounds matching attaches each to only its
-    // own targets; AQE coalesces a small position set to one file
-    val paths = stage(table,
-      named.repartitionByRange(col("file_path"), col("pos")),
-      Seq("file_path", "pos"))
-    val m = table.metadata
-    def desc(p: String, records: Long, size: Long) =
-      DataFile(path = p, content = FileContent.PositionDeletes,
-        recordCount = records, fileSizeInBytes = size,
-        schemaId = m.currentSchemaId, specId = m.defaultSpecId)
-    val files =
-      if (paths.size <= 4) {
-        // tiny sets: local reads beat a job round-trip (Metrics.forFiles
-        // makes the same call)
-        val conf = table.spark.sessionState.newHadoopConf()
-        paths.map { p =>
-          val fm = Metrics.fromParquetFooter(p, table.schema)
-          annotatePosTargets(desc(p, fm.recordCount, fm.fileSize), conf)
-        }
-      } else {
-        // a large position set staged range-partitioned: the canonical
-        // min/max target pass (what annotatePosTargets reads per file)
-        // runs in EXECUTORS, one task per staged file — no sequential
-        // driver reads undoing the parallel staging
-        val sconf = HadoopFileIO.broadcastConf(table.spark,
-          table.spark.sessionState.newHadoopConf())
-        val pathOnly = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("file_path",
-            org.apache.spark.sql.types.StringType)))
-        table.spark.sparkContext
-          .parallelize(paths, math.min(paths.size, 64))
-          .map { p =>
-            var n = 0L; var lo: String = null; var hi: String = null
-            ParquetIO.readAll(p, pathOnly, sconf.value.value) { r =>
-              n += 1
-              if (!r.isNullAt(0)) {
-                val c = ParquetIO.canonPath(r.getUTF8String(0).toString)
-                if (lo == null || c < lo) lo = c
-                if (hi == null || c > hi) hi = c
-              }
-            }
-            val hp = new org.apache.hadoop.fs.Path(p)
-            val size = hp.getFileSystem(sconf.value.value).getFileStatus(hp).getLen
-            (p, n, size, Option(lo), Option(hi))
-          }.collect().toSeq.map { case (p, n, size, lo, hi) =>
-            val f = desc(p, n, size)
-            (lo, hi) match {
-              case (Some(a), Some(b)) => withPosTargets(f, a, b)
-              case _ => f
-            }
-          }
-      }
-    Commits.rowDelta(table, Nil, files)
-  }
+  def deletePositions(table: GraftTable, positions: DataFrame): TableMetadata =
+    Commits.rowDelta(table, Nil,
+      if (Dvs.enabled(table.metadata)) Dvs.stageFromPositions(table, positions)
+      else PositionDeleteWriter.stage(table, positions))
 
   /** File-side column name of each equality key of delete file `f`,
     * resolved against the schema `f` was STAGED under (`f.schemaId`) —
@@ -361,104 +286,55 @@ object Deletes {
   def stageEqualityDeletes(table: GraftTable, keys: DataFrame): Seq[DataFile] = {
     val m = table.metadata
     val spec = m.spec
-    val ids = keys.columns.map(FieldIds.nameToId(m.schema)).toSeq
-    val keyCols = keys.columns.toSet
+    val keyFields = keys.columns.toSeq
+    val ids = keyFields.map(FieldIds.nameToId(m.schema))
     val srcNames = spec.fields.filterNot(_.transform == Transforms.VoidT)
       .flatMap(pf => FieldIds.findById(m.schema, pf.sourceId).map(_.name))
     val partitionScoped = spec.isPartitioned && srcNames.nonEmpty &&
-      srcNames.forall(keyCols.contains)
-    // footer metrics ride into the manifest: key-column bounds let the
-    // scan skip attaching a key set to tasks whose files can't contain any
-    // key (Deletes.eqBoundsCanHit — upstream Iceberg's
-    // DeleteFileIndex#canContainEqDeletesForFile), and plan-time filters
-    // prune delete entries through the same inclusive-metrics evaluator
-    // as data files
-    // footer metrics as a distributed job when many files staged (one
-    // file per partition can mean hundreds per epoch — no per-file driver
-    // reads at scale, same as the data writers' collectFiles)
-    def stagedAll(paths: Seq[String],
-        tupleOf: String => Map[String, Any]): Seq[DataFile] = {
-      val metricsByPath = Metrics.forFiles(table.spark, paths, m.schema)
-      paths.map { p =>
-        val fm = metricsByPath(p)
-        DataFile(path = p, content = FileContent.EqualityDeletes,
-          partition = tupleOf(p),
-          recordCount = fm.recordCount, fileSizeInBytes = fm.fileSize,
-          schemaId = m.currentSchemaId, specId = m.defaultSpecId,
-          valueCounts = fm.valueCounts,
-          nullValueCounts = fm.nullValueCounts,
-          lowerBounds = fm.lowerBounds,
-          upperBounds = fm.upperBounds,
-          fullBoundIds = fm.fullBoundIds,
-          equalityIds = ids)
-      }
-    }
-    if (!partitionScoped) {
-      // range-partition the deduped keys on the key columns: each staged
-      // file holds a DISJOINT sorted key range, so a GDPR-scale key set
-      // writes in parallel instead of through one task, and per-file key
-      // bounds are tight and non-overlapping — eqBoundsCanHit then
-      // attaches each file only to the tasks its range can hit. The
-      // partition count is left unspecified so AQE coalesces a small key
-      // set back to a single file.
-      val paths = stage(table,
-        keys.dropDuplicates().repartitionByRange(keys.columns.map(col).toSeq: _*),
-        keys.columns.toSeq)
-      return stagedAll(paths, _ => Map.empty)
-    }
-    // one file per partition: repartition by the derived partition
-    // expressions (each output task holds whole partitions), then route
-    // each key row to its tuple through the DSv2 fanout writer — the same
-    // canonical Transform kernel the data writers and pruning evaluators
-    // use. (The previous layout parsed the tuple back out of hive-escaped
-    // `partitionBy` directory names: non-ASCII identity values crashed on
-    // ASCII-locale filesystems and non-string renderings were
-    // session-shaped — the same lossy round trip removed from GraftWrite.)
-    val dir = table.locations.newDataLocation(s"deletes-${UUID.randomUUID()}")
-    val derived = spec.derivedColumns(m.schema)
-    val keyFields = keys.columns.toSeq
+      srcNames.forall(keyFields.contains)
+    // one writer for both shapes: the DSv2 fanout writer routes each key
+    // row to its tuple with the canonical Transform kernel the data writers
+    // and pruning evaluators use, and computes each file's footer metrics
+    // in its task. Key-column bounds let the scan skip attaching a key set
+    // to tasks whose files can't contain any key (Deletes.eqBoundsCanHit —
+    // upstream Iceberg's DeleteFileIndex#canContainEqDeletesForFile), and
+    // plan-time filters prune delete entries through the same
+    // inclusive-metrics evaluator as data files.
     val nameToIdx = keyFields.zipWithIndex.toMap
-    val specFields = spec.fields.map { pf =>
-      val src = FieldIds.findById(m.schema, pf.sourceId).get
-      val ord = // void ignores its input; its source may not be a key col
-        // (the fanout writer short-circuits void fields to null without
-        // touching the row, so this placeholder ordinal/srcType is never
-        // used as a row accessor)
-        if (pf.transform == Transforms.VoidT) 0 else nameToIdx(src.name)
-      graft.connector.GraftBatchWrite.SpecField(pf.name, ord, pf.transform,
-        src.dataType)
-    }
+    val specFields =
+      if (!partitionScoped) Nil
+      else spec.fields.map { pf =>
+        val src = FieldIds.findById(m.schema, pf.sourceId).get
+        val ord = // void ignores its input; its source may not be a key col
+          // (the fanout writer short-circuits void fields to null without
+          // touching the row, so this placeholder ordinal/srcType is never
+          // used as a row accessor)
+          if (pf.transform == Transforms.VoidT) 0 else nameToIdx(src.name)
+        graft.connector.GraftBatchWrite.SpecField(pf.name, ord, pf.transform,
+          src.dataType)
+      }
     val idSchema = org.apache.spark.sql.types.StructType(
       keyFields.map(n => m.schema(m.schema.fieldIndex(n))))
     val cleanSchema = org.apache.spark.sql.types.StructType(idSchema.fields.map(
       _.copy(metadata = org.apache.spark.sql.types.Metadata.empty)))
     val factory = new graft.connector.GraftWriterFactory(cleanSchema,
-      idSchema, specFields, dir,
+      idSchema, specFields, table.locations.newDataLocation(s"deletes-${UUID.randomUUID()}"),
       HadoopFileIO.broadcastConf(table.spark, ParquetIO.writeConf(table.spark)),
-      statModes = Map.empty, // default modes, as Metrics.forFiles used
+      statModes = Map.empty, // default modes for key columns
       FileFormats.Parquet, m.properties)
-    val routed = keys.dropDuplicates()
-      .repartition(derived.map(_._2): _*)
-      .sortWithinPartitions(keyFields.map(col): _*)
-    val staged = routed.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
-      val w = factory.createWriter(pid, pid.toLong)
-      rows.foreach(w.write)
-      Iterator.single(w.commit()
-        .asInstanceOf[graft.connector.GraftBatchWrite.TaskFiles])
-    }.collect().toSeq.flatMap(_.files)
-    staged.sortBy(_.path).map { sf =>
-      val fm = sf.metrics
-      DataFile(path = sf.path, content = FileContent.EqualityDeletes,
-        partition = sf.partition,
-        recordCount = fm.recordCount, fileSizeInBytes = fm.fileSize,
-        schemaId = m.currentSchemaId, specId = m.defaultSpecId,
-        valueCounts = fm.valueCounts,
-        nullValueCounts = fm.nullValueCounts,
-        lowerBounds = fm.lowerBounds,
-        upperBounds = fm.upperBounds,
-        fullBoundIds = fm.fullBoundIds,
-        equalityIds = ids)
-    }
+    val deduped = keys.dropDuplicates()
+    val routed =
+      // partition-scoped: each task holds whole partitions, one file each
+      if (partitionScoped) deduped.repartition(spec.derivedColumns(m.schema).map(_._2): _*)
+      // global: each file holds a DISJOINT sorted key range, so a
+      // GDPR-scale key set writes in parallel instead of through one task,
+      // and per-file key bounds are tight and non-overlapping —
+      // eqBoundsCanHit then attaches each file only to the tasks its range
+      // can hit. The partition count is left unspecified so AQE coalesces
+      // a small key set back to a single file.
+      else deduped.repartitionByRange(keyFields.map(col): _*)
+    factory.writeRows(routed.sortWithinPartitions(keyFields.map(col): _*))
+      .map(_.toDataFile(m, FileFormats.Parquet, FileContent.EqualityDeletes, ids))
   }
 
   /** Key-RANGE check for an equality-delete file against a data file

@@ -165,7 +165,6 @@ object GraftWrite {
   private def writeViaFanout(table: GraftTable, sorted: DataFrame,
       staging: String, lineage: Boolean = false,
       fmt: String = FileFormats.Avro): Seq[DataFile] = {
-    import graft.connector.GraftBatchWrite
     val m = table.metadata
     // lineage rewrites carry two trailing long columns; spec-field
     // ordinals reference the leading table columns, so routing is unchanged
@@ -178,23 +177,8 @@ object GraftWrite {
       else Nil
     val factory =
       graft.connector.GraftWriterFactory.forTable(table.spark, m, staging, fmt, linTail)
-    val staged: Seq[GraftBatchWrite.StagedFile] =
-      sorted.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
-        val w = factory.createWriter(pid, pid.toLong)
-        rows.foreach(w.write)
-        Iterator.single(w.commit().asInstanceOf[GraftBatchWrite.TaskFiles])
-      }.collect().toSeq.flatMap(_.files)
-    staged.sortBy(_.path).map { sf =>
-      val fm = sf.metrics
-      DataFile(path = sf.path, partition = sf.partition,
-        recordCount = fm.recordCount, fileSizeInBytes = fm.fileSize,
-        schemaId = m.currentSchemaId, specId = m.defaultSpecId,
-        valueCounts = fm.valueCounts, nullValueCounts = fm.nullValueCounts,
-        lowerBounds = fm.lowerBounds, upperBounds = fm.upperBounds,
-        splitOffsets = fm.splitOffsets, fullBoundIds = fm.fullBoundIds,
-        fileFormat = fmt,
-        firstRowId = if (lineage) Some(Lineage.Materialized) else None)
-    }
+    factory.writeRows(sorted).map(_.toDataFile(m, fmt)
+      .copy(firstRowId = if (lineage) Some(Lineage.Materialized) else None))
   }
 
   /** df.write…append analog. */

@@ -108,9 +108,10 @@ object ParquetIO {
     }
 
   /** Executor-side parquet row writer on Spark's own WriteSupport — the
-    * write twin of [[open]]; `conf` should come from [[writeConf]]. */
+    * write twin of [[open]]; `conf` should come from [[writeConf]], `codec`
+    * from [[DataFileIO.compressionOf]]. */
   def openWriter(path: String, schema: StructType,
-      conf: Configuration, codec: String = "snappy"): ParquetWriter[InternalRow] = {
+      conf: Configuration, codec: String): ParquetWriter[InternalRow] = {
     val c = new Configuration(conf)
     ParquetWriteSupport.setSchema(schema, c)
     class B(p: HPath) extends ParquetWriter.Builder[InternalRow, B](p) {

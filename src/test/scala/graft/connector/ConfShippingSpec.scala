@@ -117,6 +117,20 @@ class ConfShippingSpec extends SparkSpec {
     assert(job.rdd.collect().map(_.recordCount).sum === live.size.toLong)
   }
 
+  test("position-delete staging's write closure ships no Hadoop conf by value") {
+    val wh = Files.createTempDirectory("graft-confposdel").toString
+    val (_, loc, live) = upsertTable(wh, "confposdel")
+    val t = GraftTable.load(spark, loc)
+    val positions = t.toDF().filter($"o_custkey" === 3L)
+      .select($"_file".as("file_path"), $"_pos".as("pos"))
+    val job = PositionDeleteWriter.stageJob(t, positions, ranges = 4)
+    // the RDD is what each task deserializes with its write function
+    info(s"position-delete staging job RDD: ${serializedSize(job)} B")
+    val confs = confsIn(job)
+    assert(confs === 0, s"position-delete staging carries $confs Hadoop conf(s) by value")
+    assert(job.collect().map(_.metrics.recordCount).sum === live.count(_ % 50 == 3).toLong)
+  }
+
   test("executor-side delete loading and writes see Hadoop keys set on the session only") {
     // a scheme only the session conf maps to a file system (session SQL
     // confs reach `newHadoopConf()` as they are): a task given the
