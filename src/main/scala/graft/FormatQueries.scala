@@ -1216,7 +1216,7 @@ object FormatQueries {
         GraftWrite.append(tt, li.filter(col("l_orderkey") % 2 === 0).coalesce(2))
         GraftWrite.append(tt, li.filter(col("l_orderkey") % 2 === 1).coalesce(2))
         val total = tt.newScan().planFiles().tasks.map(_.file.fileSizeInBytes).sum
-        Actions.forTable(tt).rewriteSorted(Seq(("l_shipdate", true)),
+        Actions.forTable(tt).rewriteSorted(SortOrders.parse("l_shipdate asc"),
           targetSizeBytes = total / 4 + 1)
         tt
       }

@@ -383,18 +383,14 @@ final class GraftProcedures(resolve: String => GraftTable,
           val declared = SortOrders.fromProperties(t.metadata.properties)
           require(declared.nonEmpty,
             "sort_by => 'declared' needs a write.sort-order table property")
-          Actions.forTable(t).rewriteSorted(
-            declared.map(f => (f.column, f.ascending)), in.getLong(1), scope)
+          Actions.forTable(t).rewriteSorted(declared, in.getLong(1), scope)
         case ZOrderSyntax(inner) =>
           Actions.forTable(t).rewriteZOrdered(
             inner.split(',').map(_.trim).filter(_.nonEmpty).toSeq,
             in.getLong(1), scope)
         case sortSpec =>
-          Actions.forTable(t).rewriteSorted(
-            sortSpec.split(',').map(_.trim).filter(_.nonEmpty).toSeq.map { part =>
-              val bits = part.split("\\s+")
-              (bits(0), !(bits.length > 1 && bits(1).equalsIgnoreCase("desc")))
-            }, in.getLong(1), scope)
+          Actions.forTable(t).rewriteSorted(SortOrders.parse(sortSpec),
+            in.getLong(1), scope)
       }
       Array(row(Int.box(r.rewrittenFiles), Int.box(r.addedFiles)))
   })

@@ -307,7 +307,8 @@ object GraftSparkTable {
   * over. `onPlan` hands the planned file set to the operation so its
   * commit can replace exactly what was read.
   *
-  * `pinnedPlan` is the plan a library read (TableScan.toDF) already made:
+  * `pinnedPlan` is the plan a library read (TableScan.toDF) or a stream's
+  * micro-batch (GraftMicroBatchStream) already made:
   * the builder reads exactly its files and never re-plans, so one library
   * read is one planFiles. Pushed filters still reach the file readers and
   * are still re-applied as residuals. `bins` (with a pinned plan only)
@@ -1000,16 +1001,16 @@ final class GraftScanBuilder private[connector] (spark: SparkSession,
   * no runtime filter. */
 final class GraftScan(output: StructType,
     groupScans: Seq[org.apache.spark.sql.execution.datasources.v2.FileScan],
-    plan: ScanPlan, spark: SparkSession = null, table: GraftTable = null,
-    options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty(),
-    deletes: Seq[Option[GroupDeletes]] = Nil,
-    runtimeFileFiltering: Boolean = false,
-    onRuntimeFilter: Set[String] => Unit = _ => (),
-    spjInfo: Option[SpjInfo] = None,
-    ndvStats: Option[Stats.TableStats] = None,
-    fills: Seq[Option[FillConfig]] = Nil,
-    lineages: Seq[Option[LineageConfig]] = Nil,
-    bins: Seq[Seq[String]] = Nil)
+    plan: ScanPlan, spark: SparkSession, table: GraftTable,
+    options: CaseInsensitiveStringMap,
+    deletes: Seq[Option[GroupDeletes]],
+    runtimeFileFiltering: Boolean,
+    onRuntimeFilter: Set[String] => Unit,
+    spjInfo: Option[SpjInfo],
+    ndvStats: Option[Stats.TableStats],
+    fills: Seq[Option[FillConfig]],
+    lineages: Seq[Option[LineageConfig]],
+    bins: Seq[Seq[String]])
   extends Scan
   with org.apache.spark.sql.connector.read.SupportsReportStatistics
   with org.apache.spark.sql.connector.read.SupportsReportPartitioning
@@ -1057,7 +1058,6 @@ final class GraftScan(output: StructType,
     // dropping partitions after reporting KeyGroupedPartitioning would
     // break the partitioning contract both join sides already agreed on
     else if (spjInfo.isDefined) Array.empty
-    else if (table == null) Array.empty
     else {
       val m = table.metadata
       val outNames = output.fieldNames.toSet
@@ -1094,7 +1094,7 @@ final class GraftScan(output: StructType,
       // + file-stats pruning as a static filter, and surviving files become
       // the keep-set planInputPartitions applies
       case p: Predicate if p.name() == "IN" && p.children().nonEmpty &&
-          table != null && !runtimeFileFiltering =>
+          !runtimeFileFiltering =>
         p.children()(0) match {
           case nr: NamedReference if nr.fieldNames().length == 1 =>
             try {
@@ -1162,7 +1162,6 @@ final class GraftScan(output: StructType,
       val out = new java.util.HashMap[
         org.apache.spark.sql.connector.expressions.NamedReference,
         org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
-      if (table == null) return out
       val nameToId = FieldIds.nameToId(table.metadata.schema)
       output.fieldNames.foreach { name =>
         // NDV lookup by field id — stable across metadata-only renames
@@ -1192,17 +1191,11 @@ final class GraftScan(output: StructType,
   // the batch — hoisting makes both consult the same lazily-planned state
   private lazy val inner = groupScans.map(_.toBatch)
   private lazy val innerFactories = inner.map(_.createReaderFactory())
-  private lazy val groupDeletes: Seq[Option[GroupDeletes]] =
-    if (deletes.isEmpty) groupScans.map(_ => None) else deletes
   /** The one Hadoop conf the scan's delete loaders share, broadcast only
     * when some group loads delete files (clean scans ship none). */
   private lazy val deleteConf =
-    Option.when(groupDeletes.exists(_.exists(_.loadsFiles)))(
+    Option.when(deletes.exists(_.exists(_.loadsFiles)))(
       HadoopFileIO.broadcastConf(spark, spark.sessionState.newHadoopConf()))
-  private lazy val groupFills: Seq[Option[FillConfig]] =
-    if (fills.isEmpty) groupScans.map(_ => None) else fills
-  private lazy val groupLineages: Seq[Option[LineageConfig]] =
-    if (lineages.isEmpty) groupScans.map(_ => None) else lineages
 
   /** Per-file lineage scope for COMPUTED groups: canonical path → (manifest
     * first_row_id base, data sequence number). Metadata-only. */
@@ -1253,7 +1246,7 @@ final class GraftScan(output: StructType,
   /** Key-RANGE scoping is worthwhile when any live eq-delete file carries
     * key-column stats (staged files always do; legacy entries don't). */
   private lazy val eqBoundsActive: Boolean =
-    table != null && eqFileOf.valuesIterator.exists(f =>
+    eqFileOf.valuesIterator.exists(f =>
       f.equalityIds.exists(id => f.lowerBounds.contains(id) ||
         f.nullValueCounts.get(id).contains(0L)))
   private lazy val eqScopable: Boolean = eqPartOf.nonEmpty || eqBoundsActive
@@ -1283,7 +1276,7 @@ final class GraftScan(output: StructType,
     * per-task re-canonicalization is URI parsing × tasks × delete files
     * (measured ~0.5 s per planning pass at 48 tasks × 5k deletes). */
   private lazy val eqIndexByGroup: Map[Int, Seq[EqSetIndex]] =
-    groupDeletes.zipWithIndex.collect {
+    deletes.zipWithIndex.collect {
       case (Some(cfg), g) if cfg.sets.nonEmpty && eqScopable =>
         g -> cfg.sets.map { ks =>
           val canonOf = ks.paths.map(dp => dp -> ParquetIO.canonPath(dp)).toMap
@@ -1419,7 +1412,7 @@ final class GraftScan(output: StructType,
             }
           (globalNarrowed ++ scopedNarrowed).distinct.sorted
         }
-        val sizes = groupDeletes(group).get.sets.map(_.paths.length)
+        val sizes = deletes(group).get.sets.map(_.paths.length)
         eqNarrowTasks.incrementAndGet()
         eqNarrowBefore.addAndGet(sizes.sum.toLong)
         eqNarrowAfter.addAndGet(narrowed.map(_.length).sum.toLong)
@@ -1436,11 +1429,11 @@ final class GraftScan(output: StructType,
     * equality scope of its data files. */
   private def subsOf(g: Int, index: Int,
       files: Seq[PartitionedFile]): Seq[GroupedPartition] = {
-    val posGroup = groupDeletes(g).exists(_.pos.isDefined)
-    val lineageGroup = groupLineages(g).exists(_.kind == 1)
+    val posGroup = deletes(g).exists(_.pos.isDefined)
+    val lineageGroup = lineages(g).exists(_.kind == 1)
     // partition-scoped equality deletes narrow each task's key-set sources
     // to its own partition's delete files
-    val eqActive = eqScopable && groupDeletes(g).exists(_.sets.nonEmpty)
+    val eqActive = eqScopable && deletes(g).exists(_.sets.nonEmpty)
     def canon(f: PartitionedFile) = ParquetIO.canonPath(f.filePath.toPath.toString)
     if (posGroup || lineageGroup) files.map { f =>
       val c = canon(f)
@@ -1533,7 +1526,7 @@ final class GraftScan(output: StructType,
     // types (ColumnarDeletes.supports). Any holdout drops the scan to rows.
     private lazy val columnar: Boolean = inner.indices.forall { i =>
       partsByGroup(i).forall(p => innerFactories(i).supportColumnarReads(p)) &&
-        groupDeletes(i).forall(ColumnarDeletes.supports) &&
+        deletes(i).forall(ColumnarDeletes.supports) &&
         // lineage stays columnar (LineageColumnarReader): computed ids are
         // one vectorized base+rowIdx add per batch, stored/absent lineage
         // are pass-through/constant vectors — CDC consumers scanning
@@ -1541,7 +1534,7 @@ final class GraftScan(output: StructType,
         // groups drop to rows via their factory's own answer.
         // Nested default fills rewrite struct values per row — no columnar
         // constant-vector shortcut exists inside a non-constant struct
-        groupFills(i).forall(_.nested.isEmpty)
+        fills(i).forall(_.nested.isEmpty)
     }
 
     override def planInputPartitions(): Array[InputPartition] = {
@@ -1574,8 +1567,8 @@ final class GraftScan(output: StructType,
         }.toArray
       }
     override def createReaderFactory(): PartitionReaderFactory =
-      GroupedReaderFactory(innerFactories, groupDeletes, columnar, groupFills,
-        groupLineages, deleteConf)
+      GroupedReaderFactory(innerFactories, deletes, columnar, fills,
+        lineages, deleteConf)
   }
 }
 
@@ -1825,11 +1818,11 @@ final case class SpjInfo(fields: Seq[SpjField],
 final case class GroupedReaderFactory(
     inner: Seq[org.apache.spark.sql.connector.read.PartitionReaderFactory],
     deletes: Seq[Option[GroupDeletes]],
-    columnar: Boolean = false,
-    fills: Seq[Option[FillConfig]] = Nil,
-    lineages: Seq[Option[LineageConfig]] = Nil,
+    columnar: Boolean,
+    fills: Seq[Option[FillConfig]],
+    lineages: Seq[Option[LineageConfig]],
     conf: Option[org.apache.spark.broadcast.Broadcast[
-      org.apache.spark.util.SerializableConfiguration]] = None)
+      org.apache.spark.util.SerializableConfiguration]])
   extends org.apache.spark.sql.connector.read.PartitionReaderFactory {
   import org.apache.spark.sql.catalyst.InternalRow
   import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
@@ -1840,12 +1833,6 @@ final case class GroupedReaderFactory(
       "a delete group loads files but the scan broadcast no Hadoop conf")
   }
 
-  private def unwrap(p: InputPartition)
-      : (Int, InputPartition, Option[String], Option[PosScope],
-        Option[LineageScope], Option[Seq[Seq[String]]]) = p match {
-    case GroupedPartition(g, ip, f, sc, ls, eq) => (g, ip, f, sc, ls, eq)
-    case other => (0, other, None, None, None, None)
-  }
   /** Narrow the group's delete config to THIS task's position-delete and
     * equality-delete scopes (per-task attachment): the reader then loads
     * only the delete files / DV slices / key sets that can reference its
@@ -1874,24 +1861,24 @@ final case class GroupedReaderFactory(
       new ConcatReader[InternalRow](kp.subs.map(s => () => createReader(s)))
     case mp: MultiFilePartition =>
       new ConcatReader[InternalRow](mp.subs.map(s => () => createReader(s)))
-    case _ => createSingleReader(p)
+    case gp: GroupedPartition => createSingleReader(gp)
   }
-  private def createSingleReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val (g, ip, dataFile, sc, ls, eq) = unwrap(p)
+  private def createSingleReader(p: GroupedPartition): PartitionReader[InternalRow] = {
+    val GroupedPartition(g, ip, dataFile, sc, ls, eq) = p
     val base = inner(g).createReader(ip)
     // default backfill sits UNDER the delete filter, so eq-delete keys on
     // a defaulted column match against the filled value
-    val reader = fills.lift(g).flatten match {
+    val reader = fills(g) match {
       case Some(cfg) => new ConstantFillRowReader(base, cfg)
       case None => base
     }
-    val afterDeletes = deletes.lift(g).flatten match {
+    val afterDeletes = deletes(g) match {
       case Some(cfg) =>
         new DeleteFilterReader(reader, scoped(cfg, sc, eq), dataFile, hadoopConf)
       case None => reader
     }
     // lineage projection is the OUTERMOST wrapper: only live rows get ids
-    lineages.lift(g).flatten match {
+    lineages(g) match {
       case Some(cfg) => new LineageRowReader(afterDeletes, cfg, ls)
       case None => afterDeletes
     }
@@ -1903,23 +1890,23 @@ final case class GroupedReaderFactory(
     case mp: MultiFilePartition =>
       new ConcatReader[org.apache.spark.sql.vectorized.ColumnarBatch](
         mp.subs.map(s => () => createColumnarReader(s)))
-    case _ => createSingleColumnarReader(p)
+    case gp: GroupedPartition => createSingleColumnarReader(gp)
   }
-  private def createSingleColumnarReader(p: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val (g, ip, dataFile, sc, ls, eq) = unwrap(p)
+  private def createSingleColumnarReader(p: GroupedPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
+    val GroupedPartition(g, ip, dataFile, sc, ls, eq) = p
     val base = inner(g).createColumnarReader(ip)
-    val reader = fills.lift(g).flatten match {
+    val reader = fills(g) match {
       case Some(cfg) => new ConstantFillColumnarReader(base, cfg)
       case None => base
     }
-    val afterDeletes = deletes.lift(g).flatten match {
+    val afterDeletes = deletes(g) match {
       case Some(cfg) =>
         new ColumnarDeleteFilterReader(reader, scoped(cfg, sc, eq), dataFile,
           hadoopConf)
       case None => reader
     }
     // lineage projection is the OUTERMOST wrapper: only live rows get ids
-    lineages.lift(g).flatten match {
+    lineages(g) match {
       case Some(cfg) => new LineageColumnarReader(afterDeletes, cfg, ls)
       case None => afterDeletes
     }

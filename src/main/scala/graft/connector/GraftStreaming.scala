@@ -3,7 +3,7 @@ package graft.connector
 import graft.format._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
@@ -24,8 +24,10 @@ final case class FileSliceOffset(snapshotId: Long, fileIdx: Int) extends Offset 
   * (start, end] at FILE granularity — `spark.readStream.table("g.db.t")`.
   * With `max-bytes-per-trigger` set, admission control slices oversized
   * backlogs (including WITHIN one snapshot) into size-budgeted batches.
-  * Each (format, generation) group is the same FileScan batch reads
-  * build ([[GroupScan]]), so splits and packing are Spark's own.
+  * Every batch is one [[GraftScan]] over a pinned plan, read in the
+  * stream's query-start schema — the reference's MicroBatches model
+  * (core/.../MicroBatches.java:41-123): a batch only slices added files
+  * into ordinary scan tasks, and the batch readers read them.
   * With `branch` set the stream follows the BRANCH ref's commit line
   * (appends to the branch surface as batches; main commits never do) —
   * the `t.branch_x` identifier spelling routes here too. */
@@ -54,10 +56,8 @@ final class GraftMicroBatchStream(spark: SparkSession, table: GraftTable,
   }
 
   // ---- initial load (offset 0): the full state of ONE pinned snapshot,
-  // planned by the BATCH scan machinery so position/equality deletes, DVs,
-  // default fills, and lineage apply exactly as in batch reads — the raw
-  // per-format append scans below would resurrect deleted rows (and every
-  // superseded upsert version) in the first batch of a MoR table ----
+  // deletes applied — raw appended files would resurrect deleted rows (and
+  // every superseded upsert version) in the first batch of a MoR table ----
   @volatile private var pinnedInitial: Long = 0L
   /** The stream's own initial-load snapshot: pinned at first resolution
     * (re-resolved only while the table is still empty). */
@@ -65,41 +65,6 @@ final class GraftMicroBatchStream(spark: SparkSession, table: GraftTable,
     if (pinnedInitial == 0L)
       pinnedInitial = head().map(_.snapshotId).getOrElse(0L)
     pinnedInitial
-  }
-  // keyed by snapshot id: a checkpoint replay of the initial batch carries
-  // the ORIGINAL end offset in the WAL, which may differ from this run's
-  // pin — the scan must be built for exactly the offset's snapshot
-  private val initialScanMemo =
-    new java.util.concurrent.atomic.AtomicReference[(Long, GraftScan)](null)
-  private def initialScanFor(snap: Long): GraftScan = {
-    val cached = initialScanMemo.get()
-    if (cached != null && cached._1 == snap) cached._2
-    else {
-      // withCurrentSchema: the STREAM declares the table's current schema,
-      // so the initial load must produce rows in that shape even when the
-      // pinned snapshot predates a schema change — a snapshot-schema scan
-      // here emitted narrower rows that Spark reinterpreted positionally
-      // (observed: a pre-ALTER row streamed with the new column holding
-      // bytes of a neighboring string instead of null)
-      val gs = new GraftScanBuilder(spark, table,
-        table.newScan().useSnapshot(snap).withCurrentSchema, options).build() match {
-        case g: GraftScan => g
-        case other => throw new IllegalStateException(
-          s"unexpected initial-load scan ${other.getClass.getName}")
-      }
-      initialScanMemo.set((snap, gs))
-      gs
-    }
-  }
-  /** Re-home a batch-scan partition into the streaming factory's group
-    * space (initial-load groups sit after the per-format append groups). */
-  private def shiftGroup(p: InputPartition, by: Int): InputPartition = p match {
-    case gp: GroupedPartition => gp.copy(group = gp.group + by)
-    case kp: KeyedPartition => kp.copy(group = kp.group + by,
-      subs = kp.subs.map(s => s.copy(group = s.group + by)))
-    case mp: MultiFilePartition =>
-      mp.copy(subs = mp.subs.map(s => s.copy(group = s.group + by)))
-    case other => GroupedPartition(by, other)
   }
 
   // one backlog plan per (offset, table head) — latestOffset and
@@ -136,107 +101,42 @@ final class GraftMicroBatchStream(spark: SparkSession, table: GraftTable,
       case _ => raw
     }
 
-  // ---- schema generations ----
   // The stream's ROW LAYOUT is frozen at query start: Spark fixes a
-  // stream's output schema per run, so every batch must emit rows with
-  // `declared`'s width/order/leaf types even when the table's current
-  // schema changes mid-stream. Building read schemas from LIVE metadata
-  // desynchronized a batch's partitions from its reader factory when an
-  // ALTER landed between the two (positional-misread class).
+  // stream's output schema per run, so every batch reads in `declared`
+  // even when the table's schema changes mid-stream. Files of any
+  // generation, mid-stream ones included, resolve against it by field id
+  // as in batch reads (renames stream their data, columns added after the
+  // query started are absent, pre-add files take the column's default).
   private val declared: StructType = table.metadata.schema
-  private val declaredGenId: Int = table.metadata.currentSchemaId
 
-  /** Monotonic registry of schema generations: seeded at query start and
-    * GROWN when a planned batch carries a file from a generation created
-    * mid-stream (ALTER while running) — pre-fix such files fell back to a
-    * query-start-name read that silently nulled renamed columns until the
-    * next restart. Read schemas are frozen per generation against
-    * `declared` at registration; the id list only APPENDS, so group
-    * indexes (gi * formats + fi) never shift across batches. */
-  private object generations {
-    private var ids = Vector.empty[Int]
-    private var reads = Map.empty[Int, StructType]
-    register(table.metadata)
-    private def register(m: TableMetadata): Unit = {
-      val fresh = m.schemas.keys.toSeq.filterNot(ids.contains).sorted
-      ids ++= fresh
-      reads ++= fresh.map(id => id -> readFor(m, id))
-    }
-    /** Refresh from live metadata iff some schemaId is unknown. */
-    def ensure(schemaIds: Iterable[Int]): Unit = synchronized {
-      if (schemaIds.exists(id => !ids.contains(id))) register(table.metadata)
-    }
-    def snapshot(): Vector[Int] = synchronized(ids)
-    def readOf(id: Int): StructType = synchronized(reads(id))
-  }
+  /** The one scan of the last planned batch, keyed by its (start, end).
+    * Spark plans a batch's partitions before it creates the batch's reader
+    * factory, so the factory is that scan's own. A checkpoint replay of
+    * the initial batch carries the ORIGINAL end offset, so the scan is
+    * built for exactly the offset's snapshot. */
+  @volatile private var planned: ((FileSliceOffset, FileSliceOffset), GraftScan) = null
 
-  /** `declared`'s columns spelled with generation `schemaId`'s FILE names
-    * at EVERY nesting level (field-id resolution via
-    * FieldIds.fileSideType; width/order/leaf types stay `declared`'s so
-    * every generation emits the same row layout — renamed columns, nested
-    * ones included, stream their data; columns added BEFORE the query
-    * started null-fill by name miss; promoted leaves read widened; columns
-    * added mid-stream are simply absent from the read, because the
-    * stream's declared schema cannot grow within a run). */
-  private def readFor(m: TableMetadata, schemaId: Int): StructType = {
-    val fileSchema = m.schemas.getOrElse(schemaId, declared)
-    val fileById = fileSchema.fields
-      .filter(_.metadata.contains(FieldIds.Key))
-      .map(f => FieldIds.idOf(f) -> f).toMap
-    StructType(declared.fields.map { f =>
-      val fileField =
-        if (f.metadata.contains(FieldIds.Key)) fileById.get(FieldIds.idOf(f))
-        else None
-      fileField match {
-        case Some(ff) => StructField(ff.name,
-          Types.fileSideType(f.dataType, ff.dataType), f.nullable)
-        case None => StructField(
-          // absentReadName: a dropped same-named predecessor column may
-          // still exist in this generation's files — never rebind by name
-          if (f.metadata.contains(FieldIds.Key))
-            Types.absentReadName(f, fileSchema)
-          else f.name,
-          Types.cleanType(f.dataType), f.nullable)
+  private def scanOf(base: TableScan, pinned: Option[ScanPlan]): GraftScan =
+    new GraftScanBuilder(spark, table, base.withSchema(declared),
+      options, groupGranular = false, onPlan = _ => (), onRuntimeFilter = _ => (),
+      pinnedPlan = pinned, bins = Nil).build().asInstanceOf[GraftScan]
+
+  private def batchScan(from: FileSliceOffset, to: FileSliceOffset): GraftScan = {
+    val memo = planned
+    if (memo != null && memo._1 == (from, to)) return memo._2
+    val scan =
+      if (from != to && from.snapshotId == 0L)
+        scanOf(table.newScan().useSnapshot(to.snapshotId), None)
+      else {
+        val tasks = if (from == to) Nil else pendingFor(from.toStream)
+          .takeWhile { case (snap, i, _) =>
+            snap < to.snapshotId || (snap == to.snapshotId && i < to.fileIdx)
+          }
+          .map(_._3)
+        scanOf(table.newScan(), Some(ScanPlan(tasks, Nil, 0, 0, 0L, tasks.size)))
       }
-    })
-  }
-
-  // the generation list the most recent planInputPartitions committed to:
-  // the batch's reader factory must agree with the batch's partitions on
-  // group indexing even if the registry grows again in between — Spark
-  // plans a batch's partitions before creating its factory
-  // (DataSourceRDD construction order), so snapshotting here is enough
-  @volatile private var plannedGens: Vector[Int] = generations.snapshot()
-
-  // per-(format, generation) scan groups: each batch's factory is built
-  // without a file list, so the partition group index must be derivable
-  // from (generation, format) alone and stable as the registry grows
-  private def scanFor(fmt: String, read: StructType, files: Seq[DataFile])
-      : org.apache.spark.sql.execution.datasources.v2.FileScan =
-    GroupScan(spark, fmt, new GraftFileIndex(spark, files), read, read,
-      StructType(Nil), Array.empty, options)
-
-  private def groupedPartitions(files: Seq[DataFile]): Array[InputPartition] = {
-    // adopt generations created mid-stream BEFORE indexing the batch
-    generations.ensure(files.map(_.schemaId).distinct)
-    val gens = generations.snapshot()
-    plannedGens = gens
-    val nf = FileFormats.All.size
-    def giOf(schemaId: Int): Int = {
-      val i = gens.indexOf(schemaId)
-      // unknown even after a refresh (impossible for a committed file):
-      // read with the query-start generation rather than fail the batch
-      if (i >= 0) i else math.max(gens.indexOf(declaredGenId), 0)
-    }
-    FileFormats.All.zipWithIndex.flatMap { case (fmt, fi) =>
-      files.filter(_.fileFormat == fmt).groupBy(f => giOf(f.schemaId))
-        .toSeq.sortBy(_._1).flatMap { case (gi, fs) =>
-          val g = gi * nf + fi
-          scanFor(fmt, generations.readOf(gens(gi)), fs)
-            .toBatch.planInputPartitions().toSeq
-            .map(p => GroupedPartition(g, p): InputPartition)
-        }
-    }.toArray
+    planned = ((from, to), scan)
+    scan
   }
 
   /** CANONICAL all-available end: (current snapshot, its added-file count).
@@ -302,60 +202,63 @@ final class GraftMicroBatchStream(spark: SparkSession, table: GraftTable,
     } else FileSliceOffset(t.toLong, Int.MaxValue) // legacy snapshot offset
   }
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val from = start.asInstanceOf[FileSliceOffset]
-    val to = end.asInstanceOf[FileSliceOffset]
-    if (from == to) return Array.empty
-    if (from.snapshotId == 0L)
-      // full state of the offset's snapshot through the BATCH planner —
-      // delete-scoped partitions, shifted past the append format groups
-      // (the factory computes the same shift from the same plannedGens)
-      initialScanFor(to.snapshotId).toBatch.planInputPartitions()
-        .map(shiftGroup(_, FileFormats.All.size * plannedGens.size))
-    else {
-      val files = pendingFor(from.toStream)
-        .takeWhile { case (snap, i, _) =>
-          snap < to.snapshotId || (snap == to.snapshotId && i < to.fileIdx)
-        }
-        .map(_._3.file)
-      if (files.isEmpty) Array.empty
-      else groupedPartitions(files)
-    }
-  }
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+    batchScan(start.asInstanceOf[FileSliceOffset], end.asInstanceOf[FileSliceOffset])
+      .toBatch.planInputPartitions()
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    // factory depends only on schema/conf, not the batch's file list; one
-    // inner factory per format in the same fixed order as the partitions.
-    // Micro-batch reads stay on the row path (columnar=false): the factory
-    // cannot know a batch's formats up front, and Spark requires every
-    // partition of a batch to agree — incremental slices are small, the
-    // batch path keeps full vectorization
-    // indexed gi * formats + fi, matching groupedPartitions — built from
-    // the SAME plannedGens snapshot the batch's partitions were planned
-    // against, with each generation's read schema frozen at registration
-    val incr = plannedGens.flatMap(gid => FileFormats.All.map(fmt =>
-      scanFor(fmt, generations.readOf(gid), Nil).toBatch.createReaderFactory()))
-    val nones = incr.map(_ => None)
-    initialScanMemo.get() match {
-      // the initial-load batch reads through the BATCH scan's own factory
-      // (delete filters, fills, lineage), its groups shifted past the
-      // append format groups — planInputPartitions always runs before the
-      // batch's factory is created, so the memo is set whenever an
-      // initial-load partition can reach this factory
-      case (_, gs) => gs.toBatch.createReaderFactory() match {
-        case GroupedReaderFactory(inner, dels, _, fills, lineages, conf) =>
-          GroupedReaderFactory(incr ++ inner, nones ++ dels,
-            columnar = false, nones ++ fills, nones ++ lineages, conf)
-        case other => throw new IllegalStateException(
-          s"unexpected batch reader factory ${other.getClass.getName}")
-      }
-      case null =>
-        GroupedReaderFactory(incr, nones, columnar = false)
-    }
+    val memo = planned
+    if (memo == null)
+      throw new IllegalStateException("no micro-batch was planned before its reader factory")
+    val scan = memo._2
+    // Spark reads a batch's rows positionally in the declared order, while
+    // a scan serving a column as a partition constant (an imported hive
+    // layout's identity source) emits it after the data columns
+    val out = scan.readSchema()
+    val order = declared.fieldNames.map(out.fieldIndex)
+    val factory = scan.toBatch.createReaderFactory()
+    if (order.sameElements(order.indices)) factory
+    else ReorderedReaderFactory(factory, order, order.map(out(_).dataType))
   }
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
+}
+
+/** A reader factory whose rows and batches carry `inner`'s columns in
+  * another order: output column i is `inner`'s column `order(i)`, of type
+  * `types(i)`. */
+final case class ReorderedReaderFactory(inner: PartitionReaderFactory,
+    order: Array[Int], types: Array[DataType]) extends PartitionReaderFactory {
+  import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+  import org.apache.spark.sql.connector.read.PartitionReader
+  import org.apache.spark.sql.vectorized.ColumnarBatch
+
+  override def supportColumnarReads(p: InputPartition): Boolean =
+    inner.supportColumnarReads(p)
+
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+    val r = inner.createReader(p)
+    val project = UnsafeProjection.create(order.indices.map(i =>
+      BoundReference(order(i), types(i), nullable = true)).toSeq)
+    new PartitionReader[InternalRow] {
+      override def next(): Boolean = r.next()
+      override def get(): InternalRow = project(r.get())
+      override def close(): Unit = r.close()
+    }
+  }
+
+  override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] = {
+    val r = inner.createColumnarReader(p)
+    new PartitionReader[ColumnarBatch] {
+      override def next(): Boolean = r.next()
+      override def get(): ColumnarBatch = {
+        val b = r.get()
+        new ColumnarBatch(order.map(b.column), b.numRows)
+      }
+      override def close(): Unit = r.close()
+    }
+  }
 }
 
 /** DSv2 streaming sink with epoch-idempotent commits — `writeStream

@@ -260,14 +260,13 @@ final class Actions(t: GraftTable) {
     * (partition transforms, then sortBy), so each output task writes to one
     * partition directory run. Goes beyond the reference fork, which has no
     * sort-order surface at all. */
-  def rewriteSorted(sortBy: Seq[(String, Boolean)],
+  def rewriteSorted(sortBy: Seq[SortOrders.Field],
       targetSizeBytes: Long = 128L * 1024 * 1024,
       filter: Expr = AlwaysTrue): RewriteResult = {
     require(sortBy.nonEmpty, "rewriteSorted needs at least one sort column")
-    sortBy.foreach { case (name, _) => require(
-      t.metadata.schema.fieldNames.contains(name), s"no such column: $name") }
-    rewriteClustered(_ => sortBy.map { case (name, asc) =>
-      if (asc) col(name).asc else col(name).desc }, targetSizeBytes, filter)
+    sortBy.foreach(f => require(
+      t.metadata.schema.fieldNames.contains(f.column), s"no such column: ${f.column}"))
+    rewriteClustered(_ => sortBy.map(_.sortColumn), targetSizeBytes, filter)
   }
 
   /** Z-order twin of [[rewriteSorted]]: cluster on the Morton interleave of
@@ -370,11 +369,7 @@ final class Actions(t: GraftTable) {
     * group: data rows that an eq file suppresses (same keys, data
     * sequence < delete sequence, null-safe like the scan's own key probe)
     * are located by (file, row-position) and written as sorted position
-    * deletes; the commit swaps delete files only, data untouched.
-    *
-    * Conservative no-op when any targetable data file is non-parquet
-    * (row positions there read row-path; converting only part of an eq
-    * file's targets would resurrect the rest). */
+    * deletes; the commit swaps delete files only, data untouched. */
   def rewriteEqualityDeletes(): RewriteResult = {
     import org.apache.spark.sql.functions.{col, lit, max, udf}
     val plan = t.newScan().planFiles()
@@ -390,8 +385,6 @@ final class Actions(t: GraftTable) {
       Commits.rewriteFiles(t, eqFiles.map(_._1.path).toSet, Nil)
       return RewriteResult(eqFiles.size, 0)
     }
-    if (candidates.exists(_.file.fileFormat != FileFormats.Parquet))
-      return RewriteResult(0, 0)
     val spark = t.spark
     val m = t.metadata
     val schema = m.schema
@@ -416,30 +409,17 @@ final class Actions(t: GraftTable) {
           .withColumn("_eq_seq", lit(seq))
       }.reduce(_ unionByName _)
         .groupBy(names.map(col): _*).agg(max(col("_eq_seq")).as("_eq_seq"))
-      // candidates grouped by writer schema so renamed key columns
-      // resolve by field id; promoted leaves cast up to the table type
-      scoped.groupBy(_.file.schemaId).toSeq.sortBy(_._1).map {
-        case (schemaId, tasks) =>
-          val fileSchema = m.schemas.getOrElse(schemaId, schema)
-          val pairs = ids.map { id =>
-            val tf = FieldIds.findById(schema, id).get
-            val ff = FieldIds.findById(fileSchema, id).getOrElse(tf)
-            (ff.name, tf.name, Types.cleanType(tf.dataType))
-          }
-          val data = spark.read
-            .schema(Types.cleanType(fileSchema)
-              .asInstanceOf[org.apache.spark.sql.types.StructType])
-            .parquet(tasks.map(_.file.path): _*)
-            .select(pairs.map { case (fn, tn, dt) =>
-              col(fn).cast(dt).as(tn) } :+
-              col("_metadata.file_path").as("_g_file") :+
-              col("_metadata.row_index").as("_g_pos"): _*)
-          val cond = names.map(n => data(n) <=> del(n)).reduce(_ && _)
-          data.join(del, cond, "inner")
-            .filter(dataSeq(col("_g_file")) < col("_eq_seq"))
-            .select(canon(col("_g_file")).as("file_path"),
-              col("_g_pos").as("pos"))
-      }.reduce(_ unionByName _)
+      // the candidates' raw rows (no deletes applied) through the table
+      // scan: keys resolve by field id across schema generations, in
+      // every file format, with their positions
+      val data = t.newScan().read(ScanPlan(scoped, Nil, 0, 0, 0L, scoped.size))
+        .select(names.map(col) ++ Seq(
+          col(graft.connector.GraftSparkTable.FileColumn).as("_g_file"),
+          col(graft.connector.GraftSparkTable.PosColumn).as("_g_pos")): _*)
+      val cond = names.map(n => data(n) <=> del(n)).reduce(_ && _)
+      data.join(del, cond, "inner")
+        .filter(dataSeq(col("_g_file")) < col("_eq_seq"))
+        .select(canon(col("_g_file")).as("file_path"), col("_g_pos").as("pos"))
     }
 
     val suppressed: Seq[org.apache.spark.sql.DataFrame] =

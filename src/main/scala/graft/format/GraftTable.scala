@@ -41,10 +41,21 @@ final class TableScan private[format] (
     // BRANCH-read semantics (public Iceberg): a branch pin still reads
     // the table's CURRENT schema — only tags and time travel read the
     // snapshot's own schema
-    currentSchema: Boolean = false) {
+    currentSchema: Boolean = false,
+    // a fixed read schema, winning over both: a stream reads every batch
+    // in its query-start schema
+    schemaPin: Option[StructType] = None) {
 
-  def useSnapshot(id: Long): TableScan =
-    new TableScan(table, Some(id), asOfMillis, rowFilter, projection, incremental, currentSchema)
+  private def copy(snapshotId: Option[Long] = snapshotId,
+      asOfMillis: Option[Long] = asOfMillis, rowFilter: Expr = rowFilter,
+      projection: Option[Seq[String]] = projection,
+      incremental: Option[(Long, Long)] = incremental,
+      currentSchema: Boolean = currentSchema,
+      schemaPin: Option[StructType] = schemaPin): TableScan =
+    new TableScan(table, snapshotId, asOfMillis, rowFilter, projection,
+      incremental, currentSchema, schemaPin)
+
+  def useSnapshot(id: Long): TableScan = copy(snapshotId = Some(id))
   /** Read a named ref — branch head or tag ("main" = current). Branch
     * reads use the table's current schema (Iceberg branch semantics);
     * tag reads use the snapshot's schema. */
@@ -57,18 +68,18 @@ final class TableScan private[format] (
   }
   /** Pin a snapshot but keep the table's CURRENT schema — how a branch
     * head is read (the branch follows the table's schema evolution). */
-  def withCurrentSchema: TableScan =
-    new TableScan(table, snapshotId, asOfMillis, rowFilter, projection, incremental, currentSchema = true)
-  def asOfTime(millis: Long): TableScan =
-    new TableScan(table, snapshotId, Some(millis), rowFilter, projection, incremental, currentSchema)
-  def filter(expr: Expr): TableScan =
-    new TableScan(table, snapshotId, asOfMillis, Exprs.and(rowFilter, expr), projection, incremental, currentSchema)
-  def select(cols: String*): TableScan =
-    new TableScan(table, snapshotId, asOfMillis, rowFilter, Some(cols), incremental, currentSchema)
+  def withCurrentSchema: TableScan = copy(currentSchema = true)
+  /** Read in `schema`, a schema of this table, whatever the snapshot:
+    * files of every generation resolve against it by field id. */
+  private[graft] def withSchema(schema: StructType): TableScan =
+    copy(schemaPin = Some(schema))
+  def asOfTime(millis: Long): TableScan = copy(asOfMillis = Some(millis))
+  def filter(expr: Expr): TableScan = copy(rowFilter = Exprs.and(rowFilter, expr))
+  def select(cols: String*): TableScan = copy(projection = Some(cols))
   /** Appends in (fromSnapshotId, toSnapshotId] — reference
     * api/.../TableScan.java:150-160. */
   def appendsBetween(from: Long, to: Long): TableScan =
-    new TableScan(table, snapshotId, asOfMillis, rowFilter, projection, Some((from, to)), currentSchema)
+    copy(incremental = Some((from, to)))
 
   private def meta: TableMetadata = table.metadata
 
@@ -80,10 +91,11 @@ final class TableScan private[format] (
       .orElse(m.currentSnapshot)
   }
 
-  /** Scan schema: current schema for current reads AND branch reads; the
+  /** Scan schema: the pinned one if set ([[withSchema]]), else the current
+    * schema for current reads AND branch reads; the
     * snapshot's schema when explicitly time traveling (reference
     * BaseTableScan.schema(); branch semantics per public Iceberg). */
-  def scanSchema: StructType = {
+  def scanSchema: StructType = schemaPin.getOrElse {
     val m = meta
     if (currentSchema || (snapshotId.isEmpty && asOfMillis.isEmpty)) m.schema
     else snapshot.flatMap(s => s.summary.get("schema-id").map(_.toInt))

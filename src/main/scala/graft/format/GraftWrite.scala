@@ -43,9 +43,6 @@ object GraftWrite {
     sb.toString
   }
 
-  /** Table property: comma-separated `col [asc|desc]` write clustering. */
-  val SortOrderKey = "write.sort-order"
-
   /** `none` (default) keeps the input's task layout — a task-local
     * clustering sort only, no shuffle. `hash` first shuffles rows by the
     * derived partition expressions so each table partition lands in ONE
@@ -111,16 +108,7 @@ object GraftWrite {
     // the arrangement (Spark's sort is not stable), defeating the flag
     val orderCols: Seq[org.apache.spark.sql.Column] =
       if (!clusterByPartition) Nil
-      else m.properties.get(SortOrderKey) match {
-        case Some(order) if order.trim.nonEmpty =>
-          order.split(',').map(_.trim).filter(_.nonEmpty).toSeq.map { part =>
-            val bits = part.split("\\s+")
-            if (bits.length > 1 && bits(1).equalsIgnoreCase("desc"))
-              col(bits(0)).desc
-            else col(bits(0)).asc
-          }
-        case _ => Nil
-      }
+      else SortOrders.fromProperties(m.properties).map(_.sortColumn)
     // write.distribution-mode BEFORE the task-local sort, matching the
     // DSv2 INSERT path (GraftSparkTable.requiredDistribution): `hash`
     // shuffles by the derived partition expressions so each table

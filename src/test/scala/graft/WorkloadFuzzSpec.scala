@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import graft.format.{Actions, Deletes, GraftTable}
+import graft.format.{Actions, Deletes, GraftTable, SortOrders}
 import graft.util.Murmur3
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
@@ -569,7 +569,7 @@ object WorkloadFuzz {
             val a = Actions.forTable(table())
             val kind = rng.nextInt(4) match {
               case 0 => a.rewriteDataFiles(targetSizeBytes = 1L << 20); "binpack"
-              case 1 => a.rewriteSorted(Seq(curName("id") -> true)); "sorted"
+              case 1 => a.rewriteSorted(SortOrders.parse(curName("id"))); "sorted"
               case 2 => a.rewriteZOrdered(Seq(curName("id"), curName("cat"))); "zorder"
               case _ => a.rewritePositionDeletes(); "posdel"
             }

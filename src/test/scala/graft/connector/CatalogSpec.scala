@@ -970,6 +970,99 @@ class CatalogSpec extends SparkSpec {
       "a rename storm racing live triggers must not null or drop any row")
   }
 
+  test("a stream backfills the initial default of files it reads after an ADD COLUMN") {
+    // files written before ADD COLUMN ... DEFAULT but committed after the
+    // stream started: the batch streaming them must carry the default, as
+    // a batch read of the same table does
+    wh
+    import spark.implicits._
+    spark.sql("CREATE TABLE g.db.stdef (id BIGINT, v STRING) " +
+      "TBLPROPERTIES ('format-version'='3')")
+    spark.sql("INSERT INTO g.db.stdef VALUES (1, 'a')")
+    val loc = s"$wh/db/stdef"
+    val staged = graft.format.GraftWrite.writeFiles(GraftTable_load(loc),
+      Seq((2L, "b")).toDF("id", "v"))
+    graft.format.SchemaUpdate(GraftTable_load(loc)).addColumn("w",
+      org.apache.spark.sql.types.LongType, initialDefault = Some(7L)).commit()
+    val ck = Files.createTempDirectory("graft-stdef-ck").toString
+    val q = spark.readStream.table("g.db.stdef").writeStream
+      .option("checkpointLocation", ck)
+      .toTable("g.db.stdef_sink")
+    try {
+      q.processAllAvailable() // initial load
+      graft.format.Commits.fastAppend(GraftTable_load(loc), staged)
+      q.processAllAvailable() // the appended pre-ADD file
+    } finally q.stop()
+    def rows(sql: String) = spark.sql(sql).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
+    val want = Seq((1L, "a", 7L), (2L, "b", 7L))
+    assert(rows("SELECT id, v, w FROM g.db.stdef ORDER BY id") === want)
+    assert(rows("SELECT id, v, w FROM g.db.stdef_sink ORDER BY id") === want,
+      "streamed rows must carry the initial default")
+  }
+
+  test("parquet micro-batches read columnar, as batch reads do") {
+    wh
+    spark.sql("CREATE TABLE g.db.stcol (id BIGINT, v STRING)")
+    spark.sql("INSERT INTO g.db.stcol VALUES (1, 'a')")
+    val stream = new GraftMicroBatchStream(spark, GraftTable_load(s"$wh/db/stcol"),
+      org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+    def columnar(start: org.apache.spark.sql.connector.read.streaming.Offset,
+        end: org.apache.spark.sql.connector.read.streaming.Offset): Boolean = {
+      val parts = stream.planInputPartitions(start, end)
+      val factory = stream.createReaderFactory()
+      assert(parts.nonEmpty)
+      parts.forall(factory.supportColumnarReads)
+    }
+    val start = stream.initialOffset()
+    val loaded = stream.latestOffset(start,
+      org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable())
+    assert(columnar(start, loaded), "the initial load reads columnar")
+    spark.sql("INSERT INTO g.db.stcol VALUES (2, 'b')")
+    val appended = stream.latestOffset(loaded,
+      org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable())
+    assert(appended != loaded)
+    assert(columnar(loaded, appended), "an appended slice reads columnar")
+  }
+
+  test("a stream over an imported hive layout streams its partition column in place") {
+    // the imported files store `part` only in their directory names, so the
+    // batch scan serves it as a partition constant after the data columns;
+    // ADD COLUMN puts `w` after it, and the streamed rows must still carry
+    // each value under its own column
+    wh
+    import spark.implicits._
+    val src = Files.createTempDirectory("graft-imst-src").toString + "/t"
+    Seq((1L, "a", "p1"), (2L, "b", "p2")).toDF("id", "v", "part")
+      .write.partitionBy("part").parquet(src)
+    graft.format.GraftWrite.importParquet(spark, s"$wh/db/imst", src)
+    spark.sql("ALTER TABLE g.db.imst ADD COLUMN w BIGINT")
+    val ck = Files.createTempDirectory("graft-imst-ck").toString
+    val q = spark.readStream.table("g.db.imst").writeStream
+      .option("checkpointLocation", ck)
+      .toTable("g.db.imst_sink")
+    try {
+      q.processAllAvailable() // initial load: the imported files
+      spark.sql("INSERT INTO g.db.imst VALUES (3, 'c', 'p1', 9)")
+      q.processAllAvailable() // an appended file that stores `part`
+    } finally q.stop()
+    def rows(sql: String) = spark.sql(sql).collect().map(r => (r.getLong(0),
+      r.getString(1), r.getString(2), Option(r.get(3)))).toSeq
+    val want = Seq((1L, "a", "p1", None), (2L, "b", "p2", None), (3L, "c", "p1", Some(9L)))
+    assert(rows("SELECT id, v, part, w FROM g.db.imst ORDER BY id") === want)
+    assert(rows("SELECT id, v, part, w FROM g.db.imst_sink ORDER BY id") === want)
+    // a second stream, on the row path: its initial load holds both kinds
+    // of file in one batch
+    spark.conf.set("spark.sql.parquet.enableVectorizedReader", "false")
+    try {
+      val q2 = spark.readStream.table("g.db.imst").writeStream
+        .option("checkpointLocation", Files.createTempDirectory("graft-imst-ck2").toString)
+        .toTable("g.db.imst_sink_rows")
+      try q2.processAllAvailable() finally q2.stop()
+    } finally spark.conf.unset("spark.sql.parquet.enableVectorizedReader")
+    assert(rows("SELECT id, v, part, w FROM g.db.imst_sink_rows ORDER BY id") === want)
+  }
+
   test("a streaming write to a branch identifier advances the ref, not main") {
     wh
     spark.sql("CREATE TABLE g.db.brsink (id BIGINT)")

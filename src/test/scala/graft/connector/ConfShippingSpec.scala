@@ -7,8 +7,10 @@ import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 import org.apache.spark.SparkEnv
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.connector.read.streaming.ReadLimit
 import org.apache.spark.sql.connector.write.PhysicalWriteInfo
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import java.nio.file.Files
 
 /** Executors get graft's Hadoop conf through one broadcast per scan, write
@@ -80,8 +82,14 @@ class ConfShippingSpec extends SparkSpec {
     val t = GraftTable.load(spark, loc)
     val m = t.metadata
     val writeInfo = new PhysicalWriteInfo { override def numPartitions(): Int = 4 }
+    // a stream's first micro-batch: the same MoR state through the stream
+    val stream = new GraftMicroBatchStream(spark, t, CaseInsensitiveStringMap.empty())
+    val start = stream.initialOffset()
+    assert(stream.planInputPartitions(start,
+      stream.latestOffset(start, ReadLimit.allAvailable())).nonEmpty)
     val factories = Seq(
       "reader factory" -> scans.head.readerFactory,
+      "micro-batch reader factory" -> stream.createReaderFactory(),
       "DSv2 write" -> new GraftBatchWrite(t, GraftBatchWrite.Append)
         .createBatchWriterFactory(writeInfo),
       "DSv2 row delta" -> new GraftDeltaBatchWrite(t)

@@ -136,7 +136,7 @@ class LineageSpec extends SparkSpec {
       s"SELECT v, _row_id, _last_updated_sequence_number FROM $t")
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     val gt = GraftTable.load(spark, s"$wh/db/sortlin")
-    new Actions(gt).rewriteSorted(Seq(("id", true)))
+    new Actions(gt).rewriteSorted(SortOrders.parse("id asc"))
     val t2 = GraftTable.load(spark, s"$wh/db/sortlin")
     assert(t2.newScan().planFiles().tasks
       .forall(_.file.firstRowId.contains(Lineage.Materialized)))

@@ -225,6 +225,27 @@ class WriteOrderSpec extends SparkSpec {
     }
   }
 
+  test("library writes honor the declared null order: 'id asc nulls-last'") {
+    import graft.format.{GraftWrite, SortOrders}
+    val dir = Files.createTempDirectory("graft-nullslast").toString
+    // two input tasks, each holding nulls among its ids
+    val src = spark.range(0, 40, 1, 2)
+      .selectExpr("IF(id % 4 = 0, NULL, id) AS id", "concat('v', id) AS v")
+    val t = GraftTable.create(spark, dir, src.schema,
+      properties = Map(SortOrders.PropertyKey -> "id asc nulls-last"))
+    GraftWrite.append(t, src)
+    val files = t.newScan().planFiles().tasks.map(_.file.path)
+    assert(files.nonEmpty)
+    files.foreach { p =>
+      val ids = spark.read.parquet(p).select("id").collect()
+        .map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSeq
+      assert(ids.contains(None), s"no nulls in $p")
+      val (vals, nulls) = ids.span(_.isDefined)
+      assert(nulls.forall(_.isEmpty), s"a null sorts before a value in $p: $ids")
+      assert(vals.flatten === vals.flatten.sorted, s"values unsorted in $p: $ids")
+    }
+  }
+
   test("library write honors write.distribution-mode=hash: one file per partition") {
     // the library append path (GraftWrite.writeFiles) matches the DSv2
     // INSERT path's hash distribution: each partition value shuffles to
@@ -301,6 +322,30 @@ class WriteOrderSpec extends SparkSpec {
     assert(spark.sql("SELECT count(*) FROM go.db.resort").collect()(0).getLong(0) == 100)
   }
 
+  test("rewrite_data_files sort_by keeps the null order, declared or explicit") {
+    wh
+    spark.sql("""CREATE TABLE go.db.resortnulls (id BIGINT)
+                 TBLPROPERTIES ('write.sort-order'='id asc nulls-last')""")
+    val t = GraftTable.load(spark, s"$wh/db/resortnulls")
+    graft.format.GraftWrite.append(t, spark.range(0, 40, 1, 1)
+      .selectExpr("IF(id % 4 = 0, NULL, (id * 7) % 40) AS id"))
+    def nullsLast(spec: String, last: Boolean): Unit = {
+      spark.sql(s"""CALL go.system.rewrite_data_files(table => 'db.resortnulls',
+                     sort_by => '$spec')""")
+      GraftTable.load(spark, s"$wh/db/resortnulls").newScan().planFiles().tasks
+        .map(_.file.path).foreach { p =>
+          val nulls = spark.read.parquet(p).select("id").collect().map(_.isNullAt(0)).toSeq
+          assert(nulls.contains(true) && nulls.contains(false), s"$spec: $p")
+          val want = if (last) nulls.sortBy(n => n) else nulls.sortBy(n => !n)
+          assert(nulls === want, s"$spec: nulls misplaced in $p")
+        }
+    }
+    nullsLast("declared", last = true)
+    nullsLast("id asc nulls-first", last = false)
+    nullsLast("id desc nulls-last", last = true)
+    assert(spark.sql("SELECT count(*) FROM go.db.resortnulls").collect()(0).getLong(0) == 40)
+  }
+
   test("compaction's arranged order beats a conflicting declared sort order") {
     // clusterByPartition=false means the CALLER owns the row order: a
     // declared write.sort-order must not re-sort (and re-scramble) the
@@ -315,7 +360,7 @@ class WriteOrderSpec extends SparkSpec {
     graft.format.GraftWrite.append(t,
       spark.range(200).select((rand(11) * 1000).cast("long").as("id")).coalesce(1))
     val res = graft.format.Actions.forTable(GraftTable.load(spark, s"$wh/db/arrwins"))
-      .rewriteSorted(Seq(("id", true))) // explicit ASC, against the declared DESC
+      .rewriteSorted(graft.format.SortOrders.parse("id asc")) // explicit ASC, against the declared DESC
     assert(res.addedFiles > 0)
     val t2 = GraftTable.load(spark, s"$wh/db/arrwins")
     t2.newScan().planFiles().tasks.map(_.file.path).foreach { p =>

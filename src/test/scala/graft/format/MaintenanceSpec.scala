@@ -610,7 +610,7 @@ class MaintenanceSpec extends SparkSpec {
       "unsorted: every file overlaps the probe range")
     val total = t.newScan().planFiles().tasks.map(_.file.fileSizeInBytes).sum
     val res = Actions.forTable(t)
-      .rewriteSorted(Seq(("id", true)), targetSizeBytes = total / 3 + 1)
+      .rewriteSorted(SortOrders.parse("id asc"), targetSizeBytes = total / 3 + 1)
     assert(res.rewrittenFiles == 4 && res.addedFiles == 3)
     assert(t.toDF().select("id").as[Long].collect().sorted.toSeq ==
       (0L until 400L))
@@ -692,7 +692,7 @@ class MaintenanceSpec extends SparkSpec {
     Deletes.deleteByEquality(t, Seq(2L, 1001L).toDF("id"))
     val before = t.toDF().select("id").as[Long].collect().sorted.toSeq
     assert(before == Seq(0L, 1L, 3L, 1000L, 1002L, 1003L))
-    val res = Actions.forTable(t).rewriteSorted(Seq(("id", false)))
+    val res = Actions.forTable(t).rewriteSorted(SortOrders.parse("id desc"))
     assert(res.rewrittenFiles == 2)
     assert(t.toDF().select("id").as[Long].collect().sorted.toSeq == before,
       "deleted rows must not resurface after the sorted rewrite")
@@ -732,6 +732,30 @@ class MaintenanceSpec extends SparkSpec {
     // and the position deletes now compact further
     val sizes = Actions.forTable(t).rewritePositionDeletes()
     assert(t.toDF().select("id").as[Long].collect().sorted.toSeq == before)
+  }
+
+  test("rewriteEqualityDeletes converts eq deletes on ORC and Avro tables") {
+    for (fmt <- Seq(FileFormats.Orc, FileFormats.Avro)) {
+      val t = GraftTable.create(spark, freshLoc(s"eq2pos-$fmt"), rows(4).schema,
+        properties = Map("write.format.default" -> fmt))
+      GraftWrite.append(t, rows(4, 0).coalesce(1)) // ids 0..3
+      Deletes.deleteByEquality(t, Seq(1L).toDF("id"))
+      GraftWrite.append(t, rows(4, 1).coalesce(1)) // ids 1000..1003
+      Deletes.deleteByEquality(t, Seq(3L, 1002L).toDF("id"))
+      assert(t.newScan().planFiles().files.forall(_.fileFormat == fmt))
+      val before = t.toDF().collect().map(_.toString).sorted.toSeq
+      assert(before.size === 5)
+
+      val res = Actions.forTable(t).rewriteEqualityDeletes()
+      assert(res.rewrittenFiles === 2, s"$fmt: both eq-delete files converted")
+      assert(res.addedFiles >= 1, s"$fmt: position deletes staged")
+      val delsAfter = t.newScan().planFiles().deleteFiles
+      assert(delsAfter.nonEmpty &&
+        delsAfter.forall(_._1.content == FileContent.PositionDeletes),
+        s"$fmt: only position deletes remain")
+      assert(t.toDF().collect().map(_.toString).sorted.toSeq === before,
+        s"$fmt: visible rows unchanged by the conversion")
+    }
   }
 
   test("steady-state CDC lifecycle: 100 upsert commits converge under maintenance") {

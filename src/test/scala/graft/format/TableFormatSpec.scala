@@ -1016,7 +1016,7 @@ class TableFormatSpec extends SparkSpec {
     val df = spark.range(1000).selectExpr("id", "concat('d', id) as data",
       "timestamp'2024-01-01 00:00:00' as ts")
     val t = GraftTable.create(spark, loc, df.schema,
-      properties = Map(GraftWrite.SortOrderKey -> "id desc"))
+      properties = Map(SortOrders.PropertyKey -> "id desc"))
     GraftWrite.append(t, df.repartition(2))
     // rows within each file must be descending by id
     val files = t.newScan().planFiles().tasks.map(_.file.path)
