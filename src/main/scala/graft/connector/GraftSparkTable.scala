@@ -615,14 +615,13 @@ final class GraftScanBuilder private[connector] (spark: SparkSession,
 
     // position deletes ride the synthetic row-index column: parquet's
     // readers fill it themselves, and ORC and Avro groups that a position
-    // delete actually TARGETS read it through graft's own counting readers
+    // delete can TARGET read it through graft's own counting readers
     // (GraftOrcRowScan / GraftAvroScan — position deletes are
     // format-agnostic in the reference, core/.../deletes/Deletes.java:70-123),
-    // whose files then stay unsplit. Target detection costs one driver read
-    // of the (small, per-commit) delete files' path column — and only on
-    // tables that contain non-parquet files while position deletes are live.
-    lazy val posTargetPaths: Set[String] =
-      Deletes.posDeleteTargetFiles(posFiles, spark.sessionState.newHadoopConf())
+    // whose files then stay unsplit. The scan's delete index answers which
+    // files a position delete can target.
+    val deleteIndex =
+      DeleteIndex(plan.deleteFiles, m.schema, spark.sessionState.newHadoopConf())
 
     // one file-source scan per (writer-schema generation, file format):
     // columns are re-mapped to each generation's *file* names by field id
@@ -654,7 +653,7 @@ final class GraftScanBuilder private[connector] (spark: SparkSession,
         val groupPos = posActive && (fmt match {
           case FileFormats.Parquet => true
           case _ => tasks.exists(t =>
-            posTargetPaths.contains(ParquetIO.canonPath(t.file.path)))
+            deleteIndex.posDeletesFor(ParquetIO.canonPath(t.file.path)).size > 0)
         })
         // `_pos` and computed lineage ride the same row-index column
         val needRowIdx = groupPos || metaPos || lineageComputed
@@ -957,8 +956,8 @@ final class GraftScanBuilder private[connector] (spark: SparkSession,
         }
         case _ => None
       }
-    new GraftScan(output, groups.map(_._1), plan, spark, table, options,
-      groups.map(_._2), runtimeFileFiltering = groupGranular,
+    new GraftScan(output, groups.map(_._1), plan, deleteIndex, spark, table,
+      options, groups.map(_._2), runtimeFileFiltering = groupGranular,
       onRuntimeFilter = onRuntimeFilter, spjInfo = spjInfo,
       ndvStats = scan.snapshot.map(_.snapshotId)
         .flatMap(id => Stats.read(table, id)),
@@ -1001,8 +1000,8 @@ final class GraftScanBuilder private[connector] (spark: SparkSession,
   * no runtime filter. */
 final class GraftScan(output: StructType,
     groupScans: Seq[org.apache.spark.sql.execution.datasources.v2.FileScan],
-    plan: ScanPlan, spark: SparkSession, table: GraftTable,
-    options: CaseInsensitiveStringMap,
+    plan: ScanPlan, deleteIndex: DeleteIndex, spark: SparkSession,
+    table: GraftTable, options: CaseInsensitiveStringMap,
     deletes: Seq[Option[GroupDeletes]],
     runtimeFileFiltering: Boolean,
     onRuntimeFilter: Set[String] => Unit,
@@ -1215,103 +1214,14 @@ final class GraftScan(output: StructType,
       parts.toSeq.flatMap(_.files).map(g -> _)
     }
 
-  /** Driver-side per-task delete matcher: canonical data-file path → the
-    * position-delete files / DV slices that can reference it. Built from
-    * manifest metadata (DV `referenced_data_file`, parquet path bounds) with
-    * zero delete-file I/O on current tables; legacy delete files without
-    * target metadata pay one cached driver read each (Deletes.posIndex). */
-  private lazy val posScopeOf: String => PosScope = {
-    val posFiles = plan.deleteFiles
-      .filter(_._1.content == FileContent.PositionDeletes).map(_._1)
-      .distinctBy(f => (f.path, f.referencedDataFile))
-    val dvByTarget = Dvs.slicesOf(posFiles).groupBy(_.referenced)
-    val parquetOf =
-      Deletes.posIndex(posFiles, spark.sessionState.newHadoopConf())
-    p => PosScope(parquetOf(p), dvByTarget.getOrElse(p, Nil))
-  }
-
-  /** Driver-side equality-delete partition matcher (the eq twin of
-    * [[posScopeOf]] — reference DeleteFileIndex partition indexing):
-    * partition-scoped eq-delete files (written per partition by
-    * Deletes.stageEqualityDeletes) can only hit data files of the SAME
-    * partition under the same spec; files without a tuple — and any
-    * cross-spec pairing, where tuples aren't comparable — stay
-    * partition-global. Metadata-only: no delete-file I/O. */
-  private lazy val eqFileOf: Map[String, DataFile] =
-    plan.deleteFiles.filter(_._1.content == FileContent.EqualityDeletes)
-      .map(_._1).map(f => ParquetIO.canonPath(f.path) -> f).toMap
-  private lazy val eqPartOf: Map[String, (Int, Map[String, Any])] =
-    eqFileOf.collect { case (p, f) if f.partition.nonEmpty =>
-      p -> (f.specId, f.partition) }
-  /** Key-RANGE scoping is worthwhile when any live eq-delete file carries
-    * key-column stats (staged files always do; legacy entries don't). */
-  private lazy val eqBoundsActive: Boolean =
-    eqFileOf.valuesIterator.exists(f =>
-      f.equalityIds.exists(id => f.lowerBounds.contains(id) ||
-        f.nullValueCounts.get(id).contains(0L)))
-  private lazy val eqScopable: Boolean = eqPartOf.nonEmpty || eqBoundsActive
-  private lazy val dataFileOf: Map[String, DataFile] =
-    plan.tasks.map(t => ParquetIO.canonPath(t.file.path) -> t.file).toMap
-  /** One equality-delete key source of a group, pre-indexed once per scan:
-    * global (tuple-less) paths, per delete-file spec a tuple → paths map
-    * and the spec's full path list (served whole to cross-spec data files,
-    * where tuples aren't comparable — [[Deletes.eqDeleteCanHit]]'s cases,
-    * indexed), plus — above the linear-sweep cap — an interval index over
-    * the set's key ranges shared by both the global and the scoped
-    * narrowing paths. */
-  private final case class EqSetIndex(
-      global: Seq[String],
-      bySpec: Map[Int, (Seq[String], Map[Map[String, Any], Seq[String]])],
-      canonOf: Map[String, String],       // listed path → canonical (built once)
-      fileOf: Map[String, DataFile],      // listed path → descriptor
-      globalByCanon: Map[String, String], // canonical → listed, global half
-      globalUnresolved: Seq[String],      // global paths with no descriptor
-      rangeIdx: Option[EqRangeIndex])
-
-  /** Per-source partition INDEX over a group's equality-delete paths,
-    * built once per scan. Keeps per-task scoping at
-    * O(partitions-per-task) map lookups instead of O(live delete
-    * files) per task — the same driver-cost shape as posScopeOf.
-    * Canonical forms and descriptors are resolved HERE, once per set:
-    * per-task re-canonicalization is URI parsing × tasks × delete files
-    * (measured ~0.5 s per planning pass at 48 tasks × 5k deletes). */
-  private lazy val eqIndexByGroup: Map[Int, Seq[EqSetIndex]] =
-    deletes.zipWithIndex.collect {
-      case (Some(cfg), g) if cfg.sets.nonEmpty && eqScopable =>
-        g -> cfg.sets.map { ks =>
-          val canonOf = ks.paths.map(dp => dp -> ParquetIO.canonPath(dp)).toMap
-          val fileOf = ks.paths.flatMap(dp =>
-            eqFileOf.get(canonOf(dp)).map(dp -> _)).toMap
-          val (scoped, global) =
-            ks.paths.partition(dp => eqPartOf.contains(canonOf(dp)))
-          // Tuples.key: binary partition values must index by CONTENT or a
-          // content-equal data tuple misses the map and the key set
-          // silently detaches (rows resurrect)
-          val bySpec = scoped.groupBy(dp => eqPartOf(canonOf(dp))._1)
-            .map { case (spec, paths) =>
-              spec -> (paths,
-                paths.groupBy(dp => Tuples.key(eqPartOf(canonOf(dp))._2)))
-            }
-          // above the linear-sweep cap, the whole set gets ONE interval
-          // index (built once per scan) so narrowing stays O(log n + hits)
-          // per task instead of turning off — for tuple-less paths AND for
-          // partition-scoped candidate sets that exceed the cap inside a
-          // single task's partitions
-          val rangeIdx =
-            if (eqBoundsActive &&
-                (global.length > EqBoundsCap || scoped.length > EqBoundsCap))
-              Some(EqRangeIndex.build(
-                ks.paths.flatMap(fileOf.get), table.metadata.schema))
-            else None
-          EqSetIndex(global, bySpec, canonOf, fileOf,
-            global.map(dp => canonOf(dp) -> dp).toMap,
-            global.filterNot(fileOf.contains), rangeIdx)
-        }
+  /** Data-file descriptor and sequence number by canonical path. */
+  private lazy val taskOf: Map[String, FileScanTask] =
+    plan.tasks.map(t => ParquetIO.canonPath(t.file.path) -> t).toMap
+  /** Per group with equality deletes: delete-file path → its key source. */
+  private lazy val sourceOf: Map[Int, Map[String, Int]] =
+    deletes.zipWithIndex.collect { case (Some(cfg), g) if cfg.sets.nonEmpty =>
+      g -> cfg.sets.zipWithIndex.flatMap { case (ks, i) => ks.paths.map(_ -> i) }.toMap
     }.toMap
-  // PER-CANDIDATE key-range checks are linear sweeps — bounded so a
-  // pathological many-live-deletes scan can't regress planning to
-  // O(files×deletes); sets above the cap switch to [[EqRangeIndex]]
-  private val EqBoundsCap = 1024
   // aggregated narrowing observability: tasks scoped, candidate delete
   // files before/after narrowing — logged once per planning pass so a
   // scale operator can see whether narrowing is effective without a
@@ -1332,11 +1242,10 @@ final class GraftScan(output: StructType,
   @transient private lazy val scanLog =
     org.slf4j.LoggerFactory.getLogger(classOf[GraftScan])
   /** Per-task narrowing of a group's equality-delete sources: for each
-    * DeleteKeySource (order preserved), the delete-file paths that can hit
-    * any of the task's data files — first by partition tuple (indexed),
-    * then by KEY-column range overlap ([[Deletes.eqBoundsCanHit]], the
-    * upstream canContainEqDeletesForFile analogue). None = nothing
-    * narrowed (single cache entry shared by every task of the scan). */
+    * DeleteKeySource (order preserved), the delete-file paths the
+    * [[DeleteIndex]] attaches to any of the task's data files. None =
+    * nothing narrowed (single cache entry shared by every task of the
+    * scan). */
   private val eqScopeCache = new java.util.concurrent.ConcurrentHashMap[
     (Int, Seq[String]), Option[Seq[Seq[String]]]]
 
@@ -1346,79 +1255,24 @@ final class GraftScan(output: StructType,
     // partitioning, execution, AQE re-plans) — cache per (group, task
     // files) so narrowing runs once per task per scan; cached values are
     // shared references with the emitted partitions, not copies
-    eqScopeCache.computeIfAbsent((group, dataPaths),
-      _ => computeEqScopeFor(group, dataPaths))
-
-  private def computeEqScopeFor(group: Int, dataPaths: Seq[String])
-      : Option[Seq[Seq[String]]] =
-    eqIndexByGroup.get(group).flatMap { index =>
+    eqScopeCache.computeIfAbsent((group, dataPaths), _ => {
+      val tasks = dataPaths.flatMap(taskOf.get)
       // a data file we can't resolve keeps every delete (never drop)
-      val unknown = dataPaths.exists(dp => !dataFileOf.contains(dp))
-      if (unknown) None
+      if (tasks.size < dataPaths.size) None
       else {
-        val dataFiles = dataPaths.map(dataFileOf)
-        val parts = dataFiles.map(f => (f.specId, f.partition)).distinct
-        lazy val schema = table.metadata.schema
-        val narrowed = index.map { si =>
-          // a delete path with no resolvable descriptor can't be range-
-          // checked — keep it unconditionally (conservative, like the
-          // unknown-data-file bail above)
-          def boundsHit(dp: String): Boolean = si.fileOf.get(dp) match {
-            case Some(del) =>
-              dataFiles.exists(df => Deletes.eqBoundsCanHit(del, df, schema))
-            case None => true
-          }
-          val scopedCands = si.bySpec.toSeq.flatMap { case (spec, (all, byTuple)) =>
-            if (parts.exists(_._1 != spec)) all // cross-spec: keep whole spec
-            else parts.flatMap(p => byTuple.getOrElse(Tuples.key(p._2), Nil))
-          }
-          // the set's interval index queried ONCE per task (shared by the
-          // global and the scoped halves): a conservative superset of the
-          // delete files whose key ranges can touch the task's files.
-          // Canonical forms come from the per-set maps — no URI parsing in
-          // the per-task loop.
-          lazy val idxCands: Set[String] = si.rangeIdx.fold(Set.empty[String])(
-            idx => dataFiles.flatMap(idx.candidatesFor)
-              .map(ParquetIO.canonPath).toSet)
-          // pre-filter through the index when available, then the exact
-          // multi-key re-check — UNLESS the candidate set itself exceeds
-          // the cap (a near-total set means narrowing buys nothing and the
-          // re-check is O(candidates × taskFiles); keep the superset, as
-          // the pre-index code kept everything above the cap)
-          def narrow(cands: Seq[String]): Seq[String] =
-            if (cands.length > EqBoundsCap) cands else cands.filter(boundsHit)
-          val globalNarrowed =
-            if (!eqBoundsActive) si.global
-            else si.rangeIdx match {
-              case Some(_) =>
-                // iterate the (small) candidate set, not the full global
-                // list: O(hits) map lookups per task, plus unresolvable
-                // paths kept unconditionally
-                narrow((idxCands.toSeq.flatMap(si.globalByCanon.get)
-                  ++ si.globalUnresolved).distinct)
-              case None => narrow(si.global)
-            }
-          val scopedNarrowed =
-            if (!eqBoundsActive) scopedCands
-            else if (scopedCands.length <= EqBoundsCap)
-              scopedCands.filter(boundsHit)
-            else si.rangeIdx match {
-              // over-cap scoped candidates: intersect the tuple-scoped set
-              // with the index's range candidates — narrowing stays on
-              // instead of the former warn-and-skip cliff
-              case Some(_) => narrow(scopedCands.filter(dp =>
-                !si.fileOf.contains(dp) || idxCands.contains(si.canonOf(dp))))
-              case None => scopedCands // unreachable: over-cap builds the index
-            }
-          (globalNarrowed ++ scopedNarrowed).distinct.sorted
-        }
+        val srcOf = sourceOf(group)
         val sizes = deletes(group).get.sets.map(_.paths.length)
+        val hits = Array.fill(sizes.size)(
+          scala.collection.mutable.TreeSet.empty[String])
+        tasks.foreach(t => deleteIndex.eqDeletesFor(t.file, t.sequenceNumber)
+          .foreach(d => srcOf.get(d.path).foreach(hits(_) += d.path)))
+        val narrowed = hits.toSeq.map(_.toSeq)
         eqNarrowTasks.incrementAndGet()
         eqNarrowBefore.addAndGet(sizes.sum.toLong)
         eqNarrowAfter.addAndGet(narrowed.map(_.length).sum.toLong)
         if (narrowed.map(_.length) == sizes) None else Some(narrowed)
       }
-    }
+    })
 
   /** The subs one scan task reads of group `g`'s planned splits `files`.
     * Position deletes (keyed by data-file path — the SAME canonicalization
@@ -1431,14 +1285,14 @@ final class GraftScan(output: StructType,
       files: Seq[PartitionedFile]): Seq[GroupedPartition] = {
     val posGroup = deletes(g).exists(_.pos.isDefined)
     val lineageGroup = lineages(g).exists(_.kind == 1)
-    // partition-scoped equality deletes narrow each task's key-set sources
-    // to its own partition's delete files
-    val eqActive = eqScopable && deletes(g).exists(_.sets.nonEmpty)
+    // each task's key-set sources narrow to the delete files the index
+    // attaches to its data files (by partition and key range)
+    val eqActive = deleteIndex.eqNarrows && deletes(g).exists(_.sets.nonEmpty)
     def canon(f: PartitionedFile) = ParquetIO.canonPath(f.filePath.toPath.toString)
     if (posGroup || lineageGroup) files.map { f =>
       val c = canon(f)
       GroupedPartition(g, FilePartition(index, Array(f)), Some(c),
-        if (posGroup) Some(posScopeOf(c)) else None,
+        if (posGroup) Some(deleteIndex.posDeletesFor(c)) else None,
         if (lineageGroup) lineageScopeOf.get(c) else None,
         if (eqActive) eqScopeFor(g, Seq(c)) else None)
     }
@@ -1737,14 +1591,6 @@ final class LineageColumnarReader(
   override def get(): ColumnarBatch = current
   override def close(): Unit = { closeOwned(); inner.close() }
 }
-
-/** Per-TASK position-delete attachment (reference DeleteFileIndex +
-  * FileScanTask.deletes(), core/.../DeleteFileIndex.java): only the delete
-  * files / DV slices that can reference this partition's data file travel
-  * with it, so an executor's delete I/O is bounded by its own tasks'
-  * deletes — not O(scan-wide delete bytes) per executor. */
-final case class PosScope(paths: Seq[String],
-    dvs: Seq[graft.format.DvSlice]) extends Serializable
 
 /** One partition per partition KEY (all its files), for storage-partitioned
   * joins: Spark groups both join sides by `partitionKey` and skips the

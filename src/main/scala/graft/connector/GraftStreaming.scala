@@ -320,22 +320,14 @@ final class GraftStreamingWrite(table: GraftTable, truncateFirst: Boolean,
       val missing = keyCols.filterNot(m.schema.fieldNames.contains)
       require(missing.isEmpty, s"write.upsert.key-columns not in schema: " +
         missing.mkString(", "))
-      val spark = table.spark
-      fileFormat match {
-        case FileFormats.Parquet | FileFormats.Orc =>
-        case other => throw new UnsupportedOperationException(
-          s"streaming upsert requires parquet or orc data files, not $other")
-      }
-      // descriptor-backed read of JUST the key columns: a high-fanout
-      // epoch (hundreds of files) must not stat every path on the driver
-      val keySchema = org.apache.spark.sql.types.StructType(keyCols.map { c =>
-        val f = m.schema.fields(m.schema.fieldIndex(c))
-        org.apache.spark.sql.types.StructField(f.name,
-          Types.cleanType(f.dataType), nullable = true)
-      })
-      // persisted: the dup check AND delete staging both consume this —
-      // unpersisted, each would re-read every epoch data file
-      val keys = DataFileIO.indexedDF(spark, files, fileFormat, keySchema)
+      import org.apache.spark.sql.functions.{col, count, lit}
+      // the epoch's files read through the table scan pinned to them, in
+      // any file format, key columns only. Persisted: the dup check AND
+      // delete staging both consume this — unpersisted, each would re-read
+      // every epoch data file
+      val keys = table.newScan()
+        .read(ScanPlan(files.map(FileScanTask(_, 0L, AlwaysTrue)), Nil, 0, 0, 0L, files.size))
+        .select(keyCols.map(col): _*)
         .persist()
       try {
         // two rows with one key INSIDE an epoch would both survive (the
@@ -343,7 +335,6 @@ final class GraftStreamingWrite(table: GraftTable, truncateFirst: Boolean,
         // its own files), silently breaking the one-row-per-key invariant —
         // and "which row wins" is undefined in an unordered batch. Fail the
         // epoch with the offending key instead.
-        import org.apache.spark.sql.functions.{col, count, lit}
         val dup = keys.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("n"))
           .filter(col("n") > 1).limit(1).collect()
         if (dup.nonEmpty)

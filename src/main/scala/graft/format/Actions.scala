@@ -117,29 +117,14 @@ final class Actions(t: GraftTable) {
     // delete pressure per data file (iceberg delete-file-threshold): a
     // file carrying >= threshold live delete files gets compacted even
     // when its partition is already size-compact — long-lived MoR tables
-    // otherwise accumulate per-scan delete-apply cost forever. Cost: the
-    // DV side is manifest-only; parquet pos-delete targets need one small
-    // driver read; eq deletes count by sequence comparison.
+    // otherwise accumulate per-scan delete-apply cost forever. It counts
+    // the delete files the scan would attach to the file (reference
+    // task.deletes()), so other partitions' and key ranges' deletes don't.
     lazy val deletePressure: Map[String, Int] = {
-      val posFiles = plan.deleteFiles
-        .filter(_._1.content == FileContent.PositionDeletes).map(_._1)
-        .distinctBy(f => (f.path, f.referencedDataFile))
-      val hconf = t.spark.sessionState.newHadoopConf()
-      val posCounts = scala.collection.mutable.HashMap[String, Int]()
-      posFiles.foreach { f =>
-        Deletes.posDeleteTargetFiles(Seq(f), hconf).foreach(tp =>
-          posCounts(tp) = posCounts.getOrElse(tp, 0) + 1)
-      }
-      // distinct by path: a delete file planned through several manifests
-      // after rewrites must count once
-      val eqSeqs = plan.deleteFiles
-        .filter(_._1.content == FileContent.EqualityDeletes)
-        .distinctBy(_._1.path).map(_._2)
-      plan.tasks.map { ts =>
-        ParquetIO.canonPath(ts.file.path) ->
-          (posCounts.getOrElse(ParquetIO.canonPath(ts.file.path), 0) +
-            eqSeqs.count(_ > ts.sequenceNumber))
-      }.toMap
+      val index = DeleteIndex(plan.deleteFiles, m.schema,
+        t.spark.sessionState.newHadoopConf())
+      plan.tasks.map(ts => ParquetIO.canonPath(ts.file.path) ->
+        index.countFor(ts.file, ts.sequenceNumber)).toMap
     }
     // a group or bin qualifies by merge width, or because it holds a
     // delete-burdened file (the threshold path compacts singletons too)
@@ -203,8 +188,9 @@ final class Actions(t: GraftTable) {
     * validation via `baseSnapshot`). A position-delete file whose every
     * target is gone no longer masks anything — drop it in the SAME commit,
     * so delete files don't accumulate forever on a compacted table (the
-    * reference needs a separate remove-dangling-deletes pass). One driver
-    * read of each delete file's (small) path column. */
+    * reference needs a separate remove-dangling-deletes pass). Targets
+    * come from [[DeleteIndex.targetsOf]]: manifest metadata, or one cached
+    * driver read of a multi-target file's (small) path column. */
   private def commitRewriteWithHygiene(plan: ScanPlan, del: Set[String],
       newFiles: Seq[DataFile], baseSnapshot: Option[Long]): RewriteResult = {
     val delCanon = del.map(ParquetIO.canonPath)
@@ -214,20 +200,12 @@ final class Actions(t: GraftTable) {
     val posEntries = plan.deleteFiles
       .filter(_._1.content == FileContent.PositionDeletes).map(_._1)
       .distinctBy(f => (f.path, f.referencedDataFile))
-    val (dvEntries, pqEntries) =
-      posEntries.partition(_.fileFormat == FileFormats.Puffin)
-    val danglingPq = pqEntries.map(_.path).distinct
-      .filter { p =>
-        val targets = Deletes.posDeleteTargets(Seq(p), hconf)
-        targets.forall(tp => !liveAfterCanon.contains(tp))
-      }.toSet
-    // a puffin file is dangling when EVERY blob's referenced data file is
-    // gone (zero I/O — targets live in the manifest entries)
-    val danglingDv = dvEntries.groupBy(_.path).collect {
-      case (p, es) if es.forall(_.referencedDataFile.exists(r =>
-        !liveAfterCanon.contains(ParquetIO.canonPath(r)))) => p
+    // a delete file is dangling when every target of every entry (one per
+    // puffin blob) is gone
+    val danglingPos = posEntries.groupBy(_.path).collect {
+      case (p, es) if es.forall(e =>
+        DeleteIndex.targetsOf(e, hconf).forall(tp => !liveAfterCanon.contains(tp))) => p
     }.toSet
-    val danglingPos = danglingPq ++ danglingDv
     // equality deletes gate by sequence (they apply to files OLDER than the
     // delete); rewritten files get a NEW sequence, so once no live file is
     // older than a delete's sequence it can never match again
@@ -422,42 +400,16 @@ final class Actions(t: GraftTable) {
         .select(canon(col("_g_file")).as("file_path"), col("_g_pos").as("pos"))
     }
 
+    // candidate prefilter — each delete group reads only the data files
+    // the delete index attaches one of its files to (the join + sequence
+    // gate keep exact semantics; this only cuts the files READ)
+    val index = DeleteIndex(eqFiles, schema, spark.sessionState.newHadoopConf())
+    val reach = candidates.map(ts =>
+      ts -> index.eqDeletesFor(ts.file, ts.sequenceNumber).map(_.equalityIds).toSet)
     val suppressed: Seq[org.apache.spark.sql.DataFrame] =
       eqFiles.groupBy(_._1.equalityIds).toSeq.sortBy(_._1.mkString(",")).flatMap {
         case (ids, group) =>
-          // candidate prefilter — skip data files no delete in this group
-          // can reach (the join + sequence gate keep exact semantics; this
-          // only cuts the files READ). Exact per-pair sweep (partition
-          // scoping + key-range overlap) under a product cap; above it, a
-          // scope-bucket check: candidates hit by a partition-global
-          // delete, their own partition's newest delete, or any cross-spec
-          // tupled delete (conservative — tuples aren't comparable there).
-          val scoped =
-            if (candidates.size.toLong * group.size <= 4_000_000L)
-              candidates.filter(ts => group.exists { case (f, dseq) =>
-                dseq > ts.sequenceNumber &&
-                  Deletes.eqDeleteCanHit(f.specId, f.partition,
-                    ts.file.specId, ts.file.partition) &&
-                  Deletes.eqBoundsCanHit(f, ts.file, schema)
-              })
-            else {
-              val tupled = group.filter(_._1.partition.nonEmpty)
-              val globalMax = group.collect {
-                case (f, s) if f.partition.isEmpty => s }.maxOption
-              val scopeMax = tupled
-                .groupBy(d => (d._1.specId, Tuples.key(d._1.partition)))
-                .map { case (k, g) => k -> g.map(_._2).max }
-              val crossMax = tupled.map(_._2).maxOption
-              candidates.filter { ts =>
-                def newer(s: Option[Long]) = s.exists(_ > ts.sequenceNumber)
-                newer(globalMax) ||
-                  newer(scopeMax.get(
-                    (ts.file.specId, Tuples.key(ts.file.partition)))) ||
-                  (newer(crossMax) &&
-                    tupled.exists(d => d._1.specId != ts.file.specId &&
-                      d._2 > ts.sequenceNumber))
-              }
-            }
+          val scoped = reach.collect { case (ts, hit) if hit(ids) => ts }
           if (scoped.isEmpty) Nil else Seq(suppressedFor(ids, group, scoped))
       }
     if (suppressed.isEmpty) {

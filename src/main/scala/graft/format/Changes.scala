@@ -126,26 +126,14 @@ object Changes {
           parts += tag(read(removedTasks, existingDeletes), Delete, ordinal, s.snapshotId)
 
         if (newDeletes.nonEmpty) {
-          val survivors = planS.tasks.filter(t => pPaths(canon(t.file.path)))
-          val newPos = newDeletes.filter(_._1.content == FileContent.PositionDeletes)
-          val newEq = newDeletes.filter(_._1.content == FileContent.EqualityDeletes)
-          val posTargets: Set[String] =
-            if (newPos.isEmpty) Set.empty
-            else Deletes.posDeleteTargetFiles(newPos.map(_._1),
-              table.spark.sessionState.newHadoopConf())
-          // narrow the eq-delete candidates with the same partition- and
-          // key-bounds scoping the scan path uses — one small eq-delete
-          // commit on a wide table must NOT force an exceptAll over every
-          // surviving file ("data I/O touches only the commit's churn")
-          val schema = table.metadata.schema
-          val candidates = survivors.filter(t =>
-            posTargets.contains(canon(t.file.path)) ||
-              newEq.exists { case (d, dseq) =>
-                dseq > t.sequenceNumber &&
-                  Deletes.eqDeleteCanHit(d.specId, d.partition,
-                    t.file.specId, t.file.partition) &&
-                  Deletes.eqBoundsCanHit(d, t.file, schema)
-              })
+          // only survivors the commit's new deletes can apply to, matched
+          // by the index the scan uses — one small eq-delete commit on a
+          // wide table must NOT force an exceptAll over every surviving
+          // file ("data I/O touches only the commit's churn")
+          val index = DeleteIndex(newDeletes, table.metadata.schema,
+            table.spark.sessionState.newHadoopConf())
+          val candidates = planS.tasks.filter(t =>
+            pPaths(canon(t.file.path)) && index.countFor(t.file, t.sequenceNumber) > 0)
           if (candidates.nonEmpty) {
             val pre = read(candidates, existingDeletes)
             val post = read(candidates, existingDeletes ++ newDeletes)

@@ -544,8 +544,8 @@ object Commits {
           .filter(e => e.status != EntryStatus.Deleted &&
             e.file.content == FileContent.Data)
           .map(e => ParquetIO.canonPath(e.file.path)).toSet
-        val targets = Deletes.posDeleteTargetFiles(posDeletes,
-          table.spark.sessionState.newHadoopConf())
+        val conf = table.spark.sessionState.newHadoopConf()
+        val targets = posDeletes.flatMap(DeleteIndex.targetsOf(_, conf)).toSet
         val gone = targets.filterNot(live.contains)
         if (gone.nonEmpty) throw new ValidationException(
           s"position deletes target files replaced since snapshot " +

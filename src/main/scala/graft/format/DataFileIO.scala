@@ -7,8 +7,7 @@ import org.apache.spark.sql.types.StructType
 /** Format-dispatching executor-side row I/O over data files: the one
   * writer seam (`openWriter`: the DSv2 fanout writers, which also stage
   * equality-delete files, library writes and bin-pack compaction's per-bin
-  * outputs) and a row-wise reader (`readAll`, which can decrypt first).
-  * Parquet position-delete files have their own writer,
+  * outputs). Parquet position-delete files have their own writer,
   * [[PositionDeleteWriter]], with the same codec choice
   * ([[compressionOf]]). Table reads, compaction's included, go through
   * the DSv2 scan instead; delete-key loading stays parquet-only since
@@ -17,7 +16,7 @@ import org.apache.spark.sql.types.StructType
   */
 object DataFileIO {
 
-  /** Metadata-fed multi-file DataFrame read: `spark.read.parquet(paths:_*)`
+  /** Metadata-fed multi-file parquet read: `spark.read.parquet(paths:_*)`
     * existence-checks every ROOT path on the driver at analysis time —
     * thousands of live files mean thousands of stat calls (HEADs, on an
     * object store) before the first byte of data. Sizes are already
@@ -33,45 +32,12 @@ object DataFileIO {
     * manifests can be checked with `Actions.verifyFileSizes` /
     * `system.verify_file_sizes` before first use. */
   def indexedDF(spark: org.apache.spark.sql.SparkSession,
-      files: Seq[DataFile], format: String,
-      schema: StructType): org.apache.spark.sql.DataFrame = {
-    val ff = format match {
-      case FileFormats.Orc =>
-        new org.apache.spark.sql.execution.datasources.orc.OrcFileFormat()
-      case _ =>
-        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
-    }
+      files: Seq[DataFile], schema: StructType): org.apache.spark.sql.DataFrame =
     spark.baseRelationToDataFrame(
       org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-        new graft.connector.GraftFileIndex(spark, files),
-        StructType(Nil), schema, None, ff, Map.empty)(spark))
-  }
-
-  /** Stream `path` (of `format`) projected to `schema` (file-side names).
-    * A non-plaintext `em` decrypts the stored bytes to a local staging file
-    * first (the format libraries need a seekable plaintext file); plaintext
-    * reads the file directly — zero overhead. */
-  def readAll(path: String, format: String, schema: StructType,
-      conf: Configuration,
-      em: EncryptionManager = PlaintextEncryptionManager)
-      (consume: InternalRow => Unit): Unit = {
-    def dispatch(p: String): Unit = format match {
-      case FileFormats.Orc => OrcIO.readAll(p, schema, conf)(consume)
-      case FileFormats.Avro => AvroIO.readAll(p, schema, conf)(consume)
-      case _ => ParquetIO.readAll(p, schema, conf)(consume)
-    }
-    if (em.isPlaintext) dispatch(path)
-    else {
-      val hp = new org.apache.hadoop.fs.Path(path)
-      val in = hp.getFileSystem(conf).open(hp)
-      val stored = try in.readAllBytes() finally in.close()
-      val tmp = java.nio.file.Files.createTempFile("graft-dec-", "." + format)
-      try {
-        java.nio.file.Files.write(tmp, em.decrypt(path, stored))
-        dispatch(tmp.toString)
-      } finally java.nio.file.Files.deleteIfExists(tmp)
-    }
-  }
+        new graft.connector.GraftFileIndex(spark, files), StructType(Nil), schema,
+        None, new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
+        Map.empty)(spark))
 
   /** One open data file of any supported encoding + its end-of-file metrics
     * (footer read for parquet/ORC; writer-side count for Avro, which has no
@@ -119,37 +85,7 @@ object DataFileIO {
   def openWriter(path: String, format: String, schema: StructType,
       idSchema: StructType, conf: Configuration,
       statModes: Map[Int, Metrics.Mode] = Map.empty,
-      props: Map[String, String] = Map.empty,
-      em: EncryptionManager = PlaintextEncryptionManager): Writer = {
-    // encrypt-on-write: the format writer produces a plaintext staging file
-    // locally; finish() reads metrics from it, transforms the bytes through
-    // the manager, and lands the stored form at `path`. Plaintext writes
-    // straight to `path` — zero overhead.
-    if (!em.isPlaintext) {
-      val tmp = java.nio.file.Files
-        .createTempFile("graft-enc-", "." + format).toString
-      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(tmp))
-      val inner = openWriter(tmp, format, schema, idSchema, conf, statModes,
-        props, PlaintextEncryptionManager)
-      return new Writer {
-        override def write(row: InternalRow): Unit = inner.write(row)
-        override def finish(): Metrics.FileMetrics = {
-          val fm = inner.finish() // metrics from the plaintext form
-          val plain = java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(tmp))
-          val stored = em.encrypt(path, plain)
-          val hp = new org.apache.hadoop.fs.Path(path)
-          val out = hp.getFileSystem(conf).create(hp, false)
-          try out.write(stored) finally out.close()
-          java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(tmp))
-          fm.copy(fileSize = stored.length.toLong)
-        }
-        override def abort(): Unit = {
-          inner.abort()
-          java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(tmp))
-        }
-      }
-    }
+      props: Map[String, String] = Map.empty): Writer = {
     val codec = compressionOf(format, props)
 
     def delete(): Unit = {

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.util.UUID
 
-/** v2 row-level deletes: staging, target matching and the library's
-  * delete entry points (reference core/.../deletes/
+/** v2 row-level deletes: staging and the library's delete entry points
+  * (which delete files apply to which data files: [[DeleteIndex]];
+  * reference core/.../deletes/
   * {PositionDeleteWriter,EqualityDeleteWriter}.java + RowDelta commit).
   * Each delete kind has one writer, run in the task that stages the file,
   * which also computes the file's manifest metrics there; the driver only
@@ -33,7 +34,7 @@ object Deletes {
     * manifest bounds (and `referenced_data_file` when the file targets
     * exactly one data file), so scan planning can attach each delete file
     * to its data files with ZERO delete-file I/O — the analogue of the
-    * reference's DeleteFileIndex per-FileScanTask matching. */
+    * reference's DeleteFileIndex per-FileScanTask matching ([[DeleteIndex]]). */
   val PathFieldId: Int = 2147483546
   val PosFieldId: Int = 2147483545
 
@@ -43,83 +44,12 @@ object Deletes {
     PathFieldId -> org.apache.spark.sql.types.StringType,
     PosFieldId -> org.apache.spark.sql.types.LongType)
 
-  /** Canonical data-file paths targeted by position-delete files (one
-    * driver-side read of the small per-commit path column). Shared by both
-    * scan paths' parquet-only guard, so the check cannot drift. */
-  def posDeleteTargets(paths: Seq[String],
-      conf: org.apache.hadoop.conf.Configuration): Set[String] = {
-    val out = scala.collection.mutable.HashSet[String]()
-    paths.foreach(p => out ++= cachedTargets(p, conf))
-    out.toSet
-  }
-
-  // Driver-side cache of delete files' target-path sets: a delete file is
-  // immutable, so one path-column read serves every subsequent scan. Only
-  // LEGACY files (written before target metadata was recorded in the
-  // manifest) ever reach this read; capped by entry count — target sets are
-  // a handful of short strings.
-  private val targetCache =
-    new java.util.LinkedHashMap[String, Set[String]](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Set[String]]): Boolean = size > 8192
-    }
-
-  private def cachedTargets(path: String,
-      conf: org.apache.hadoop.conf.Configuration): Set[String] = {
-    targetCache.synchronized {
-      val hit = targetCache.get(path)
-      if (hit != null) return hit
-    }
-    val out = scala.collection.mutable.HashSet[String]()
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("file_path",
-        org.apache.spark.sql.types.StringType)))
-    ParquetIO.readAll(path, schema, conf) { r =>
-      if (!r.isNullAt(0)) out += ParquetIO.canonPath(r.getUTF8String(0).toString)
-    }
-    val set = out.toSet
-    targetCache.synchronized { targetCache.put(path, set) }
-    set
-  }
-
-  /** The canonical target-path range a delete file's metadata pins, if any:
-    * `referenced_data_file` (DVs, single-target parquet) or the reserved
-    * path-bounds recorded at write time. */
-  private def metaTargetRange(f: DataFile): Option[(String, String)] =
-    f.referencedDataFile.map(ParquetIO.canonPath).map(p => (p, p)).orElse {
-      (f.lowerBounds.get(PathFieldId), f.upperBounds.get(PathFieldId)) match {
-        case (Some(lo: String), Some(hi: String)) => Some((lo, hi))
-        case _ => None
-      }
-    }
-
-  /** Target detection over the delete FILES: manifest metadata
-    * (referenced_data_file / path bounds lower==upper) answers single-target
-    * files with zero I/O; only legacy multi-target parquet files pay the
-    * (cached) per-file path-column read. Multi-target files WITH bounds
-    * return nothing here — callers needing exact sets use [[posIndex]]. */
-  def posDeleteTargetFiles(files: Seq[DataFile],
-      conf: org.apache.hadoop.conf.Configuration): Set[String] = {
-    val (dvs, parquet) = files.partition(_.fileFormat == FileFormats.Puffin)
-    val (known, unknown) =
-      parquet.distinctBy(_.path).partition(f => metaTargetRange(f).isDefined)
-    dvs.flatMap(_.referencedDataFile).map(ParquetIO.canonPath).toSet ++
-      known.flatMap { f =>
-        val (lo, hi) = metaTargetRange(f).get
-        if (lo == hi) Seq(lo)
-        // multi-target with bounds: exact membership needs the file read
-        else cachedTargets(f.path, conf)
-      } ++ posDeleteTargets(unknown.map(_.path), conf)
-  }
-
   /** Can an equality-delete file's keys hit rows of a data file with the
     * given (specId, partition)? Partition-global delete files (empty
     * tuple) and cross-spec pairings (tuples aren't comparable across
     * specs) always can; a tuple-carrying file under the SAME spec hits
-    * only its own partition. The semantics GraftScan.eqIndexByGroup
-    * encodes as a tuple→paths index for O(1)-per-partition task scoping;
-    * kept as the reference predicate for specs (MetaScaleSpec asserts the
-    * index agrees with it at 10k delete files). */
+    * only its own partition. [[DeleteIndex]] buckets delete files by these
+    * cases; this is the reference predicate its agreement test checks. */
   def eqDeleteCanHit(deleteSpecId: Int, deletePartition: Map[String, Any],
       dataSpecId: Int, dataPartition: Map[String, Any]): Boolean =
     deletePartition.isEmpty || deleteSpecId != dataSpecId ||
@@ -127,42 +57,6 @@ object Deletes {
       // Map == is reference-based — a raw compare detaches the key set
       // from its content-equal data partition and resurrects rows
       Tuples.equal(deletePartition, dataPartition)
-
-  /** Per-task delete-file matcher (reference DeleteFileIndex,
-    * core/.../DeleteFileIndex.java + FileScanTask.deletes()): canonical
-    * data-file path → the parquet position-delete files that can contain
-    * its positions. Exact and zero-I/O when the manifest carries
-    * `referenced_data_file` or equal path bounds; a conservative string
-    * range match for multi-target files with bounds (a superset — the
-    * executor's per-file bitmap lookup keeps correctness); legacy files
-    * without metadata fall back to one cached driver read each. */
-  def posIndex(files: Seq[DataFile],
-      conf: org.apache.hadoop.conf.Configuration): String => Seq[String] = {
-    val parquet = files.filterNot(_.fileFormat == FileFormats.Puffin)
-      .distinctBy(_.path)
-    val exact = scala.collection.mutable.HashMap[String, List[String]]()
-    val ranged = scala.collection.mutable.ArrayBuffer[(String, String, String)]()
-    def addExact(target: String, deletePath: String): Unit =
-      exact(target) = deletePath :: exact.getOrElse(target, Nil)
-    parquet.foreach { f =>
-      metaTargetRange(f) match {
-        case Some((lo, hi)) if lo == hi => addExact(lo, f.path)
-        case Some((lo, hi)) => ranged += ((f.path, lo, hi))
-        case None => cachedTargets(f.path, conf).foreach(addExact(_, f.path))
-      }
-    }
-    // INVARIANT: this range check and the one PathFieldId bound producer
-    // (PositionDeleteWriter) use the same Java String order. min/max-of-a-set
-    // plus a same-order range test is sound under ANY total order, but
-    // only while producer and consumer agree — do not migrate one side
-    // to compareUtf8 without the other (manifest bounds written by older
-    // builds would then mis-range). The writer's input-order check is a
-    // separate matter: it follows Spark's sort, which is by UTF-8 bytes.
-    // User-predicate string pruning is a different domain and IS
-    // codepoint-ordered (Exprs.ordering).
-    p => (exact.getOrElse(p, Nil) ++
-      ranged.collect { case (dp, lo, hi) if lo <= p && p <= hi => dp }).sorted
-  }
 
   /** The live position-delete FILES of a table, deduplicated at entry
     * granularity (the same delete file — or the same DV blob — can be
@@ -196,7 +90,7 @@ object Deletes {
     if (parquetFiles.nonEmpty) {
       // descriptor-backed read — no per-path driver stat calls at scale
       val base = DataFileIO.indexedDF(spark,
-        parquetFiles.distinctBy(_.path), FileFormats.Parquet,
+        parquetFiles.distinctBy(_.path),
         StructType(Seq(StructField("file_path", StringType),
           StructField("pos", LongType))))
         // null rows are dropped on the RAW columns BEFORE the canon UDF:

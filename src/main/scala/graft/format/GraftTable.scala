@@ -289,7 +289,7 @@ final class TableScan private[format] (
     * Non-empty `bins` (data-file paths covering every planned file) make
     * the scan read bin k as its k-th input partition (bin-pack
     * compaction). */
-  private[format] def read(plan: ScanPlan, withLineage: Boolean = false,
+  private[graft] def read(plan: ScanPlan, withLineage: Boolean = false,
       bins: Seq[Seq[String]] = Nil): DataFrame = {
     val df = org.apache.spark.sql.execution.datasources.v2.GraftV2Shims
       .relationDF(table.spark,

@@ -27,8 +27,6 @@ object Json {
   def elems(n: JsonNode): Iterator[JsonNode] = n.elements().asScala
 
   def getStr(n: JsonNode, f: String): String = n.get(f).asText()
-  def optStr(n: JsonNode, f: String): Option[String] =
-    Option(n.get(f)).filterNot(_.isNull).map(_.asText())
   def getLong(n: JsonNode, f: String): Long = n.get(f).asLong()
   def optLong(n: JsonNode, f: String): Option[Long] =
     Option(n.get(f)).filterNot(_.isNull).map(_.asLong())

@@ -488,9 +488,6 @@ object Model {
     write(o)
   }
 
-  def manifestFileFromJson(s: String, partTypes: Seq[(String, DataType)]): ManifestFile =
-    manifestFileFromJsonNode(parse(s), partTypes)
-
   def manifestFileFromJsonNode(n: JsonNode, partTypes: Seq[(String, DataType)]): ManifestFile = {
     val sums = Option(n.get("partition-summaries")).map { arr =>
       elems(arr).zip(partTypes.iterator).map { case (so, (_, dt)) =>

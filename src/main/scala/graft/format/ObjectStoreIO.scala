@@ -57,11 +57,6 @@ object InMemoryObjectStore extends ObjectStoreClient {
       .map(e => (e.getKey, e.getValue.bytes.length.toLong,
         e.getValue.modifiedMillis))
       .toSeq
-
-  /** Drop every object under `prefix` (test isolation). */
-  def clearPrefix(prefix: String): Unit =
-    objects.keySet().asScala.filter(_.startsWith(prefix))
-      .foreach(objects.remove)
 }
 
 /** [[FileIO]] over an [[ObjectStoreClient]]: the object-store commit path.

@@ -33,13 +33,6 @@ final case class PartitionSpec(specId: Int, fields: Seq[PartitionField]) {
       pf.name -> pf.transform.resultType(src.dataType)
     }
 
-  /** Compute the partition tuple of a row of canonical values. */
-  def partitionOf(schema: StructType, get: Int => Any): Map[String, Any] =
-    fields.map { pf =>
-      val src = FieldIds.findById(schema, pf.sourceId).get
-      pf.name -> pf.transform.apply(get(pf.sourceId), src.dataType)
-    }.toMap
-
   def toJson: JsonNode = {
     val o = Json.obj()
     o.put("spec-id", specId)

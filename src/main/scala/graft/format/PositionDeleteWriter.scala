@@ -18,7 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * order fails the task rather than write an unsorted file. The file is
   * written with the table's `write.parquet.compression-codec`, and
   * [[finish]] returns its record count, size and the canonical min and max
-  * target path (Java `String` order, see [[Deletes.posIndex]]) under
+  * target path (Java `String` order, see [[DeleteIndex.posDeletesFor]]) under
   * [[Deletes.PathFieldId]], so no one re-reads the file to commit it. The
   * file is created at the first row: a writer that sees none stages
   * nothing. */
@@ -95,8 +95,8 @@ object PositionDeleteWriter {
   /** Stage a (file_path, pos) DataFrame as sorted position-delete files of
     * `table`, uncommitted: range-partitioned on (file_path, pos) into
     * `ranges` partitions, one file per non-empty one. The files cover
-    * disjoint path ranges, so `Deletes.posIndex` attaches each only to its
-    * own targets. `ranges` = 0 leaves the count to Spark, whose adaptive
+    * disjoint path ranges, so `DeleteIndex.posDeletesFor` attaches each
+    * only to its own targets. `ranges` = 0 leaves the count to Spark, whose adaptive
     * execution coalesces a small set into one file. Null rows, which
     * readers skip, are dropped. */
   def stage(table: GraftTable, positions: DataFrame, ranges: Int = 0): Seq[DataFile] = {

@@ -191,19 +191,11 @@ final class TableOps(val location: String, explicitIo: FileIO = null) {
   }
 
   // ---- auxiliary file I/O (manifests, manifest lists) ----
-  def writeMetadataFile(name: String, content: String): String = {
-    val path = s"$metadataDir/$name"
-    io.writeString(path, content)
-    path
-  }
-
   def writeMetadataBytes(name: String, content: Array[Byte]): String = {
     val path = s"$metadataDir/$name"
     io.writeBytes(path, content)
     path
   }
-
-  def readFile(path: String): String = io.readString(path)
 
   def newManifestPath(ext: String = ".json"): String =
     s"$metadataDir/manifest-${UUID.randomUUID()}$ext"

@@ -117,9 +117,6 @@ object Similarity {
     best
   }
 
-  def nearestCentroid(vec: Seq[Float], nCentroids: Int): Int =
-    nearestOf(vec, seededCentroids(nCentroids, vec.length))
-
   /** Train IVF centroids: spherical k-means (assign by dot against
     * unit-normalized centroids — the cosine-correct variant) over a sample.
     *

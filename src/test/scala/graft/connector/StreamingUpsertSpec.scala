@@ -88,29 +88,37 @@ class StreamingUpsertSpec extends SparkSpec {
       s"scan of grp=0 planned delete files of partitions $grpVals")
   }
 
-  test("ORC-format upsert: the key re-read rides the descriptor-backed ORC reader") {
-    // the epoch's keys are re-read from the just-written data files; for
-    // an ORC table that read goes through DataFileIO.indexedDF with the
-    // ORC file format — replacement semantics must hold end to end
+  /** Two upsert epochs into a `format` table: the epoch's keys are re-read
+    * from its just-written files through the table scan, so replacement
+    * semantics must hold end to end in every data-file format. */
+  private def upsertIn(format: String): Unit = {
     wh
-    spark.sql("CREATE TABLE gu.db.osrc (id BIGINT, v STRING)")
-    spark.sql("""CREATE TABLE gu.db.osink (id BIGINT, v STRING)
-                 TBLPROPERTIES ('write.format.default'='orc',
+    spark.sql(s"CREATE TABLE gu.db.${format}src (id BIGINT, v STRING)")
+    spark.sql(s"""CREATE TABLE gu.db.${format}sink (id BIGINT, v STRING)
+                 TBLPROPERTIES ('write.format.default'='$format',
                                 'write.upsert.enabled'='true',
                                 'write.upsert.key-columns'='id')""")
-    val ckpt = Files.createTempDirectory("graft-upckpt-orc").toString
-    spark.sql("INSERT INTO gu.db.osrc VALUES (1, 'a1'), (2, 'b1')")
-    runOnce("gu.db.osrc", "gu.db.osink", ckpt)
-    spark.sql("INSERT INTO gu.db.osrc VALUES (1, 'a2'), (3, 'c1')")
-    runOnce("gu.db.osrc", "gu.db.osink", ckpt)
-    assert(spark.sql("SELECT id, v FROM gu.db.osink ORDER BY id").collect()
+    val ckpt = Files.createTempDirectory(s"graft-upckpt-$format").toString
+    spark.sql(s"INSERT INTO gu.db.${format}src VALUES (1, 'a1'), (2, 'b1')")
+    runOnce(s"gu.db.${format}src", s"gu.db.${format}sink", ckpt)
+    spark.sql(s"INSERT INTO gu.db.${format}src VALUES (1, 'a2'), (3, 'c1')")
+    runOnce(s"gu.db.${format}src", s"gu.db.${format}sink", ckpt)
+    assert(spark.sql(s"SELECT id, v FROM gu.db.${format}sink ORDER BY id").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq ==
       Seq((1L, "a2"), (2L, "b1"), (3L, "c1")))
-    val t = GraftTable.load(spark, s"$wh/db/osink")
+    val t = GraftTable.load(spark, s"$wh/db/${format}sink")
     val plan = t.newScan().planFiles()
-    assert(plan.tasks.forall(_.file.fileFormat == graft.format.FileFormats.Orc),
-      "data files must be ORC")
+    assert(plan.tasks.forall(_.file.fileFormat == format),
+      s"data files must be $format")
     assert(plan.deleteFiles.exists(_._1.content == FileContent.EqualityDeletes))
+  }
+
+  test("ORC-format upsert: the key re-read rides the descriptor-backed ORC reader") {
+    upsertIn(graft.format.FileFormats.Orc)
+  }
+
+  test("Avro-format upsert: the key re-read goes through the table scan") {
+    upsertIn(graft.format.FileFormats.Avro)
   }
 
   test("readStream initial load applies merge-on-read deletes, then streams past the consumed overwrite") {

@@ -19,7 +19,7 @@ import scala.jdk.CollectionConverters._
   * global). Each manifest entry must agree with its file: record count
   * with a read, size with a file-system stat, path bounds with the
   * canonical min and max of its rows (Java `String` order, the order
-  * `Deletes.posIndex` range-tests in), and `referenced_data_file` set
+  * `DeleteIndex.posDeletesFor` range-tests in), and `referenced_data_file` set
   * exactly when the file targets one data file. The table's rows must be
   * the expected ones. */
 class DeleteWriterSpec extends SparkSpec {
@@ -312,37 +312,35 @@ class DeleteWriterSpec extends SparkSpec {
   test("the merge-on-read delete writer accepts paths in the order Spark sorts them") {
     // `！` (U+FF01) sorts before `😀` (U+1F600) as UTF-8 bytes, Spark's
     // string order, but after it as UTF-16 code units, Java's `String`
-    // order. A merge-on-read DELETE spanning hive partitions `p=！` and
-    // `p=😀` hands its writer rows in Spark's order. The rows are sorted
-    // by Spark here: a JVM whose path encoding is ASCII cannot create
-    // such directories on the local file system.
-    val t = table("utf8-order")
-    val dir = t.locations.newDataLocation("utf8-order")
-    val (bang, smile) = (s"$dir/p=！/a.parquet", s"$dir/p=😀/b.parquet")
+    // order. A merge-on-read DELETE spanning the hive partitions `p=！` and
+    // `p=😀` of an imported layout hands its one writer task rows in
+    // Spark's order.
+    wh
+    val src = freshLoc("utf8-hive")
+    Seq((0L, "！"), (1L, "😀"), (2L, "！"), (3L, "😀")).toDF("id", "p")
+      .coalesce(1).write.partitionBy("p").parquet(src)
+    GraftWrite.importParquet(spark, s"$wh/db/utf8order", src,
+      Map("write.delete.mode" -> "merge-on-read"))
+    val t = GraftTable.load(spark, s"$wh/db/utf8order")
+    val paths = t.newScan().planFiles().tasks.map(ts => ParquetIO.canonPath(ts.file.path))
+    val (bang, smile) = (paths.find(_.contains("p=！")).get, paths.find(_.contains("p=😀")).get)
     assert(smile < bang, "Java String order puts the supplementary character first")
-    val sorted = Seq((smile, 1L), (bang, 2L), (bang, 0L)).toDF("_file", "_pos")
-      .repartition(1).sortWithinPartitions("_file", "_pos")
-    assert(sorted.as[(String, Long)].collect().toSeq ===
-      Seq((bang, 0L), (bang, 2L), (smile, 1L)), "Spark sorts by UTF-8 bytes")
-    val factory = new graft.connector.GraftDeltaBatchWrite(t).createBatchWriterFactory(
-      new org.apache.spark.sql.connector.write.PhysicalWriteInfo {
-        override def numPartitions(): Int = 1
-      })
-    val staged = sorted.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
-      val w = factory.createWriter(pid, pid.toLong)
-      rows.foreach(r => w.delete(null, r))
-      Iterator.single(w.commit())
-    }.collect().toSeq.flatMap {
-      case graft.connector.GraftDeltaWriterFactory.DeltaTaskFiles(Nil, dels, Nil) => dels
-      case other => fail(s"unexpected commit message $other")
+    val files = added(t) {
+      // one scan task reads both directories, so one writer sees both
+      withConfs("spark.sql.files.minPartitionNum" -> "1") {
+        spark.sql("DELETE FROM gdw.db.utf8order WHERE id IN (0, 1, 2)")
+      }
     }
-    assert(staged.size === 1)
-    val f = staged.head
-    assert(spark.read.parquet(f.path).as[(String, Long)].collect().toSeq ===
-      Seq((bang, 0L), (bang, 2L), (smile, 1L)))
-    assert(f.metrics.recordCount === 3L)
-    // the bounds stay in the Java String order Deletes.posIndex tests in
-    assert(f.metrics.lowerBounds(Deletes.PathFieldId) === ParquetIO.canonPath(smile))
-    assert(f.metrics.upperBounds(Deletes.PathFieldId) === ParquetIO.canonPath(bang))
+    checkEntries(files)
+    assert(files.size === 1)
+    val f = files.head
+    assert(spark.read.parquet(f.path).as[(String, Long)].collect().toSeq
+      .map { case (p, pos) => (ParquetIO.canonPath(p), pos) } ===
+      Seq((bang, 0L), (bang, 1L), (smile, 0L)))
+    // the bounds stay in the Java String order DeleteIndex.posDeletesFor tests in
+    assert(f.lowerBounds(Deletes.PathFieldId) === smile)
+    assert(f.upperBounds(Deletes.PathFieldId) === bang)
+    assert(spark.sql("SELECT id, p FROM gdw.db.utf8order").as[(Long, String)]
+      .collect().toSeq === Seq((3L, "😀")))
   }
 }

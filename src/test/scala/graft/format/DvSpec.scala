@@ -422,6 +422,28 @@ class DvSpec extends SparkSpec {
       === Actions.RewriteResult(0, 0))
   }
 
+  test("delete-file-threshold counts only the deletes that can apply to a file") {
+    // three equality deletes scoped to partition cat=a, or keyed on ids
+    // outside the cat=b file's range, must not push that file over the
+    // threshold
+    def check(name: String, deleteKey: Long => org.apache.spark.sql.DataFrame): Unit = {
+      val rows = (0L until 10L).flatMap(i => Seq((i, "a"), (i + 100L, "b")))
+      val t = GraftTable.create(spark, freshLoc(name),
+        rows.toDF("id", "cat").schema, _.identity("cat"))
+      GraftWrite.append(t, rows.toDF("id", "cat").coalesce(1))
+      def fileOfB = t.newScan().planFiles().tasks
+        .filter(_.file.partition == Map("cat" -> "b")).map(_.file.path)
+      val b = fileOfB
+      (1L to 3L).foreach(i => Deletes.deleteByEquality(t, deleteKey(i)))
+      assert(Actions.forTable(t).rewriteDataFiles(deleteFileThreshold = 3)
+        === Actions.RewriteResult(1, 1), name)
+      assert(fileOfB === b, s"$name: the cat=b file carries no delete")
+      assert(t.toDF().count() === 17L, name)
+    }
+    check("thresh-part", i => Seq((i, "a")).toDF("id", "cat"))
+    check("thresh-range", i => Seq(i).toDF("id"))
+  }
+
   test("concurrent DV commits union without lost deletes") {
     val df = (0L until 100L).map(i => (i, s"v$i")).toDF("id", "v")
     val t = GraftTable.create(spark, freshLoc("dvconc"), df.schema,

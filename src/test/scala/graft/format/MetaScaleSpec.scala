@@ -266,19 +266,20 @@ class MetaScaleSpec extends SparkSpec {
     // target detection and slice planning are pure manifest reads: zero
     // file I/O, bounded driver time for 10k vectors
     val files = back.map(_.file)
-    val (targets, targetS) = timed(
-      Deletes.posDeleteTargetFiles(files, spark.sessionState.newHadoopConf()))
+    val conf = spark.sessionState.newHadoopConf()
+    val (targets, targetS) = timed(files.flatMap(DeleteIndex.targetsOf(_, conf)).toSet)
     assert(targets.size === 10000)
     val (slices, sliceS) = timed(Dvs.slicesOf(files))
     assert(slices.size === 10000)
     // per-TASK attachment bound: with 10k DVs live, a task's delete scope
     // is exactly ITS file's one slice — executor delete I/O is one ranged
-    // read per task, not O(total DV bytes) per executor (the scan builds
-    // this same index in GraftScan.posScopeOf, zero file I/O for DVs)
+    // read per task, not O(total DV bytes) per executor (the scan asks
+    // this same index per task, zero file I/O for DVs)
     val (scopeS) = {
       val t0 = System.nanoTime()
-      val dvByTarget = slices.groupBy(_.referenced)
-      val parquetOf = Deletes.posIndex(files, spark.sessionState.newHadoopConf())
+      val index = DeleteIndex(back.map(e => (e.file, e.sequenceNumber)), schema, conf)
+      val dvByTarget = (p: String) => index.posDeletesFor(p).dvs
+      val parquetOf = (p: String) => index.posDeletesFor(p).paths
       (0 until 10000).foreach { i =>
         val p = ParquetIO.canonPath(s"data/f-$i.parquet")
         assert(dvByTarget(p).size === 1)
