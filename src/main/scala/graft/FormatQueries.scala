@@ -389,7 +389,7 @@ object FormatQueries {
     // snapshot metadata table: operations + record counts are deterministic
     "q68_snapshots_meta" -> ((s, dir) => {
       val t = ordersTwoSnapshots(s, dir)
-      MetaTables.snapshots(t)
+      MetaTables(t, "snapshots")
         .select(col("snapshot_id"), col("operation"),
           element_at(col("summary"), "added-records").cast(LongType).as("added_records"))
         .orderBy(col("snapshot_id"))

@@ -49,24 +49,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     case MetaSuffix(base, metaName) =>
       val bi = Identifier.of(ident.namespace(), base)
       if (!GraftTable.exists(tableDir(bi))) throw new NoSuchTableException(ident)
-      val t = GraftTable.load(spark, tableDir(bi))
-      // file-scale relations get a distributed DSv2 batch (executors parse
-      // manifests); snapshot-log-scale ones stay LocalRelations
-      MetaTables.distributedScanInputs(t, metaName) match {
-        case Some((manifests, spec, schema)) =>
-          MetaScanTable(ident.toString, manifests, spec, schema)
-        case None if metaName.equalsIgnoreCase("position_deletes") =>
-          // delete-state-scale rows (never driver-collected): one task per
-          // delete file / DV blob
-          val files = graft.format.Deletes.posDeleteFilesOf(t)
-          val (dvFiles, pq) =
-            files.partition(_.fileFormat == graft.format.FileFormats.Puffin)
-          PosDeleteScanTable(ident.toString,
-            pq.map(_.path).distinct.sorted, graft.format.Dvs.slicesOf(dvFiles),
-            graft.format.HadoopFileIO.broadcastConf(spark,
-              spark.sessionState.newHadoopConf()))
-        case None => RowsTable(ident.toString, MetaTables(t, metaName))
-      }
+      MetaTables.table(GraftTable.load(spark, tableDir(bi)), ident.toString, metaName)
     case _ =>
       if (GraftTable.exists(tableDir(ident)))
         new GraftSparkTable(spark, GraftTable.load(spark, tableDir(ident)), ident.toString)

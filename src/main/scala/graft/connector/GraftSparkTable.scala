@@ -1876,15 +1876,15 @@ final case class PosDeleteSource(paths: Seq[String],
   extends Serializable
 
 /** Per-executor cache of position-delete sets: delete sources → (canonical
-  * data-file path → roaring bitmap of dead positions). Bitmaps keep a
+  * data-file path → roaring bitmap of dead positions), decoded by
+  * [[graft.format.PositionDeleteReader]]. Bitmaps keep a
   * 100M-row delete at tens of MB (vs 800 MB of sorted longs) and probe in
   * ~O(1); DV blobs load with one ranged read each and OR into the same
   * per-file map as any legacy parquet positions (union semantics — see
   * [[graft.format.Dvs]]). Budget ~512 MB of serialized-size bytes, the
   * same unit as DeleteKeyCache. */
 object PosDeleteCache {
-  import graft.format.{Dvs, DvSlice, ParquetIO}
-  import org.apache.spark.sql.types.{StructField, StructType}
+  import graft.format.{DvSlice, PositionDeleteReader}
   import org.roaringbitmap.longlong.Roaring64NavigableMap
 
   /** Shared read-only empty set for files with no live deletes. */
@@ -1897,28 +1897,7 @@ object PosDeleteCache {
   def get(paths: Seq[String], dvs: Seq[DvSlice],
       conf: org.apache.hadoop.conf.Configuration): Map[String, Roaring64NavigableMap] =
     cache.get((paths ++ dvs.map(d => s"${d.path}@${d.offset}")).mkString("\n"))(
-      load(paths, dvs, conf))
-
-  private def load(paths: Seq[String], dvs: Seq[DvSlice],
-      conf: org.apache.hadoop.conf.Configuration): Map[String, Roaring64NavigableMap] = {
-    val schema = StructType(Seq(
-      StructField("file_path", org.apache.spark.sql.types.StringType),
-      StructField("pos", LongType)))
-    val byFile = scala.collection.mutable.HashMap[String, Roaring64NavigableMap]()
-    def setOf(f: String): Roaring64NavigableMap =
-      byFile.getOrElseUpdate(f, new Roaring64NavigableMap())
-    // the spec fixes position-delete column names, so absence means a
-    // corrupt/foreign file — null-filling would resurrect its deletes
-    // (requireAll validates against the footer the reader already loads)
-    paths.foreach(p => ParquetIO.readAll(p, schema, conf,
-        requireAll = true, what = "position-delete file") { row =>
-      if (!row.isNullAt(0) && !row.isNullAt(1))
-        setOf(ParquetIO.canonPath(row.getUTF8String(0).toString))
-          .addLong(row.getLong(1))
-    })
-    dvs.foreach(s => setOf(s.referenced).or(Dvs.read(s.path, s.offset, s.length, conf)))
-    byFile.toMap
-  }
+      PositionDeleteReader.read(paths, dvs, conf))
 }
 
 /** One scan group's delete config: the equality key sets and position

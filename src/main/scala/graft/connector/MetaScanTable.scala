@@ -1,6 +1,7 @@
 package graft.connector
 
 import graft.format.MetaTables.ManifestReadSpec
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
@@ -12,17 +13,17 @@ import scala.jdk.CollectionConverters._
 
 /** One scan task: a slice of manifests to parse (reference
   * core/.../DataFilesTable.java ManifestReadTask — one task per manifest;
-  * we pack a few per task so a 10⁵-manifest table doesn't schedule 10⁵
+  * we pack several per task so a 10⁵-manifest table doesn't schedule 10⁵
   * tiny tasks). Carries (path, specId) pairs only — entry rows are parsed
   * executor-side, never materialized on the driver. */
 final case class ManifestSlicePartition(slice: Seq[(String, Int)])
   extends InputPartition
 
 /** DSv2 metadata table whose rows SCALE WITH DATA FILES (`t$files`,
-  * `t$entries`, `t$all_data_files`, `t$all_entries`): the driver plans one
-  * InputPartition per manifest group; executors parse manifest JSON into
-  * rows. Contrast [[RowsTable]] (snapshots/history/…), whose row count is
-  * the snapshot-log size and stays a LocalRelation by design. */
+  * `t$entries`, `t$data_files`, `t$all_*`, …): the driver plans manifest
+  * groups ([[MetaScanTable.fanOut]]); executors parse manifests into rows.
+  * Contrast [[RowsTable]] (snapshots/history/…), whose row count is the
+  * snapshot-log size. Built by [[graft.format.MetaTables.table]]. */
 final case class MetaScanTable(ident: String,
     manifests: Seq[(String, Int)],
     spec: ManifestReadSpec,
@@ -39,20 +40,27 @@ final case class MetaScanTable(ident: String,
         override def readSchema(): StructType = tableSchema
         override def description(): String = s"graft-meta $ident"
         override def toBatch: Batch = new Batch {
-          override def planInputPartitions(): Array[InputPartition] = {
-            // one manifest per task up to a fan-out cap, then round-robin:
-            // a wide table fans out across the cluster without scheduling
-            // 10⁵ one-manifest tasks
-            val slices = math.max(1, math.min(manifests.size, 64))
-            val groups = Array.fill(slices)(Seq.newBuilder[(String, Int)])
-            manifests.zipWithIndex.foreach { case (m, i) => groups(i % slices) += m }
-            groups.map(g => ManifestSlicePartition(g.result()): InputPartition)
-          }
+          override def planInputPartitions(): Array[InputPartition] =
+            MetaScanTable.fanOut(manifests)
+              .map(g => ManifestSlicePartition(g): InputPartition).toArray
           override def createReaderFactory(): PartitionReaderFactory =
             MetaScanReaderFactory(spec, tableSchema)
         }
       }
     }
+}
+
+object MetaScanTable {
+  /** The fan-out of every metadata scan: `items` dealt round-robin over
+    * min(n, max(1, 2 × defaultParallelism)) tasks, so a wide table spreads
+    * across the cluster without scheduling one task per item. */
+  def fanOut[A](items: Seq[A]): Seq[Seq[A]] = {
+    val n = math.min(items.size,
+      math.max(1, 2 * SparkSession.active.sparkContext.defaultParallelism))
+    val groups = Array.fill(n)(Seq.newBuilder[A])
+    items.zipWithIndex.foreach { case (x, i) => groups(i % n) += x }
+    groups.map(_.result()).toSeq
+  }
 }
 
 final case class MetaScanReaderFactory(spec: ManifestReadSpec,

@@ -1,6 +1,6 @@
 package graft.connector
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
@@ -10,18 +10,18 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import java.util.{Set => JSet}
 import scala.jdk.CollectionConverters._
 
-/** Read-only DSv2 table over driver-side rows — how the metadata tables
-  * that are not read by a distributed scan surface in SQL
-  * (`graft.db.\`t$snapshots\``). The reference serves these from
-  * StaticDataTask rows (core/.../StaticDataTask.java); Spark's `LocalScan`
-  * turns ours into a LocalRelation. The snapshot-log-scale tables are
-  * built on the driver and launch no job; `$partitions` is a distributed
-  * aggregate over the files relation, so `rows()` runs that job and
-  * collects its result to the driver. */
-final case class RowsTable(ident: String, df: DataFrame) extends Table with SupportsRead {
+/** Read-only DSv2 table over rows built on the driver when the scan is
+  * planned: the metadata tables whose row count is the snapshot-log or
+  * manifest-list size (`t$snapshots`, `t$history`, …; reference
+  * core/.../StaticDataTask.java), and `t$partitions`, whose `load` runs
+  * the aggregate over the `files` relation and brings back one row per
+  * partition. Spark's `LocalScan` plans it as a local table scan.
+  * Built by [[graft.format.MetaTables.table]]. */
+final case class RowsTable(ident: String, tableSchema: StructType,
+    load: () => Seq[Row]) extends Table with SupportsRead {
 
   override def name(): String = ident
-  override def schema(): StructType = df.schema
+  override def schema(): StructType = tableSchema
   override def capabilities(): JSet[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
 
@@ -29,11 +29,10 @@ final case class RowsTable(ident: String, df: DataFrame) extends Table with Supp
     new ScanBuilder {
       override def build(): Scan = new LocalScan {
         override def rows(): Array[InternalRow] = {
-          val enc = ExpressionEncoder(RowEncoder.encoderFor(df.schema))
-          val ser = enc.createSerializer()
-          df.collect().map(r => ser(r).copy())
+          val ser = ExpressionEncoder(RowEncoder.encoderFor(tableSchema)).createSerializer()
+          load().map(r => ser(r).copy()).toArray
         }
-        override def readSchema(): StructType = df.schema
+        override def readSchema(): StructType = tableSchema
       }
     }
 }

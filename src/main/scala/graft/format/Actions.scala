@@ -197,12 +197,9 @@ final class Actions(t: GraftTable) {
     val liveAfterCanon =
       plan.tasks.map(ts => ParquetIO.canonPath(ts.file.path)).toSet -- delCanon
     val hconf = t.spark.sessionState.newHadoopConf()
-    val posEntries = plan.deleteFiles
-      .filter(_._1.content == FileContent.PositionDeletes).map(_._1)
-      .distinctBy(f => (f.path, f.referencedDataFile))
     // a delete file is dangling when every target of every entry (one per
     // puffin blob) is gone
-    val danglingPos = posEntries.groupBy(_.path).collect {
+    val danglingPos = plan.posDeleteFiles.groupBy(_.path).collect {
       case (p, es) if es.forall(e =>
         DeleteIndex.targetsOf(e, hconf).forall(tp => !liveAfterCanon.contains(tp))) => p
     }.toSet
@@ -307,9 +304,7 @@ final class Actions(t: GraftTable) {
   def rewritePositionDeletes(targetSizeBytes: Long = 32L * 1024 * 1024): RewriteResult = {
     import org.apache.spark.sql.functions.{col, udf}
     val plan = t.newScan().planFiles()
-    val posEntries = plan.deleteFiles
-      .filter(_._1.content == FileContent.PositionDeletes)
-      .map(_._1).distinctBy(f => (f.path, f.referencedDataFile))
+    val posEntries = plan.posDeleteFiles
     val distinctPaths = posEntries.map(_.path).distinct
     val dvMode = Dvs.enabled(t.metadata)
     val totalBytes = posEntries.distinctBy(_.path).map(_.fileSizeInBytes).sum
@@ -327,10 +322,14 @@ final class Actions(t: GraftTable) {
     val spark = t.spark
     val liveB = spark.sparkContext.broadcast(
       plan.tasks.map(ts => ParquetIO.canonPath(ts.file.path)).toSet)
-    val live = udf((s: String) =>
-      s != null && liveB.value.contains(ParquetIO.canonPath(s)))
-    val positions = Deletes.positionsDF(spark, posEntries)
+    val live = udf((s: String) => liveB.value.contains(s))
+    // the planned files read through the `$position_deletes` table, whose
+    // paths are canonical
+    val positions = org.apache.spark.sql.execution.datasources.v2.GraftV2Shims
+      .relationDF(spark, graft.connector.PosDeleteScanTable.of(t,
+        s"${t.location}$$position_deletes", posEntries))
       .filter(live(col("file_path"))) // dangling targets drop here
+      .select("file_path", "pos")
     val newDeletes =
       if (dvMode) Dvs.stageFromPositions(t, positions, partitions = nOut)
       else PositionDeleteWriter.stage(t, positions, nOut)
@@ -556,10 +555,10 @@ final class Actions(t: GraftTable) {
 
   /** Verify every live file's recorded `file_size_in_bytes` against the
     * store — one distributed stat sweep, mismatches collected (tiny by
-    * construction). Scan planning TRUSTS manifest sizes for splits
-    * (DataFileIO.indexedDF; same contract as the reference's manifests):
-    * an UNDERSTATED size silently truncates the read — for delete files
-    * that means deleted rows resurrect — so run this after ingesting
+    * construction). Scan planning TRUSTS manifest sizes for data-file
+    * splits (graft.connector.GraftFileIndex; same contract as the
+    * reference's manifests): an UNDERSTATED size silently truncates the
+    * read, so run this after ingesting
     * external or legacy manifests, where sizes weren't produced by this
     * library's writers. `actual` is -1 for files missing from the store;
     * puffin DV entries compare the recorded blob end (offset+length)
@@ -609,7 +608,7 @@ final class Actions(t: GraftTable) {
     val before = m.snapshots.size
     // allFiles = data AND delete files (parquet deletes, puffin DVs):
     // expiry must reclaim every newly unreferenced kind
-    val beforeFiles = MetaTables.allFiles(t).select("file_path").as[String]
+    val beforeFiles = MetaTables(t, "all_files").select("file_path").as[String]
     // collectOrphans = false: the commit transform must not re-read every
     // kept manifest on the driver inside the retry loop when the diff
     // below already runs distributed; the returned paths are then just
@@ -618,7 +617,7 @@ final class Actions(t: GraftTable) {
     val (updated, statOrphans) =
       Commits.expireSnapshots(t, olderThanMillis, retainLast,
         collectOrphans = false)
-    val afterFiles = MetaTables.allFiles(t).select("file_path").as[String]
+    val afterFiles = MetaTables(t, "all_files").select("file_path").as[String]
     val orphaned = beforeFiles.except(afterFiles).collect()
     orphaned.foreach(t.ops.io.deleteIfExists)
     statOrphans.foreach(t.ops.io.deleteIfExists)
@@ -657,7 +656,7 @@ final class Actions(t: GraftTable) {
       // parse manifests; reference RemoveOrphanFilesAction builds validFileDF
       // the same way) — Deleted-status entries stay valid here, matching the
       // conservative rule: only files NO manifest mentions are orphans
-      val valid = MetaTables.allEntries(t).select(col("file_path").as("path"))
+      val valid = MetaTables(t, "all_entries").select(col("file_path").as("path"))
       actual.filter(col("mtime") < olderThanMillis)
         .join(valid, Seq("path"), "left_anti")
         .select("path").as[String].collect().sorted.toSeq

@@ -10,34 +10,12 @@ import org.apache.spark.sql.types.StructType
   * outputs). Parquet position-delete files have their own writer,
   * [[PositionDeleteWriter]], with the same codec choice
   * ([[compressionOf]]). Table reads, compaction's included, go through
-  * the DSv2 scan instead; delete-key loading stays parquet-only since
-  * delete files are always parquet. Mirrors the reference's FileFormat
-  * dispatch in GenericReader/FileAppenderFactory (api/.../FileFormat.java).
+  * the DSv2 scan instead; delete files, always parquet, are read by
+  * [[ParquetIO]] ([[PositionDeleteReader]] for position deletes). Mirrors
+  * the reference's FileFormat dispatch in
+  * GenericReader/FileAppenderFactory (api/.../FileFormat.java).
   */
 object DataFileIO {
-
-  /** Metadata-fed multi-file parquet read: `spark.read.parquet(paths:_*)`
-    * existence-checks every ROOT path on the driver at analysis time —
-    * thousands of live files mean thousands of stat calls (HEADs, on an
-    * object store) before the first byte of data. Sizes are already
-    * committed in the manifests, so read through the descriptor-backed
-    * FileIndex instead — the same index the DSv2 scan uses.
-    * `schema` is the file-side (id-stripped) read schema; Spark's
-    * `_metadata` columns stay available. Descriptor sizes are TRUSTED for
-    * split planning (a row group past the recorded length is skipped) —
-    * the same contract the reference's manifests carry for
-    * file_size_in_bytes. An UNDERSTATED size therefore silently truncates
-    * the read (for delete files: deleted rows resurrect); sizes written by
-    * this library come from the real footer/stat, and externally ingested
-    * manifests can be checked with `Actions.verifyFileSizes` /
-    * `system.verify_file_sizes` before first use. */
-  def indexedDF(spark: org.apache.spark.sql.SparkSession,
-      files: Seq[DataFile], schema: StructType): org.apache.spark.sql.DataFrame =
-    spark.baseRelationToDataFrame(
-      org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-        new graft.connector.GraftFileIndex(spark, files), StructType(Nil), schema,
-        None, new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
-        Map.empty)(spark))
 
   /** One open data file of any supported encoding + its end-of-file metrics
     * (footer read for parquet/ORC; writer-side count for Avro, which has no

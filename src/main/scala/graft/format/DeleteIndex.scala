@@ -26,7 +26,8 @@ final case class PosScope(paths: Seq[String], dvs: Seq[DvSlice])
   * [[Deletes.eqDeleteCanHit]] (same-spec tuples by content; empty tuples
   * and cross-spec pairs stay conservative) and [[Deletes.eqBoundsCanHit]]
   * (key-range overlap), exactly: the tuple buckets and the interval index
-  * only spare the sweep over every live file. Position deletes apply by
+  * ([[EqRangeIndex]], exact under the same rules) only spare the sweep
+  * over every live file. Position deletes apply by
   * target path at any sequence number (paths are never reused): exact from
   * `referenced_data_file` or equal path bounds, a path-range superset for
   * multi-target files, and one cached read for legacy files without target
@@ -138,19 +139,18 @@ object DeleteIndex {
 
     def collect(data: DataFile, seq: Long,
         out: scala.collection.mutable.Builder[DataFile, Seq[DataFile]]): Unit = {
+      // the interval index answers exactly what the sweep's bounds check does
       val candidates = ranges match {
         case Some((idx, byPath)) => idx.candidatesFor(data).map(byPath)
-        case None => entries
+        case None => entries.filter(e => Deletes.eqBoundsCanHit(e._1, data, schema))
       }
-      candidates.foreach { case (d, s) =>
-        if (s > seq && Deletes.eqBoundsCanHit(d, data, schema)) out += d
-      }
+      candidates.foreach { case (d, s) => if (s > seq) out += d }
     }
   }
 
   /** Every canonical data-file path position-delete file or DV entry `f`
     * targets, exactly: from manifest metadata when it pins one target, else
-    * one cached read of the file's path column. */
+    * one cached decode of the file ([[PositionDeleteReader]]). */
   def targetsOf(f: DataFile, conf: Configuration): Set[String] =
     if (f.fileFormat == FileFormats.Puffin)
       f.referencedDataFile.map(ParquetIO.canonPath).toSet
@@ -171,7 +171,7 @@ object DeleteIndex {
     }
 
   // Driver-side cache of delete files' target-path sets: a delete file is
-  // immutable, so one path-column read serves every later plan. Only
+  // immutable, so one decode serves every later plan. Only
   // multi-target and LEGACY files (written before target metadata was
   // recorded in the manifest) reach this read; capped by entry count —
   // target sets are a handful of short strings.
@@ -186,13 +186,8 @@ object DeleteIndex {
       val hit = targetCache.get(path)
       if (hit != null) return hit
     }
-    val out = scala.collection.mutable.HashSet[String]()
-    val schema = StructType(Seq(org.apache.spark.sql.types.StructField("file_path",
-      org.apache.spark.sql.types.StringType)))
-    ParquetIO.readAll(path, schema, conf) { r =>
-      if (!r.isNullAt(0)) out += ParquetIO.canonPath(r.getUTF8String(0).toString)
-    }
-    val set = out.toSet
+    // keysIterator: a keySet view would pin the decoded bitmaps in the cache
+    val set = PositionDeleteReader.read(Seq(path), Nil, conf).keysIterator.toSet
     targetCache.synchronized { targetCache.put(path, set) }
     set
   }

@@ -1,7 +1,7 @@
 package graft.format
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import java.util.UUID
 
 /** v2 row-level deletes: staging and the library's delete entry points
@@ -57,76 +57,6 @@ object Deletes {
       // Map == is reference-based — a raw compare detaches the key set
       // from its content-equal data partition and resurrects rows
       Tuples.equal(deletePartition, dataPartition)
-
-  /** The live position-delete FILES of a table, deduplicated at entry
-    * granularity (the same delete file — or the same DV blob — can be
-    * planned through several manifests after rewrites). */
-  def posDeleteFilesOf(t: GraftTable): Seq[DataFile] =
-    t.newScan().planFiles().deleteFiles
-      .filter(_._1.content == FileContent.PositionDeletes).map(_._1)
-      .distinctBy(f => (f.path, f.referencedDataFile))
-
-  /** All (canonical file_path, pos) pairs of a mixed set of position-delete
-    * files as one DataFrame: parquet files read through Spark's source; DV
-    * blobs expand executor-side from their bitmaps (one task per blob).
-    * `withSource` appends a canonical `delete_file_path` column (the
-    * position_deletes metadata-table shape). */
-  def positionsDF(spark: SparkSession, files: Seq[DataFile],
-      withSource: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    // null rows are pre-filtered on the raw columns (PosDeleteCache skips
-    // them the same way executor-side), so canon only ever sees non-null
-    // input — declared non-nullable so the downstream join's inferred
-    // isnotnull(key) folds away instead of re-evaluating the UDF in a
-    // pushed-down filter (the null guard stays as defense in depth)
-    val canon = udf((s: String) => if (s == null) null else ParquetIO.canonPath(s))
-      .asNonNullable()
-    val (dvs, parquetFiles) = files.partition(_.fileFormat == FileFormats.Puffin)
-    val out = StructType(Seq(StructField("file_path", StringType),
-      StructField("pos", LongType)) ++
-      (if (withSource) Seq(StructField("delete_file_path", StringType)) else Nil))
-    val parts = Seq.newBuilder[DataFrame]
-    if (parquetFiles.nonEmpty) {
-      // descriptor-backed read — no per-path driver stat calls at scale
-      val base = DataFileIO.indexedDF(spark,
-        parquetFiles.distinctBy(_.path),
-        StructType(Seq(StructField("file_path", StringType),
-          StructField("pos", LongType))))
-        // null rows are dropped on the RAW columns BEFORE the canon UDF:
-        // filtering the projected alias instead pushes down as
-        // isnotnull(UDF(file_path)) and evaluates the UDF twice per row
-        // (filter + project — the class QueriesSpec's plan lint catches); canon is null
-        // exactly when its input is, so the row sets are identical
-        .filter(col("file_path").isNotNull && col("pos").isNotNull)
-        .select(Seq(canon(col("file_path")).as("file_path"), col("pos")) ++
-          (if (withSource)
-            Seq(canon(col("_metadata.file_path")).as("delete_file_path"))
-          else Nil): _*)
-      parts += base
-    }
-    val slices = Dvs.slicesOf(dvs)
-    if (slices.nonEmpty) {
-      val sconf = HadoopFileIO.broadcastConf(spark, spark.sessionState.newHadoopConf())
-      val rdd = spark.sparkContext
-        .parallelize(slices, math.max(1, slices.size))
-        .flatMap { s =>
-          val src = ParquetIO.canonPath(s.path)
-          val it = Dvs.read(s.path, s.offset, s.length, sconf.value.value).getLongIterator
-          new Iterator[Row] {
-            override def hasNext: Boolean = it.hasNext
-            override def next(): Row =
-              if (withSource) Row(s.referenced, it.next(), src)
-              else Row(s.referenced, it.next())
-          }
-        }
-      parts += spark.createDataFrame(rdd, out)
-    }
-    val built = parts.result()
-    if (built.isEmpty) spark.createDataFrame(
-      new java.util.ArrayList[Row](), out)
-    else built.reduce(_ unionByName _)
-  }
 
   /** Delete specific row positions. `positions`: (file_path, pos) — use the
     * values of the `_file` / `_pos` metadata columns of a table scan
@@ -324,13 +254,11 @@ object Deletes {
   * is what keeps a composite key useful when no single key is selective
   * (e.g. `(tenant_id, user_id)` where both ranges overlap heavily across
   * files but rarely together): best-single-key indexing degrades to a
-  * near-total superset there, which upstream also blows past the exact
-  * re-check's candidate cap — defeating the one pre-filter meant to keep
-  * that path affordable.
+  * near-total superset there.
   *
-  * The result is still a conservative SUPERSET: callers re-check
-  * survivors with [[Deletes.eqBoundsCanHit]] for full exactness, so
-  * using the index can never change which deletes apply. Files the range
+  * The result is EXACT: it is the set [[Deletes.eqBoundsCanHit]] admits,
+  * under the same null and range rules, so callers need no re-check
+  * (DeleteIndexSpec compares the two on random plans). Files the range
   * logic cannot constrain at all (no indexable key) are always returned;
   * within a group, files whose key may contain nulls are admitted
   * whenever the data file may hold nulls too. */
@@ -342,8 +270,8 @@ final class EqRangeIndex private (
   import EqRangeIndex.IdGroup
 
   /** Paths of delete files whose every indexed key range may intersect
-    * `data`'s (plus every unconstrainable file). Superset of the exact
-    * multi-key answer; sorted for deterministic planning. */
+    * `data`'s (plus every unconstrainable file): exactly the files
+    * [[Deletes.eqBoundsCanHit]] admits; sorted for deterministic planning. */
   def candidatesFor(data: DataFile): Seq[String] = {
     val out = Seq.newBuilder[String]
     out ++= always

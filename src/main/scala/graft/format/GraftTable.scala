@@ -18,6 +18,13 @@ final case class ScanPlan(
     filesTotal: Long,
     filesScanned: Int) {
   def files: Seq[DataFile] = tasks.map(_.file)
+
+  /** The plan's live position-delete files and DV blobs, one entry each:
+    * the same file or blob can be planned through several manifests after
+    * rewrites. */
+  def posDeleteFiles: Seq[DataFile] =
+    deleteFiles.map(_._1).filter(_.content == FileContent.PositionDeletes)
+      .distinctBy(f => (f.path, f.referencedDataFile))
 }
 
 /** Snapshot-isolated, refinable table scan (reference api/.../TableScan.java:

@@ -1,26 +1,37 @@
 package graft.format
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import graft.connector.{MetaScanTable, PosDeleteScanTable, RowsTable}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.connector.catalog.Table
+import org.apache.spark.sql.execution.datasources.v2.GraftV2Shims
 import org.apache.spark.sql.types._
-import scala.jdk.CollectionConverters._
 
-/** Metadata tables — the reference's 9 scannable metadata relations
+/** Metadata tables — the reference's scannable metadata relations
   * (core/.../MetadataTableType.java:24-34; SnapshotsTable, HistoryTable:36-43,
   * PartitionsTable:39-43, ManifestsTable, DataFilesTable,
   * ManifestEntriesTable, AllDataFilesTable, AllEntriesTable,
-  * AllManifestsTable).
+  * AllManifestsTable) plus the later refs, statistics, data/delete-file
+  * splits and position_deletes.
   *
-  * Two tiers, mirroring the reference split between StaticDataTask and
-  * ManifestReadTask (core/.../DataFilesTable.java):
-  *  - snapshots / history / manifests / all_manifests are driver-side
-  *    LocalRelations: their row count is the snapshot-log / manifest-list
-  *    size, which stays tiny even on a 100 TB table.
-  *  - files / entries / all_data_files / all_entries / partitions scale
-  *    with the number of DATA FILES (millions at 100 TB), so their rows are
-  *    parsed executor-side: the driver reads only the manifest LIST (one
-  *    descriptor per manifest), and each executor task parses a slice of
-  *    manifests into rows ([[manifestRows]]). `partitions` is a distributed
-  *    aggregation over the distributed `files` relation.
+  * Like the reference, which serves each metadata table as one `Table`
+  * that both its Java API and its Spark source scan, [[table]] is the one
+  * builder of every relation: `GraftCatalog.loadTable` returns it for
+  * `t$name`, and [[apply]] reads it as a DataFrame. Three kinds, mirroring
+  * the reference split between StaticDataTask and ManifestReadTask
+  * (core/.../DataFilesTable.java):
+  *  - snapshots / history / manifests / all_manifests / refs / statistics
+  *    are [[RowsTable]]s over rows built on the driver: their row count is
+  *    the snapshot-log / manifest-list size, which stays tiny even on a
+  *    100 TB table.
+  *  - files / entries / data_files / delete_files and their `all_*` forms
+  *    scale with the number of DATA FILES (millions at 100 TB): a
+  *    [[MetaScanTable]] whose driver reads only the manifest LIST (one
+  *    descriptor per manifest) and whose tasks parse manifests into rows
+  *    ([[manifestRows]]).
+  *  - position_deletes scales with the delete state: a
+  *    [[PosDeleteScanTable]] whose tasks decode the live delete files.
+  * `partitions` is a distributed aggregation over the `files` relation
+  * (SQL reads it as a [[RowsTable]] over that aggregate's result).
   *
   * Like the reference's AllDataFilesTable/AllEntriesTable, the `all_*`
   * relations may contain duplicate rows: a file added in one snapshot and
@@ -30,57 +41,90 @@ import scala.jdk.CollectionConverters._
   */
 object MetaTables {
 
-  def apply(table: GraftTable, name: String): DataFrame = name.toLowerCase match {
-    case "snapshots" => snapshots(table)
-    case "history" => history(table)
-    case "manifests" => manifests(table)
-    case "files" => files(table)
-    case "entries" => entries(table)
-    case "partitions" => partitions(table)
-    case "all_data_files" => allDataFiles(table)
-    case "all_entries" => allEntries(table)
-    case "all_manifests" => allManifests(table)
-    case "refs" => refs(table)
-    case "statistics" => statistics(table)
-    case "data_files" => dataFiles(table)
-    case "delete_files" => deleteFilesTable(table)
-    case "all_files" => allFiles(table) // data + delete files, all snapshots
-    case "all_delete_files" => allDeleteFiles(table)
-    case "position_deletes" => positionDeletes(table)
-    case other => throw new IllegalArgumentException(s"unknown metadata table $other")
+  /** Every metadata-table name, as `t$name` spells it. */
+  val Names: Seq[String] = Seq("snapshots", "history", "manifests",
+    "all_manifests", "refs", "statistics", "files", "entries", "data_files",
+    "delete_files", "all_data_files", "all_entries", "all_files",
+    "all_delete_files", "position_deletes", "partitions")
+
+  /** `t$name` as a DataFrame: the relation [[table]] builds, read through
+    * DSv2 like any table (filter and column pruning included). */
+  def apply(t: GraftTable, name: String): DataFrame = name.toLowerCase match {
+    // `t$partitions`: record_count/file_count per partition (reference
+    // PartitionsTable.java:39-43) — partial aggregation runs in the
+    // `files` scan's tasks; one row per partition value reaches the result
+    case "partitions" =>
+      import org.apache.spark.sql.functions._
+      apply(t, "files").groupBy(col("partition"))
+        .agg(sum(col("record_count")).as("record_count"),
+          count(lit(1)).as("file_count"))
+    case n => GraftV2Shims.relationDF(t.spark, table(t, s"${t.location}$$$n", n))
   }
 
-  private def df(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
-    spark.createDataFrame(rows.asJava, schema)
+  /** The one builder of metadata relation `name` of `t`, named `ident`. */
+  def table(t: GraftTable, ident: String, name: String): Table = {
+    def local(schema: StructType, rows: Seq[Row]): Table = RowsTable(ident, schema, () => rows)
+    name.toLowerCase match {
+      case "snapshots" => local(snapshotSchema, snapshots(t))
+      case "history" => local(historySchema, history(t))
+      case "manifests" => local(manifestSchema, manifestRowsOf(t, t.currentSnapshot.toSeq))
+      case "all_manifests" => local(manifestSchema, manifestRowsOf(t, t.metadata.snapshots))
+      case "refs" => local(refsSchema, refs(t))
+      case "statistics" => local(statisticsSchema, statistics(t))
+      case "position_deletes" =>
+        PosDeleteScanTable.of(t, ident, t.newScan().planFiles().posDeleteFiles)
+      case "partitions" =>
+        val agg = apply(t, "partitions")
+        RowsTable(ident, agg.schema, () => agg.collect().toSeq)
+      case n @ ("files" | "entries" | "all_data_files" | "all_entries" |
+                "data_files" | "delete_files" | "all_files" | "all_delete_files") =>
+        val filesOnly = n != "entries" && n != "all_entries"
+        val snaps =
+          if (n.startsWith("all_")) t.metadata.snapshots else t.currentSnapshot.toSeq
+        // data and delete files live in separate manifests, so the
+        // content split is a smaller manifest list, not a row filter
+        // (all_data_files = DATA only, like the reference AllDataFilesTable)
+        val manifests = manifestsOf(t, snaps).filter(mf => n match {
+          case "data_files" | "all_data_files" => mf.content == FileContent.Data
+          case "delete_files" | "all_delete_files" => mf.content != FileContent.Data
+          case _ => true
+        })
+        MetaScanTable(ident, manifests.map(mf => (mf.path, mf.specId)),
+          readSpec(t, manifests, filesOnly), if (filesOnly) fileSchema else entrySchema)
+      case other => throw new IllegalArgumentException(
+        s"unknown metadata table $other (one of ${Names.mkString(", ")})")
+    }
+  }
 
   /** `t$snapshots` (reference SnapshotsTable.java:30-89). */
-  def snapshots(t: GraftTable): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("committed_at", TimestampType),
-      StructField("snapshot_id", LongType),
-      StructField("parent_id", LongType),
-      StructField("operation", StringType),
-      StructField("manifest_list", StringType),
-      StructField("summary", MapType(StringType, StringType))))
-    df(t.spark, schema, t.metadata.snapshots.map(s =>
+  private val snapshotSchema = StructType(Seq(
+    StructField("committed_at", TimestampType),
+    StructField("snapshot_id", LongType),
+    StructField("parent_id", LongType),
+    StructField("operation", StringType),
+    StructField("manifest_list", StringType),
+    StructField("summary", MapType(StringType, StringType))))
+
+  private def snapshots(t: GraftTable): Seq[Row] =
+    t.metadata.snapshots.map(s =>
       Row(new java.sql.Timestamp(s.timestampMillis), s.snapshotId,
         s.parentId.map(Long.box).orNull, s.operation, s.manifestList,
-        s.summary)))
-  }
+        s.summary))
 
   /** `t$history` with is_current_ancestor (reference HistoryTable.java:36-43). */
-  def history(t: GraftTable): DataFrame = {
+  private val historySchema = StructType(Seq(
+    StructField("made_current_at", TimestampType),
+    StructField("snapshot_id", LongType),
+    StructField("parent_id", LongType),
+    StructField("is_current_ancestor", BooleanType)))
+
+  private def history(t: GraftTable): Seq[Row] = {
     val m = t.metadata
     val ancestors = m.ancestors().map(_.snapshotId).toSet
-    val schema = StructType(Seq(
-      StructField("made_current_at", TimestampType),
-      StructField("snapshot_id", LongType),
-      StructField("parent_id", LongType),
-      StructField("is_current_ancestor", BooleanType)))
-    df(t.spark, schema, m.snapshotLog.map(e =>
+    m.snapshotLog.map(e =>
       Row(new java.sql.Timestamp(e.timestampMillis), e.snapshotId,
         m.snapshot(e.snapshotId).flatMap(_.parentId).map(Long.box).orNull,
-        ancestors.contains(e.snapshotId))))
+        ancestors.contains(e.snapshotId)))
   }
 
   private val manifestSchema = StructType(Seq(
@@ -98,50 +142,45 @@ object MetaTables {
       Row(mf.path, mf.length, mf.specId, mf.content, mf.addedSnapshotId,
         mf.addedFilesCount, mf.existingFilesCount, mf.deletedFilesCount))
 
-  def manifests(t: GraftTable): DataFrame =
-    df(t.spark, manifestSchema, manifestRowsOf(t, t.currentSnapshot.toSeq))
-
-  def allManifests(t: GraftTable): DataFrame =
-    df(t.spark, manifestSchema, manifestRowsOf(t, t.metadata.snapshots))
-
-  /** `t$refs`: named branches/tags plus the implicit "main" row (public
-    * Iceberg RefsTable shape; snapshot-log scale → LocalRelation tier). */
   /** `t$statistics` — committed NDV statistics files (reference
     * StatisticsTable over StatisticsFile entries). */
-  def statistics(t: GraftTable): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("snapshot_id", LongType, nullable = false),
-      StructField("statistics_path", StringType, nullable = false),
-      StructField("row_count", LongType),
-      StructField("ndv", MapType(StringType, LongType))))
-    df(t.spark, schema, t.metadata.statistics.sortBy(_.snapshotId).map { sf =>
+  private val statisticsSchema = StructType(Seq(
+    StructField("snapshot_id", LongType, nullable = false),
+    StructField("statistics_path", StringType, nullable = false),
+    StructField("row_count", LongType),
+    StructField("ndv", MapType(StringType, LongType))))
+
+  private def statistics(t: GraftTable): Seq[Row] =
+    t.metadata.statistics.sortBy(_.snapshotId).map { sf =>
       val st = Stats.read(t, sf.snapshotId)
       Row(sf.snapshotId, sf.path,
         st.map(s => Long.box(s.rowCount)).orNull,
         st.map(_.ndvByName(t.metadata.schema)).orNull)
-    })
-  }
+    }
 
-  def refs(t: GraftTable): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("name", StringType, nullable = false),
-      StructField("type", StringType, nullable = false),
-      StructField("snapshot_id", LongType, nullable = false),
-      StructField("min_snapshots_to_keep", IntegerType),
-      StructField("max_snapshot_age_in_ms", LongType),
-      StructField("max_ref_age_in_ms", LongType)))
+  /** `t$refs`: named branches/tags plus the implicit "main" row (public
+    * Iceberg RefsTable shape). */
+  private val refsSchema = StructType(Seq(
+    StructField("name", StringType, nullable = false),
+    StructField("type", StringType, nullable = false),
+    StructField("snapshot_id", LongType, nullable = false),
+    StructField("min_snapshots_to_keep", IntegerType),
+    StructField("max_snapshot_age_in_ms", LongType),
+    StructField("max_ref_age_in_ms", LongType)))
+
+  private def refs(t: GraftTable): Seq[Row] = {
     val m = t.metadata
     val main = m.currentSnapshotId.map(id =>
       Row("main", "BRANCH", id, null, null, null)).toSeq
-    df(t.spark, schema, main ++ m.refs.toSeq.sortBy(_._1).map { case (n, r) =>
+    main ++ m.refs.toSeq.sortBy(_._1).map { case (n, r) =>
       Row(n, if (r.isBranch) "BRANCH" else "TAG", r.snapshotId,
         r.minSnapshotsToKeep.map(Int.box).orNull,
         r.maxSnapshotAgeMs.map(Long.box).orNull,
         r.maxRefAgeMs.map(Long.box).orNull)
-    })
+    }
   }
 
-  private[graft] val fileSchema = StructType(Seq(
+  private val fileSchema = StructType(Seq(
     StructField("content", IntegerType),
     StructField("file_path", StringType),
     StructField("file_format", StringType),
@@ -155,7 +194,7 @@ object MetaTables {
     StructField("content_offset", LongType),
     StructField("content_size_in_bytes", LongType)))
 
-  private[graft] val entrySchema = StructType(
+  private val entrySchema = StructType(
     StructField("status", IntegerType) +:
     StructField("snapshot_id", LongType) +:
     StructField("sequence_number", LongType) +: fileSchema.fields.toSeq)
@@ -169,7 +208,7 @@ object MetaTables {
     * arguments are serializable); the reference counterpart is
     * ManifestReadTask.rows (core/.../DataFilesTable.java). `filesOnly`
     * selects the `files` projection: live entries only, file columns only. */
-  private[graft] def manifestRows(io: FileIO, path: String,
+  private def manifestRows(io: FileIO, path: String,
       idSchema: StructType, partTypes: Map[String, DataType],
       filesOnly: Boolean): Seq[Row] = {
     val entries = MetaCodec.readManifest(io.readBytes(path), idSchema, partTypes)
@@ -198,7 +237,7 @@ object MetaTables {
       manifestRows(io, path, idSchema, partTypesBySpec(specId), filesOnly)
   }
 
-  private[graft] def readSpec(t: GraftTable, manifests: Seq[ManifestFile],
+  private def readSpec(t: GraftTable, manifests: Seq[ManifestFile],
       filesOnly: Boolean): ManifestReadSpec = {
     val m = t.metadata
     // promotion-safe id-resolution schema (same pick as
@@ -208,109 +247,5 @@ object MetaTables {
     val typesBySpec = manifests.map(_.specId).distinct
       .map(id => id -> t.partTypesOf(m)(id).toMap).toMap
     ManifestReadSpec(t.ops.io, idSchema, typesBySpec, filesOnly)
-  }
-
-  /** Distributed entry/file relation: the driver ships (path, specId) pairs;
-    * executors parse. A million-file table surfaces here without a single
-    * entry row materializing on the driver. */
-  /** Manifest descriptors selected by CONTENT: data and delete files live
-    * in separate manifests, so `data_files` / `delete_files` need no row
-    * filter at all — just a smaller manifest list. */
-  private def manifestsByContent(t: GraftTable, snaps: Seq[Snapshot],
-      deletesOnly: Option[Boolean]): Seq[ManifestFile] = {
-    val all = manifestsOf(t, snaps)
-    deletesOnly match {
-      case Some(true) => all.filterNot(_.content == FileContent.Data)
-      case Some(false) => all.filter(_.content == FileContent.Data)
-      case None => all
-    }
-  }
-
-  private def entriesDf(t: GraftTable, snaps: Seq[Snapshot],
-      filesOnly: Boolean, deletesOnly: Option[Boolean] = None): DataFrame = {
-    val schema = if (filesOnly) fileSchema else entrySchema
-    val manifests = manifestsByContent(t, snaps, deletesOnly)
-    if (manifests.isEmpty) return df(t.spark, schema, Nil)
-    val spec = readSpec(t, manifests, filesOnly)
-    val sc = t.spark.sparkContext
-    val tasks = math.min(manifests.size, math.max(1, sc.defaultParallelism * 2))
-    val rdd = sc.parallelize(manifests.map(mf => (mf.path, mf.specId)), tasks)
-      .flatMap { case (p, specId) => spec.rows(p, specId) }
-    t.spark.createDataFrame(rdd, schema)
-  }
-
-  /** Inputs for the DSv2 distributed surface (connector.MetaScanTable):
-    * Some((manifest (path, specId) pairs, read spec, schema)) for the
-    * file-scale relations, None for the snapshot-log-scale ones (those stay
-    * LocalRelations — reference StaticDataTask). */
-  private[graft] def distributedScanInputs(t: GraftTable, name: String)
-      : Option[(Seq[(String, Int)], ManifestReadSpec, StructType)] =
-    name.toLowerCase match {
-      case n @ ("files" | "entries" | "all_data_files" | "all_entries" |
-                "data_files" | "delete_files" | "all_files" |
-                "all_delete_files") =>
-        val filesOnly = n != "entries" && n != "all_entries"
-        val snaps =
-          if (n.startsWith("all_")) t.metadata.snapshots else t.currentSnapshot.toSeq
-        val deletesOnly = n match {
-          // all_data_files = DATA only, like the reference AllDataFilesTable
-          // (it returned delete files too until round 10's review caught it)
-          case "data_files" | "all_data_files" => Some(false)
-          case "delete_files" | "all_delete_files" => Some(true)
-          case _ => None
-        }
-        val manifests = manifestsByContent(t, snaps, deletesOnly)
-        Some((manifests.map(mf => (mf.path, mf.specId)),
-          readSpec(t, manifests, filesOnly),
-          if (filesOnly) fileSchema else entrySchema))
-      case _ => None
-    }
-
-  def entries(t: GraftTable): DataFrame =
-    entriesDf(t, t.currentSnapshot.toSeq, filesOnly = false)
-
-  def allEntries(t: GraftTable): DataFrame =
-    entriesDf(t, t.metadata.snapshots, filesOnly = false)
-
-  def files(t: GraftTable): DataFrame =
-    entriesDf(t, t.currentSnapshot.toSeq, filesOnly = true)
-
-  def dataFiles(t: GraftTable): DataFrame =
-    entriesDf(t, t.currentSnapshot.toSeq, filesOnly = true,
-      deletesOnly = Some(false))
-
-  def deleteFilesTable(t: GraftTable): DataFrame =
-    entriesDf(t, t.currentSnapshot.toSeq, filesOnly = true,
-      deletesOnly = Some(true))
-
-  def allDataFiles(t: GraftTable): DataFrame =
-    entriesDf(t, t.metadata.snapshots, filesOnly = true,
-      deletesOnly = Some(false))
-
-  def allFiles(t: GraftTable): DataFrame =
-    entriesDf(t, t.metadata.snapshots, filesOnly = true)
-
-  def allDeleteFiles(t: GraftTable): DataFrame =
-    entriesDf(t, t.metadata.snapshots, filesOnly = true,
-      deletesOnly = Some(true))
-
-  /** `t$position_deletes` (reference-successor PositionDeletesTable): every
-    * live deleted position as (data file, pos, source delete file) rows —
-    * parquet position-delete files read through Spark's source (delete file
-    * path from row metadata), DV blobs expanded executor-side from their
-    * bitmaps. Useful for delete-state inspection and as the read half of
-    * external delete-rewrite tooling. */
-  def positionDeletes(t: GraftTable): DataFrame =
-    Deletes.positionsDF(t.spark, Deletes.posDeleteFilesOf(t), withSource = true)
-
-  /** `t$partitions`: record_count/file_count per partition
-    * (reference PartitionsTable.java:39-43) — a distributed aggregation
-    * over the distributed `files` relation (partial aggregation executor-
-    * side; only one row per partition value reaches the result). */
-  def partitions(t: GraftTable): DataFrame = {
-    import org.apache.spark.sql.functions._
-    files(t).groupBy(col("partition"))
-      .agg(sum(col("record_count")).as("record_count"),
-        count(lit(1)).as("file_count"))
   }
 }

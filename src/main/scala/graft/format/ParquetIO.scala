@@ -3,7 +3,10 @@ package graft.format
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.{ParquetReader, ParquetWriter}
-import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.conf.HadoopParquetConfiguration
+import org.apache.parquet.hadoop.api.{ReadSupport, WriteSupport}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.InputFile
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
@@ -64,7 +67,14 @@ object ParquetIO {
         super.init(context)
       }
     }
-    ParquetReader.builder[InternalRow](support, new HPath(path)).withConf(c).build()
+    // built over `c` itself: ParquetReader.builder(support, path) starts
+    // from a fresh Configuration, whose first read parses Hadoop's default
+    // XML resources (~10 ms per opened file)
+    class B(file: InputFile)
+        extends ParquetReader.Builder[InternalRow](file, new HadoopParquetConfiguration(c)) {
+      override protected def getReadSupport(): ReadSupport[InternalRow] = support
+    }
+    new B(HadoopInputFile.fromPath(new HPath(path), c)).build()
   }
 
   def readAll(path: String, schema: StructType, conf: Configuration,

@@ -392,7 +392,7 @@ class CatalogSpec extends SparkSpec {
       FROM g.db.decbkt GROUP BY 1 ORDER BY 1""").collect()
       .map(r => (r.getInt(0), r.getLong(1)))
     import graft.format.{GraftTable, MetaTables}
-    val byPart = MetaTables.files(GraftTable.load(spark, s"$wh/db/decbkt"))
+    val byPart = MetaTables(GraftTable.load(spark, s"$wh/db/decbkt"), "files")
       .selectExpr("partition['amt_bucket'] AS b", "record_count AS n")
       .collect().groupBy(_.getAs[Any](0).toString.toInt)
       .map { case (b, rs) => (b, rs.map(_.getLong(1)).sum) }.toSeq.sorted
@@ -414,7 +414,7 @@ class CatalogSpec extends SparkSpec {
     spark.sql("INSERT INTO g.db.clus SELECT id, part FROM clus_src")
     import graft.format.{GraftTable, MetaTables}
     val t = GraftTable.load(spark, s"$wh/db/clus")
-    val nFiles = MetaTables.files(t).count()
+    val nFiles = MetaTables(t, "files").count()
     assert(nFiles <= 4, s"expected <=1 file per partition, got $nFiles")
     assert(spark.sql("SELECT COUNT(*) FROM g.db.clus").collect().head.getLong(0) == 400)
     assert(spark.sql("SELECT COUNT(DISTINCT part) FROM g.db.clus").collect().head.getLong(0) == 4)

@@ -1,7 +1,7 @@
 package graft.connector
 
 import graft.SparkSpec
-import graft.format.{FileFormats, GraftTable, MetaTables}
+import graft.format.{Commits, FileFormats, GraftTable, MetaTables, Stats}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
@@ -76,8 +76,8 @@ class MetaScanSpec extends SparkSpec {
 
     // programmatic API agrees with the SQL surface
     val t = GraftTable.load(spark, s"$wh/db/morc")
-    assert(MetaTables.files(t).count() == 1)
-    assert(MetaTables.allEntries(t).count() >= 3)
+    assert(MetaTables(t, "files").count() == 1)
+    assert(MetaTables(t, "all_entries").count() >= 3)
   }
 
   test("data_files and delete_files split the files relation by content") {
@@ -94,5 +94,32 @@ class MetaScanSpec extends SparkSpec {
     // files = data + deletes
     assert(spark.sql("SELECT * FROM ms.db.`dd$files`").count() ==
       data.length + dels.length)
+  }
+
+  test("library and SQL read the same rows for every metadata table") {
+    wh
+    spark.sql("""CREATE TABLE ms.db.agree (id BIGINT, cat STRING)
+                 PARTITIONED BY (cat)
+                 TBLPROPERTIES ('write.delete.mode'='merge-on-read')""")
+    spark.sql("""INSERT INTO ms.db.agree
+                 SELECT id, IF(id % 2 = 0, 'a', 'b') FROM range(10)""")
+    spark.sql("DELETE FROM ms.db.agree WHERE id = 3") // parquet position delete
+    val loc = s"$wh/db/agree"
+    Commits.setProperties(GraftTable.load(spark, loc), Map("format-version" -> "3"))
+    spark.sql("DELETE FROM ms.db.agree WHERE id = 4") // deletion vector
+    Commits.createTag(GraftTable.load(spark, loc), "t1")
+    Stats.analyzeAndCommit(GraftTable.load(spark, loc))
+    val t = GraftTable.load(spark, loc)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    MetaTables.Names.foreach { n =>
+      val lib = rows(MetaTables(t, n))
+      assert(lib.nonEmpty, s"$n is empty")
+      assert(lib === rows(spark.sql(s"SELECT * FROM ms.db.`agree$$$n`")), n)
+    }
+    // file-scale relations are DSv2 scans on both surfaces
+    val plan = MetaTables(t, "files").queryExecution.executedPlan.toString
+    assert(plan.contains("BatchScan") && !plan.contains("LogicalRDD"),
+      s"expected a DSv2 batch scan, got:\n$plan")
   }
 }

@@ -28,16 +28,16 @@ class MaintenanceSpec extends SparkSpec {
     val t = GraftTable.create(spark, loc, rows(2).schema, _.day("ts"))
     GraftWrite.append(t, rows(2, 0).coalesce(1))
     GraftWrite.append(t, rows(3, 1).coalesce(1))
-    assert(MetaTables.snapshots(t).count() == 2)
-    assert(MetaTables.history(t).where(col("is_current_ancestor")).count() == 2)
-    assert(MetaTables.files(t).count() == 2)
-    assert(MetaTables.files(t).agg(sum("record_count")).as[Long].head() == 5)
-    assert(MetaTables.entries(t).count() == 2)
-    assert(MetaTables.manifests(t).count() == 2)
-    val parts = MetaTables.partitions(t).collect()
+    assert(MetaTables(t, "snapshots").count() == 2)
+    assert(MetaTables(t, "history").where(col("is_current_ancestor")).count() == 2)
+    assert(MetaTables(t, "files").count() == 2)
+    assert(MetaTables(t, "files").agg(sum("record_count")).as[Long].head() == 5)
+    assert(MetaTables(t, "entries").count() == 2)
+    assert(MetaTables(t, "manifests").count() == 2)
+    val parts = MetaTables(t, "partitions").collect()
     assert(parts.length == 2)
-    assert(MetaTables.allManifests(t).count() >= 2)
-    assert(MetaTables.apply(t, "snapshots").count() == 2)
+    assert(MetaTables(t, "all_manifests").count() >= 2)
+    assert(MetaTables(t, "snapshots").count() == 2)
   }
 
   test("scan summary: per-partition metrics with time-range + limit (ScanSummary.java:50-260)") {
@@ -63,7 +63,7 @@ class MaintenanceSpec extends SparkSpec {
     val loc = freshLoc("compact")
     val t = GraftTable.create(spark, loc, rows(2).schema)
     (0 until 4).foreach(i => GraftWrite.append(t, rows(2, i).coalesce(1)))
-    assert(MetaTables.files(t).count() == 4)
+    assert(MetaTables(t, "files").count() == 4)
     val res = Actions.forTable(t).rewriteDataFiles(minInputFiles = 2)
     assert(res.rewrittenFiles == 4)
     assert(res.addedFiles < 4)
@@ -95,7 +95,7 @@ class MaintenanceSpec extends SparkSpec {
       } finally spark.sparkContext.removeSparkListener(listener)
     assert(jobs.get() == 1, s"compaction submitted ${jobs.get()} jobs, expected 1")
     assert(res.rewrittenFiles == 6 && res.addedFiles == 2)
-    assert(MetaTables.files(t).count() == 2)
+    assert(MetaTables(t, "files").count() == 2)
     assert(t.toDF().count() == 12)
     // partition tuples survive the rewrite: pruning still hits one file
     val plan = t.newScan()
@@ -175,9 +175,9 @@ class MaintenanceSpec extends SparkSpec {
     val t = GraftTable.create(spark, loc, rows(1).schema,
       properties = Map(Commits.ManifestMinMergeCount -> "100"))
     (0 until 5).foreach(i => GraftWrite.append(t, rows(1, i % 3).coalesce(1)))
-    assert(MetaTables.manifests(t).count() == 5)
+    assert(MetaTables(t, "manifests").count() == 5)
     Actions.forTable(t).rewriteManifests(entriesPerManifest = 100)
-    assert(MetaTables.manifests(t).count() == 1)
+    assert(MetaTables(t, "manifests").count() == 1)
     assert(t.toDF().count() == 5)
   }
 
@@ -216,7 +216,7 @@ class MaintenanceSpec extends SparkSpec {
       properties = Map(Commits.ManifestMinMergeCount -> "100"))
     // three day-partitions, two single-entry manifests each
     (0 until 6).foreach(i => GraftWrite.append(t, rows(1, i % 3).coalesce(1)))
-    assert(MetaTables.manifests(t).count() == 6)
+    assert(MetaTables(t, "manifests").count() == 6)
     val tasks = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
@@ -236,7 +236,7 @@ class MaintenanceSpec extends SparkSpec {
     // read stage + range-sorted write stage both run as Spark tasks
     assert(tasks.get() >= 2, s"expected executor tasks, got ${tasks.get()}")
     assert(written >= 3 && written < 6, s"expected ~3 clustered manifests, wrote $written")
-    assert(MetaTables.manifests(t).count() == written)
+    assert(MetaTables(t, "manifests").count() == written)
     assert(t.toDF().count() == 6)
     // range clustering keeps manifest summaries prunable: one day's filter
     // must NOT read every rewritten manifest
@@ -251,7 +251,7 @@ class MaintenanceSpec extends SparkSpec {
     val loc = freshLoc("expire")
     val t = GraftTable.create(spark, loc, rows(2).schema)
     GraftWrite.append(t, rows(2, 0))
-    val deadPaths = MetaTables.files(t).select("file_path").as[String].collect()
+    val deadPaths = MetaTables(t, "files").select("file_path").as[String].collect()
     GraftWrite.overwriteAll(t, rows(2, 1))
     val res = Actions.forTable(t).expireSnapshots(System.currentTimeMillis() + 1000)
     assert(res.expiredSnapshots == 1)
@@ -268,10 +268,10 @@ class MaintenanceSpec extends SparkSpec {
     val loc = freshLoc("brexpire")
     val t = GraftTable.create(spark, loc, rows(2).schema)
     GraftWrite.append(t, rows(2, 0).coalesce(1)) // snap1: fileA (shared)
-    val fileA = MetaTables.files(t).select("file_path").as[String].collect().toSet
+    val fileA = MetaTables(t, "files").select("file_path").as[String].collect().toSet
     Commits.createBranch(t, "work")
     GraftWrite.append(t, rows(2, 1).coalesce(1)) // snap2 (main): fileB
-    val fileB = MetaTables.files(t).select("file_path").as[String]
+    val fileB = MetaTables(t, "files").select("file_path").as[String]
       .collect().toSet -- fileA
     // branch CoW DELETE: rewrites fileA on the BRANCH line only
     val staged = GraftWrite.writeFiles(t,
@@ -304,7 +304,7 @@ class MaintenanceSpec extends SparkSpec {
     val loc = freshLoc("brmaint")
     val t = GraftTable.create(spark, loc, rows(2).schema)
     GraftWrite.append(t, rows(2, 0).coalesce(1)) // snap1: fileA (shared)
-    val fileA = MetaTables.files(t).select("file_path").as[String].collect().toSet
+    val fileA = MetaTables(t, "files").select("file_path").as[String].collect().toSet
     Commits.createBranch(t, "work")
     // branch CoW DELETE of id==0: the branch head now holds a file main
     // has never referenced

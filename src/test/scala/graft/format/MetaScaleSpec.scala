@@ -165,14 +165,14 @@ class MetaScaleSpec extends SparkSpec {
   }
 
   test("entries metadata table streams 100k entries through executors") {
-    val (n, secs) = timed(MetaTables.entries(table).count())
+    val (n, secs) = timed(MetaTables(table, "entries").count())
     assert(n === ManifestCount * FilesPerManifest)
     info(f"entries count: $secs%.2f s")
     assert(secs < 30.0)
   }
 
   test("partitions metadata table aggregates the distributed relation") {
-    val (rows, secs) = timed(MetaTables.partitions(table)
+    val (rows, secs) = timed(MetaTables(table, "partitions")
       .select("partition.cat", "record_count", "file_count").collect())
     assert(rows.length === Cats)
     assert(rows.map(_.getLong(1)).sum === 100L * ManifestCount * FilesPerManifest)

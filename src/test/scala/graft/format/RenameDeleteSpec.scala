@@ -432,21 +432,22 @@ class RenameDeleteSpec extends SparkSpec {
   }
 
   test("readAll(requireAll) fails loudly on a delete file missing its columns") {
+    // the one position-delete decoder reads through readAll(requireAll)
     val dir = Files.createTempDirectory("graft-reqcols")
-    val p = s"$dir/other.parquet"
-    Seq((1L, "x")).toDF("a", "b").coalesce(1).write.mode("overwrite").parquet(p)
-    val part = new java.io.File(p).listFiles()
-      .find(_.getName.endsWith(".parquet")).get.getAbsolutePath
-    val conf = spark.sessionState.newHadoopConf()
-    def load(cols: Seq[String]): Int = {
-      var n = 0
-      ParquetIO.readAll(part, StructType(cols.map(StructField(_, StringType))),
-        conf, requireAll = true, what = "position-delete file")(_ => n += 1)
-      n
+    def parquetOf(df: org.apache.spark.sql.DataFrame, name: String): String = {
+      val p = s"$dir/$name.parquet"
+      df.coalesce(1).write.mode("overwrite").parquet(p)
+      new java.io.File(p).listFiles()
+        .find(_.getName.endsWith(".parquet")).get.getAbsolutePath
     }
-    val e = intercept[IllegalStateException](load(Seq("file_path", "pos")))
+    val conf = spark.sessionState.newHadoopConf()
+    val other = parquetOf(Seq((1L, "x")).toDF("a", "b"), "other")
+    val e = intercept[IllegalStateException](
+      PositionDeleteReader.read(Seq(other), Nil, conf))
     assert(e.getMessage.contains("file_path"))
-    // present columns pass, case-insensitively
-    assert(load(Seq("B")) === 1)
+    // present columns pass, case-insensitively; targets come back canonical
+    val upper = parquetOf(Seq(("file:///d/f.parquet", 4L)).toDF("FILE_PATH", "Pos"), "upper")
+    val got = PositionDeleteReader.read(Seq(upper), Nil, conf)
+    assert(got.map { case (f, bm) => f -> bm.getLongCardinality } === Map("/d/f.parquet" -> 1L))
   }
 }
