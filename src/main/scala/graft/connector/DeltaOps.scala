@@ -212,8 +212,7 @@ final class GraftDeltaWriterFactory(schema: StructType, idSchema: StructType,
         }
         if (dvMode && byFile.nonEmpty) {
           // v3: one puffin file per task, one bitmap blob per data file
-          val hp = new org.apache.hadoop.fs.Path(stagingDir)
-          hp.getFileSystem(hconf).mkdirs(hp)
+          DataFileIO.mkdirs(stagingDir, hconf)
           dvPath = s"$stagingDir/dv-$partitionId-$taskId-" +
             s"${java.util.UUID.randomUUID()}.puffin"
           val dvFiles = Dvs.writePuffin(dvPath, byFile.toSeq, schemaId, specId,

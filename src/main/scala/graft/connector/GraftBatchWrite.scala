@@ -300,17 +300,19 @@ final class GraftFanoutWriter(schema: StructType, idSchema: StructType,
     }
   }
 
+  // one prepared conf per task for every file it opens; the staging
+  // directory is made with the first file
+  private lazy val fileWriters = {
+    DataFileIO.mkdirs(stagingDir, conf)
+    new DataFileIO.Writers(format, schema, idSchema, conf, statModes, props)
+  }
+
   private def openWriter(): (String, DataFileIO.Writer) = {
     val path = s"$stagingDir/part-$partitionId-$taskId-$fileCount-${UUID.randomUUID()}.$format"
     fileCount += 1
-    // Hadoop FS, not java.nio: staging may live on an object store; the
-    // call is a no-op where directories don't exist as objects
-    val sp = new org.apache.hadoop.fs.Path(stagingDir)
-    sp.getFileSystem(conf).mkdirs(sp)
     // footer stats are read in the task that just wrote the file (it is
     // still in page cache), shipped to the driver in the commit message
-    (path, DataFileIO.openWriter(path, format, schema, idSchema, conf,
-      statModes, props))
+    (path, fileWriters.open(path))
   }
 
   override def write(row: InternalRow): Unit = {

@@ -1857,9 +1857,10 @@ object DeleteKeyCache {
       case (n, t) => StructField(n, t)
     })
     val set = scala.collection.mutable.HashSet[Vector[Any]]()
+    val reader = new ParquetIO.RowReader(schema, conf, requireAll = true,
+      what = "equality-delete file")
     src.paths.foreach { p =>
-      ParquetIO.readAll(p, schema, conf, requireAll = true,
-        what = "equality-delete file") { row =>
+      reader.readAll(p) { row =>
         set += src.types.indices.map(i =>
           ParquetIO.canonicalValue(row, i, src.types(i))).toVector
       }

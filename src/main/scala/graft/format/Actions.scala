@@ -109,7 +109,7 @@ final class Actions(t: GraftTable) {
     * and the outputs store them (Lineage.Stored), preserving row identity.
     * The scan emits one input partition per bin; one
     * `mapPartitionsWithIndex` streams partition k into bin k's file with
-    * DataFileIO.openWriter and reads its footer metrics in-task. No
+    * DataFileIO.Writers and reads its footer metrics in-task. No
     * shuffle: outputs keep their group's partition tuple and spec. */
   private[graft] def binJob(m: TableMetadata, plan: ScanPlan,
       targetSizeBytes: Long, minInputFiles: Int,
@@ -126,13 +126,16 @@ final class Actions(t: GraftTable) {
       plan.tasks.map(ts => ParquetIO.canonPath(ts.file.path) ->
         index.countFor(ts.file, ts.sequenceNumber)).toMap
     }
-    // a group or bin qualifies by merge width, or because it holds a
-    // delete-burdened file (the threshold path compacts singletons too)
-    def qualifies(tasks: Seq[FileScanTask]): Boolean =
-      tasks.size >= minInputFiles ||
-        (deleteFileThreshold != Int.MaxValue && tasks.exists(ts =>
-          deletePressure.getOrElse(ParquetIO.canonPath(ts.file.path), 0) >=
-            deleteFileThreshold))
+    def burdened(ts: FileScanTask): Boolean =
+      deleteFileThreshold != Int.MaxValue &&
+        deletePressure.getOrElse(ParquetIO.canonPath(ts.file.path), 0) >=
+          deleteFileThreshold
+    // a group or bin wide enough to merge is rewritten whole; short of that
+    // only its delete-burdened files are (the threshold path compacts
+    // singletons too), never the clean files beside them — the reference
+    // selects files by delete count before it bins them
+    def select(tasks: Seq[FileScanTask]): Seq[FileScanTask] =
+      if (tasks.size >= minInputFiles) tasks else tasks.filter(burdened)
     // spec id joins the group key: a spec-evolved table compacts each
     // generation under its OWN layout (outputs keep the group's spec).
     // Tuples.key: binary partition values must group by CONTENT or each
@@ -140,8 +143,8 @@ final class Actions(t: GraftTable) {
     val binned = plan.tasks
       .groupBy(ts => (Tuples.key(ts.file.partition), ts.file.schemaId,
         ts.file.specId))
-      .values.filter(qualifies).toSeq
-      .flatMap(binPack(_, targetSizeBytes).filter(qualifies))
+      .values.map(select).filter(_.nonEmpty).toSeq
+      .flatMap(binPack(_, targetSizeBytes).map(select).filter(_.nonEmpty))
     if (binned.isEmpty) return None
 
     val staging = t.locations.newDataLocation(java.util.UUID.randomUUID().toString)
@@ -168,8 +171,8 @@ final class Actions(t: GraftTable) {
     // the closure ships the output DIRECTORY, not the bins' paths: task k
     // names its own file, so per-task bytes stay flat at 10k bins
     val rdd = read.queryExecution.toRdd.mapPartitionsWithIndex { (k, rows) =>
-      val writer = DataFileIO.openWriter(binOut(staging, k, outFormat), outFormat,
-        writeSchema, schema, sconf.value.value, statModes, tableProps)
+      val writer = new DataFileIO.Writers(outFormat, writeSchema, schema,
+        sconf.value.value, statModes, tableProps).open(binOut(staging, k, outFormat))
       // finish() (close + footer read) sits INSIDE the abort guard: a
       // failure there must still clean the staged output, or the task
       // retry hits its own deterministic path with create(overwrite=false)

@@ -302,24 +302,29 @@ object AvroIO {
   /** Open an Avro container-file writer; `count` tracks rows for the
     * DataFile record count (Avro has no footer stats to read back).
     * `syncInterval` (bytes, 0 = Avro default ~64 KB) sets the block size —
-    * blocks are the split granularity for ranged reads. */
+    * blocks are the split granularity for ranged reads. The file is
+    * created through [[DataFileIO.create]]. */
   def openWriter(path: String, schema: StructType,
       conf: Configuration, syncInterval: Int = 0,
       codec: String = "snappy"): AvroRowWriter = {
     val avro = avroSchema(schema)
-    val out = new HPath(path).getFileSystem(conf).create(new HPath(path), false)
     val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](avro))
     w.setCodec(codecFactory(codec))
     if (syncInterval > 0) w.setSyncInterval(syncInterval)
-    w.create(avro, out)
-    new AvroRowWriter(w, recordBuilder(schema, avro))
+    val out = DataFileIO.create(path, conf)
+    try w.create(avro, out)
+    catch { case e: Throwable => out.close(); throw e }
+    new AvroRowWriter(w, recordBuilder(schema, avro), out)
   }
 
   final class AvroRowWriter(w: DataFileWriter[GenericRecord],
-      build: InternalRow => GenericRecord) extends AutoCloseable {
+      build: InternalRow => GenericRecord,
+      out: org.apache.hadoop.fs.FSDataOutputStream) extends AutoCloseable {
     private var n = 0L
     def write(row: InternalRow): Unit = { w.append(build(row)); n += 1 }
     def count: Long = n
+    /** Bytes written; the file's length after [[close]]. */
+    def length: Long = out.getPos
     override def close(): Unit = w.close()
   }
 

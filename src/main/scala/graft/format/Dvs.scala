@@ -75,14 +75,12 @@ object Dvs {
     (bytes, files)
   }
 
-  /** Write one puffin DV file through the Hadoop filesystem (executor- or
-    * driver-side) and return its manifest descriptors. */
+  /** Write one puffin DV file (executor- or driver-side), created through
+    * [[DataFileIO.create]], and return its manifest descriptors. */
   def writePuffin(path: String, dvs: Seq[(String, Roaring64NavigableMap)],
       schemaId: Int, specId: Int, conf: Configuration): Seq[DataFile] = {
     val (bytes, files) = buildPuffin(path, dvs, schemaId, specId)
-    val hp = new Path(path)
-    val fs = hp.getFileSystem(conf)
-    val out = fs.create(hp, false)
+    val out = DataFileIO.create(path, conf)
     try out.write(bytes) finally out.close()
     files
   }

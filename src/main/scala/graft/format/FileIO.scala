@@ -11,8 +11,12 @@ final case class FileInfo(path: String, size: Long, modifiedMillis: Long)
   * of a code-wide rewrite. The trait is Serializable because distributed
   * maintenance jobs (rewriteManifests) ship it to executor tasks.
   *
-  * Data files are NOT routed here: parquet reads/writes already go through
-  * Hadoop's FileSystem abstraction (Spark's own seam) via ParquetIO.
+  * Data and delete files are NOT written here: every writer creates its
+  * file through [[DataFileIO.create]], which routes local paths the same way
+  * ([[forPath]]: java.nio, no `chmod` process, no `.crc` sidecar) and every
+  * other scheme through Hadoop's FileSystem with the task's conf. They are
+  * read through Hadoop's FileSystem (Spark's own seam), and expiry and
+  * orphan sweeps delete them here.
   */
 object FileIO {
   /** Pick an implementation by path scheme: plain paths stay on the
@@ -134,7 +138,15 @@ object LocalFileIO extends FileIO {
 
   override def exists(path: String): Boolean = Files.exists(p(path))
 
-  override def deleteIfExists(path: String): Unit = Files.deleteIfExists(p(path))
+  /** Also removes the `.<name>.crc` checksum that Hadoop's LocalFileSystem
+    * wrote beside files it created (graft's data files before
+    * [[DataFileIO.create]], imported files), which no listing reclaims. */
+  override def deleteIfExists(path: String): Unit = {
+    val f = p(path)
+    Files.deleteIfExists(f)
+    if (f.getFileName != null)
+      Files.deleteIfExists(f.resolveSibling(s".${f.getFileName}.crc"))
+  }
 
   override def mkdirs(dir: String): Unit = Files.createDirectories(p(dir))
 

@@ -187,14 +187,21 @@ object OrcIO {
       case other => throw new IllegalArgumentException(s"orc codec: $other")
     }
 
-  /** Executor-side ORC row writer — the write twin of [[open]]. */
+  /** Executor-side ORC row writer — the write twin of [[open]]. The file
+    * is created through [[DataFileIO.create]], and ORC's physical writer
+    * streams into it. */
   def openWriter(path: String, schema: StructType,
       conf: Configuration, codec: String = "snappy"): OrcRowWriter = {
     val td = OrcUtils.orcTypeDescription(schema)
-    val writer = OrcFile.createWriter(new HPath(path),
-      OrcFile.writerOptions(conf).setSchema(td)
-        .compress(compressionKind(codec)))
-    new OrcRowWriter(writer, new OrcSerializer(schema), hasTimestamp(schema))
+    val opts = OrcFile.writerOptions(conf).setSchema(td)
+      .compress(compressionKind(codec))
+    val out = DataFileIO.create(path, conf)
+    val writer =
+      try OrcFile.createWriter(new HPath(path), opts.physicalWriter(
+        new org.apache.orc.impl.PhysicalFsWriter(out, opts,
+          Array.empty[org.apache.orc.impl.writer.WriterEncryptionVariant])))
+      catch { case e: Throwable => out.close(); throw e }
+    new OrcRowWriter(writer, new OrcSerializer(schema), out, hasTimestamp(schema))
   }
 
   private def hasTimestamp(dt: DataType): Boolean = dt match {
@@ -239,6 +246,7 @@ object OrcIO {
   }
 
   final class OrcRowWriter(writer: Writer, ser: OrcSerializer,
+      out: org.apache.hadoop.fs.FSDataOutputStream,
       mayHoldTimestamps: Boolean = true) extends AutoCloseable {
     private val rec = new OrcMapreduceRecordWriter[OrcStruct](writer)
     def write(row: InternalRow): Unit = {
@@ -248,23 +256,29 @@ object OrcIO {
       rec.write(org.apache.hadoop.io.NullWritable.get(), struct)
     }
     override def close(): Unit = rec.close(null)
+    /** Bytes written; the file's length after [[close]]. */
+    def length: Long = out.getPos
   }
 
   /** Footer metrics for one ORC file, mapped to field ids by name against
     * `schema` (reference OrcMetrics.fromInputFile): record count from the
     * file tail, per-column non-null counts from ColumnStatistics
     * (nullCount = recordCount - numberOfValues — ORC counts non-nulls),
-    * bounds per stats subtype, stripe offsets as split offsets. */
+    * bounds per stats subtype, stripe offsets as split offsets. A writer
+    * passes the length it wrote as `knownSize`, which spares a stat. */
   def footerMetrics(path: String, schema: StructType,
       conf: Configuration = new Configuration(),
-      modes: Map[Int, Metrics.Mode] = Map.empty): Metrics.FileMetrics = {
+      modes: Map[Int, Metrics.Mode] = Map.empty,
+      knownSize: Long = -1L): Metrics.FileMetrics = {
     import Metrics._
     def modeOf(id: Int): Mode = modes.getOrElse(id, DefaultMode)
-    val reader = OrcFile.createReader(new HPath(path), OrcFile.readerOptions(conf))
+    val fileSize =
+      if (knownSize >= 0) knownSize
+      else new HPath(path).getFileSystem(conf).getFileStatus(new HPath(path)).getLen
+    val reader = OrcFile.createReader(new HPath(path),
+      OrcFile.readerOptions(conf).maxLength(fileSize))
     try {
       val recordCount = reader.getNumberOfRows
-      val fileSize = new HPath(path).getFileSystem(conf)
-        .getFileStatus(new HPath(path)).getLen
       val stats = reader.getStatistics
       val root = reader.getSchema
       val nameToId = FieldIds.nameToId(schema)

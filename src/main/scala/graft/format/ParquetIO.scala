@@ -6,8 +6,8 @@ import org.apache.parquet.hadoop.{ParquetReader, ParquetWriter}
 import org.apache.parquet.conf.HadoopParquetConfiguration
 import org.apache.parquet.hadoop.api.{ReadSupport, WriteSupport}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.InputFile
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.{DelegatingPositionOutputStream, InputFile, OutputFile, PositionOutputStream}
+import org.apache.parquet.hadoop.metadata.{CompressionCodecName, ParquetMetadata}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetWriteSupport}
@@ -23,68 +23,74 @@ import scala.jdk.CollectionConverters._
   */
 object ParquetIO {
 
-  /** Iterate `path` projected to `schema` (name-matched, id-agnostic).
-    * Returned rows may be reused by the reader — copy or extract values
-    * before advancing. Caller must exhaust or close.
+  /** Reads parquet files projected to `schema` (name-matched,
+    * id-agnostic) for one task or call: the conf is copied and prepared
+    * once here, not per opened file (a session conf holds ~1,100 entries).
     *
     * `requireAll` makes a requested column that is ABSENT from the file
     * fail loudly instead of silently null-filling (ReadSupport's default).
     * Delete-file key loads set it: an all-null key set would resurrect
     * every deleted row. The check rides the footer the reader already
     * loaded (ReadSupport.init sees the file schema) — zero extra I/O. */
-  def open(path: String, schema: StructType, conf: Configuration,
-      requireAll: Boolean = false,
-      what: String = "file"): ParquetReader[InternalRow] = {
-    val c = new Configuration(conf)
-    c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
-    // ParquetToSparkSchemaConverter asserts these are PRESENT (normally the
-    // scan planner sets them per job). A sessionState.newHadoopConf() passed
-    // in already carries the session's values — pin defaults only when
-    // genuinely absent so session settings (e.g. caseSensitive) are honored.
-    c.setIfUnset("spark.sql.parquet.binaryAsString", "false")
-    c.setIfUnset("spark.sql.parquet.int96AsTimestamp", "true")
-    c.setIfUnset("spark.sql.caseSensitive", "false")
-    c.setIfUnset("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-    c.setIfUnset("spark.sql.legacy.parquet.nanosAsLong", "false")
-    c.setIfUnset("spark.sql.parquet.fieldId.read.enabled", "false")
-    val support = new ParquetReadSupport(
-      convertTz = None,
-      enableVectorizedReader = false,
-      datetimeRebaseSpec = RebaseSpec(LegacyBehaviorPolicy.CORRECTED),
-      int96RebaseSpec = RebaseSpec(LegacyBehaviorPolicy.CORRECTED)) {
-      override def init(context: org.apache.parquet.hadoop.api.InitContext)
-          : org.apache.parquet.hadoop.api.ReadSupport.ReadContext = {
-        if (requireAll) {
-          val present = context.getFileSchema.getFields.asScala
-            .map(_.getName.toLowerCase(java.util.Locale.ROOT)).toSet
-          val missing = schema.fieldNames.filterNot(n =>
-            present.contains(n.toLowerCase(java.util.Locale.ROOT)))
-          if (missing.nonEmpty) throw new IllegalStateException(
-            s"$what $path does not contain required column(s) " +
-            s"${missing.mkString(", ")} (has: ${present.mkString(", ")}) — " +
-            "refusing to null-fill, which would silently drop its deletes")
-        }
-        super.init(context)
-      }
+  final class RowReader(schema: StructType, conf: Configuration,
+      requireAll: Boolean = false, what: String = "file") {
+    private val c = {
+      val c = new Configuration(conf)
+      c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
+      // ParquetToSparkSchemaConverter asserts these are PRESENT (normally
+      // the scan planner sets them per job). A sessionState.newHadoopConf()
+      // passed in already carries the session's values — pin defaults only
+      // when genuinely absent so session settings (e.g. caseSensitive) are
+      // honored.
+      c.setIfUnset("spark.sql.parquet.binaryAsString", "false")
+      c.setIfUnset("spark.sql.parquet.int96AsTimestamp", "true")
+      c.setIfUnset("spark.sql.caseSensitive", "false")
+      c.setIfUnset("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+      c.setIfUnset("spark.sql.legacy.parquet.nanosAsLong", "false")
+      c.setIfUnset("spark.sql.parquet.fieldId.read.enabled", "false")
+      c
     }
-    // built over `c` itself: ParquetReader.builder(support, path) starts
-    // from a fresh Configuration, whose first read parses Hadoop's default
-    // XML resources (~10 ms per opened file)
-    class B(file: InputFile)
-        extends ParquetReader.Builder[InternalRow](file, new HadoopParquetConfiguration(c)) {
-      override protected def getReadSupport(): ReadSupport[InternalRow] = support
-    }
-    new B(HadoopInputFile.fromPath(new HPath(path), c)).build()
-  }
+    private val pc = new HadoopParquetConfiguration(c)
 
-  def readAll(path: String, schema: StructType, conf: Configuration,
-      requireAll: Boolean = false, what: String = "file")
-      (consume: InternalRow => Unit): Unit = {
-    val reader = open(path, schema, conf, requireAll, what)
-    try {
-      var row = reader.read()
-      while (row != null) { consume(row); row = reader.read() }
-    } finally reader.close()
+    /** Iterate `path`. Returned rows may be reused by the reader — copy or
+      * extract values before advancing. Caller must exhaust or close. */
+    def open(path: String): ParquetReader[InternalRow] = {
+      val support = new ParquetReadSupport(
+        convertTz = None,
+        enableVectorizedReader = false,
+        datetimeRebaseSpec = RebaseSpec(LegacyBehaviorPolicy.CORRECTED),
+        int96RebaseSpec = RebaseSpec(LegacyBehaviorPolicy.CORRECTED)) {
+        override def init(context: org.apache.parquet.hadoop.api.InitContext)
+            : org.apache.parquet.hadoop.api.ReadSupport.ReadContext = {
+          if (requireAll) {
+            val present = context.getFileSchema.getFields.asScala
+              .map(_.getName.toLowerCase(java.util.Locale.ROOT)).toSet
+            val missing = schema.fieldNames.filterNot(n =>
+              present.contains(n.toLowerCase(java.util.Locale.ROOT)))
+            if (missing.nonEmpty) throw new IllegalStateException(
+              s"$what $path does not contain required column(s) " +
+              s"${missing.mkString(", ")} (has: ${present.mkString(", ")}) — " +
+              "refusing to null-fill, which would silently drop its deletes")
+          }
+          super.init(context)
+        }
+      }
+      // built over the prepared conf itself: ParquetReader.builder(support,
+      // path) starts from a fresh Configuration, whose first read parses
+      // Hadoop's default XML resources (~10 ms per opened file)
+      class B(file: InputFile) extends ParquetReader.Builder[InternalRow](file, pc) {
+        override protected def getReadSupport(): ReadSupport[InternalRow] = support
+      }
+      new B(HadoopInputFile.fromPath(new HPath(path), c)).build()
+    }
+
+    def readAll(path: String)(consume: InternalRow => Unit): Unit = {
+      val reader = open(path)
+      try {
+        var row = reader.read()
+        while (row != null) { consume(row); row = reader.read() }
+      } finally reader.close()
+    }
   }
 
   /** Hadoop conf for executor-side parquet WRITES: the session conf plus the
@@ -117,21 +123,59 @@ object ParquetIO {
       case other => throw new IllegalArgumentException(s"parquet codec: $other")
     }
 
-  /** Executor-side parquet row writer on Spark's own WriteSupport — the
-    * write twin of [[open]]; `conf` should come from [[writeConf]], `codec`
-    * from [[DataFileIO.compressionOf]]. */
-  def openWriter(path: String, schema: StructType,
-      conf: Configuration, codec: String): ParquetWriter[InternalRow] = {
-    val c = new Configuration(conf)
+  /** Writes parquet files of one write schema for one task, on Spark's own
+    * WriteSupport — the write twin of [[RowReader]]. `conf` should come
+    * from [[writeConf]], `codec` from [[DataFileIO.compressionOf]]; the
+    * conf is copied and given the schema once here, not per file. Each
+    * file is created through [[DataFileIO.create]]. Pages carry CRC32
+    * checksums (parquet's default, pinned here), which readers verify
+    * with `parquet.page.verify-checksum.enabled`. */
+  final class Writers(schema: StructType, conf: Configuration, codec: String) {
+    private val c = new Configuration(conf)
     ParquetWriteSupport.setSchema(schema, c)
-    class B(p: HPath) extends ParquetWriter.Builder[InternalRow, B](p) {
-      override def getWriteSupport(cc: Configuration): WriteSupport[InternalRow] =
-        new ParquetWriteSupport
-      override def self(): B = this
+    private val codecName = compressionCodec(codec)
+
+    def open(path: String): RowWriter = {
+      val out = DataFileIO.create(path, c)
+      val file = new OutputFile {
+        override def create(blockSizeHint: Long): PositionOutputStream =
+          new DelegatingPositionOutputStream(out) {
+            override def getPos: Long = out.getPos
+          }
+        override def createOrOverwrite(blockSizeHint: Long): PositionOutputStream =
+          create(blockSizeHint)
+        override def supportsBlockSize(): Boolean = false
+        override def defaultBlockSize(): Long = 0L
+        override def getPath: String = path
+      }
+      class B extends ParquetWriter.Builder[InternalRow, B](file) {
+        override def getWriteSupport(cc: Configuration): WriteSupport[InternalRow] =
+          new ParquetWriteSupport
+        override def self(): B = this
+      }
+      val w =
+        try new B().withConf(c).withCompressionCodec(codecName)
+          .withPageWriteChecksumEnabled(true).build()
+        catch { case e: Throwable => out.close(); throw e }
+      new RowWriter(w, out)
     }
-    new B(new HPath(path)).withConf(c)
-      .withCompressionCodec(compressionCodec(codec)).build()
   }
+
+  /** One open parquet file of [[Writers]]. */
+  final class RowWriter private[ParquetIO] (w: ParquetWriter[InternalRow],
+      out: org.apache.hadoop.fs.FSDataOutputStream) {
+    def write(row: InternalRow): Unit = w.write(row)
+    def close(): Unit = w.close()
+    /** The footer the writer serialized; valid after [[close]]. */
+    def footer: ParquetMetadata = w.getFooter
+    /** Bytes written; the file's length after [[close]]. */
+    def length: Long = out.getPos
+  }
+
+  /** Open one parquet file: [[Writers]] for a single file. */
+  def openWriter(path: String, schema: StructType,
+      conf: Configuration, codec: String): RowWriter =
+    new Writers(schema, conf, codec).open(path)
 
   /** Canonical form of a data-file path for delete matching. The two sides
     * that must agree — delete rows' `file_path` strings and Spark's

@@ -15,7 +15,7 @@ import org.roaringbitmap.longlong.Roaring64NavigableMap
   * A parquet file must carry both spec columns, `file_path` and `pos`
   * (matched case-insensitively). A missing one means a corrupt or foreign
   * file, and null-filling it would silently drop its deletes, so the read
-  * fails instead ([[ParquetIO.open]] with `requireAll`). Rows with a null
+  * fails instead ([[ParquetIO.RowReader]] with `requireAll`). Rows with a null
   * column are skipped. Target paths come back canonical
   * ([[ParquetIO.canonPath]]). DV blobs decode through [[Dvs.read]].
   */
@@ -32,12 +32,13 @@ object PositionDeleteReader {
     val byFile = scala.collection.mutable.HashMap[String, Roaring64NavigableMap]()
     def setOf(f: String): Roaring64NavigableMap =
       byFile.getOrElseUpdate(f, new Roaring64NavigableMap())
+    lazy val reader = new ParquetIO.RowReader(Schema, conf, requireAll = true,
+      what = "position-delete file")
     paths.foreach { p =>
       // rows arrive sorted by file_path: canonicalize each run once
       var lastRaw: UTF8String = null
       var last: Roaring64NavigableMap = null
-      ParquetIO.readAll(p, Schema, conf, requireAll = true,
-          what = "position-delete file") { row =>
+      reader.readAll(p) { row =>
         if (!row.isNullAt(0) && !row.isNullAt(1)) {
           val raw = row.getUTF8String(0)
           if (raw != lastRaw) {

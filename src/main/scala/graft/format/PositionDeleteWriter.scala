@@ -3,9 +3,7 @@ package graft.format
 import graft.connector.GraftBatchWrite.StagedFile
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -24,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * nothing. */
 final class PositionDeleteWriter(path: String, conf: Configuration,
     props: Map[String, String]) {
-  private var writer: ParquetWriter[InternalRow] = null
+  private var writer: ParquetIO.RowWriter = null
   private val row = new GenericInternalRow(2)
   private var count = 0L
   private var lastFile: UTF8String = null
@@ -40,8 +38,7 @@ final class PositionDeleteWriter(path: String, conf: Configuration,
         s"position deletes arrived unsorted (($file, $pos) after " +
         s"($lastFile, $lastPos)) — required ordering not honored")
     if (writer == null) {
-      val dir = new Path(path).getParent
-      dir.getFileSystem(conf).mkdirs(dir)
+      DataFileIO.mkdirs(new Path(path).getParent.toString, conf)
       writer = ParquetIO.openWriter(path, PositionDeleteWriter.Schema, conf,
         DataFileIO.compressionOf(FileFormats.Parquet, props))
     }
@@ -65,9 +62,8 @@ final class PositionDeleteWriter(path: String, conf: Configuration,
     if (writer == null) None
     else {
       writer.close()
+      val size = writer.length
       writer = null
-      val hp = new Path(path)
-      val size = hp.getFileSystem(conf).getFileStatus(hp).getLen
       Some(StagedFile(path, Map.empty, Metrics.FileMetrics(count, size,
         Map.empty, Map.empty, Map(Deletes.PathFieldId -> minTarget),
         Map(Deletes.PathFieldId -> maxTarget), Nil, Seq(Deletes.PathFieldId))))

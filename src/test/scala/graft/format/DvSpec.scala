@@ -444,6 +444,27 @@ class DvSpec extends SparkSpec {
     check("thresh-range", i => Seq(i).toDF("id"))
   }
 
+  test("delete-file-threshold rewrites the burdened file, not a clean file " +
+      "binned with it") {
+    // one file of ids 0-9 carrying three equality deletes, one clean file of
+    // ids 100-109: too few files to merge by width, so only the burdened
+    // file qualifies, and the clean one must stay as it is
+    val t = GraftTable.create(spark, freshLoc("thresh-clean"),
+      Seq(0L).toDF("id").schema)
+    GraftWrite.append(t, (0L until 10L).toDF("id").coalesce(1))
+    val burdened = t.newScan().planFiles().tasks.map(_.file.path).toSet
+    GraftWrite.append(t, (100L until 110L).toDF("id").coalesce(1))
+    val clean = t.newScan().planFiles().tasks.map(_.file.path).toSet -- burdened
+    assert(burdened.size === 1 && clean.size === 1)
+    (1L to 3L).foreach(i => Deletes.deleteByEquality(t, Seq(i).toDF("id")))
+    assert(Actions.forTable(t).rewriteDataFiles(minInputFiles = 3,
+      deleteFileThreshold = 3) === Actions.RewriteResult(1, 1))
+    val after = t.newScan().planFiles().tasks.map(_.file.path).toSet
+    assert(clean.subsetOf(after), "the clean file was rewritten")
+    assert(burdened.intersect(after).isEmpty, "the burdened file was kept")
+    assert(idsOf(t) === (0L until 10L).filterNot(Set(1L, 2L, 3L)) ++ (100L until 110L))
+  }
+
   test("concurrent DV commits union without lost deletes") {
     val df = (0L until 100L).map(i => (i, s"v$i")).toDF("id", "v")
     val t = GraftTable.create(spark, freshLoc("dvconc"), df.schema,
