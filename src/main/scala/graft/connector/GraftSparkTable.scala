@@ -957,7 +957,7 @@ final class GraftScanBuilder private[connector] (spark: SparkSession,
         case _ => None
       }
     new GraftScan(output, groups.map(_._1), plan, deleteIndex, spark, table,
-      options, groups.map(_._2), runtimeFileFiltering = groupGranular,
+      options, pushed.toSeq, groups.map(_._2), runtimeFileFiltering = groupGranular,
       onRuntimeFilter = onRuntimeFilter, spjInfo = spjInfo,
       ndvStats = scan.snapshot.map(_.snapshotId)
         .flatMap(id => Stats.read(table, id)),
@@ -997,11 +997,17 @@ final class GraftScanBuilder private[connector] (spark: SparkSession,
   * sides behind graft tables broadcast correctly. Non-empty `bins` (data
   * file paths covering the plan) replace Spark's packing: input partition
   * k reads exactly bin k, and the scan reports no key grouping and takes
-  * no runtime filter. */
+  * no runtime filter.
+  *
+  * Two scans that read the same rows are EQUAL (see `readKey`), and
+  * `toBatch` returns one batch per scan that compares by its scan, so
+  * Spark's `BatchScanExec` equality — and with it exchange and subquery
+  * reuse — holds for two reads of one table in one query. */
 final class GraftScan(output: StructType,
     groupScans: Seq[org.apache.spark.sql.execution.datasources.v2.FileScan],
     plan: ScanPlan, deleteIndex: DeleteIndex, spark: SparkSession,
     table: GraftTable, options: CaseInsensitiveStringMap,
+    pushedFilters: Seq[Filter],
     deletes: Seq[Option[GroupDeletes]],
     runtimeFileFiltering: Boolean,
     onRuntimeFilter: Set[String] => Unit,
@@ -1021,6 +1027,32 @@ final class GraftScan(output: StructType,
   override def readSchema(): StructType = output
   override def description(): String =
     s"graft(${groupScans.size} scan groups, files=${plan.tasks.size})"
+
+  /** What this scan reads, computed once: table, planned files with their
+    * residuals, live delete files, read schema, pushed filters, options,
+    * the per-group delete/fill/lineage configs, key grouping and bins.
+    * Delete key ordinals enter as sequences (arrays compare by reference).
+    * A row-level-operation scan gets a fresh token instead, so it equals
+    * only itself: its runtime filter reports to its own operation
+    * (`onRuntimeFilter`). The runtime keep-set stays out of the key:
+    * `BatchScanExec` compares its runtime filters itself. */
+  private lazy val readKey: AnyRef =
+    if (runtimeFileFiltering) new Object
+    else (table.location,
+      plan.tasks.map(t => (t.file.path, t.sequenceNumber, t.residual)),
+      plan.deleteFiles.map { case (d, seq) => (d.path, d.contentOffset, seq) },
+      output, pushedFilters,
+      options.asCaseSensitiveMap.asScala.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }.toMap,
+      deletes.map(_.map(d => (d.sets.map(k => (k.ordinals.toSeq, k.names,
+        k.fileNames, k.types, k.paths)), d.types, d.project, d.pos))),
+      fills, lineages, spjInfo.map(_.fields), bins)
+  private lazy val readKeyHash = readKey.hashCode
+
+  override def equals(other: Any): Boolean = other match {
+    case s: GraftScan => (this eq s) || readKey == s.readKey
+    case _ => false
+  }
+  override def hashCode(): Int = readKeyHash
 
   /** Test visibility: the (possibly eq-delete-pruned) plan this scan runs. */
   private[connector] def scanPlan: ScanPlan = plan
@@ -1372,7 +1404,17 @@ final class GraftScan(output: StructType,
         new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(0)
     }
 
-  override def toBatch: Batch = new Batch {
+  override def toBatch: Batch = batch
+  private lazy val batch: Batch = new ScanBatch
+
+  /** The scan's one batch; equal batches belong to equal scans. */
+  private final class ScanBatch extends Batch {
+    private[GraftScan] def scan: GraftScan = GraftScan.this
+    override def equals(other: Any): Boolean = other match {
+      case b: GraftScan#ScanBatch => scan == b.scan
+      case _ => false
+    }
+    override def hashCode(): Int = scan.hashCode
 
     // scan-wide columnar decision, made ONCE on the driver (Spark requires
     // every partition of a scan to agree): clean groups ask their parquet

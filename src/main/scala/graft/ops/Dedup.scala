@@ -520,8 +520,16 @@ object Dedup {
    * Pairs with a null endpoint are not edges and are ignored.
    */
   def duplicateClusters(pairs: DataFrame): DataFrame = {
+    import pairs.sparkSession.implicits._
+    clusterLabels(pairs)._1.toDF("doc_id", "cluster")
+  }
+
+  /** [[duplicateClusters]]' labels as `(node, label)` pairs, with the
+    * node count: each round's one action counts nodes and changed labels
+    * together, so the last round's count is free. */
+  private def clusterLabels(pairs: DataFrame)
+      : (org.apache.spark.rdd.RDD[(Long, Long)], Long) = {
     val spark = pairs.sparkSession
-    import spark.implicits._
     val part = new org.apache.spark.HashPartitioner(spark.sparkContext.defaultParallelism)
     val adjacency = pairs.select(col("a").cast("long"), col("b").cast("long"))
       .na.drop().rdd
@@ -532,8 +540,8 @@ object Dedup {
       val ns = nbrs.toArray
       (x, (ns, math.min(x, ns.min), true))
     }, preservesPartitioning = true)
-    var changed = 1L
-    while (changed > 0) {
+    var counts = (0L, 1L) // (nodes, changed labels)
+    while (counts._2 > 0) {
       val nbrMin = state
         .flatMap { case (_, (ns, label, chg)) =>
           if (chg) ns.iterator.map(_ -> label) else Iterator.empty }
@@ -542,9 +550,22 @@ object Dedup {
         case ((ns, label, _), Some(m)) if m < label => (ns, m, true)
         case ((ns, label, _), _) => (ns, label, false)
       }.localCheckpoint()
-      changed = state.filter(_._2._3).count()
+      counts = state.aggregate((0L, 0L))(
+        { case ((n, c), (_, (_, _, chg))) => (n + 1, if (chg) c + 1 else c) },
+        { case ((n1, c1), (n2, c2)) => (n1 + n2, c1 + c2) })
     }
-    state.map { case (x, (_, label, _)) => (x, label) }.toDF("doc_id", "cluster")
+    (state.map { case (x, (_, label, _)) => (x, label) }, counts._1)
+  }
+
+  /** `df` broadcast when `rows` rows of its schema fit the session's
+    * `spark.sql.autoBroadcastJoinThreshold`, by Spark's own per-row size
+    * estimate (8 bytes of row overhead plus each column's default size).
+    * For frames whose row count is known but whose plan carries no size
+    * estimate (RDD-backed), which Spark would otherwise shuffle-join. */
+  private def broadcastIfFits(df: DataFrame, rows: Long): DataFrame = {
+    val limit = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (limit >= 0 && rows * (8L + df.schema.defaultSize) <= limit) broadcast(df)
+    else df
   }
 
   /** Quality-aware dedup survivor selection — the step that turns a pair
@@ -557,14 +578,16 @@ object Dedup {
     * Scale shape: clustering is [[duplicateClusters]] (RDD min-label
     * propagation, one job per round, one round for disjoint pairs); the
     * keeper choice is one window pass partitioned by cluster — near-dup
-    * clusters are small clumps, so no partition skews. The clusters come
-    * back as an RDD-backed frame with no size estimate, so the
-    * docs→clusters join plans as a shuffle join that AQE turns into a
-    * broadcast once the cluster side's measured size fits (clustered docs
-    * ≪ corpus at steady state). */
+    * clusters are small clumps, so no partition skews. The last clustering
+    * round counts the clustered nodes, so when that many (doc_id, cluster)
+    * rows fit the broadcast threshold the cluster side is broadcast and
+    * the docs side joins it without a shuffle (clustered docs ≪ corpus at
+    * steady state); otherwise both sides shuffle. */
   def keepBest(docs: DataFrame, pairs: DataFrame,
       score: Column): DataFrame = {
-    val clusters = duplicateClusters(pairs)
+    import docs.sparkSession.implicits._
+    val (labels, nodes) = clusterLabels(pairs)
+    val clusters = broadcastIfFits(labels.toDF("doc_id", "cluster"), nodes)
     val labeled = docs.join(clusters, Seq("doc_id"), "left")
       .withColumn("cluster",
         coalesce(col("cluster"), col("doc_id").cast("long")))
@@ -774,13 +797,15 @@ object Dedup {
     val cand = banded.as("x").join(banded.as("y"), Seq("band"))
       .filter(col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b")).distinct()
-    // verify candidates with exact Jaccard on the gram sets. Deliberately
-    // NOT semi-joined down to candidate-touched docs: `touched` would
-    // derive from `cand`, and re-evaluating the candidate subtree (band
-    // join + distinct + the corpus signature UDF) costs MORE than joining
-    // the pruned gram column — measured: +18% on q34, +36% on q125 when
-    // the semi-join was tried. FromStore differs: its touched set prunes
-    // a table READ, not a recomputation, and keeps its semi-join.
+    // verify candidates with exact Jaccard on the gram sets, NOT
+    // semi-joined down to candidate-touched docs. A semi-join whose
+    // `touched` derived from the un-materialized `cand` re-ran the
+    // candidate subtree (band join + distinct + the corpus signature UDF)
+    // and measured slower than joining the pruned gram column: +18% on
+    // q34, +36% on q125. Here every doc is already signed, so pruning
+    // saves no read. FromStore prunes a text READ instead, with a touched
+    // set drawn from candidates it materializes and counts once, and
+    // broadcast when it fits, so it pays no recomputation.
     val sets = withSig.select(col("doc_id"), col("gh"))
     verifyJaccardHashed(cand, sets, threshold)
   }
@@ -824,9 +849,10 @@ object Dedup {
         when(lt, col("x.doc_id")).otherwise(col("y.doc_id")).as("a"),
         when(lt, col("y.doc_id")).otherwise(col("x.doc_id")).as("b"))
       .distinct()
-    // not semi-joined to candidate-touched docs — see minhashLshPairs:
-    // recomputing `cand` for the touched set measured slower than the
-    // pruned-gram join on both the full and incremental paths
+    // not semi-joined to candidate-touched docs — see minhashLshPairs: a
+    // touched set derived from the un-materialized `cand` re-ran the
+    // candidate subtree and measured slower than the pruned-gram join on
+    // both the full and incremental paths
     val sets = cw.select(col("doc_id"), col("gh"))
       .unionByName(fw.select(col("doc_id"), col("gh")))
     verifyJaccardHashed(cand, sets, threshold)
@@ -869,9 +895,10 @@ object Dedup {
   /** Incremental MinHash near-dup against a persisted signature store:
     * only the FRESH side pays signature computation (the store rows are
     * read back packed), the band join is fresh×(store ∪ fresh) so the
-    * store never self-joins, and exact-Jaccard verification re-reads
-    * `texts` for exactly the candidate-touched doc_ids (semi-join
-    * pushdown — candidate-scaled, not corpus-scaled). Same answer as
+    * store never self-joins, and exact-Jaccard verification streams
+    * `texts` once through a semi-join on the candidate-touched doc_ids
+    * (broadcast when they fit), so only those docs are gram-hashed and no
+    * text is shuffled. Same answer as
     * [[minhashLshPairsIncremental]] with the same parameters; `storeSigs`
     * must hold the CORPUS only (append the fresh signatures after the
     * run), with `(doc_id, sig)` from [[minhashSignatures]] at the same
@@ -916,36 +943,43 @@ object Dedup {
     val fb = banded(freshSigs.getOrElse(minhashSignatures(fresh, n, bands, rows)))
     val all = banded(storeSigs.select(col("doc_id"), col("sig"))).unionByName(fb)
     val lt = col("x.doc_id") < col("y.doc_id")
-    // the candidate set is MATERIALIZED once (an eager localCheckpoint:
-    // one job, and the blocks are context-cleaned on GC): it
-    // feeds three consumers (the verify join plus each side's
-    // candidate-touched semi-join), and Spark evaluates each copy of the
-    // subtree independently (no exchange reuse fires — checked on the
-    // executed adaptive plan), so without this the corpus-scale store is
-    // re-scanned and re-banded once per consumer. Candidates are
-    // increment-scaled (pairs of longs), so the materialization is tiny
-    // at any corpus size.
-    val cand = fb.as("x").join(all.as("y"), Seq("band"))
+    // the candidate set is MATERIALIZED once, and counted in the same
+    // action (an RDD local checkpoint: one job, and the blocks are
+    // context-cleaned on GC): it feeds the verify join and the touched-doc
+    // semi-join, and each would otherwise re-run the band join over the
+    // corpus-scale store. Candidates are increment-scaled (pairs of
+    // longs), so the materialization is tiny at any corpus size.
+    val (cand, nCand) = checkpointCounted(fb.as("x").join(all.as("y"), Seq("band"))
       .filter(col("x.doc_id") =!= col("y.doc_id"))
       .select(
         when(lt, col("x.doc_id")).otherwise(col("y.doc_id")).as("a"),
         when(lt, col("y.doc_id")).otherwise(col("x.doc_id")).as("b"))
-      .distinct()
-      .localCheckpoint()
-    // ONE evaluation of the candidate subtree per semi-join side: the
-    // union-of-two-selects formulation re-evaluated `cand` (band join +
-    // distinct, re-banding the corpus-scale store) TWICE here — explode
-    // over [a, b] reads it once
-    val touched = cand
-      .select(explode(array(col("a"), col("b"))).as("doc_id")).distinct()
+      .distinct())
+    // the touched docs, duplicates kept (a semi-join needs no distinct):
+    // 2 ids per candidate, broadcast when they fit, so the corpus streams
+    // through a map-side semi-join and its text is never shuffled
+    val touched = broadcastIfFits(
+      cand.select(explode(array(col("a"), col("b"))).as("doc_id")), 2 * nCand)
     // gramHashes (one tight UDF pass over the text) replaces the
     // wordNgrams HOF chain + per-gram xxhash64: Jaccard over distinct
     // hashed grams equals the string answer short of a 64-bit collision
     // inside one pair's union (~1e-9) — the same documented contract as
-    // [[jaccardPairsFast]], and the same hash family on both join sides
+    // [[jaccardPairsFast]], and the same hash family on both join sides.
+    // Both verify joins read this one subtree; their exchanges over it
+    // are equal, so Spark reuses one and the corpus is scanned, and each
+    // touched doc hashed, once.
     val sets = texts.join(touched, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), TextOps.gramHashes(n)(col("text")).as("gh"))
     verifyJaccardHashed(cand, sets, threshold)
+  }
+
+  /** `df` materialized once by an RDD local checkpoint whose one action
+    * also counts its rows. The returned frame is RDD-backed, with no size
+    * estimate. */
+  private def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
+    val rows = df.rdd.localCheckpoint()
+    val n = rows.count()
+    (df.sparkSession.createDataFrame(rows, df.schema), n)
   }
 
   // --- embedding-cosine near-dup ------------------------------------------

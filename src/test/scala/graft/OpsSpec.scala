@@ -635,6 +635,139 @@ class OpsSpec extends SparkSpec {
     assert(jobs <= 3, s"clustering 20 disjoint pairs ran $jobs Spark jobs")
   }
 
+  test("store dedup increment: 10 Spark jobs, texts never shuffled, one gram hash per touched doc") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    import graft.format.{GraftTable, GraftWrite}
+    import scala.jdk.CollectionConverters._
+    // the steady state of a store-backed dedup pipeline: a 1,000-doc
+    // corpus with its signature store, and a 50-doc increment holding 20
+    // copies (12 one-token edits, 8 exact) of distinct corpus docs
+    val r = new java.util.Random(20261021L)
+    val vocab = (0 until 4000).map(i => s"w$i")
+    def doc() = Array.fill(60 + r.nextInt(40))(vocab(r.nextInt(vocab.size)))
+    val corpus = (1L to 1000L).map(_ -> doc())
+    val sources = r.ints(1, 1001).distinct().limit(20).toArray.map(_.toLong)
+    val inc = (0 until 50).map { j =>
+      val toks =
+        if (j < 12) corpus(sources(j).toInt - 1)._2.updated(30, "edited")
+        else if (j < 20) corpus(sources(j).toInt - 1)._2
+        else doc()
+      (2001L + j) -> toks
+    }
+    val schema = StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType)))
+    def frame(d: Seq[(Long, Array[String])]) = spark.createDataFrame(
+      d.map { case (id, toks) => Row(id, toks.mkString(" ")) }.asJava, schema)
+    val dir = java.nio.file.Files.createTempDirectory("graft-dedupjobs").toString
+    val corpusT = GraftTable.create(spark, s"$dir/corpus", schema)
+    GraftWrite.append(corpusT, frame(corpus))
+    val sigs = Dedup.minhashSignatures(frame(corpus), 3, 32, 2)
+    val storeT = GraftTable.create(spark, s"$dir/store", sigs.schema)
+    GraftWrite.append(storeT, sigs)
+    val fresh = frame(inc)
+    val freshSigs = Dedup.minhashSignatures(fresh, 3, 32, 2).localCheckpoint()
+    // the candidate definition, computed on the driver: a fresh doc and
+    // any other doc sharing one band key (the same keys the op derives)
+    val allSigs = (storeT.toDF().collect() ++ freshSigs.collect())
+      .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1))
+    val byBand = allSigs.flatMap { case (id, sig) =>
+      (0 until 32).map(bd => (bd, graft.util.Murmur3.hashBytes(sig, bd * 8, 8, 0)) -> id)
+    }.groupMap(_._1)(_._2)
+    val freshIds = inc.map(_._1).toSet
+    val touched = allSigs.filter(s => freshIds(s._1)).flatMap { case (id, sig) =>
+      val mates = (0 until 32).flatMap(bd =>
+        byBand((bd, graft.util.Murmur3.hashBytes(sig, bd * 8, 8, 0)))).toSet - id
+      if (mates.isEmpty) Set.empty[Long] else mates + id
+    }.toSet
+    // deterministic, so the optimizer moves the touched-doc semi-join
+    // below it: it counts the corpus texts the verify step gram-hashes
+    val acc = spark.sparkContext.longAccumulator("corpusTextEvals")
+    val counted = udf((t: String) => { acc.add(1); t })
+    val texts = corpusT.toDF().select(col("doc_id"), counted(col("text")).as("text"))
+      .unionByName(fresh)
+
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    val (pairsDf, pairs, survivors) =
+      try {
+        sc.setJobGroup("dedup-increment", "counted")
+        val out =
+          try {
+            // the candidates are materialized here, when the frame is built
+            val pairsDf = Dedup.minhashLshPairsFromStore(storeT.toDF(), fresh, texts,
+              3, 32, 2, 0.5, Some(freshSigs))
+            val pairs = pairsDf.collect()
+              .map(p => (p.getLong(0), p.getLong(1))).toSeq
+            val ids = (inc.map(_._1) ++ pairs.flatMap(p => Seq(p._1, p._2))).distinct
+            val kept = Dedup.keepBest(
+                spark.createDataFrame(ids.map(Row(_)).asJava,
+                  StructType(Seq(StructField("doc_id", LongType)))),
+                spark.createDataFrame(pairs.map(p => Row(p._1, p._2)).asJava,
+                  StructType(Seq(StructField("a", LongType), StructField("b", LongType)))),
+                -col("doc_id"))
+              .filter(col("keep") && col("doc_id") > 2000L)
+              .select("doc_id").collect().map(_.getLong(0)).toSet
+            (pairsDf, pairs, kept)
+          } finally sc.clearJobGroup()
+        // listener-bus events arrive in order: once the marker job's start
+        // is seen, every counted job has been seen too
+        sc.setJobGroup("dedup-increment-marker", "marker")
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        val deadline = System.currentTimeMillis() + 30000
+        while (!groups.contains("dedup-increment-marker") &&
+            System.currentTimeMillis() < deadline) Thread.sleep(20)
+        out
+      } finally sc.removeSparkListener(listener)
+
+    val planted = sources.zipWithIndex.map { case (s, j) => (s, 2001L + j) }.toSet
+    assert(pairs.toSet == planted)
+    assert(survivors == freshIds -- planted.map(_._2))
+    // 10 jobs: candidates = the band join's two shuffle stages and the
+    // checkpoint that also counts them (3); verify = touched-set
+    // broadcast, sets broadcast (shared by both joins), collect (3); one
+    // clustering round (1); keep = cluster broadcast, window shuffle,
+    // collect (3)
+    val jobs = groups.toArray.count(_ == "dedup-increment")
+    assert(jobs <= 10, s"the dedup increment ran $jobs Spark jobs")
+    // every node of the final adaptive plan, query stages and subqueries
+    // included; a reused exchange is not walked again
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: ((p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case _: ReusedExchangeExec => Nil
+      case o => o.children
+    }) ++ p.subqueries).flatMap(nodes)
+    def readsTexts(p: SparkPlan) = nodes(p).exists {
+      case b: BatchScanExec => b.scan.readSchema().fieldNames.contains("text")
+      case _ => false
+    }
+    val plan = pairsDf.queryExecution.executedPlan
+    val shuffled = nodes(plan).collect { case s: ShuffleExchangeExec if readsTexts(s) => s }
+    assert(shuffled.isEmpty, plan.toString)
+    val touchedCorpus = touched.count(_ <= 1000L)
+    assert(touchedCorpus > 0 && acc.value == touchedCorpus,
+      s"${acc.value} corpus text evaluations for $touchedCorpus touched corpus docs")
+    // gramHashes runs in the projection over the touched-doc semi-joins:
+    // their output-row metrics count its calls, fresh docs included
+    val hashed = nodes(plan).collect {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec
+          if j.joinType == org.apache.spark.sql.catalyst.plans.LeftSemi =>
+        j.metrics("numOutputRows").value
+    }.sum
+    assert(touched.nonEmpty && hashed == touched.size,
+      s"$hashed gram-hashed texts for ${touched.size} touched docs")
+  }
+
   test("stratified sampling: exact per-group quota, WindowGroupLimit plan") {
     import org.apache.spark.sql.functions._
     val sampled = graft.ops.Sampling.stratified(docs, col("lang"), col("doc_id"), 5)
