@@ -956,7 +956,7 @@ final class GraftScanBuilder private[connector] (spark: SparkSession,
         }
         case _ => None
       }
-    new GraftScan(output, groups.map(_._1), plan, deleteIndex, spark, table,
+    new GraftScan(output, schema, groups.map(_._1), plan, deleteIndex, spark, table,
       options, pushed.toSeq, groups.map(_._2), runtimeFileFiltering = groupGranular,
       onRuntimeFilter = onRuntimeFilter, spjInfo = spjInfo,
       ndvStats = scan.snapshot.map(_.snapshotId)
@@ -1003,7 +1003,7 @@ final class GraftScanBuilder private[connector] (spark: SparkSession,
   * `toBatch` returns one batch per scan that compares by its scan, so
   * Spark's `BatchScanExec` equality — and with it exchange and subquery
   * reuse — holds for two reads of one table in one query. */
-final class GraftScan(output: StructType,
+final class GraftScan(output: StructType, scanSchema: StructType,
     groupScans: Seq[org.apache.spark.sql.execution.datasources.v2.FileScan],
     plan: ScanPlan, deleteIndex: DeleteIndex, spark: SparkSession,
     table: GraftTable, options: CaseInsensitiveStringMap,
@@ -1028,24 +1028,23 @@ final class GraftScan(output: StructType,
   override def description(): String =
     s"graft(${groupScans.size} scan groups, files=${plan.tasks.size})"
 
-  /** What this scan reads, computed once: table, planned files with their
-    * residuals, live delete files, read schema, pushed filters, options,
-    * the per-group delete/fill/lineage configs, key grouping and bins.
-    * Delete key ordinals enter as sequences (arrays compare by reference).
+  /** What this scan reads, computed once from the builder's inputs: table,
+    * the id-bearing schema its columns bind by (a time-travel read binds by
+    * its snapshot's schema, and a schema change writes no snapshot), planned
+    * files with their residuals, live delete files, output, pushed filters,
+    * options and bins. Every per-group reader config derives from these.
     * A row-level-operation scan gets a fresh token instead, so it equals
     * only itself: its runtime filter reports to its own operation
     * (`onRuntimeFilter`). The runtime keep-set stays out of the key:
     * `BatchScanExec` compares its runtime filters itself. */
   private lazy val readKey: AnyRef =
     if (runtimeFileFiltering) new Object
-    else (table.location,
+    else (table.location, scanSchema,
       plan.tasks.map(t => (t.file.path, t.sequenceNumber, t.residual)),
       plan.deleteFiles.map { case (d, seq) => (d.path, d.contentOffset, seq) },
       output, pushedFilters,
       options.asCaseSensitiveMap.asScala.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }.toMap,
-      deletes.map(_.map(d => (d.sets.map(k => (k.ordinals.toSeq, k.names,
-        k.fileNames, k.types, k.paths)), d.types, d.project, d.pos))),
-      fills, lineages, spjInfo.map(_.fields), bins)
+      bins)
   private lazy val readKeyHash = readKey.hashCode
 
   override def equals(other: Any): Boolean = other match {

@@ -110,6 +110,26 @@ class ScanReuseSpec extends SparkSpec {
     assert(undeleted == base)
   }
 
+  test("a read of a snapshot under its own schema is not the current read after a re-added column") {
+    val s = isoSession()
+    threeFiles(s, "readd")
+    val table = "sr.db.readd"
+    val snap = GraftTable.load(spark, s"$wh/db/readd").currentSnapshot.get.snapshotId
+    // a schema change writes no snapshot: both reads plan the same files,
+    // but the re-added `v` has a fresh field id the files do not carry
+    s.sql(s"ALTER TABLE $table DROP COLUMN v")
+    s.sql(s"ALTER TABLE $table ADD COLUMN v STRING")
+    val current = scanOf(s.sql(s"SELECT id, v FROM $table"))
+    val old = scanOf(s.sql(s"SELECT id, v FROM $table VERSION AS OF $snap"))
+    assert(current.scanPlan.files.map(_.path).toSet == old.scanPlan.files.map(_.path).toSet)
+    assert(current.readSchema == old.readSchema)
+    assert(current != old)
+    val except = s.sql(s"""SELECT id, v FROM $table VERSION AS OF $snap
+                           EXCEPT SELECT id, v FROM $table""")
+    assert(except.collect().map(r => r.getLong(0) -> r.getString(1)).toSet ==
+      Set(1L -> "a", 2L -> "b", 3L -> "c", 4L -> "d", 5L -> "e", 6L -> "f"))
+  }
+
   test("copy-on-write MERGE and DELETE reading their own table replace only matched files") {
     val s = isoSession()
     threeFiles(s, "cowm")
